@@ -90,23 +90,6 @@ class GazetteerTagger:
         return BatchMatcher(self._index)
 
 
-def _sentences_from_pages(pdf: pd.DataFrame, text_col: str) -> pd.DataFrame:
-    """Pandas-side segmentation + explode for one Arrow batch."""
-    sents = webtext.split_sentences(pdf[text_col])
-    lens = sents.str.len().fillna(0).astype(int)
-    out = pd.DataFrame(
-        {
-            "url": pdf["url"].repeat(lens).to_numpy(),
-            "warc_ts": pdf["warc_ts"].repeat(lens).to_numpy()
-            if "warc_ts" in pdf
-            else None,
-            "sentence": [s for lst in sents for s in lst],
-        }
-    )
-    out["sent_idx"] = [i for lst in sents for i in range(len(lst))]
-    return out
-
-
 def _pairs_per_sentence(norm: pd.Series, tagger) -> pd.DataFrame:
     """Generic (model-tagger) path: tag -> mentions_from_word_iob ->
     positional pairing.
@@ -267,13 +250,22 @@ def tag_sentences_stage(
 
 def with_inverse_triples(triples: DataFrame) -> DataFrame:
     """CAUSES triples + (effect, TREATED_WITH, drug) inverse view —
-    relational, no Python hop (BASELINE.json:6)."""
-    inverse = triples.select(
+    relational, no Python hop (BASELINE.json:6). Both rows of a triple
+    come from ONE pass over ``triples`` (inline over a two-struct
+    array): a union would re-execute the whole input subtree — the
+    fused extraction stage included — for its second branch."""
+    return triples.select(
         "url",
         "warc_ts",
         "sent_idx",
-        F.col("obj").alias("subj"),
-        F.lit("TREATED_WITH").alias("pred"),
-        F.col("subj").alias("obj"),
+        F.inline(
+            F.array(
+                F.struct("subj", "pred", "obj"),
+                F.struct(
+                    F.col("obj").alias("subj"),
+                    F.lit("TREATED_WITH").alias("pred"),
+                    F.col("subj").alias("obj"),
+                ),
+            )
+        ),
     )
-    return triples.unionByName(inverse)

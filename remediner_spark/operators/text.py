@@ -1,4 +1,4 @@
-"""Column-level Arrow UDF text operators (extraction, normalize, segment).
+"""Column-level Arrow UDF text operators (extraction, segmentation).
 
 Each is a Series-to-Series pandas UDF over the pure kernels — one
 Python-worker hop, vectorized inside the batch, no per-row Spark UDFs.
@@ -16,7 +16,6 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
 from ..kernels import webtext
-from ..kernels.normalize import normalize_series
 
 
 @pandas_udf(StringType())
@@ -25,20 +24,9 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
     return webtext.extract_text(html)
 
 
-@pandas_udf(StringType())
-def normalize_text_udf(text: pd.Series) -> pd.Series:
-    """Reference normalization chain R5-R10 (kernels.normalize)."""
-    return normalize_series(text)
-
-
 @pandas_udf(ArrayType(StringType()))
 def split_sentences_udf(text: pd.Series) -> pd.Series:
     return webtext.split_sentences(text)
-
-
-@pandas_udf(StringType())
-def detect_language_udf(text: pd.Series) -> pd.Series:
-    return webtext.detect_language(text)
 
 
 def filter_language(pages: DataFrame, lang: str = "en") -> Column | DataFrame:

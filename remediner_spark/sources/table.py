@@ -341,6 +341,22 @@ def _datatype_from_json(t):
     ).fields[0].dataType
 
 
+def _sans_nullability(t):
+    """A schema-json type value with its nullability flags dropped.
+    Spark reads files back all-nullable (a written
+    ``array<string, containsNull=false>`` returns as ``array<string>``)
+    and refuses to cast nullability back on, so nullability is not part
+    of a column's type identity."""
+    if isinstance(t, dict):
+        return {
+            k: _sans_nullability(v) for k, v in t.items()
+            if k not in ("nullable", "containsNull", "valueContainsNull")
+        }
+    if isinstance(t, list):
+        return [_sans_nullability(v) for v in t]
+    return t
+
+
 def _stamp_field_mapping(
     entries: list[dict], schema_json: dict, partition_by: list[str]
 ) -> None:
@@ -622,7 +638,9 @@ def write_table(
         prev_t, cur_t = _types(prev_schema), _types(cur_schema)
         missing = [c for c in prev_t if c not in cur_t]
         changed = [
-            c for c in prev_t if c in cur_t and cur_t[c] != prev_t[c]
+            c for c in prev_t
+            if c in cur_t
+            and _sans_nullability(cur_t[c]) != _sans_nullability(prev_t[c])
         ]
         if missing or changed:
             raise ValueError(
@@ -897,11 +915,16 @@ def _scan_files(
     entry is planned once; untargeted files take the plain scan path.
     """
     from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructField, StructType
 
     full_schema = StructType.fromJson(snap["schema"])
     if not files:
-        return spark.createDataFrame([], full_schema)
+        # an empty Arrow table lands as a JVM LocalRelation; a row list
+        # would plan a Python-RDD scan
+        return spark.createDataFrame(
+            to_arrow_schema(full_schema).empty_table(), full_schema
+        )
     deletes = (snap.get("delete_files") or []) if apply_deletes else []
     # group key includes the FILE's OWN partition-key set: after
     # partition-spec evolution (evolve_partition_spec) the manifest
@@ -963,11 +986,12 @@ def _scan_files(
                             True,
                         )
                     )
-                exprs.append(
-                    F.col(ent["name"])
-                    .cast(_datatype_from_json(f["type"]))
-                    .alias(f["name"])
-                )
+                col = F.col(ent["name"])
+                if _sans_nullability(ent["type"]) != _sans_nullability(
+                    f["type"]
+                ):
+                    col = col.cast(_datatype_from_json(f["type"]))
+                exprs.append(col.alias(f["name"]))
             if not phys and mapping:
                 # no current field maps into this file (all dropped):
                 # scan one physical column to preserve row count
@@ -1098,6 +1122,7 @@ def _attach_partition_cols(
     mis-parse Hive-escaped values (lang='a=b' -> dir lang=a%3Db) and,
     unanchored, match a column whose name suffixes another's
     (sub_bucket=3/bucket=7)."""
+    import pandas as pd
     import pyspark.sql.functions as F
 
     missing = [c for c in partition_by if c not in df.columns]
@@ -1108,7 +1133,11 @@ def _attach_partition_cols(
         for f in files
     ]
     schema = ", ".join(["_file_path string"] + [f"{c} string" for c in missing])
-    fmap = spark.createDataFrame(rows, schema)
+    # a pandas frame lands as a JVM LocalRelation; the row list itself
+    # would plan a Python-RDD scan: a Python-worker job on every read
+    fmap = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["_file_path", *missing]), schema
+    )
     # input_file_name returns a PERCENT-ENCODED URI; the manifest
     # stores plain filesystem paths. A path with a space, '%',
     # non-ASCII, or Hive-escaped partition dirs (lang=a%3Db re-encodes

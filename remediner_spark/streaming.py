@@ -305,17 +305,24 @@ def edge_merge_fn(spark: SparkSession, table_path: str, scope: str,
                 deltas if current is None
                 else deltas.unionByName(current)
             )
-            merged = merged.groupBy("subj", "pred", "obj", "bucket").agg(
-                F.sum("weight").alias("weight"),
-                F.min("first_seen").alias("first_seen"),
-            ).select("subj", "pred", "obj", "weight", "first_seen", "bucket")
-            # ONE file per touched bucket: without this the agg's
-            # shuffle_partitions fan out to ~32 files per bucket per
-            # commit (measured 256 tiny files/batch), and every later
-            # batch pays their footer reads + scan planning — the
-            # small-file spiral compact_table exists to fix, avoided
-            # at the source here
-            merged = merged.repartition(max(len(touched), 1), "bucket")
+            # ONE file per touched bucket: without the explicit count
+            # the agg's shuffle_partitions fan out to ~32 files per
+            # bucket per commit (measured 256 tiny files/batch), and
+            # every later batch pays their footer reads + scan planning
+            # — the small-file spiral compact_table exists to fix,
+            # avoided at the source here. Repartitioning BEFORE the
+            # groupBy makes it the merge's only shuffle: hash placement
+            # on bucket, one of the grouping keys, already satisfies
+            # the aggregation's distribution.
+            merged = (
+                merged.repartition(len(touched), "bucket")
+                .groupBy("subj", "pred", "obj", "bucket")
+                .agg(
+                    F.sum("weight").alias("weight"),
+                    F.min("first_seen").alias("first_seen"),
+                )
+                .select("subj", "pred", "obj", "weight", "first_seen", "bucket")
+            )
             write_table(
                 merged, table_path,
                 mode="replace_partitions" if current is not None else "overwrite",
@@ -370,11 +377,12 @@ def link_merge_fn(spark: SparkSession, table_path: str, scope: str,
             except FileNotFoundError:
                 current = None
             merged = (
-                deltas if current is None else deltas.unionByName(current)
-            ).groupBy("src_url", "dst_url", "bucket").agg(
-                F.sum("n_links").alias("n_links")
-            ).select("src_url", "dst_url", "n_links", "bucket")
-            merged = merged.repartition(max(len(touched), 1), "bucket")
+                (deltas if current is None else deltas.unionByName(current))
+                .repartition(len(touched), "bucket")  # the only shuffle
+                .groupBy("src_url", "dst_url", "bucket")
+                .agg(F.sum("n_links").alias("n_links"))
+                .select("src_url", "dst_url", "n_links", "bucket")
+            )
             write_table(
                 merged, table_path,
                 mode="replace_partitions" if current is not None

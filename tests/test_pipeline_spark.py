@@ -82,6 +82,33 @@ def test_inverse_triples(spark, pages_df, tagger_bc):
     assert counts["CAUSES"] == counts["TREATED_WITH"] > 0
 
 
+def test_inverse_triples_one_extraction_pass(spark, pages_df, tagger_bc):
+    """Both directions come out of ONE run of the fused extraction: the
+    plan holds one MapInPandas and no Union (a union re-executes its
+    whole input subtree per branch), and the rows equal the union form
+    as a multiset."""
+    from collections import Counter
+
+    from remediner_spark.plancheck import logical_nodes
+
+    triples = extract_triples_stage(filter_language(pages_df), tagger_bc)
+    both = with_inverse_triples(triples)
+    assert len(logical_nodes(both, "MapInPandas")) == 1
+    assert logical_nodes(both, "Union") == []
+    union = triples.unionByName(
+        triples.select(
+            "url", "warc_ts", "sent_idx",
+            F.col("obj").alias("subj"),
+            F.lit("TREATED_WITH").alias("pred"),
+            F.col("subj").alias("obj"),
+        )
+    )
+    assert both.columns == union.columns
+    got = Counter(tuple(r) for r in both.collect())
+    assert got == Counter(tuple(r) for r in union.collect())
+    assert sum(got.values()) > 0
+
+
 def test_tag_sentences_stage(spark, pages_df, tagger_bc):
     sents = segmented_sentences(filter_language(pages_df)).limit(50)
     tagged = tag_sentences_stage(sents, tagger_bc)

@@ -153,6 +153,41 @@ def test_replayed_batch_id_is_noop(spark, tmp_path, tagger_bc):
     )
 
 
+def test_merge_is_one_shuffle_one_file_per_bucket(
+    spark, tmp_path, tagger_bc, monkeypatch
+):
+    """Each merge's repartition on ``bucket`` is its ONLY shuffle (hash
+    placement on a grouping key satisfies the per-edge aggregation),
+    on the first commit and on a read-modify-write of existing buckets,
+    and it still lands one file per touched bucket."""
+    import remediner_spark.sources.table as table_mod
+    from remediner_spark.plancheck import physical_nodes
+    from remediner_spark.sources.table import _load_snapshots, _snap_files
+    from remediner_spark.streaming import edge_merge_fn
+
+    pages_dir, _ = _write_pages_split(tmp_path, n_pages=80)
+    table = str(tmp_path / "edges_shuffle")
+    shuffles = []
+    write_table = table_mod.write_table
+
+    def spy(df, path, **kw):
+        shuffles.append(len(physical_nodes(df, "Exchange")))
+        return write_table(df, path, **kw)
+
+    monkeypatch.setattr(table_mod, "write_table", spy)
+    merge = edge_merge_fn(spark, table, scope="s", n_buckets=N_BUCKETS)
+    for batch_id, part in enumerate(sorted(os.listdir(pages_dir))[:2]):
+        pages = filter_language(spark.read.parquet(f"{pages_dir}/{part}"))
+        merge(extract_triples_stage(pages, tagger_bc), batch_id)
+        snap = _load_snapshots(table)[-1]
+        new = [
+            f["partition"]["bucket"] for f in _snap_files(table, snap)
+            if f"commit={snap['commit']}" in f["path"]
+        ]
+        assert len(new) == len(set(new)) > 0
+    assert shuffles == [1, 1]
+
+
 def test_stream_linked_mentions_match_batch(spark, tmp_path, tagger_bc):
     """Streaming exact dict-linking == the batch linker's dict stage
     (same helper) with synthetic ids for residuals."""

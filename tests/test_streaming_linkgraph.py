@@ -84,3 +84,28 @@ def test_replay_guard_and_resume(spark, tmp_path):
     )
     want = _edges_dict(link_graph(pages))
     assert got == want
+
+
+def test_merge_is_one_shuffle(spark, tmp_path, monkeypatch):
+    """The merge's repartition on ``bucket`` is its only shuffle, on the
+    first commit and on a read-modify-write of existing buckets."""
+    import remediner_spark.sources.table as table_mod
+    from remediner_spark.plancheck import physical_nodes
+
+    pages = spark.createDataFrame(_linked_pages(60))
+    table = str(tmp_path / "lg_shuffle")
+    shuffles = []
+    write_table = table_mod.write_table
+
+    def spy(df, path, **kw):
+        shuffles.append(len(physical_nodes(df, "Exchange")))
+        return write_table(df, path, **kw)
+
+    monkeypatch.setattr(table_mod, "write_table", spy)
+    merge = link_merge_fn(spark, table, "s", N_BUCKETS)
+    merge(pages, 0)
+    merge(pages, 1)
+    assert shuffles == [1, 1]
+    got = _edges_dict(read_table(spark, table))
+    want = _edges_dict(link_graph(pages))
+    assert got == {k: 2 * v for k, v in want.items()}

@@ -77,6 +77,60 @@ def test_empty_filter_returns_empty_with_schema(spark, tmp_path, pages_pdf):
     assert "url" in df.columns
 
 
+def test_reads_plan_no_python_rdd(spark, tmp_path):
+    """A bucket-partitioned read re-attaches ``bucket`` from a
+    file->value map, and an all-pruned read returns an empty frame.
+    Both must plan as JVM LocalRelations: a Python-RDD-backed
+    LogicalRDD makes every read run a Python-worker job."""
+    import pandas as pd
+
+    from remediner_spark.plancheck import logical_nodes
+
+    pdf = pd.DataFrame(
+        {"k": range(40), "v": [f"v{i}" for i in range(40)],
+         "bucket": [i % 4 for i in range(40)]}
+    )
+    path = str(tmp_path / "tbl")
+    write_table(spark.createDataFrame(pdf), path, partition_by=["bucket"])
+    full = read_table(spark, path)
+    none = read_table(spark, path, partition_filter={"bucket": [9]})
+    for df in (full, none):
+        assert logical_nodes(df, "LogicalRDD") == []
+        assert logical_nodes(df, "LocalRelation")
+    got = full.toPandas().sort_values("k").reset_index(drop=True)
+    assert got["bucket"].astype(int).tolist() == pdf["bucket"].tolist()
+    assert none.count() == 0 and none.columns == full.columns
+
+
+@pytest.mark.parametrize("partition_by", [[], ["bucket"]])
+def test_non_null_element_array_round_trip(spark, tmp_path, partition_by):
+    """Regression: parquet returns an ``array<string>`` written with
+    non-null elements as nullable-element, and the field-id projection
+    cast it back — which Spark refuses
+    (DATATYPE_MISMATCH.CAST_WITHOUT_SUGGESTION), so no such table could
+    be read (the KG edge table's ``sample_urls``). Nullability is not
+    type identity: the read needs no cast, and the frame it returns
+    writes back to the same table."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(4).select(
+        F.col("id").alias("k"),
+        F.array(
+            F.concat(F.lit("u"), F.col("id")), F.concat(F.lit("v"), F.col("id"))
+        ).alias("urls"),
+        (F.col("id") % 2).alias("bucket"),
+    )
+    assert df.schema["urls"].dataType.containsNull is False
+    path = str(tmp_path / "tbl")
+    write_table(df, path, partition_by=partition_by)
+    got = read_table(spark, path)
+    assert sorted((r["k"], list(r["urls"]), r["bucket"]) for r in got.collect()) == [
+        (i, [f"u{i}", f"v{i}"], i % 2) for i in range(4)
+    ]
+    write_table(got, path, partition_by=partition_by)
+    assert read_table(spark, path).count() == 8
+
+
 def test_replace_partitions_and_compaction(spark, tmp_path, pages_pdf):
     """replace_partitions rewrites only touched partitions; compaction
     bin-packs multi-file partitions into one file per partition with

@@ -5,6 +5,9 @@ grep for the properties that matter at scale:
 * WholeStageCodegen spans around relational stages
 * BroadcastHashJoin where a dimension is joined
 * no Exchange where none is needed
+* no Python-RDD-backed relation (``createDataFrame(<list of rows>)``)
+  in ANY entry's optimized plan: it runs a Python-worker job on every
+  action; a pandas or Arrow frame plans as a JVM LocalRelation instead
 
 Usage: python tools/explain_audit.py [sf_dir] > PLANS.txt
 """
@@ -16,6 +19,16 @@ import sys
 from contextlib import redirect_stdout
 
 sys.path.insert(0, ".")
+
+
+# entries whose plans still scan a Python RDD built from a driver-side
+# row list: reported, not failed. Any other entry planning one fails
+# the audit, and so does a listed entry that no longer plans one.
+PYTHON_RDD_KNOWN = {
+    "a2_label_dictionary": "operators/relational.py label-map rows",
+    "bpe_merges": "operators/bpe.py learned merge rows",
+    "pack_sequences": "operators/traindata.py bucket prefix rows",
+}
 
 
 def get_plan(df) -> str:
@@ -169,12 +182,34 @@ def main() -> int:
         rs = [ln for ln in plan.splitlines() if "ReadSchema" in ln][0]
         if "lang" in rs or "source" in rs:
             failures.append(f"text_tokens: scan not pruned: {rs.strip()}")
+    failures += python_rdd_failures(spark, sf_dir, qs)
     spark.stop()
     if failures:
         print("\nAUDIT FAILURES:", *failures, sep="\n  ")
         return 1
     print("\nAUDIT OK")
     return 0
+
+
+def python_rdd_failures(spark, sf_dir: str, qs: dict) -> list[str]:
+    from remediner_spark.plancheck import python_rdd_relations
+    from remediner_spark.session import release_caches
+
+    failures = []
+    print(f"{'='*70}\n## Python-RDD relations ({len(qs)} entries)")
+    for name, q in qs.items():
+        n = len(python_rdd_relations(q(spark, sf_dir)))
+        release_caches(spark)
+        if n and name in PYTHON_RDD_KNOWN:
+            print(f"  known: {name}: {n} ({PYTHON_RDD_KNOWN[name]})")
+        elif n:
+            failures.append(f"{name}: {n} Python-RDD relation(s) in plan")
+        elif name in PYTHON_RDD_KNOWN:
+            failures.append(
+                f"{name}: no Python-RDD relation left — drop it from "
+                "PYTHON_RDD_KNOWN"
+            )
+    return failures
 
 
 if __name__ == "__main__":
