@@ -24,3 +24,5 @@ Layout:
 """
 
 __version__ = "0.1.0"
+
+from remediner_spark import zipguard  # noqa: E402,F401  installs the worker guard

@@ -36,6 +36,7 @@ cross-engine hashing is exact by construction.
 
 from __future__ import annotations
 
+from ..session import local_frame
 from ..sources.scan import scan_parquet
 
 import pyspark.sql.functions as F
@@ -149,16 +150,9 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The learned merge table — the tokenizer model artifact."""
     rules, final = train_bpe(spark, sf_dir)
     final.unpersist()
-    return spark.createDataFrame(
-        [
-            {
-                "step": s,
-                "merge_left": lt,
-                "merge_right": r,
-                "weight": w,
-            }
-            for s, lt, r, w in rules
-        ],
+    return local_frame(
+        spark,
+        rules,
         "step int, merge_left string, merge_right string, weight long",
     )
 

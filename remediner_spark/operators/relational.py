@@ -13,6 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import local_frame
+
 
 def _docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -115,9 +117,10 @@ FROM documents WHERE lang = 'en'"""
 def q_a2_label_dictionary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2: the fixed 5-class IOB label map as a relational mapping
     (ref: src/NER/data_utilities_ner.py:78-82)."""
-    labels = spark.createDataFrame(
+    labels = local_frame(
+        spark,
         [("O",), ("B-Drug",), ("I-Drug",), ("B-Effect",), ("I-Effect",)],
-        ["label"],
+        "label string",
     )
     mapping = (
         F.when(F.col("label") == "O", 0)

@@ -28,6 +28,7 @@ into pretraining batches", Spark-first with exact DuckDB oracles:
 
 from __future__ import annotations
 
+from ..session import local_frame
 from ..sources.scan import scan_parquet
 
 from pyspark.sql import DataFrame, SparkSession
@@ -121,7 +122,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     for r in totals:
         prefix_rows.append((r["_bucket"], acc))
         acc += r["_subtotal"]
-    prefix = spark.createDataFrame(prefix_rows, "_bucket long, _prefix long")
+    prefix = local_frame(spark, prefix_rows, "_bucket long, _prefix long")
     # phase 2: window within bucket + broadcast prefix join
     w = (
         Window.partitionBy("_bucket")

@@ -11,7 +11,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -43,6 +44,27 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: StructType | str
+) -> DataFrame:
+    """A driver-side row list as a DataFrame planned as a JVM
+    ``LocalRelation``. ``createDataFrame(<rows>)`` plans a Python-RDD
+    scan instead, so every action on it runs Python-worker tasks, and an
+    EMPTY pandas frame falls back to that row path; an Arrow table never
+    does (with no rows it is ``to_arrow_schema(schema).empty_table()``).
+    ``schema`` is a StructType or a DDL string."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if not isinstance(schema, StructType):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(arrow_schema.names, r)) for r in rows], schema=arrow_schema
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def release_caches(spark: SparkSession) -> int:

@@ -41,6 +41,8 @@ from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
+
 
 def _meta_dir(path: str) -> str:
     return os.path.join(path, "_metadata")
@@ -915,16 +917,11 @@ def _scan_files(
     entry is planned once; untargeted files take the plain scan path.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructField, StructType
 
     full_schema = StructType.fromJson(snap["schema"])
     if not files:
-        # an empty Arrow table lands as a JVM LocalRelation; a row list
-        # would plan a Python-RDD scan
-        return spark.createDataFrame(
-            to_arrow_schema(full_schema).empty_table(), full_schema
-        )
+        return local_frame(spark, [], full_schema)
     deletes = (snap.get("delete_files") or []) if apply_deletes else []
     # group key includes the FILE's OWN partition-key set: after
     # partition-spec evolution (evolve_partition_spec) the manifest
@@ -1122,7 +1119,6 @@ def _attach_partition_cols(
     mis-parse Hive-escaped values (lang='a=b' -> dir lang=a%3Db) and,
     unanchored, match a column whose name suffixes another's
     (sub_bucket=3/bucket=7)."""
-    import pandas as pd
     import pyspark.sql.functions as F
 
     missing = [c for c in partition_by if c not in df.columns]
@@ -1133,11 +1129,8 @@ def _attach_partition_cols(
         for f in files
     ]
     schema = ", ".join(["_file_path string"] + [f"{c} string" for c in missing])
-    # a pandas frame lands as a JVM LocalRelation; the row list itself
-    # would plan a Python-RDD scan: a Python-worker job on every read
-    fmap = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["_file_path", *missing]), schema
-    )
+    # a JVM LocalRelation: no Python-worker job on every read
+    fmap = local_frame(spark, rows, schema)
     # input_file_name returns a PERCENT-ENCODED URI; the manifest
     # stores plain filesystem paths. A path with a space, '%',
     # non-ASCII, or Hive-escaped partition dirs (lang=a%3Db re-encodes

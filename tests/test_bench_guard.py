@@ -31,3 +31,38 @@ def test_burst_guard_quiet_host(monkeypatch):
     guard = bench._BurstGuard()
     assert guard.corrupted("q") is False
     assert guard.retries == []
+
+
+def test_certificate_keeps_every_leg_under_cap():
+    import json
+
+    import bench
+
+    legs = bench.BENCH_QUERIES + [
+        "pq_codebook_fit", "ivf_centroid_fit", "bpe_train",
+        "web_link_extract", "web_pagerank_corpus", "web_hits_corpus",
+        "kg_triple_extraction", "headline", "kg_graph_pipeline",
+        "kg_graph_pipeline_warm", "stream_edge_merge",
+    ]
+    result = {
+        "metric": "triples_per_sec",
+        "value": 12345678.9,
+        "unit": "sec",
+        "queries": {name: 123.456789 for name in legs},  # widest walls
+        "sf": "sf0.001",
+        "cores": 128,
+        "n_pages": 20_000_000,
+        "series_n_pages": 10_000_000,
+        "n_triples": 123_456_789,
+        "burst_retries": list(legs),  # a retry on every section
+        "probe_base": 0.1234,
+        "loadavg_end": 123.45,
+        "host_cores": 128,
+    }
+    line = bench._certificate(result)
+    assert len(line) < 1800, len(line)
+    cert = json.loads(line)
+    assert list(cert) == list(result)
+    assert sorted(cert["queries"]) == sorted(legs)
+    assert cert["burst_retries"] == len(legs)
+    assert result["burst_retries"] == legs  # evidence keeps the names

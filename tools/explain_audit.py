@@ -24,11 +24,7 @@ sys.path.insert(0, ".")
 # entries whose plans still scan a Python RDD built from a driver-side
 # row list: reported, not failed. Any other entry planning one fails
 # the audit, and so does a listed entry that no longer plans one.
-PYTHON_RDD_KNOWN = {
-    "a2_label_dictionary": "operators/relational.py label-map rows",
-    "bpe_merges": "operators/bpe.py learned merge rows",
-    "pack_sequences": "operators/traindata.py bucket prefix rows",
-}
+PYTHON_RDD_KNOWN: dict[str, str] = {}
 
 
 def get_plan(df) -> str:
