@@ -138,27 +138,6 @@ def _with_signature(df: DataFrame, surface_col: str, k: int) -> DataFrame:
     ).drop("_mh_base")
 
 
-def exact_dict_link(mentions: DataFrame, dictionary: DataFrame) -> DataFrame:
-    """The STATELESS first linking stage: normalized-surface broadcast
-    equi-join against the dictionary, null canonical_id for residuals.
-    Shared by the batch linker (which then runs the MinHash-LSH
-    residual pass) and the streaming surface (which cannot — the LSH
-    pass needs dropDuplicates/aggregation state, so streaming defers
-    residuals to a periodic batch job, the standard split)."""
-    m = mentions.withColumn("surface_norm", normalized_surface("surface"))
-    d = dictionary.withColumn("alias_norm", normalized_surface("alias"))
-    return m.alias("m").join(
-        F.broadcast(d.alias("d")),
-        (F.col("m.surface_norm") == F.col("d.alias_norm"))
-        & (F.col("m.entity_type") == F.col("d.entity_type")),
-        "left",
-    ).select(
-        "m.*",
-        F.col("d.canonical_id").alias("canonical_id"),
-        F.col("d.canonical_name").alias("canonical_name"),
-    )
-
-
 def link_surfaces(
     surfaces: DataFrame,
     dictionary: DataFrame,

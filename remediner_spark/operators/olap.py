@@ -385,9 +385,7 @@ def q_event_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window aggregation (F.window with a slide < width):
     counts + integer-cents volume per (window_start, event_type) with
     1 h windows every 30 min — the hopping-window shape streaming
-    dashboards aggregate on (streaming.stream_sliding_event_counts
-    runs the SAME grouping with a watermark; this is its batch form
-    and the referee for the streaming test).
+    dashboards aggregate on.
 
     Spark expands each row into window/slide copies before the
     groupBy — map-side, the expansion never shuffles unaggregated.

@@ -449,8 +449,7 @@ WHERE rank <= 3"""
 
 
 def q_window_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling event-time windows (the batch shape of the streaming
-    windowed aggregation in streaming.py): events per type per hour."""
+    """Tumbling event-time windows: events per type per hour."""
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
     return (
         events.groupBy(

@@ -94,8 +94,8 @@ def _ensure_mor_table(spark: SparkSession, sf_dir: str) -> str:
         updates = docs.filter(F.col("doc_id") % UPD_EVERY == 0).select(
             "doc_id", F.lit(-1).cast("long").alias("n_chars")
         )
-        upsert_rows(spark, path, updates, ["doc_id"], strategy="mor")
-        delete_range(spark, path, "doc_id", DEL_LO, DEL_HI, strategy="mor")
+        upsert_rows(spark, path, updates, ["doc_id"])
+        delete_range(spark, path, "doc_id", DEL_LO, DEL_HI)
 
     return _build_once(_cache_dir("mor", sf_dir), build)
 

@@ -19,32 +19,32 @@ plenty of splits and this is a no-op — the floor is scale-adaptive,
 not a local[32] constant (guide §6.1: `spark.sql.files.minPartitionNum`
 is the same idea, but byte-range splits cannot divide a single-row-
 group file, so the floor must be an explicit shuffle here).
+
+The floor fails closed: an input it cannot size is read plain. A blind
+round-robin of an input of unknown size could shuffle a 100 TB table.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
 _DEFAULT_MAX_SPLIT = 128 * 1024 * 1024
 
 
-def _input_bytes(path: str) -> int:
-    if os.path.isdir(path):
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            for name in files:
-                if not name.startswith(("_", ".")):
-                    try:
-                        total += os.path.getsize(os.path.join(root, name))
-                    except OSError:
-                        pass
-        return total
+def _input_bytes(spark: SparkSession, path: str) -> int | None:
+    """Bytes under ``path`` (a file or a directory tree), from Hadoop's
+    ``FileSystem.getContentSummary`` on the session's Hadoop
+    configuration — the same filesystem layer the read goes through,
+    so every scheme the session can read (file://, hdfs://, s3a://) is
+    sized. None when it cannot be sized (unknown scheme, a glob, a
+    missing path)."""
+    jvm = spark.sparkContext._jvm
     try:
-        return os.path.getsize(path)
-    except OSError:
-        return 0
+        hpath = jvm.org.apache.hadoop.fs.Path(path)
+        fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+        return fs.getContentSummary(hpath).getLength()
+    except Exception:  # py4j errors and the pyspark-converted JVM ones
+        return None
 
 
 def _max_split_bytes(spark: SparkSession) -> int:
@@ -67,7 +67,9 @@ def scan_parquet(spark: SparkSession, path: str) -> DataFrame:
     explicitly; floats are rounded inside the queries)."""
     df = spark.read.parquet(path)
     target = spark.sparkContext.defaultParallelism
-    nbytes = _input_bytes(path)
+    nbytes = _input_bytes(spark, path)
+    if nbytes is None:
+        return df
     est_splits = max(1, nbytes // _max_split_bytes(spark))
     if est_splits < target:
         df = df.repartition(target)

@@ -75,14 +75,10 @@ def _save_snapshots(path: str, snapshots: list[dict]) -> None:
 # _metadata/manifests/ written once and shared by every subsequent
 # snapshot that carries it. An append therefore writes O(new files)
 # manifest bytes — one new manifest, one manifest list (~40 bytes per
-# carried ref), one O(1) snapshot record — regardless of table size,
-# where the pre-r6 inline form rewrote the full cumulative file list
-# into snapshots.json on EVERY commit (O(total files x snapshots),
-# the r5 verdict's top scale defect). Subtractive commits (overwrite,
-# CoW upsert, delete, compaction) rewrite ONLY the manifests that
-# contain a removed file; untouched manifests are carried by ref.
-# Legacy snapshots with an inline "files" list remain readable and
-# migrate to manifests on their next write.
+# carried ref), one O(1) snapshot record — regardless of table size.
+# Subtractive commits (replace_partitions, a range delete's dropped
+# files) rewrite ONLY the manifests that contain a removed file;
+# untouched manifests are carried by ref.
 
 
 def _manifest_dir(path: str) -> str:
@@ -140,20 +136,16 @@ def _write_manifest_list(path: str, refs: list[str]) -> str:
 
 def _snap_refs(path: str, snap: dict) -> list[str]:
     """The snapshot's manifest refs, resolved through its manifest-list
-    file. Empty for legacy inline-files snapshots."""
-    ml = snap.get("manifest_list")
-    if ml is None:
-        return []
-    return _load_json_cached(os.path.join(_manifest_dir(path), ml))
+    file."""
+    return _load_json_cached(
+        os.path.join(_manifest_dir(path), snap["manifest_list"])
+    )
 
 
 def _snap_files(path: str, snap: dict) -> list[dict]:
-    """The snapshot's data-file entries: resolved through its manifest
-    list (or the legacy inline list). The returned list is fresh but
-    the entry dicts are SHARED with the cache — copy before mutating
-    (as _evolution_base does)."""
-    if "manifest_list" not in snap:
-        return list(snap.get("files") or [])
+    """The snapshot's data-file entries, resolved through its manifest
+    list. The returned list is fresh but the entry dicts are SHARED
+    with the cache — copy before mutating (as _evolution_base does)."""
     out: list[dict] = []
     for ref in _snap_refs(path, snap):
         out.extend(_load_manifest(path, ref))
@@ -190,28 +182,15 @@ def _next_manifests(
     entries), never O(table)."""
     refs: list[str] = []
     files: list[dict] = []
-    if prev_snap is None:
-        prev_lists: list[tuple[str | None, list[dict]]] = []
-    elif "manifest_list" in prev_snap:
-        prev_lists = [
-            (r, _load_manifest(path, r))
-            for r in _snap_refs(path, prev_snap)
-        ]
-    else:  # legacy inline snapshot: migrate its entries this commit
-        prev_lists = [(None, prev_snap.get("files") or [])]
-    for ref, entries in prev_lists:
-        hit = removed_paths and any(
+    for ref in _snap_refs(path, prev_snap) if prev_snap else []:
+        entries = _load_manifest(path, ref)
+        if not (removed_paths and any(
             e["path"] in removed_paths for e in entries
-        )
-        if ref is not None and not hit:
+        )):
             refs.append(ref)
             files.extend(entries)
             continue
-        survivors = (
-            [e for e in entries if e["path"] not in removed_paths]
-            if removed_paths
-            else list(entries)
-        )
+        survivors = [e for e in entries if e["path"] not in removed_paths]
         if survivors:
             refs.append(_write_manifest(path, survivors))
             files.extend(survivors)
@@ -600,6 +579,32 @@ def _collect_file_entries(data_dir: str, partition_by: list[str]) -> list[dict]:
     return entries
 
 
+def _write_data_files(
+    df: DataFrame,
+    path: str,
+    partition_by: list[str],
+    sort_by: list[str] | None,
+    schema_json: dict,
+) -> tuple[str, list[dict]]:
+    """Write ``df`` as one commit's data files under
+    ``data/commit=<id>``, clustered on ``sort_by`` when given; returns
+    (commit id, manifest entries stamped with the field-id mapping)."""
+    commit_id = uuid.uuid4().hex[:12]
+    data_dir = os.path.join(path, "data", f"commit={commit_id}")
+    if sort_by:
+        n_out = df.rdd.getNumPartitions()
+        df = df.repartitionByRange(max(n_out, 1), *sort_by).sortWithinPartitions(
+            *sort_by
+        )
+    writer = df.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(data_dir)
+    new_files = _collect_file_entries(data_dir, partition_by)
+    _stamp_field_mapping(new_files, schema_json, partition_by)
+    return commit_id, new_files
+
+
 def write_table(
     df: DataFrame,
     path: str,
@@ -607,7 +612,6 @@ def write_table(
     partition_by: list[str] | None = None,
     properties: dict | None = None,
     sort_by: list[str] | None = None,
-    replaced_partitions: list[dict] | None = None,
 ) -> dict:
     """Write a snapshot; returns the snapshot record.
 
@@ -690,22 +694,11 @@ def write_table(
             )
     if not snapshots:
         cur_schema, last_field_id = _assign_field_ids(df.schema.jsonValue())
-    commit_id = uuid.uuid4().hex[:12]
-    data_dir = os.path.join(path, "data", f"commit={commit_id}")
-    if sort_by:
-        n_out = df.rdd.getNumPartitions()
-        df = df.repartitionByRange(max(n_out, 1), *sort_by).sortWithinPartitions(
-            *sort_by
-        )
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(data_dir)
-
-    new_files = _collect_file_entries(data_dir, partition_by)
-    _stamp_field_mapping(new_files, cur_schema, partition_by)
+    commit_id, new_files = _write_data_files(
+        df, path, partition_by, sort_by, cur_schema
+    )
     prev = snapshots[-1] if snapshots else None
-    if mode == "append" and prev is not None and "manifest_list" in prev:
+    if mode == "append" and prev is not None:
         # O(new files) append: previous manifests carry BY REF without
         # ever being loaded; no path leaves the table, so merge-on-read
         # delete entries carry unchanged and total_rows is a running sum
@@ -714,17 +707,12 @@ def write_table(
         )
         delete_files = [dict(d) for d in prev.get("delete_files") or []]
         total_rows = prev["total_rows"] + sum(f["rows"] for f in new_files)
-    elif mode == "overwrite" or (mode == "append" and prev is None):
+    elif mode in ("overwrite", "append"):
         # overwrite starts a fresh file set (old files stay on disk for
         # time travel); no old path survives, so no delete entry can
         refs = [_write_manifest(path, new_files)] if new_files else []
         delete_files = []
         total_rows = sum(f["rows"] for f in new_files)
-    elif mode == "append":
-        # legacy inline-manifest table: one-time migration to manifests
-        refs, files = _next_manifests(path, prev, set(), new_files)
-        delete_files = _carry_delete_files(prev, {f["path"] for f in files})
-        total_rows = sum(f["rows"] for f in files)
     elif mode == "replace_partitions":
         # Iceberg MERGE-INTO file semantics: the new files REPLACE the
         # previous files of the partitions they land in; untouched
@@ -735,13 +723,6 @@ def write_table(
         touched = {
             tuple(sorted(f["partition"].items())) for f in new_files
         }
-        # ``replaced_partitions``: partitions the caller REWROTE even if
-        # the rewrite emitted no file for them (pending MoR deletes can
-        # empty a partition; without this its old files — and their
-        # delete entries — would survive and re-qualify for compaction
-        # forever, r5 ADVICE no-progress finding)
-        for p in replaced_partitions or []:
-            touched.add(tuple(sorted((k, str(v)) for k, v in p.items())))
         removed = {
             f["path"]
             for f in (_snap_files(path, prev) if prev else [])
@@ -749,8 +730,7 @@ def write_table(
         }
         refs, files = _next_manifests(path, prev, removed, new_files)
         # merge-on-read delete entries follow their targeted files:
-        # pruned when a target leaves the manifest (that is how
-        # compaction folds them in)
+        # pruned when a target leaves the manifest
         delete_files = (
             _carry_delete_files(prev, {f["path"] for f in files})
             if prev else []
@@ -759,9 +739,6 @@ def write_table(
     else:
         raise ValueError(f"unsupported mode {mode!r}")
     snapshot = {
-        # max+1, NOT len+1: expire_snapshots shrinks the list, and a
-        # length-derived id would collide with a surviving snapshot,
-        # corrupting time travel
         "snapshot_id": (snapshots[-1]["snapshot_id"] + 1) if snapshots else 1,
         "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
         "mode": mode,
@@ -781,62 +758,6 @@ def write_table(
         path, snapshots[-1]["snapshot_id"] if snapshots else 0, snapshot
     )
     return snapshot
-
-
-def _refs_file(path: str) -> str:
-    return os.path.join(_meta_dir(path), "refs.json")
-
-
-def _load_refs(path: str) -> dict[str, int]:
-    f = _refs_file(path)
-    if not os.path.exists(f):
-        return {}
-    with open(f) as fh:
-        return {k: int(v) for k, v in json.load(fh).items()}
-
-
-def _save_refs(path: str, refs: dict[str, int]) -> None:
-    tmp = _refs_file(path) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(refs, fh, indent=1)
-    os.replace(tmp, _refs_file(path))
-
-
-def tag_snapshot(path: str, name: str, snapshot_id: int | None = None) -> int:
-    """Iceberg ref/tag: pin a snapshot under a NAME. Tagged snapshots
-    are protected from expire_snapshots (the retention contract:
-    'keep the audited training-corpus state' survives any keep_last),
-    and readable via read_table(tag=...). Re-tagging a name moves it.
-    Returns the tagged snapshot id."""
-    with _commit_lock(path):
-        snapshots = _load_snapshots(path)
-        if not snapshots:
-            raise FileNotFoundError(f"no table at {path}")
-        sid = (
-            snapshots[-1]["snapshot_id"]
-            if snapshot_id is None
-            else snapshot_id
-        )
-        if not any(s["snapshot_id"] == sid for s in snapshots):
-            raise ValueError(f"no snapshot {sid} in {path}")
-        refs = _load_refs(path)
-        refs[name] = sid
-        _save_refs(path, refs)
-        return sid
-
-
-def drop_tag(path: str, name: str) -> None:
-    with _commit_lock(path):
-        refs = _load_refs(path)
-        if name not in refs:
-            raise ValueError(f"no tag {name!r} on {path}")
-        del refs[name]
-        _save_refs(path, refs)
-
-
-def table_tags(path: str) -> dict[str, int]:
-    """{tag name: snapshot id} — the .refs metadata view."""
-    return dict(_load_refs(path))
 
 
 def table_snapshots(path: str) -> list[dict]:
@@ -880,10 +801,9 @@ def _bound_lit(raw, tag):
 def _carry_delete_files(prev_snap: dict, new_paths: set[str]) -> list[dict]:
     """Propagate row-level delete entries into a new snapshot: each
     entry applies only to the data-file paths it targeted at commit
-    time, so when a targeted file leaves the manifest (rewritten,
-    compacted, replaced) its path is pruned; an entry with no
-    surviving targets is dropped — that is how compaction folds
-    deletes in."""
+    time, so when a targeted file leaves the manifest (its partition
+    replaced, or dropped by a range delete) its path is pruned; an
+    entry with no surviving targets is dropped."""
     out = []
     for d in prev_snap.get("delete_files") or []:
         paths = [p for p in d["paths"] if p in new_paths]
@@ -1041,7 +961,6 @@ def read_table(
     snapshot_id: int | None = None,
     partition_filter: dict | None = None,
     stats_filter: dict | None = None,
-    tag: str | None = None,
 ) -> DataFrame:
     """Plan the read from the manifest: pick the snapshot, prune files
     by partition values AND per-file column min/max stats, scan only
@@ -1052,17 +971,10 @@ def read_table(
     never opened (Iceberg data skipping), and the SAME range predicate
     is applied row-level to the surviving files, so the result equals
     a full scan + filter exactly — pruning is a transparent
-    optimization, evidenced by stats_pruned_count."""
+    optimization."""
     snapshots = _load_snapshots(path)
     if not snapshots:
         raise FileNotFoundError(f"no table at {path}")
-    if tag is not None:
-        if snapshot_id is not None:
-            raise ValueError("pass snapshot_id OR tag, not both")
-        refs = _load_refs(path)
-        if tag not in refs:
-            raise ValueError(f"no tag {tag!r} on {path}")
-        snapshot_id = refs[tag]
     if snapshot_id is None:
         snap = snapshots[-1]
     else:
@@ -1150,103 +1062,6 @@ def _attach_partition_cols(
     return df.join(F.broadcast(fmap), "_file_path", "left").drop("_file_path")
 
 
-def compact_table(
-    spark: SparkSession,
-    path: str,
-    min_files_per_partition: int = 2,
-) -> dict:
-    """Bin-pack small files (Iceberg `rewrite_data_files`): streaming
-    merges commit one small file set per micro-batch, and at 100 TB
-    the accumulated small files dominate scan planning and open() cost.
-    Rewrites every partition holding more than ``min_files_per_
-    partition`` files down to one file per partition value (the
-    repartition hashes whole partition values, so one output file per
-    value is the natural grain), committing the result as ONE new
-    snapshot with replace_partitions semantics. Only the EXACT crowded
-    partitions are read and rewritten — selection is by their file
-    paths from the manifest, never a per-column filter (which would
-    cross-product over multi-column partition specs and rewrite
-    untouched partitions). Earlier snapshots still time-travel to the
-    pre-compaction files, which stay on disk until expire_snapshots.
-
-    Returns the new snapshot record, or the current one when nothing
-    qualifies. Data equality is byte-for-byte: this only re-groups
-    rows into fewer files.
-    """
-    import pyspark.sql.functions as F
-
-    snapshots = _load_snapshots(path)
-    if not snapshots:
-        raise FileNotFoundError(f"no table at {path}")
-    snap = snapshots[-1]
-    partition_by = snap["partition_by"]
-    snap_files = _snap_files(path, snap)
-    if not partition_by:
-        # unpartitioned table: the rewrite unit is the whole table —
-        # bin-pack when crowded OR fold pending MoR delete entries
-        # (without this, an unpartitioned table's equality/predicate
-        # deletes would accumulate forever with no fold path)
-        if (
-            len(snap_files) <= min_files_per_partition
-            and not snap.get("delete_files")
-        ):
-            return snap
-        # coalesce sets the output file count; write_table's sort_by
-        # path re-clusters (repartitionByRange reads this partition
-        # count as its target)
-        df = _scan_files(spark, snap, snap_files).coalesce(
-            max(min_files_per_partition, 1)
-        )
-        return write_table(
-            df, path, mode="overwrite",
-            sort_by=(snap.get("sort_by") or None),
-        )
-    # files written under an earlier partition spec
-    # (evolve_partition_spec) are excluded: replace_partitions removes
-    # previous files by CURRENT-spec partition tuple, so rewriting an
-    # other-spec group could remove an untouched current-spec file that
-    # shares the landing partition without having read its rows.
-    # rewrite_to_spec is the migration path for those files.
-    cur_spec = set(partition_by)
-    by_part: dict[tuple, list[dict]] = {}
-    for f in snap_files:
-        if set(f["partition"].keys()) != cur_spec:
-            continue
-        by_part.setdefault(tuple(sorted(f["partition"].items())), []).append(f)
-    # a partition qualifies when crowded OR when any of its files is
-    # targeted by a merge-on-read delete entry — compaction is the
-    # operation that FOLDS deletes: the rewrite reads with deletes
-    # applied (_scan_files) and write_table prunes the entries whose
-    # targets left the manifest
-    deleted_paths = {
-        p for d in snap.get("delete_files") or [] for p in d["paths"]
-    }
-    crowded = {
-        part: files
-        for part, files in by_part.items()
-        if len(files) > min_files_per_partition
-        or any(f["path"] in deleted_paths for f in files)
-    }
-    if not crowded:
-        return snap
-    crowded_files = [f for files in crowded.values() for f in files]
-    # snapshot-schema read + partition recovery + delete application:
-    # the shared scan planner (same semantics as read_table)
-    df = _scan_files(spark, snap, crowded_files)
-    compacted = df.repartition(max(len(crowded), 1), *partition_by)
-    # sort_by rides through so compaction preserves the table's
-    # clustering (and its stats-skipping) instead of silently recording
-    # sort_by: [] — the unpartitioned branch above always kept it;
-    # replaced_partitions names every crowded partition explicitly so
-    # one emptied by pending MoR deletes still folds (its old files
-    # leave the manifest, its delete entries prune)
-    return write_table(
-        compacted, path, mode="replace_partitions", partition_by=partition_by,
-        sort_by=(snap.get("sort_by") or None),
-        replaced_partitions=[dict(part) for part in crowded],
-    )
-
-
 # ------------------------------------------------------------------
 # Schema evolution DDL (Iceberg semantics: column identity is the
 # FIELD ID, not the name). Each operation commits a METADATA-ONLY
@@ -1254,9 +1069,6 @@ def compact_table(
 # (_scan_files) projects every file through its recorded
 # field_id -> (physical name, type) mapping, so:
 #   * rename is instant and old files keep serving the column,
-#   * drop stops projecting the field without touching data; a later
-#     re-add of the same NAME gets a new id and never resurrects the
-#     dropped data,
 #   * widening (int->long, float->double) casts each file from its
 #     write-time type,
 #   * time travel to a pre-evolution snapshot sees the schema — and
@@ -1285,34 +1097,29 @@ def _evolution_base(path: str):
             snap["partition_by"],
         )
         refs = [_write_manifest(path, files)] if files else []
-    elif "manifest_list" in snap:
+    else:
         # the normal case: evolution is metadata-only, so the new
         # snapshot carries every manifest BY REF — zero manifest bytes
         refs = list(_snap_refs(path, snap))
-    else:  # legacy inline list, already stamped: migrate to a manifest
-        refs = [_write_manifest(path, files)] if files else []
-    return snapshots, snap, schema, last, files, refs
+    return snap, schema, last, files, refs
 
 
-def _commit_evolution(
-    path, snapshots, snap, schema, last, refs, total_rows, sort_by,
-    delete_files, kind: str, detail: dict, partition_by=None,
-) -> dict:
+def _commit_next(path: str, snap: dict, refs: list[str], **fields) -> dict:
+    """Commit the snapshot that follows ``snap`` (optimistic CAS on its
+    id) with ``refs`` as its manifest list. It keeps ``snap``'s schema,
+    partition spec, sort order and delete entries unless ``fields`` —
+    which also give its mode, commit, total_rows and properties —
+    override them."""
     new_snap = {
         "snapshot_id": snap["snapshot_id"] + 1,
         "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
-        "mode": f"evolve-{kind}",
-        "commit": "metadata",
-        "schema": schema,
-        "last_field_id": last,
-        "partition_by": (
-            snap["partition_by"] if partition_by is None else partition_by
-        ),
-        "sort_by": sort_by,
+        "schema": snap["schema"],
+        "last_field_id": snap.get("last_field_id", 0),
+        "partition_by": snap["partition_by"],
+        "sort_by": snap.get("sort_by") or [],
+        "delete_files": list(snap.get("delete_files") or []),
         "manifest_list": _write_manifest_list(path, refs),
-        "delete_files": delete_files,
-        "total_rows": total_rows,
-        "properties": detail,
+        **fields,
     }
     _commit_snapshot(path, snap["snapshot_id"], new_snap)
     return new_snap
@@ -1323,7 +1130,7 @@ def rename_column(path: str, old: str, new: str) -> dict:
     name; the field id carries the identity. Sort order and pending
     delete entries follow the rename; partition columns cannot be
     renamed (their name is baked into directory layout)."""
-    snapshots, snap, schema, last, files, refs = _evolution_base(path)
+    snap, schema, last, files, refs = _evolution_base(path)
     names = [f["name"] for f in schema["fields"]]
     if old not in names:
         raise ValueError(f"no column {old!r}")
@@ -1351,44 +1158,11 @@ def rename_column(path: str, old: str, new: str) -> dict:
         elif d.get("col") == old:
             d["col"] = new
         delete_files.append(d)
-    return _commit_evolution(
-        path, snapshots, snap, schema, last, refs,
-        sum(f["rows"] for f in files), sort_by, delete_files,
-        "rename", {"renamed": {old: new}},
-    )
-
-
-def drop_column(path: str, name: str) -> dict:
-    """Metadata-only column drop: the field stops being projected; no
-    data file is touched. Raises when the column is load-bearing
-    (partition spec, sort order, or a pending delete entry's key)."""
-    snapshots, snap, schema, last, files, refs = _evolution_base(path)
-    names = [f["name"] for f in schema["fields"]]
-    if name not in names:
-        raise ValueError(f"no column {name!r}")
-    if name in snap["partition_by"] or any(
-        name in f["partition"] for f in files
-    ):
-        raise ValueError("cannot drop a partition column")
-    if name in (snap.get("sort_by") or []):
-        raise ValueError(
-            f"{name!r} is in the table sort order — rewrite the sort "
-            "order (compact) before dropping it"
-        )
-    for d in snap.get("delete_files") or []:
-        if name in (d.get("cols") or []) or d.get("col") == name:
-            raise ValueError(
-                f"{name!r} is referenced by a pending delete entry — "
-                "compact_table first to fold deletes"
-            )
-    fields = [f for f in schema["fields"] if f["name"] != name]
-    if not fields:
-        raise ValueError("cannot drop the last column")
-    return _commit_evolution(
-        path, snapshots, snap, {**schema, "fields": fields}, last, refs,
-        sum(f["rows"] for f in files),
-        snap.get("sort_by") or [], list(snap.get("delete_files") or []),
-        "drop", {"dropped": name},
+    return _commit_next(
+        path, snap, refs, mode="evolve-rename", commit="metadata",
+        schema=schema, last_field_id=last, sort_by=sort_by,
+        delete_files=delete_files, total_rows=sum(f["rows"] for f in files),
+        properties={"renamed": {old: new}},
     )
 
 
@@ -1399,13 +1173,13 @@ def widen_column(path: str, name: str, new_type: str) -> dict:
     """Metadata-only safe type promotion (Iceberg's allowed set:
     int->long, float->double). Old files keep their narrow physical
     type and are cast at read time via the field-id mapping."""
-    snapshots, snap, schema, last, files, refs = _evolution_base(path)
+    snap, schema, last, files, refs = _evolution_base(path)
     by_name = {f["name"]: f for f in schema["fields"]}
     if name not in by_name:
         raise ValueError(f"no column {name!r}")
     cur_type = by_name[name]["type"]
     if cur_type == new_type:
-        return snapshots[-1]
+        return snap
     if (cur_type, new_type) not in _WIDENINGS:
         raise ValueError(
             f"unsafe type change {cur_type} -> {new_type}; allowed: "
@@ -1418,11 +1192,11 @@ def widen_column(path: str, name: str, new_type: str) -> dict:
             for f in schema["fields"]
         ],
     }
-    return _commit_evolution(
-        path, snapshots, snap, schema, last, refs,
-        sum(f["rows"] for f in files),
-        snap.get("sort_by") or [], list(snap.get("delete_files") or []),
-        "widen", {"widened": {name: [cur_type, new_type]}},
+    return _commit_next(
+        path, snap, refs, mode="evolve-widen", commit="metadata",
+        schema=schema, last_field_id=last,
+        total_rows=sum(f["rows"] for f in files),
+        properties={"widened": {name: [cur_type, new_type]}},
     )
 
 
@@ -1496,13 +1270,10 @@ def evolve_partition_spec(path: str, new_partition_by: list[str]) -> dict:
     own partition-key set, sources partitioned-out columns from each
     file's manifest entry and the rest from its data, and partition
     pruning keeps (never wrongly drops) other-spec files, with
-    read_table's row-level backstop preserving filter exactness.
-
-    Compaction skips other-spec partitions (replace_partitions cannot
-    express a cross-spec rewrite safely); ``rewrite_to_spec`` migrates
-    the whole table to the current spec in one snapshot when the
-    mixed-spec planning overhead stops being worth it."""
-    snapshots, snap, schema, last, files, refs = _evolution_base(path)
+    read_table's row-level backstop preserving filter exactness. A
+    ``replace_partitions`` write matches partitions by their full value
+    tuple, so it never replaces an other-spec file."""
+    snap, schema, last, files, refs = _evolution_base(path)
     new_partition_by = list(new_partition_by or [])
     names = [f["name"] for f in schema["fields"]]
     missing = [c for c in new_partition_by if c not in names]
@@ -1512,107 +1283,14 @@ def evolve_partition_spec(path: str, new_partition_by: list[str]) -> dict:
         raise ValueError("duplicate partition columns")
     if new_partition_by == snap["partition_by"]:
         return snap
-    return _commit_evolution(
-        path, snapshots, snap, schema, last, refs,
-        sum(f["rows"] for f in files),
-        snap.get("sort_by") or [], list(snap.get("delete_files") or []),
-        "partition-spec",
-        {"partition_spec": [snap["partition_by"], new_partition_by]},
-        partition_by=new_partition_by,
-    )
-
-
-def rewrite_to_spec(spark: SparkSession, path: str) -> dict:
-    """Migrate every file to the CURRENT partition spec: one full
-    rewrite snapshot (overwrite mode — earlier snapshots still
-    time-travel to the old layout) that also folds pending
-    merge-on-read deletes. No-op when the table is already
-    single-spec and delete-free."""
-    snapshots = _load_snapshots(path)
-    if not snapshots:
-        raise FileNotFoundError(f"no table at {path}")
-    snap = snapshots[-1]
-    spec = set(snap["partition_by"])
-    files = _snap_files(path, snap)
-    if not snap.get("delete_files") and all(
-        set(f["partition"].keys()) == spec for f in files
-    ):
-        return snap
-    df = _scan_files(spark, snap, files)
-    return write_table(
-        df, path, mode="overwrite",
-        partition_by=snap["partition_by"] or None,
-        sort_by=(snap.get("sort_by") or None),
-    )
-
-
-def migrate_legacy_files(spark: SparkSession, path: str) -> dict:
-    """Spec-migration FAST PATH (incremental alternative to
-    ``rewrite_to_spec``'s full overwrite): rewrite ONLY the files
-    written under an earlier partition spec into the current spec,
-    carrying every current-spec file by manifest reference. At 100 TB
-    a spec evolution typically strands a small legacy tail —
-    rewriting just that tail is O(legacy bytes) while the full
-    rewrite is O(table).
-
-    Removal is by EXPLICIT file path (the upsert-CoW convention),
-    never by partition tuple, so a current-spec file sharing a
-    landing partition with migrated rows is untouched — the data-loss
-    class compact_table's cross-spec guard exists to prevent cannot
-    occur here. Pending MoR deletes targeting legacy files are folded
-    into the rewrite (the scan applies them); entries also targeting
-    carried files keep serving those. No-op when the table is already
-    single-spec."""
-    snapshots = _load_snapshots(path)
-    if not snapshots:
-        raise FileNotFoundError(f"no table at {path}")
-    snap = snapshots[-1]
-    partition_by = snap["partition_by"]
-    spec = set(partition_by)
-    snap_files = _snap_files(path, snap)
-    legacy = [
-        f for f in snap_files if set(f["partition"].keys()) != spec
-    ]
-    if not legacy:
-        return snap
-    out = _scan_files(spark, snap, legacy)  # deletes applied here
-    sort_by = snap.get("sort_by") or []
-    if sort_by:
-        out = out.repartitionByRange(
-            max(out.rdd.getNumPartitions(), 1), *sort_by
-        ).sortWithinPartitions(*sort_by)
-    commit_id = uuid.uuid4().hex[:12]
-    data_dir = os.path.join(path, "data", f"commit={commit_id}")
-    writer = out.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(data_dir)
-    new_files = _collect_file_entries(data_dir, partition_by)
-    _stamp_field_mapping(new_files, snap["schema"], partition_by)
-    refs, files = _next_manifests(
-        path, snap, {f["path"] for f in legacy}, new_files
-    )
-    snapshot = {
-        "snapshot_id": snap["snapshot_id"] + 1,
-        "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
-        "mode": "migrate-spec",
-        "commit": commit_id,
-        "schema": snap["schema"],
-        "last_field_id": snap.get("last_field_id", 0),
-        "partition_by": partition_by,
-        "sort_by": sort_by,
-        "manifest_list": _write_manifest_list(path, refs),
-        "delete_files": _carry_delete_files(
-            snap, {f["path"] for f in files}
-        ),
-        "total_rows": sum(f["rows"] for f in files),
-        "properties": {
-            "migrated_files": len(legacy),
-            "carried_files": len(snap_files) - len(legacy),
+    return _commit_next(
+        path, snap, refs, mode="evolve-partition-spec", commit="metadata",
+        schema=schema, last_field_id=last, partition_by=new_partition_by,
+        total_rows=sum(f["rows"] for f in files),
+        properties={
+            "partition_spec": [snap["partition_by"], new_partition_by]
         },
-    }
-    _commit_snapshot(path, snap["snapshot_id"], snapshot)
-    return snapshot
+    )
 
 
 def upsert_rows(
@@ -1620,33 +1298,20 @@ def upsert_rows(
     path: str,
     updates: DataFrame,
     key: list[str],
-    strategy: str = "auto",
 ) -> dict:
-    """Row-level MERGE (Iceberg v2, file granularity): delete current
-    rows whose ``key`` matches an update, insert every update row.
-    Only files whose recorded column stats OVERLAP the updates' key
-    bounds are affected; the rest are carried by reference. Earlier
-    snapshots still time-travel to the pre-merge files.
-
-    ``strategy``:
-
-    * ``"cow"``  — copy-on-write: touched files are rewritten minus
-      the matched keys plus the updates. Best when updates are dense
-      relative to the touched files.
-    * ``"mor"``  — merge-on-read: touched files stay; the commit adds
-      the updates as new data files plus an equality-delete file of
-      the update keys targeting exactly the touched files. Readers
-      apply the delete as a broadcast anti-join at scan time;
-      ``compact_table`` folds it into rewritten files later. Best for
-      high-frequency narrow upserts at 100 TB, where CoW would
-      rewrite millions of rows to merge a handful.
-    * ``"auto"`` (default) — ``mor`` when the touched files hold more
-      than ``_MOR_AMPLIFICATION`` rows per update row, else ``cow``.
+    """Row-level MERGE, merge-on-read (Iceberg v2 equality deletes):
+    current rows whose ``key`` matches an update are deleted, every
+    update row is inserted. No data file is rewritten: the commit adds
+    the updates as new data files plus one equality-delete file of the
+    update keys, targeting exactly the files whose recorded column
+    stats could hold an update key. Readers apply it as a broadcast
+    anti-join at scan time (_scan_files). An upsert that touches no
+    file commits the updates as a plain append. Earlier snapshots still
+    time-travel to the pre-merge rows.
 
     ``updates`` must carry the full table schema (use write_table for
-    schema evolution first). Returns the new snapshot record, which
-    reports ``rewritten_files``/``carried_files`` (+``delete_targets``
-    for MoR commits)."""
+    schema evolution first). Returns the new snapshot record, whose
+    properties report ``delete_targets`` and ``carried_files``."""
     snapshots = _load_snapshots(path)
     if not snapshots:
         raise FileNotFoundError(f"no table at {path}")
@@ -1678,7 +1343,6 @@ def upsert_rows(
             f"updates contain duplicate key {[dup[0][k] for k in key]} — "
             "MERGE requires one update row per key"
         )
-    partition_by = snap["partition_by"]
 
     # File targeting. For a bounded number of distinct update keys,
     # test PER FILE whether any update key TUPLE falls inside the
@@ -1690,8 +1354,6 @@ def upsert_rows(
     # back to the per-column bounding box, which is a superset and
     # therefore always safe; files without stats are always touched
     # (they might hold matching keys).
-    from pyspark.sql import functions as F
-
     _KEYSET_CAP = 100_000
     keyset = None
     distinct = (
@@ -1754,66 +1416,18 @@ def upsert_rows(
             return _stats_match(f, key_filter, snap["schema"])
 
     touched = [f for f in snap_files if is_touched(f)]
-    carried = [f for f in snap_files if not is_touched(f)]
 
-    if strategy == "auto":
-        # merge-on-read when the copy-on-write amplification is high:
-        # rewriting N rows of touched files to merge M << N updates.
-        # The ratio comes free from the manifest; the update count is
-        # one cheap job over the (small by contract) updates frame.
-        touched_rows = sum(f["rows"] for f in touched)
-        n_updates = updates.count()
-        strategy = (
-            "mor"
-            if touched and touched_rows > _MOR_AMPLIFICATION * max(n_updates, 1)
-            else "cow"
-        )
-    if strategy not in ("cow", "mor"):
-        raise ValueError(f"unknown upsert strategy {strategy!r}")
-
-    if strategy == "mor" and touched:
-        # Iceberg v2 merge-on-read: touched files are NOT rewritten.
-        # Commit = the update rows as new data files + an
-        # equality-delete file of the update keys targeting exactly
-        # the touched files; readers anti-join at scan time
-        # (_scan_files), compaction folds it later.
-        out = updates.select(*table_cols)
-        mode = "upsert-mor"
-    else:
-        out = (
-            _scan_files(spark, snap, touched)
-            .join(updates.select(*key).dropDuplicates(), key, "left_anti")
-            .unionByName(updates.select(*table_cols))
-            if touched
-            else updates.select(*table_cols)
-        )
-        strategy = "cow"
-        mode = "upsert"
-
-    commit_id = uuid.uuid4().hex[:12]
-    data_dir = os.path.join(path, "data", f"commit={commit_id}")
-    sort_by = snap.get("sort_by") or []
-    if sort_by:
-        # preserve the table's clustering so stats stay tight across
-        # repeated upserts (otherwise skipping degrades until the next
-        # compaction)
-        n_out = out.rdd.getNumPartitions()
-        out = out.repartitionByRange(
-            max(n_out, 1), *sort_by
-        ).sortWithinPartitions(*sort_by)
-    writer = out.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(data_dir)
-    new_files = _collect_file_entries(data_dir, partition_by)
-    _stamp_field_mapping(new_files, snap["schema"], partition_by)
-
-    if strategy == "mor" and touched:
-        # nothing leaves the table: previous manifests carry by ref
-        refs, files = _next_manifests(path, snap, set(), new_files)
-        delete_files = _carry_delete_files(
-            snap, {f["path"] for f in files}
-        )
+    # the updates keep the table's clustering, so stats stay tight
+    # across repeated upserts
+    commit_id, new_files = _write_data_files(
+        updates.select(*table_cols), path, snap["partition_by"],
+        snap.get("sort_by"), snap["schema"],
+    )
+    # nothing leaves the table: previous manifests carry by ref, and so
+    # does every pending delete entry
+    refs, files = _next_manifests(path, snap, set(), new_files)
+    delete_files = [dict(d) for d in snap.get("delete_files") or []]
+    if touched:
         eq_path = _write_eq_delete(
             spark, path, commit_id, updates.select(*key).dropDuplicates()
         )
@@ -1826,44 +1440,15 @@ def upsert_rows(
                 "paths": [f["path"] for f in touched],
             }
         )
-        properties = {
-            "rewritten_files": 0,
-            "carried_files": len(snap_files),
+    return _commit_next(
+        path, snap, refs, mode="upsert-mor", commit=commit_id,
+        delete_files=delete_files,
+        total_rows=sum(f["rows"] for f in files),
+        properties={
             "delete_targets": len(touched),
-        }
-    else:
-        refs, files = _next_manifests(
-            path, snap, {f["path"] for f in touched}, new_files
-        )
-        delete_files = _carry_delete_files(snap, {f["path"] for f in files})
-        properties = {
-            "rewritten_files": len(touched),
-            "carried_files": len(carried),
-        }
-    snapshot = {
-        "snapshot_id": snap["snapshot_id"] + 1,
-        "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
-        "mode": mode,
-        "commit": commit_id,
-        "schema": snap["schema"],
-        "last_field_id": snap.get("last_field_id", 0),
-        "partition_by": partition_by,
-        "sort_by": sort_by,
-        "manifest_list": _write_manifest_list(path, refs),
-        "delete_files": delete_files,
-        "total_rows": sum(f["rows"] for f in files),
-        "properties": properties,
-    }
-    _commit_snapshot(
-        path, snapshots[-1]["snapshot_id"] if snapshots else 0, snapshot
+            "carried_files": len(snap_files),
+        },
     )
-    return snapshot
-
-
-# copy-on-write amplification threshold for upsert strategy "auto":
-# switch to merge-on-read when the touched files hold more than this
-# many rows per update row
-_MOR_AMPLIFICATION = 8
 
 
 def _write_eq_delete(spark, path: str, commit_id: str, keys: DataFrame) -> str:
@@ -1887,32 +1472,26 @@ def delete_range(
     col: str,
     lo=None,
     hi=None,
-    strategy: str = "cow",
 ) -> dict:
     """Row-level range DELETE (the retention/GDPR shape: ``DELETE
-    WHERE col BETWEEN lo AND hi``, either bound open). SQL DELETE
-    semantics: a NULL ``col`` makes the predicate UNKNOWN, so NULL
-    rows are always KEPT. Three file classes from the manifest stats,
-    cheapest first:
+    WHERE col BETWEEN lo AND hi``, either bound open), merge-on-read:
+    the commit is metadata-only and reads or writes no data file. SQL
+    DELETE semantics: a NULL ``col`` makes the predicate UNKNOWN, so
+    NULL rows are always KEPT. Three file classes from the manifest
+    stats:
 
-    * fully inside the range AND proven null-free -> DROPPED
-      metadata-only (no read, no write — the Iceberg trick that makes
-      time-based retention on a date-clustered table free; parquet
-      min/max ignore NULLs, so the drop additionally requires the
-      file's ``nullfree`` flag — otherwise its NULL rows would vanish
-      with it),
+    * fully inside the range AND proven null-free -> DROPPED from the
+      manifest (parquet min/max ignore NULLs, so the drop additionally
+      requires the file's ``nullfree`` flag — otherwise its NULL rows
+      would vanish with it),
     * disjoint                -> carried by reference (NULL rows kept),
-    * overlapping, stats-less, or inside-but-maybe-null -> with
-      ``strategy="cow"`` (default) rewritten with the null-safe
-      complement filter; with ``strategy="mor"`` kept in place and
-      covered by a predicate-delete entry applied at scan time and
-      folded by the next compaction — the whole DELETE is then
-      metadata-only, the right shape for frequent retention cuts on
-      a 100 TB table.
+    * overlapping, stats-less, or inside-but-maybe-null -> kept in
+      place and covered by a predicate-delete entry, applied at scan
+      time as the null-safe complement filter.
 
     Earlier snapshots still time-travel to the deleted rows. Returns
-    the new snapshot; properties report dropped/rewritten/carried
-    file counts (+``delete_targets`` for MoR commits)."""
+    the new snapshot; properties report dropped/carried file counts
+    and ``delete_targets``."""
     snapshots = _load_snapshots(path)
     if not snapshots:
         raise FileNotFoundError(f"no table at {path}")
@@ -1923,17 +1502,17 @@ def delete_range(
     if hi_c is None and hi is not None:
         raise ValueError(f"unsupported bound type for {col}: {hi!r}")
 
-    dropped, carried, rewrite = [], [], []
+    dropped, carried, targets = [], [], []
     for f in _snap_files(path, snap):
         pcol = _physical_col(f, col, snap["schema"])
         st = (f.get("stats") or {}).get(pcol) if pcol else None
         if not st:
-            rewrite.append(f)
+            targets.append(f)
             continue
         fmin, fmax = st
         # _cmp_stats returning None (incomparable representations,
-        # e.g. numeric bound vs string stats) degrades to rewrite —
-        # never a crash, never a wrong drop/carry
+        # e.g. numeric bound vs string stats) degrades to a delete
+        # target — never a crash, never a wrong drop/carry
         c_min_lo = _cmp_stats(fmin, lo_c) if lo is not None else None
         c_max_lo = _cmp_stats(fmax, lo_c) if lo is not None else None
         c_min_hi = _cmp_stats(fmin, hi_c) if hi is not None else None
@@ -1949,55 +1528,14 @@ def delete_range(
         elif disjoint:
             carried.append(f)
         else:
-            rewrite.append(f)
+            targets.append(f)
 
-    from pyspark.sql import functions as F
-
-    if strategy not in ("cow", "mor"):
-        raise ValueError(f"unknown delete strategy {strategy!r}")
-    partition_by = snap["partition_by"]
-    new_files: list[dict] = []
-    commit_id = uuid.uuid4().hex[:12]
-    if rewrite and strategy == "cow":
-        cur = _scan_files(spark, snap, rewrite)
-        in_range = F.lit(True)
-        if lo is not None:
-            in_range = in_range & (F.col(col) >= F.lit(lo))
-        if hi is not None:
-            in_range = in_range & (F.col(col) <= F.lit(hi))
-        # null-safe complement: three-valued logic makes ~in_range NULL
-        # for NULL col (row silently dropped); DELETE WHERE keeps them
-        out = cur.filter(~in_range | F.col(col).isNull())
-        sort_by = snap.get("sort_by") or []
-        if sort_by:
-            out = out.repartitionByRange(
-                max(out.rdd.getNumPartitions(), 1), *sort_by
-            ).sortWithinPartitions(*sort_by)
-        data_dir = os.path.join(path, "data", f"commit={commit_id}")
-        writer = out.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(data_dir)
-        new_files = _collect_file_entries(data_dir, partition_by)
-        _stamp_field_mapping(new_files, snap["schema"], partition_by)
-
-    if strategy == "mor":
-        # merge-on-read: boundary files stay in place; the commit is a
-        # predicate-delete entry targeting exactly those files, applied
-        # as the null-safe complement filter at scan time and folded by
-        # the next compaction — a metadata-only row-level DELETE.
-        # Only manifests holding a DROPPED file are rewritten.
-        refs, files = _next_manifests(
-            path, snap, {f["path"] for f in dropped}, []
-        )
-    else:
-        refs, files = _next_manifests(
-            path, snap,
-            {f["path"] for f in dropped} | {f["path"] for f in rewrite},
-            new_files,
-        )
+    # only manifests holding a DROPPED file are rewritten
+    refs, files = _next_manifests(
+        path, snap, {f["path"] for f in dropped}, []
+    )
     delete_files = _carry_delete_files(snap, {f["path"] for f in files})
-    if strategy == "mor" and rewrite:
+    if targets:
         lo_repr, lo_tag = _bound_repr(lo)
         hi_repr, hi_tag = _bound_repr(hi)
         delete_files.append(
@@ -2008,364 +1546,16 @@ def delete_range(
                 "lo_type": lo_tag,
                 "hi": hi_repr,
                 "hi_type": hi_tag,
-                "paths": [f["path"] for f in rewrite],
+                "paths": [f["path"] for f in targets],
             }
         )
-    snapshot = {
-        "snapshot_id": snap["snapshot_id"] + 1,
-        "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
-        "mode": "delete" if strategy == "cow" else "delete-mor",
-        "commit": commit_id,
-        "schema": snap["schema"],
-        "last_field_id": snap.get("last_field_id", 0),
-        "partition_by": partition_by,
-        "sort_by": snap.get("sort_by") or [],
-        "manifest_list": _write_manifest_list(path, refs),
-        "delete_files": delete_files,
-        "total_rows": sum(f["rows"] for f in files),
-        "properties": {
+    return _commit_next(
+        path, snap, refs, mode="delete-mor", commit="metadata",
+        delete_files=delete_files,
+        total_rows=sum(f["rows"] for f in files),
+        properties={
             "dropped_files": len(dropped),
-            "rewritten_files": len(rewrite) if strategy == "cow" else 0,
-            "delete_targets": len(rewrite) if strategy == "mor" else 0,
+            "delete_targets": len(targets),
             "carried_files": len(carried),
         },
-    }
-    _commit_snapshot(
-        path, snapshots[-1]["snapshot_id"] if snapshots else 0, snapshot
     )
-    return snapshot
-
-
-def expire_snapshots(path: str, keep_last: int = 2) -> dict:
-    """Iceberg `expire_snapshots`: drop all but the newest
-    ``keep_last`` snapshots and DELETE data files no surviving snapshot
-    references (the only operation that ever removes data files —
-    overwrite/replace keep them for time travel). Exactly-once scope
-    markers (write_table ``properties`` with a ``scope`` key) from
-    dropped snapshots are CARRIED into the oldest kept snapshot's
-    ``carried_scopes`` — expiring history must never erase a streaming
-    writer's replay guard, or a redelivered micro-batch after a
-    crash+expiry would double-merge. Returns
-    {"removed_snapshots": n, "deleted_files": n}."""
-    # the whole read-compute-save runs under the commit lock: expiry
-    # REWRITES the manifest list, and racing a concurrent append would
-    # silently drop the appended snapshot
-    with _commit_lock(path):
-        return _expire_locked(path, keep_last)
-
-
-def _expire_locked(path: str, keep_last: int) -> dict:
-    snapshots = _load_snapshots(path)
-    if len(snapshots) <= keep_last:
-        return {"removed_snapshots": 0, "deleted_files": 0}
-    # tagged snapshots are retention-pinned: they survive any
-    # keep_last (drop_tag first to release them)
-    tagged = set(_load_refs(path).values())
-    keep_ids = {
-        s["snapshot_id"] for s in snapshots[-keep_last:]
-    } | tagged
-    kept = [s for s in snapshots if s["snapshot_id"] in keep_ids]
-    dropped = [s for s in snapshots if s["snapshot_id"] not in keep_ids]
-    if not dropped:
-        return {"removed_snapshots": 0, "deleted_files": 0}
-    # newest marker per scope across the DROPPED snapshots (kept ones
-    # still carry their own); merge under the oldest kept snapshot
-    carried: dict[str, int] = {}
-    for s in dropped:  # oldest -> newest, later wins
-        props = s.get("properties") or {}
-        if "scope" in props:
-            carried[props["scope"]] = int(props["batch_id"])
-        for sc, bid in (props.get("carried_scopes") or {}).items():
-            carried[sc] = max(int(bid), carried.get(sc, -1))
-    if carried:
-        anchor = dict(kept[0])
-        merged = dict(anchor.get("properties") or {})
-        prev = dict(merged.get("carried_scopes") or {})
-        for sc, bid in carried.items():
-            prev[sc] = max(int(bid), int(prev.get(sc, -1)))
-        merged["carried_scopes"] = prev
-        anchor["properties"] = merged
-        kept = [anchor] + kept[1:]
-    def _paths(s: dict) -> set[str]:
-        # data files + equality-delete files (pred entries are pure
-        # metadata, nothing on disk to manage)
-        return {f["path"] for f in _snap_files(path, s)} | {
-            d["path"] for d in s.get("delete_files") or [] if "path" in d
-        }
-
-    live = {p for s in kept for p in _paths(s)}
-    dead = {p for s in dropped for p in _paths(s) if p not in live}
-    # manifest + manifest-list files referenced only by dropped
-    # snapshots die with them (a manifest list is per-snapshot, so a
-    # dropped snapshot's list always dies; its manifests only when no
-    # kept snapshot still carries them)
-    def _refs(s: dict) -> set[str]:
-        out = set(_snap_refs(path, s))
-        if s.get("manifest_list"):
-            out.add(s["manifest_list"])
-        return out
-
-    live_refs = {r for s in kept for r in _refs(s)}
-    dead_refs = {r for s in dropped for r in _refs(s) if r not in live_refs}
-    # COMMIT the pruned manifest (tmp+rename in _save_snapshots) BEFORE
-    # touching data files: a crash mid-delete then only leaks orphan
-    # files the next expiry can't see (harmless), instead of leaving
-    # snapshots.json pointing at removed files — which would break
-    # time travel AND lose the carried_scopes replay markers.
-    _save_snapshots(path, kept)
-    for fpath in sorted(dead):
-        if os.path.exists(fpath):
-            os.remove(fpath)
-    for ref in sorted(dead_refs):
-        fpath = os.path.join(_manifest_dir(path), ref)
-        _MANIFEST_CACHE.pop(fpath, None)
-        with contextlib.suppress(OSError):
-            os.remove(fpath)
-    return {"removed_snapshots": len(dropped), "deleted_files": len(dead)}
-
-
-def read_incremental(
-    spark: SparkSession,
-    path: str,
-    from_snapshot: int,
-    to_snapshot: int | None = None,
-) -> DataFrame:
-    """Iceberg incremental append scan: the rows ADDED strictly after
-    ``from_snapshot`` up to and including ``to_snapshot`` (default:
-    current) — the shape a downstream batch consumer uses to process
-    only new data per run. Planned purely from manifests: the data
-    files present in the target snapshot but absent from the base one.
-
-    Only append-shaped history is incrementally readable: an
-    overwrite, delete, upsert, or compaction in the range rewrites or
-    removes rows, so "what changed" is no longer a file-set difference
-    — those raise, directing the caller to a full read (same contract
-    as Iceberg's incremental scan, which supports append snapshots
-    only). Schema evolution in the range is fine (metadata-only; the
-    scan uses the TARGET snapshot's schema)."""
-    snapshots = _load_snapshots(path)
-    if not snapshots:
-        raise FileNotFoundError(f"no table at {path}")
-    by_id = {s["snapshot_id"]: s for s in snapshots}
-    if from_snapshot not in by_id:
-        raise ValueError(f"no snapshot {from_snapshot} in {path}")
-    to_snapshot = (
-        snapshots[-1]["snapshot_id"] if to_snapshot is None else to_snapshot
-    )
-    if to_snapshot not in by_id:
-        raise ValueError(f"no snapshot {to_snapshot} in {path}")
-    if to_snapshot < from_snapshot:
-        raise ValueError(
-            f"to_snapshot {to_snapshot} < from_snapshot {from_snapshot}"
-        )
-    non_append = [
-        (s["snapshot_id"], s["mode"])
-        for s in snapshots
-        if from_snapshot < s["snapshot_id"] <= to_snapshot
-        and s["mode"] not in ("append", "evolve-rename", "evolve-drop",
-                              "evolve-widen")
-    ]
-    if non_append:
-        raise ValueError(
-            f"non-append snapshots in range: {non_append} — rows were "
-            "rewritten or removed, run a full read of the target "
-            "snapshot instead"
-        )
-    base = {f["path"] for f in _snap_files(path, by_id[from_snapshot])}
-    target = by_id[to_snapshot]
-    added = [
-        f for f in _snap_files(path, target) if f["path"] not in base
-    ]
-    return _scan_files(spark, target, added)
-
-
-def remove_orphan_files(
-    path: str, min_age_s: float = 3600.0, dry_run: bool = False
-) -> dict:
-    """Iceberg ``remove_orphan_files``: delete data/delete files under
-    the table directory that NO snapshot references — the leftovers of
-    crashed writes (a writer dies after ``writer.parquet`` but before
-    the manifest commit) and of expiry crashes (manifest committed
-    first by design, files orphaned on purpose). Only files older than
-    ``min_age_s`` are touched: an IN-FLIGHT commit has already written
-    its files but not yet its manifest, and reaping them would corrupt
-    the commit — age is the standard Iceberg guard for exactly this
-    race. Returns {"orphans": [...], "deleted": n}."""
-    snapshots = _load_snapshots(path)
-    if not snapshots:
-        raise FileNotFoundError(f"no table at {path}")
-    live: set[str] = set()
-    live_refs: set[str] = set()
-    for s in snapshots:
-        live |= {f["path"] for f in _snap_files(path, s)}
-        live |= {
-            d["path"] for d in s.get("delete_files") or [] if "path" in d
-        }
-        live_refs |= set(_snap_refs(path, s))
-        if s.get("manifest_list"):
-            live_refs.add(s["manifest_list"])
-    now = time.time()
-    orphans: list[str] = []
-    # manifests written by a crashed commit (file landed, snapshot
-    # never did) are unreferenced by every snapshot — same age guard
-    mdir = _manifest_dir(path)
-    if os.path.isdir(mdir):
-        for name in os.listdir(mdir):
-            if name in live_refs or not name.endswith(".json"):
-                continue
-            fpath = os.path.join(mdir, name)
-            try:
-                if now - os.path.getmtime(fpath) >= min_age_s:
-                    orphans.append(fpath)
-            except OSError:
-                continue
-    for sub in ("data", "deletes"):
-        root_dir = os.path.join(path, sub)
-        for root, _dirs, names in os.walk(root_dir):
-            for name in names:
-                fpath = os.path.join(root, name)
-                if fpath in live:
-                    continue
-                # Spark job markers (_SUCCESS etc.) ride along with
-                # their commit dir; only age-expired files qualify
-                try:
-                    if now - os.path.getmtime(fpath) < min_age_s:
-                        continue
-                except OSError:
-                    continue
-                orphans.append(fpath)
-    deleted = 0
-    if not dry_run:
-        for fpath in sorted(orphans):
-            try:
-                os.remove(fpath)
-                deleted += 1
-            except OSError:
-                pass
-        # sweep now-empty commit directories
-        for sub in ("data", "deletes"):
-            for root, dirs, names in os.walk(
-                os.path.join(path, sub), topdown=False
-            ):
-                if not dirs and not names:
-                    try:
-                        os.rmdir(root)
-                    except OSError:
-                        pass
-    return {"orphans": sorted(orphans), "deleted": deleted}
-
-
-def table_files(spark: SparkSession, path: str) -> DataFrame:
-    """Iceberg ``.files`` metadata table: one row per live data file of
-    the CURRENT snapshot (path, partition json, rows, per-column
-    min/max stats json, nullfree columns) — planning introspection
-    without touching any data file."""
-    snapshots = _load_snapshots(path)
-    if not snapshots:
-        raise FileNotFoundError(f"no table at {path}")
-    rows = [
-        (
-            f["path"],
-            json.dumps(f.get("partition") or {}, sort_keys=True),
-            f["rows"],
-            json.dumps(f.get("stats") or {}, sort_keys=True),
-            list(f.get("nullfree") or []),
-        )
-        for f in _snap_files(path, snapshots[-1])
-    ]
-    return spark.createDataFrame(
-        rows,
-        "file_path string, partition string, record_count long, "
-        "stats string, nullfree array<string>",
-    )
-
-
-def table_manifests(spark: SparkSession, path: str) -> DataFrame:
-    """Iceberg ``.manifests`` metadata table: one row per manifest of
-    the CURRENT snapshot (ref, file/row counts, partition-value
-    summary) — shows how commits clustered the table and which
-    manifests a subtractive commit would have to rewrite."""
-    snapshots = _load_snapshots(path)
-    if not snapshots:
-        raise FileNotFoundError(f"no table at {path}")
-    snap = snapshots[-1]
-    rows = []
-    for ref in _snap_refs(path, snap):
-        entries = _load_manifest(path, ref)
-        parts = sorted(
-            {
-                json.dumps(e.get("partition") or {}, sort_keys=True)
-                for e in entries
-            }
-        )
-        rows.append(
-            (
-                ref,
-                len(entries),
-                sum(e["rows"] for e in entries),
-                parts,
-            )
-        )
-    return spark.createDataFrame(
-        rows,
-        "manifest string, file_count long, row_count long, "
-        "partitions array<string>",
-    )
-
-
-def table_history(spark: SparkSession, path: str) -> DataFrame:
-    """Iceberg ``.history``/``.snapshots`` metadata table: one row per
-    snapshot (id, timestamp, operation, file/row counts, delete-entry
-    count) from the manifest only."""
-    snapshots = _load_snapshots(path)
-    if not snapshots:
-        raise FileNotFoundError(f"no table at {path}")
-    rows = [
-        (
-            s["snapshot_id"],
-            s["ts"],
-            s["mode"],
-            len(_snap_files(path, s)),
-            s["total_rows"],
-            len(s.get("delete_files") or []),
-        )
-        for s in snapshots
-    ]
-    return spark.createDataFrame(
-        rows,
-        "snapshot_id long, committed_at string, operation string, "
-        "file_count long, total_rows long, delete_file_count long",
-    )
-
-
-def stats_pruned_count(
-    path: str, stats_filter: dict, snapshot_id: int | None = None
-) -> tuple[int, int]:
-    """(selected, total) file counts for a column-range filter —
-    data-skipping evidence (the stats analogue of pruned_file_count)."""
-    snapshots = _load_snapshots(path)
-    snap = snapshots[-1] if snapshot_id is None else [
-        s for s in snapshots if s["snapshot_id"] == snapshot_id
-    ][0]
-    files = _snap_files(path, snap)
-    total = len(files)
-    selected = len(
-        [f for f in files if _stats_match(f, stats_filter, snap["schema"])]
-    )
-    return selected, total
-
-
-def pruned_file_count(
-    path: str, partition_filter: dict, snapshot_id: int | None = None
-) -> tuple[int, int]:
-    """(selected, total) file counts for a filter — pruning evidence."""
-    snapshots = _load_snapshots(path)
-    snap = snapshots[-1] if snapshot_id is None else [
-        s for s in snapshots if s["snapshot_id"] == snapshot_id
-    ][0]
-    files = _snap_files(path, snap)
-    total = len(files)
-    selected = len(
-        [f for f in files if _partition_match(f, partition_filter)]
-    )
-    return selected, total

@@ -1,14 +1,14 @@
-"""Structured Streaming ingest variant of the triple-extraction stage.
+"""Structured Streaming maintenance of the KG edge table.
 
-The north rule prescribes a batch pipeline with resumable checkpoints
-(SURVEY.md §1.2), but a continuously-crawled corpus lands as a growing
-directory of page files; this module runs the SAME fused extraction
-stage incrementally: ``readStream`` over the pages directory ->
-mapInPandas (identical code object as batch — Spark streams support
-arbitrary stateless transforms) -> parquet sink with its own streaming
-checkpoint. `Trigger.AvailableNow` drains the backlog and stops, which
-both bounds test runtime and models scheduled micro-batch catch-up
-runs on a cluster.
+A continuously-crawled corpus lands as a growing directory of page
+files. ``stream_edge_weights`` runs the SAME fused extraction stage as
+the batch job over ``readStream`` of that directory (mapInPandas —
+Spark streams support arbitrary stateless transforms) and MERGEs each
+micro-batch's edge deltas into an Iceberg-style table
+(sources/table.py). `Trigger.AvailableNow` drains the backlog and
+stops, which both bounds test runtime and models scheduled micro-batch
+catch-up runs on a cluster. ``link_merge_fn`` applies the same
+bucketed merge to the web link graph.
 """
 
 from __future__ import annotations
@@ -20,183 +20,12 @@ from pyspark.storagelevel import StorageLevel
 from .operators.ner import extract_triples_stage
 
 
-def stream_pages(
-    spark: SparkSession, pages_dir: str, schema=None
-) -> DataFrame:
+def stream_pages(spark: SparkSession, pages_dir: str) -> DataFrame:
     """File-source stream over a directory of pages parquet files."""
-    if schema is None:
-        schema = spark.read.parquet(pages_dir).schema
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(spark.read.parquet(pages_dir).schema)
         .option("maxFilesPerTrigger", 8)
         .parquet(pages_dir)
-    )
-
-
-def stream_windowed_triple_counts(
-    spark: SparkSession,
-    pages_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    tagger_bc,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    lang: str = "en",
-):
-    """Stateful streaming: triples per predicate per event-time window.
-
-    Watermarked on `warc_ts` (crawl time) so late-arriving pages update
-    open windows until the watermark passes, then state is dropped —
-    the standard late-data contract. `update` mode emits changed
-    windows per micro-batch; the parquet-compatible sink here is the
-    append-on-close variant, so output lands once a window finalizes.
-    """
-    pages = stream_pages(spark, pages_dir).filter(F.col("lang") == lang)
-    triples = extract_triples_stage(pages, tagger_bc)
-    counts = (
-        triples.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("w"), F.col("pred"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "pred", "n")
-    )
-    return (
-        counts.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .outputMode("append")
-        .start()
-    )
-
-
-def stream_triples(
-    spark: SparkSession,
-    pages_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    tagger_bc,
-    lang: str = "en",
-):
-    """Start an available-now streaming query: pages dir -> triples
-    parquet. Returns the StreamingQuery (await with .awaitTermination())."""
-    pages = stream_pages(spark, pages_dir).filter(F.col("lang") == lang)
-    triples = extract_triples_stage(pages, tagger_bc)
-    return (
-        triples.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .outputMode("append")
-        .start()
-    )
-
-
-def stream_linked_mentions(
-    spark: SparkSession,
-    pages_dir: str,
-    dictionary: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    tagger_bc,
-    lang: str = "en",
-):
-    """Streaming KG mention linking: pages stream -> fused extraction
-    -> mention rows -> exact dictionary linking (stream-static
-    broadcast join) -> parquet, all stateless and therefore valid in
-    append mode with no watermark. Unlinked mentions carry a stable
-    negative synthetic id (operators/graph.synthetic_entity_id) so the
-    stream output is immediately graph-joinable. For the MinHash-LSH
-    residual pass there are two deployment shapes: per-micro-batch via
-    foreachBatch (stream_linked_mentions_lsh — pinned equal to the
-    batch linker), or this cheaper exact-only sink plus a periodic
-    batch pass over the accumulated `link_method='unlinked'` rows."""
-    from .operators.graph import synthetic_entity_id
-    from .operators.linking import exact_dict_link, mentions_from_triples
-
-    pages = stream_pages(spark, pages_dir).filter(F.col("lang") == lang)
-    triples = extract_triples_stage(pages, tagger_bc)
-    linked = exact_dict_link(mentions_from_triples(triples), dictionary)
-    out = linked.select(
-        "url",
-        "warc_ts",
-        "sent_idx",
-        "surface_norm",
-        "entity_type",
-        F.coalesce(
-            F.col("canonical_id"),
-            synthetic_entity_id(F.col("surface_norm"), F.col("entity_type")),
-        ).alias("entity_id"),
-        F.coalesce(F.col("canonical_name"), F.col("surface_norm")).alias(
-            "node_name"
-        ),
-        F.when(F.col("canonical_id").isNotNull(), F.lit("dict"))
-        .otherwise(F.lit("unlinked"))
-        .alias("link_method"),
-    )
-    return (
-        out.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .outputMode("append")
-        .start()
-    )
-
-
-_LINKED_COLS = (
-    "url", "warc_ts", "sent_idx", "surface_norm", "entity_type",
-    "entity_id", "node_name", "link_method",
-)
-
-
-def stream_linked_mentions_lsh(
-    spark: SparkSession,
-    pages_dir: str,
-    dictionary: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    tagger_bc,
-    lang: str = "en",
-):
-    """Streaming mention linking with the FULL dict + MinHash-LSH
-    residual path per micro-batch (the round-3 verdict's deferred
-    item): the stream side stays stateless (pages -> fused extraction
-    -> mention rows), and foreachBatch runs the batch linker
-    (link_mentions: exact broadcast join + banded-LSH residual against
-    the static dictionary) on each micro-batch.
-
-    This is sound — identical to one batch run over the union of all
-    micro-batches — because the linking decision is a PURE FUNCTION of
-    (surface_norm, entity_type) and the static dictionary: LSH
-    candidates come only from dictionary aliases, never from other
-    surfaces, so batch membership cannot change any row's link.
-    tests/test_streaming_edges.py pins stream==batch equality
-    row-for-row. The aggregation steps LSH needs (dropDuplicates,
-    window rank) are legal here precisely because foreachBatch bodies
-    execute as ordinary batch jobs.
-
-    Each micro-batch overwrites its own ``batch=<id>`` partition
-    directory, so a redelivered batch after a crash rewrites identical
-    content instead of appending duplicates (idempotent sink)."""
-    from .operators.graph import with_entity_ids
-    from .operators.linking import link_mentions, mentions_from_triples
-
-    pages = stream_pages(spark, pages_dir).filter(F.col("lang") == lang)
-    mentions = mentions_from_triples(
-        extract_triples_stage(pages, tagger_bc)
-    )
-
-    def link_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = with_entity_ids(link_mentions(batch_df, dictionary)).select(
-            *_LINKED_COLS
-        )
-        out.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-
-    return (
-        mentions.writeStream.foreachBatch(link_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
 
 
@@ -250,42 +79,40 @@ def stream_edge_weights(
 
 def _last_merged_batch(table_path: str, scope: str) -> int:
     """Most recent snapshot carrying THIS scope's replay marker (other
-    writers — compaction, other streams — may commit in between);
-    expire_snapshots preserves dropped markers in carried_scopes."""
+    writers — other streams — may commit in between)."""
     from .sources.table import _load_snapshots
 
     for s in reversed(_load_snapshots(table_path)):
         props = s.get("properties") or {}
         if props.get("scope") == scope:
             return int(props["batch_id"])
-        carried = props.get("carried_scopes") or {}
-        if scope in carried:
-            return int(carried[scope])
     return -1
 
 
-def edge_merge_fn(spark: SparkSession, table_path: str, scope: str,
-                  n_buckets: int):
-    """The foreachBatch merge for stream_edge_weights, factored out so
-    tests can drive redelivery directly. ``scope`` identifies the
-    stream instance (the checkpoint location in production)."""
+def _bucketed_merge_fn(spark: SparkSession, table_path: str, scope: str,
+                       n_buckets: int, deltas_of, hash_col: str,
+                       group_cols: list[str], merge_aggs: list):
+    """foreachBatch merge of a micro-batch's deltas into a table
+    partitioned by ``bucket = pmod(xxhash64(hash_col), n_buckets)``.
+
+    ``deltas_of(batch_df)`` gives the batch's rows in the table's
+    column order (bucket excluded); rows sharing ``group_cols`` fold
+    with ``merge_aggs``. A batch id at or below the last one committed
+    under ``scope`` is a redelivery and does nothing. Otherwise only
+    the touched buckets are read (manifest-pruned), unioned with the
+    deltas, re-aggregated and committed as ONE replace_partitions
+    snapshot whose properties carry the (scope, batch_id) marker — data
+    and marker land in the same atomic commit."""
     from .sources.table import read_table, write_table
 
-    def last_merged_batch() -> int:
-        return _last_merged_batch(table_path, scope)
-
     def merge_batch(batch_df, batch_id: int) -> None:
-        if batch_id <= last_merged_batch():
+        if batch_id <= _last_merged_batch(table_path, scope):
             return  # redelivered micro-batch — already committed
         deltas = (
-            batch_df.groupBy("subj", "pred", "obj")
-            .agg(
-                F.count(F.lit(1)).alias("weight"),
-                F.min("warc_ts").alias("first_seen"),
-            )
+            deltas_of(batch_df)
             .withColumn(
                 "bucket",
-                F.pmod(F.xxhash64("subj"), F.lit(n_buckets)).cast("int"),
+                F.pmod(F.xxhash64(hash_col), F.lit(n_buckets)).cast("int"),
             )
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
@@ -301,87 +128,20 @@ def edge_merge_fn(spark: SparkSession, table_path: str, scope: str,
                 ).withColumn("bucket", F.col("bucket").cast("int"))
             except FileNotFoundError:
                 current = None
-            merged = (
-                deltas if current is None
-                else deltas.unionByName(current)
-            )
             # ONE file per touched bucket: without the explicit count
             # the agg's shuffle_partitions fan out to ~32 files per
             # bucket per commit (measured 256 tiny files/batch), and
-            # every later batch pays their footer reads + scan planning
-            # — the small-file spiral compact_table exists to fix,
-            # avoided at the source here. Repartitioning BEFORE the
-            # groupBy makes it the merge's only shuffle: hash placement
-            # on bucket, one of the grouping keys, already satisfies
-            # the aggregation's distribution.
-            merged = (
-                merged.repartition(len(touched), "bucket")
-                .groupBy("subj", "pred", "obj", "bucket")
-                .agg(
-                    F.sum("weight").alias("weight"),
-                    F.min("first_seen").alias("first_seen"),
-                )
-                .select("subj", "pred", "obj", "weight", "first_seen", "bucket")
-            )
-            write_table(
-                merged, table_path,
-                mode="replace_partitions" if current is not None else "overwrite",
-                partition_by=["bucket"],
-                properties={"scope": scope, "batch_id": int(batch_id)},
-            )
-        finally:
-            deltas.unpersist()
-
-    return merge_batch
-
-
-def link_merge_fn(spark: SparkSession, table_path: str, scope: str,
-                  n_buckets: int):
-    """foreachBatch merge of a page micro-batch's LINK-GRAPH deltas
-    into a materialized (src_url, dst_url, n_links) table — the
-    production companion to dedup_incremental for the web graph: a
-    daily crawl merges its delta edges instead of rebuilding the full
-    graph (r7 verdict #4).
-
-    Same machinery as edge_merge_fn: bucket partitioning on
-    xxhash64(src_url), manifest-pruned read of ONLY the touched
-    buckets, n_links := sum merge, one replace_partitions snapshot per
-    batch with the (scope, batch_id) replay marker riding inside the
-    commit. Per-batch cost scales with the DELTA's bucket footprint,
-    never the accumulated table."""
-    from .operators.linkgraph import link_graph
-    from .sources.table import read_table, write_table
-
-    def merge_batch(batch_df, batch_id: int) -> None:
-        if batch_id <= _last_merged_batch(table_path, scope):
-            return  # redelivered micro-batch — already committed
-        deltas = (
-            link_graph(batch_df)
-            .withColumn(
-                "bucket",
-                F.pmod(F.xxhash64("src_url"), F.lit(n_buckets)).cast("int"),
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        try:
-            touched = sorted(
-                r["bucket"]
-                for r in deltas.select("bucket").distinct().collect()
-            )
-            if not touched:
-                return
-            try:
-                current = read_table(
-                    spark, table_path, partition_filter={"bucket": touched}
-                ).withColumn("bucket", F.col("bucket").cast("int"))
-            except FileNotFoundError:
-                current = None
+            # every later batch pays their footer reads + scan planning.
+            # Repartitioning BEFORE the groupBy makes it the merge's
+            # only shuffle: hash placement on bucket, one of the
+            # grouping keys, already satisfies the aggregation's
+            # distribution.
             merged = (
                 (deltas if current is None else deltas.unionByName(current))
-                .repartition(len(touched), "bucket")  # the only shuffle
-                .groupBy("src_url", "dst_url", "bucket")
-                .agg(F.sum("n_links").alias("n_links"))
-                .select("src_url", "dst_url", "n_links", "bucket")
+                .repartition(len(touched), "bucket")
+                .groupBy(*group_cols, "bucket")
+                .agg(*merge_aggs)
+                .select(*deltas.columns)
             )
             write_table(
                 merged, table_path,
@@ -396,171 +156,41 @@ def link_merge_fn(spark: SparkSession, table_path: str, scope: str,
     return merge_batch
 
 
-def stream_link_graph(
-    spark: SparkSession,
-    pages_dir: str,
-    table_path: str,
-    checkpoint_dir: str,
-    n_buckets: int = 8,
-):
-    """Continuously-maintained link-graph table: file-source stream
-    over the crawl directory, per-batch href extraction (pure JVM) +
-    incremental MERGE of the batch's weighted edges."""
-    merge_batch = link_merge_fn(spark, table_path, checkpoint_dir,
-                                n_buckets)
-    pages = stream_pages(spark, pages_dir)
-    return (
-        pages.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+def edge_merge_fn(spark: SparkSession, table_path: str, scope: str,
+                  n_buckets: int):
+    """The foreachBatch merge for stream_edge_weights, factored out so
+    tests can drive redelivery directly. ``scope`` identifies the
+    stream instance (the checkpoint location in production). A batch's
+    triples become per-edge deltas (weight = count, first_seen = min
+    warc_ts), bucketed on subj and merged by weight := sum,
+    first_seen := min."""
 
-
-def stream_sliding_event_counts(
-    spark: SparkSession,
-    events_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    window_s: int = 3600,
-    slide_s: int = 1800,
-    watermark: str = "2 hours",
-):
-    """Hopping-window streaming aggregation: counts per (window_start,
-    event_type) with window width > slide, so each event updates
-    window_s/slide_s overlapping windows — the dashboard shape
-    (olap.q_event_sliding_window is the batch form and the referee in
-    tests). Watermarked on ts: late events update open windows until
-    the watermark passes a window's END, then append mode emits it
-    once and its state is dropped — per-key state is bounded by
-    (watermark + window) / slide windows regardless of stream length.
-    """
-    schema = spark.read.parquet(events_dir).schema
-    events = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(events_dir)
-    )
-    # pandas-written parquet reads as TIMESTAMP_NTZ; watermarks demand
-    # TIMESTAMP (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE) — session-tz
-    # reinterpretation, deterministic under the UTC session default
-    events = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    counts = (
-        events.withWatermark("ts", watermark)
-        .groupBy(
-            F.window("ts", f"{window_s} seconds",
-                     f"{slide_s} seconds").alias("w"),
-            F.col("event_type"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n")
-    )
-    return (
-        counts.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .outputMode("append")
-        .start()
-    )
-
-
-def stream_dedup_first_seen(
-    spark: SparkSession,
-    pages_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    horizon: str = "24 hours",
-):
-    """Custom stateful operator (applyInPandasWithState): cross-batch
-    first-seen URL dedup for a continuously-crawled corpus.
-
-    A crawler re-fetches urls; the KG ingest wants exactly one page
-    row per url even when re-fetches land in later micro-batches.
-    Emission is FIRST-OBSERVED: the row emitted is the event-time
-    earliest fetch *within the micro-batch that first sees the url*;
-    re-fetches in later batches are suppressed whatever their
-    timestamp (append sinks cannot retract, so a strictly
-    event-time-earliest variant would buffer in state and emit on
-    watermark timeout, trading a horizon of latency — not done here).
-    Per-url state (a seen flag) lives in the streaming state store,
-    restored from the checkpoint across restarts.
-
-    Scale contract: state is bounded by the event-time horizon, not by
-    total distinct urls — EventTimeTimeout drops a url's state once
-    the watermark passes its last fetch + horizon (re-fetches arriving
-    later than the horizon are treated as new pages, the standard
-    late-data trade). At 10^12 docs the state store holds only the
-    horizon's url window.
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    horizon_ms = 24 * 3600 * 1000 if horizon == "24 hours" else None
-    if horizon_ms is None:
-        n, unit = horizon.split()
-        horizon_ms = int(n) * {"hours": 3600_000, "minutes": 60_000}[unit]
-
-    def fn(key, pdfs, state):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-        best = None
-        max_ts = None
-        for pdf in pdfs:
-            row = pdf.loc[pdf["warc_ts"].idxmin()]
-            hi = pdf["warc_ts"].max()
-            if best is None or row["warc_ts"] < best["warc_ts"]:
-                best = row
-            if max_ts is None or hi > max_ts:
-                max_ts = hi
-        seen = state.exists
-        state.update((1,))
-        # the timeout must be strictly beyond the current watermark:
-        # a backlog batch whose max event time already trails the
-        # watermark by more than the horizon would otherwise raise and
-        # crash-loop the query on restart
-        wm = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(
-            max(
-                int(pd.Timestamp(max_ts).value // 1_000_000) + horizon_ms,
-                wm + 1,
-            )
-        )
-        if seen or best is None:
-            return  # url already emitted in an earlier micro-batch
-        yield pd.DataFrame(
-            [
-                {
-                    "url": key[0],
-                    "warc_ts": best["warc_ts"],
-                    "lang": best["lang"],
-                }
-            ]
+    def deltas_of(batch_df):
+        return batch_df.groupBy("subj", "pred", "obj").agg(
+            F.count(F.lit(1)).alias("weight"),
+            F.min("warc_ts").alias("first_seen"),
         )
 
-    pages = (
-        stream_pages(spark, pages_dir)
-        # watermarks require TIMESTAMP (with timezone); pandas-written
-        # parquet often carries TIMESTAMP_NTZ — normalize first
-        .select(
-            "url", F.col("warc_ts").cast("timestamp").alias("warc_ts"), "lang"
-        )
-        .withWatermark("warc_ts", horizon)
+    return _bucketed_merge_fn(
+        spark, table_path, scope, n_buckets, deltas_of, "subj",
+        ["subj", "pred", "obj"],
+        [F.sum("weight").alias("weight"),
+         F.min("first_seen").alias("first_seen")],
     )
-    deduped = pages.groupBy("url").applyInPandasWithState(
-        fn,
-        outputStructType="url string, warc_ts timestamp, lang string",
-        stateStructType="seen int",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return (
-        deduped.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .outputMode("append")
-        .start()
+
+
+def link_merge_fn(spark: SparkSession, table_path: str, scope: str,
+                  n_buckets: int):
+    """foreachBatch merge of a page micro-batch's LINK-GRAPH deltas
+    into a materialized (src_url, dst_url, n_links) table — the
+    production companion to dedup_incremental for the web graph: a
+    daily crawl merges its delta edges instead of rebuilding the full
+    graph. Same machinery as edge_merge_fn, bucketed on src_url and
+    merged by n_links := sum; per-batch cost scales with the DELTA's
+    bucket footprint, never the accumulated table."""
+    from .operators.linkgraph import link_graph
+
+    return _bucketed_merge_fn(
+        spark, table_path, scope, n_buckets, link_graph, "src_url",
+        ["src_url", "dst_url"], [F.sum("n_links").alias("n_links")],
     )

@@ -1,0 +1,228 @@
+"""Every top-level definition of the table format and the streaming
+module is reached from a program root.
+
+The roots are the driver contract (``__spark_entry__.py``), the
+spark-submit job, the two bench scripts, the benchmark harness
+(``perfbench/``) and ``tools/``. The walk parses the package and the
+roots with ``ast`` and follows name references: bare names to the
+module's own top-level definitions, imported names and module
+attributes to the module that defines them, and a string tuple naming
+a package module plus one of its definitions (the shape
+``perfbench/tracing.py`` uses to wrap functions by name). A reached
+definition's whole body is walked in turn. Tests are not roots: code
+only a test calls has no caller in the program.
+"""
+
+from __future__ import annotations
+
+import ast
+import os
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PACKAGE = "remediner_spark"
+ROOTS = (
+    "__spark_entry__.py", "job.py", "bench.py", "bench_extra.py",
+    "perfbench", "tools",
+)
+GUARDED = ("remediner_spark.sources.table", "remediner_spark.streaming")
+
+
+def _py_files(rel: str):
+    full = os.path.join(ROOT, rel)
+    if full.endswith(".py"):
+        yield rel
+        return
+    for dirpath, _dirs, names in os.walk(full):
+        for n in sorted(names):
+            if n.endswith(".py"):
+                yield os.path.relpath(os.path.join(dirpath, n), ROOT)
+
+
+def _module_name(rel: str) -> str:
+    parts = rel[:-3].split(os.sep)
+    if parts[-1] == "__init__":
+        parts = parts[:-1]
+    return ".".join(parts)
+
+
+class _Module:
+    def __init__(self, name: str, rel: str) -> None:
+        self.name = name
+        self.is_package = rel.endswith("__init__.py")
+        with open(os.path.join(ROOT, rel)) as fh:
+            self.tree = ast.parse(fh.read(), rel)
+        self.defs: dict[str, list[ast.AST]] = {}
+        for node in self.tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.ClassDef)):
+                self.defs.setdefault(node.name, []).append(node)
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = (node.targets if isinstance(node, ast.Assign)
+                           else [node.target])
+                for t in targets:
+                    for n in ast.walk(t):
+                        if isinstance(n, ast.Name):
+                            self.defs.setdefault(n.id, []).append(node)
+
+    def package(self) -> str:
+        return self.name if self.is_package else self.name.rpartition(".")[0]
+
+
+class _Walk:
+    def __init__(self, roots=ROOTS) -> None:
+        self.modules: dict[str, _Module] = {}
+        for rel in _py_files(PACKAGE):
+            self.modules[_module_name(rel)] = _Module(_module_name(rel), rel)
+        self.roots = []
+        for r in roots:
+            for rel in _py_files(r):
+                m = _Module(_module_name(rel), rel)
+                self.modules.setdefault(m.name, m)
+                self.roots.append(m)
+        # alias -> (module, attr or None), from every import in a module
+        self.aliases = {m.name: self._aliases(m) for m in self.modules.values()}
+        self.reached: set[tuple[str, str]] = set()
+        self.loaded: set[str] = set()
+        self.todo: list[tuple[_Module, ast.AST]] = []
+
+    def _imported(self, m: _Module, node: ast.AST):
+        """(bound name, (module, attr or None)) per name an import binds."""
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.asname:
+                    yield a.asname, (a.name, None)
+                else:
+                    top = a.name.split(".")[0]
+                    yield top, (top, None)
+            return
+        base = node.module or ""
+        if node.level:
+            pkg = m.package().split(".")
+            pkg = pkg[: len(pkg) - (node.level - 1)]
+            base = ".".join(pkg + ([base] if base else []))
+        for a in node.names:
+            full = f"{base}.{a.name}"
+            yield a.asname or a.name, (
+                (full, None) if full in self.modules else (base, a.name)
+            )
+
+    def _aliases(self, m: _Module) -> dict[str, tuple[str, str | None]]:
+        return {
+            name: target
+            for node in ast.walk(m.tree)
+            if isinstance(node, (ast.Import, ast.ImportFrom))
+            for name, target in self._imported(m, node)
+        }
+
+    def _reach(self, mod: str, name: str | None) -> None:
+        if mod not in self.modules:
+            return
+        self._load(mod)
+        if name is None or (mod, name) in self.reached:
+            return
+        self.reached.add((mod, name))
+        m = self.modules[mod]
+        for node in m.defs.get(name, []):
+            self.todo.append((m, node))
+        if name not in m.defs and name in self.aliases[mod]:
+            self._reach(*self.aliases[mod][name])  # re-export
+
+    def _load(self, mod: str) -> None:
+        """An imported module runs its top-level statements."""
+        if mod in self.loaded:
+            return
+        self.loaded.add(mod)
+        parent = mod.rpartition(".")[0]
+        if parent in self.modules:
+            self._load(parent)
+        m = self.modules[mod]
+        for node in m.tree.body:
+            if isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = (node.targets if isinstance(node, ast.Assign)
+                           else [node.target])
+                if all(isinstance(t, ast.Name) for t in targets):
+                    continue  # a definition: walked once referenced
+            elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                   ast.ClassDef)):
+                continue
+            self.todo.append((m, node))
+
+    def _dotted(self, node: ast.AST) -> list[str] | None:
+        parts = []
+        while isinstance(node, ast.Attribute):
+            parts.append(node.attr)
+            node = node.value
+        if not isinstance(node, ast.Name):
+            return None
+        return [node.id] + parts[::-1]
+
+    def _visit(self, m: _Module, node: ast.AST) -> None:
+        aliases = self.aliases[m.name]
+        for n in ast.walk(node):
+            if isinstance(n, ast.Import):
+                for a in n.names:  # runs the module and its parents
+                    self._reach(a.name, None)
+            elif isinstance(n, ast.ImportFrom):
+                for _name, (mod, _attr) in self._imported(m, n):
+                    self._reach(mod, None)
+            elif isinstance(n, ast.Attribute):
+                chain = self._dotted(n)
+                if chain and chain[0] in aliases:
+                    mod, attr = aliases[chain[0]]
+                    rest = ([attr] if attr else []) + chain[1:]
+                    # longest module prefix, then the attribute it names
+                    for i in range(len(rest), -1, -1):
+                        cand = ".".join([mod] + rest[:i])
+                        if cand in self.modules:
+                            self._reach(cand, rest[i] if i < len(rest) else None)
+                            break
+            elif isinstance(n, ast.Name):
+                if n.id in aliases:
+                    self._reach(*aliases[n.id])
+                elif n.id in m.defs:
+                    self._reach(m.name, n.id)
+            elif isinstance(n, (ast.Tuple, ast.List)):
+                strs = [e.value for e in n.elts
+                        if isinstance(e, ast.Constant) and isinstance(e.value, str)]
+                for mod in (s for s in strs if s in self.modules):
+                    for s in strs:
+                        if s in self.modules[mod].defs:
+                            self._reach(mod, s)
+
+    def run(self) -> set[tuple[str, str]]:
+        for m in self.roots:
+            self._load(m.name)
+            self.todo.append((m, m.tree))
+        while self.todo:
+            self._visit(*self.todo.pop())
+        return self.reached
+
+
+def test_table_and_streaming_definitions_are_reached():
+    walk = _Walk()
+    reached = walk.run()
+    dead = {
+        mod: sorted(n for n in walk.modules[mod].defs if (mod, n) not in reached)
+        for mod in GUARDED
+    }
+    assert dead == {mod: [] for mod in GUARDED}, (
+        "top-level definitions no entry, job, bench or tool reaches "
+        "(delete them, or give them a caller): "
+        f"{ {k: v for k, v in dead.items() if v} }"
+    )
+
+
+def test_walk_follows_imports_attributes_and_name_tuples():
+    reached = _Walk().run()
+    # __spark_entry__ -> tableops.QUERIES -> q_table_mor_read -> read_table
+    assert ("remediner_spark.sources.table", "read_table") in reached
+    # a module attribute: tableops clears table._MANIFEST_CACHE
+    assert ("remediner_spark.sources.table", "_MANIFEST_CACHE") in reached
+    # an import runs the module: the package root installs zipguard
+    assert ("remediner_spark.zipguard", "guarded_invalidate_caches") in reached
+    # a definition only tests call stays unreached
+    assert ("remediner_spark.operators.prep", "hash_split") not in reached
+    # a (module, name) string tuple: perfbench/tracing.py names the
+    # functions it wraps and calls none of them
+    traced = _Walk(roots=("perfbench/tracing.py",)).run()
+    assert ("remediner_spark.streaming", "edge_merge_fn") in traced

@@ -1,16 +1,18 @@
-"""Streaming ingest == batch output; incremental files are picked up."""
+"""Streaming ingest resumes from its checkpoint: pages that land after a
+drained run are merged, and only they are."""
 
 from __future__ import annotations
 
 import os
 
-import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from remediner_spark.operators.ner import extract_triples_stage
 from remediner_spark.operators.text import filter_language
 from remediner_spark.sources.corpus import generate_pages
-from remediner_spark.streaming import stream_triples
+from remediner_spark.sources.table import read_table, table_snapshots
+from remediner_spark.streaming import stream_edge_weights
 
 
 @pytest.fixture(scope="module")
@@ -32,50 +34,39 @@ def _write_pages_split(tmp_path, n_pages=120):
     return str(d), pages
 
 
-def test_streaming_matches_batch(spark, tmp_path, tagger_bc):
-    pages_dir, pages_pdf = _write_pages_split(tmp_path)
-    out = str(tmp_path / "triples_stream")
-    ckpt = str(tmp_path / "ckpt")
-
-    q = stream_triples(spark, pages_dir, out, ckpt, tagger_bc)
-    q.awaitTermination(120)
-
-    got = (
-        spark.read.parquet(out)
-        .toPandas()
-        .sort_values(["url", "sent_idx", "subj", "obj"])
-        .reset_index(drop=True)
-    )
-    batch = (
-        extract_triples_stage(
-            filter_language(spark.read.parquet(pages_dir)), tagger_bc
-        )
-        .toPandas()
-        .sort_values(["url", "sent_idx", "subj", "obj"])
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(
-        got[["url", "sent_idx", "subj", "pred", "obj"]],
-        batch[["url", "sent_idx", "subj", "pred", "obj"]],
-    )
-    assert len(got) > 0
+def _weights(df):
+    return {
+        (r["subj"], r["pred"], r["obj"]): r["weight"] for r in df.collect()
+    }
 
 
 def test_streaming_incremental_resume(spark, tmp_path, tagger_bc):
-    pages_dir, pages_pdf = _write_pages_split(tmp_path, 60)
-    out = str(tmp_path / "triples_inc")
+    pages_dir, _ = _write_pages_split(tmp_path, 60)
+    table = str(tmp_path / "edges_inc")
     ckpt = str(tmp_path / "ckpt_inc")
 
-    q = stream_triples(spark, pages_dir, out, ckpt, tagger_bc)
-    q.awaitTermination(120)
-    n_first = spark.read.parquet(out).count()
+    def run():
+        stream_edge_weights(
+            spark, pages_dir, table, ckpt, tagger_bc, n_buckets=4
+        ).awaitTermination(120)
+
+    run()
+    n_first = len(table_snapshots(table))
 
     # a new file lands; a second available-now run drains only the delta
     extra, _ = generate_pages(200)
     extra.iloc[150:].to_parquet(
         os.path.join(pages_dir, "part-late.parquet"), index=False
     )
-    q2 = stream_triples(spark, pages_dir, out, ckpt, tagger_bc)
-    q2.awaitTermination(120)
-    n_second = spark.read.parquet(out).count()
-    assert n_second >= n_first
+    run()
+    assert len(table_snapshots(table)) == n_first + 1
+    # re-merging the first files would double their weights
+    want = (
+        extract_triples_stage(
+            filter_language(spark.read.parquet(pages_dir)), tagger_bc
+        )
+        .groupBy("subj", "pred", "obj")
+        .agg(F.count(F.lit(1)).alias("weight"))
+    )
+    got = _weights(read_table(spark, table))
+    assert got == _weights(want) and len(got) > 0

@@ -1,8 +1,8 @@
-"""Incremental link-graph maintenance (streaming.stream_link_graph /
-link_merge_fn): per-batch href-edge deltas MERGEd into the
-Iceberg-style table. Checks:
+"""Incremental link-graph maintenance (streaming.link_merge_fn):
+per-batch href-edge deltas MERGEd into the Iceberg-style table.
+Checks:
 
-* drained stream state == link_graph full rebuild over the same pages,
+* merged state == link_graph full rebuild over the same pages,
 * one snapshot per merged micro-batch,
 * replayed batch ids are no-ops (the exactly-once guard),
 * a later batch keeps merging after the replay.
@@ -10,14 +10,12 @@ Iceberg-style table. Checks:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from remediner_spark.operators.linkgraph import link_graph
 from remediner_spark.sources.corpus import add_outlinks, generate_pages
 from remediner_spark.sources.table import read_table, table_snapshots
-from remediner_spark.streaming import link_merge_fn, stream_link_graph
+from remediner_spark.streaming import link_merge_fn
 
 N_BUCKETS = 4
 
@@ -31,28 +29,6 @@ def _edges_dict(df):
     return {
         (r["src_url"], r["dst_url"]): r["n_links"] for r in df.collect()
     }
-
-
-def test_stream_link_graph_matches_rebuild(spark, tmp_path):
-    pages = _linked_pages()
-    d = tmp_path / "pages_stream"
-    os.makedirs(d, exist_ok=True)
-    for i, chunk in enumerate(
-        [pages.iloc[:40], pages.iloc[40:80], pages.iloc[80:]]
-    ):
-        chunk.to_parquet(d / f"part-{i}.parquet", index=False)
-
-    table = str(tmp_path / "lg_table")
-    q = stream_link_graph(
-        spark, str(d), table, str(tmp_path / "ckpt"), n_buckets=N_BUCKETS
-    )
-    q.awaitTermination(120)
-
-    got = _edges_dict(
-        read_table(spark, table).select("src_url", "dst_url", "n_links")
-    )
-    want = _edges_dict(link_graph(spark.createDataFrame(pages)))
-    assert got == want
 
 
 def test_replay_guard_and_resume(spark, tmp_path):

@@ -6,12 +6,44 @@ import pytest
 
 from remediner_spark.sources.corpus import generate_pages
 from remediner_spark.sources.table import (
+    _load_snapshots,
+    _partition_match,
     _snap_files,
-    pruned_file_count,
+    _stats_match,
     read_table,
     table_snapshots,
     write_table,
 )
+
+
+def _selected(path, keep, snapshot_id=None) -> tuple[int, int]:
+    snapshots = _load_snapshots(path)
+    snap = snapshots[-1] if snapshot_id is None else [
+        s for s in snapshots if s["snapshot_id"] == snapshot_id
+    ][0]
+    files = _snap_files(path, snap)
+    return len([f for f in files if keep(f, snap)]), len(files)
+
+
+def pruned_file_count(
+    path: str, partition_filter: dict, snapshot_id: int | None = None
+) -> tuple[int, int]:
+    """(selected, total) file counts for a filter — pruning evidence."""
+    return _selected(
+        path, lambda f, _snap: _partition_match(f, partition_filter),
+        snapshot_id,
+    )
+
+
+def stats_pruned_count(
+    path: str, stats_filter: dict, snapshot_id: int | None = None
+) -> tuple[int, int]:
+    """(selected, total) file counts for a column-range filter —
+    data-skipping evidence (the stats analogue of pruned_file_count)."""
+    return _selected(
+        path, lambda f, snap: _stats_match(f, stats_filter, snap["schema"]),
+        snapshot_id,
+    )
 
 
 @pytest.fixture()
@@ -132,10 +164,11 @@ def test_non_null_element_array_round_trip(spark, tmp_path, partition_by):
 
 
 def test_replace_partitions_and_compaction(spark, tmp_path, pages_pdf):
-    """replace_partitions rewrites only touched partitions; compaction
-    bin-packs multi-file partitions into one file per partition with
-    identical data; time travel still reaches pre-compaction files."""
-    from remediner_spark.sources.table import compact_table
+    """replace_partitions rewrites only touched partitions: compacting
+    one partition's small files into one file leaves every other
+    partition's files in place, keeps the data identical, and time
+    travel still reaches the pre-compaction files."""
+    from remediner_spark.sources.table import live_files
 
     path = str(tmp_path / "tbl")
     # three appends -> each lang partition holds 3 small files
@@ -146,84 +179,28 @@ def test_replace_partitions_and_compaction(spark, tmp_path, pages_pdf):
             path, mode="append", partition_by=["lang"],
         )
     before = read_table(spark, path).toPandas()
-    snaps = table_snapshots(path)
-    pre_files = {
-        f["path"] for f in __import__(
-            "remediner_spark.sources.table", fromlist=["live_files"]
-        ).live_files(path)
-    }
-    assert len(pre_files) > len(set(before["lang"]))
+    pre = live_files(path)
+    assert len([f for f in pre if f["partition"]["lang"] == "en"]) == 3
 
-    snap = compact_table(spark, path)
-    assert snap["snapshot_id"] == len(snaps) + 1
+    de = read_table(spark, path, partition_filter={"lang": "en"})
+    snap = write_table(
+        de.repartition(1), path, mode="replace_partitions",
+        partition_by=["lang"],
+    )
+    assert snap["snapshot_id"] == 4
     after = read_table(spark, path).toPandas()
     key = ["url"]
     assert (
         before.sort_values(key).reset_index(drop=True)["url"].tolist()
         == after.sort_values(key).reset_index(drop=True)["url"].tolist()
     )
-    # one file per compacted lang partition
-    post = __import__(
-        "remediner_spark.sources.table", fromlist=["live_files"]
-    ).live_files(path)
-    per_part = {}
-    for f in post:
-        per_part.setdefault(f["partition"]["lang"], 0)
-        per_part[f["partition"]["lang"]] += 1
-    assert max(per_part.values()) == 1
-    # pre-compaction snapshot still readable (old files kept)
-    assert read_table(spark, path, snapshot_id=3).count() == 120
-
-
-def test_expire_snapshots_deletes_orphans(spark, tmp_path, pages_pdf):
-    import os
-
-    from remediner_spark.sources.table import compact_table, expire_snapshots
-
-    path = str(tmp_path / "tbl")
-    for i in range(3):
-        chunk = pages_pdf.iloc[i * 40 : (i + 1) * 40]
-        write_table(
-            spark.createDataFrame(chunk).repartition(1),
-            path, mode="append", partition_by=["lang"],
-        )
-    compact_table(spark, path)
-    from remediner_spark.sources.table import _load_snapshots
-
-    old_files = {f["path"] for f in _snap_files(path, _load_snapshots(path)[0])}
-    res = expire_snapshots(path, keep_last=1)
-    assert res["removed_snapshots"] == 3
-    assert res["deleted_files"] > 0
-    # the surviving snapshot is fully readable; orphans are gone
-    assert read_table(spark, path).count() == 120
-    assert any(not os.path.exists(p) for p in old_files)
-    # expiring again is a no-op
-    assert expire_snapshots(path, keep_last=1) == {
-        "removed_snapshots": 0, "deleted_files": 0,
+    post = live_files(path)
+    assert len([f for f in post if f["partition"]["lang"] == "en"]) == 1
+    # untouched partitions keep their files, by path
+    assert {f["path"] for f in pre if f["partition"]["lang"] != "en"} == {
+        f["path"] for f in post if f["partition"]["lang"] != "en"
     }
-
-
-def test_snapshot_ids_unique_after_expiry(spark, tmp_path, pages_pdf):
-    """Regression: snapshot ids were len(snapshots)+1, so a write after
-    expire_snapshots reused a surviving id, corrupting time travel."""
-    from remediner_spark.sources.table import expire_snapshots
-
-    path = str(tmp_path / "tbl")
-    for i in range(3):
-        chunk = pages_pdf.iloc[i * 40 : (i + 1) * 40]
-        write_table(
-            spark.createDataFrame(chunk), path, mode="append",
-            partition_by=["lang"],
-        )
-    expire_snapshots(path, keep_last=2)  # ids [2, 3] survive
-    s4 = write_table(
-        spark.createDataFrame(pages_pdf.iloc[:10]), path, mode="append",
-        partition_by=["lang"],
-    )
-    assert s4["snapshot_id"] == 4
-    ids = [s["snapshot_id"] for s in table_snapshots(path)]
-    assert len(ids) == len(set(ids)) == 3
-    # time travel to a surviving pre-expiry snapshot still works
+    # pre-compaction snapshot still readable (old files kept)
     assert read_table(spark, path, snapshot_id=3).count() == 120
 
 
@@ -255,48 +232,6 @@ def test_partition_values_survive_uri_encoding(spark, tmp_path):
         assert len(sub) == 10 and set(sub["lang"]) == {v}, v
 
 
-def test_expire_commits_manifest_before_deleting(tmp_path, spark, pages_pdf, monkeypatch):
-    """Regression (round-3 advice): expire_snapshots must persist the
-    pruned manifest BEFORE removing data files, so a crash mid-delete
-    leaks orphan files instead of leaving snapshots.json pointing at
-    removed ones (broken time travel + lost carried_scopes)."""
-    import os
-
-    from remediner_spark.sources import table as T
-
-    path = str(tmp_path / "tbl")
-    for i in range(3):
-        chunk = pages_pdf.iloc[i * 40 : (i + 1) * 40]
-        write_table(
-            spark.createDataFrame(chunk).repartition(1), path, mode="append",
-            partition_by=["lang"],
-        )
-    T.compact_table(spark, path)  # makes the pre-compaction files dead
-
-    real_remove = os.remove
-    calls = {"n": 0}
-
-    def crashy_remove(p):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise RuntimeError("simulated crash mid-delete")
-        real_remove(p)
-
-    monkeypatch.setattr(T.os, "remove", crashy_remove)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        T.expire_snapshots(path, keep_last=1)
-    monkeypatch.setattr(T.os, "remove", real_remove)
-
-    # manifest already pruned: every listed file exists, table readable
-    snaps = T._load_snapshots(path)
-    assert len(snaps) == 1
-    assert all(os.path.exists(f["path"]) for f in _snap_files(path, snaps[-1]))
-    assert read_table(spark, path).count() == 120
-    # a second expiry is a no-op on snapshots (files already orphaned)
-    res = T.expire_snapshots(path, keep_last=1)
-    assert res["removed_snapshots"] == 0
-
-
 def test_stats_data_skipping(spark, tmp_path):
     """Per-file column min/max stats (from parquet footers) prune
     files whose value range is disjoint from the requested range; the
@@ -308,7 +243,6 @@ def test_stats_data_skipping(spark, tmp_path):
 
     from remediner_spark.sources.table import (
         read_table,
-        stats_pruned_count,
     )
 
     base = datetime.datetime(2024, 1, 1)
@@ -404,13 +338,12 @@ def test_schema_evolution_add_column(spark, tmp_path):
 
 
 def test_compaction_after_schema_evolution(spark, tmp_path):
-    """Compacting partitions whose files span schema versions must
-    null-fill evolved columns for old rows and keep new rows' values —
-    regression for the inferred-schema read that would have dropped or
-    crashed on the added column."""
+    """Compacting a partition whose files span schema versions
+    (read_table -> replace_partitions) null-fills evolved columns for
+    old rows and keeps new rows' values."""
     import pandas as pd
 
-    from remediner_spark.sources.table import compact_table
+    from remediner_spark.sources.table import live_files
 
     path = str(tmp_path / "tbl")
     v1 = pd.DataFrame(
@@ -431,7 +364,11 @@ def test_compaction_after_schema_evolution(spark, tmp_path):
         spark.createDataFrame(v3).repartition(1), path,
         mode="append", partition_by=["lang"],
     )
-    compact_table(spark, path)
+    write_table(
+        read_table(spark, path).repartition(1), path,
+        mode="replace_partitions", partition_by=["lang"],
+    )
+    assert len(live_files(path)) == 1
     got = read_table(spark, path).toPandas()
     assert len(got) == 18
     assert got[got.url.str.startswith("a")]["score"].isna().all()
@@ -450,7 +387,6 @@ def test_sort_order_enables_data_skipping(spark, tmp_path):
 
     from remediner_spark.sources.table import (
         read_table,
-        stats_pruned_count,
     )
 
     rng = random.Random(3)
@@ -483,17 +419,14 @@ def test_sort_order_enables_data_skipping(spark, tmp_path):
     assert len(a) == 101
 
 
-def test_upsert_rows_copy_on_write(spark, tmp_path):
-    """Row-level MERGE: matching keys replaced, new keys inserted,
-    files outside the updates' key bounds carried by reference (not
-    rewritten), pre-merge snapshot still time-travels."""
+def test_upsert_rows_merge_on_read(spark, tmp_path):
+    """Row-level MERGE: matching keys replaced, new keys inserted, no
+    data file rewritten — one equality-delete entry targets only the
+    files whose stats could hold an update key — and the pre-merge
+    snapshot still time-travels."""
     import pandas as pd
 
-    from remediner_spark.sources.table import (
-        _load_snapshots,
-        read_table,
-        upsert_rows,
-    )
+    from remediner_spark.sources.table import upsert_rows
 
     path = str(tmp_path / "tbl")
     pdf = pd.DataFrame(
@@ -508,14 +441,16 @@ def test_upsert_rows_copy_on_write(spark, tmp_path):
     ups = pd.DataFrame(
         {"doc_id": [100, 101, 5000], "val": [-1, -2, -3]}
     )
-    snap = upsert_rows(
-        spark, path, spark.createDataFrame(ups), ["doc_id"], strategy="cow"
-    )
-    # narrow key range + clustered files: most files carried untouched
-    assert snap["properties"]["carried_files"] >= 5
-    assert snap["properties"]["rewritten_files"] <= 3
-    post_files = {f["path"] for f in _snap_files(path, _load_snapshots(path)[-1])}
-    assert len(pre_files & post_files) == snap["properties"]["carried_files"]
+    snap = upsert_rows(spark, path, spark.createDataFrame(ups), ["doc_id"])
+    # narrow key range + clustered files: the delete targets few files
+    assert 1 <= snap["properties"]["delete_targets"] <= 3
+    assert snap["properties"]["carried_files"] == len(pre_files)
+    # every pre-merge data file is still in the manifest
+    post_files = {f["path"] for f in _snap_files(path, snap)}
+    assert pre_files < post_files
+    [entry] = snap["delete_files"]
+    assert entry["type"] == "eq" and set(entry["paths"]) <= pre_files
+    assert len(entry["paths"]) == snap["properties"]["delete_targets"]
 
     got = read_table(spark, path).toPandas().set_index("doc_id")
     assert len(got) == 1001  # 1000 originals - 2 replaced + 2 + 1 new
@@ -593,7 +528,7 @@ def test_upsert_rejects_duplicate_keys_and_keeps_clustering(spark, tmp_path):
 def test_delete_range_metadata_only_drop(spark, tmp_path):
     """Range DELETE on a clustered table: fully-covered files drop
     WITHOUT being read or rewritten, disjoint files carry by
-    reference, boundary files rewrite with the complement filter;
+    reference, boundary files stay under a predicate-delete entry;
     time travel still reaches the deleted rows."""
     import pandas as pd
 
@@ -614,10 +549,12 @@ def test_delete_range_metadata_only_drop(spark, tmp_path):
     props = snap["properties"]
     assert props["dropped_files"] >= 2  # whole files inside [200, 700]
     assert props["carried_files"] >= 2  # files fully below/above
-    assert props["rewritten_files"] <= 4
-    # carried files are literally the same paths
+    assert 1 <= props["delete_targets"] <= 4
+    # carried and targeted files are literally the same paths; no
+    # file was written
     post_files = {f["path"] for f in _snap_files(path, _load_snapshots(path)[-1])}
-    assert len(pre_files & post_files) == props["carried_files"]
+    assert post_files < pre_files
+    assert len(post_files) == props["carried_files"] + props["delete_targets"]
 
     got = read_table(spark, path).toPandas()
     assert len(got) == 1000 - 501
@@ -708,203 +645,39 @@ def test_stats_match_date_vs_datetime_bounds(spark, tmp_path):
     assert _stats_match(entry, {"d": (5, None)})
     assert _stats_match(entry, {"d": (None, 5)})
 
-def test_upsert_mor_equals_cow(spark, tmp_path):
-    """Merge-on-read upsert must produce the same table contents as
-    copy-on-write — without rewriting any data file — and time travel
-    must reach the pre-merge rows in both."""
-    import pandas as pd
-
-    from remediner_spark.sources.table import (
-        _load_snapshots,
-        read_table,
-        upsert_rows,
-    )
-
-    pdf = pd.DataFrame(
-        {"doc_id": range(1000), "val": [i * 10 for i in range(1000)]}
-    )
-    ups = pd.DataFrame({"doc_id": [100, 101, 5000], "val": [-1, -2, -3]})
-    results = {}
-    for strat in ("cow", "mor"):
-        path = str(tmp_path / strat)
-        write_table(
-            spark.createDataFrame(pdf).repartition(8), path,
-            sort_by=["doc_id"],
-        )
-        snap = upsert_rows(
-            spark, path, spark.createDataFrame(ups), ["doc_id"],
-            strategy=strat,
-        )
-        if strat == "mor":
-            assert snap["properties"]["rewritten_files"] == 0
-            assert snap["properties"]["delete_targets"] >= 1
-            # every pre-merge data file is still in the manifest
-            pre = {f["path"] for f in _snap_files(path, _load_snapshots(path)[0])}
-            post = {f["path"] for f in _snap_files(path, snap)}
-            assert pre <= post
-            assert len(snap["delete_files"]) == 1
-        results[strat] = (
-            read_table(spark, path)
-            .toPandas()
-            .sort_values("doc_id")
-            .reset_index(drop=True)
-        )
-        # pre-merge time travel intact
-        old = read_table(spark, path, snapshot_id=1).toPandas()
-        assert len(old) == 1000
-        assert old.set_index("doc_id").loc[100, "val"] == 1000
-    pd.testing.assert_frame_equal(results["cow"], results["mor"])
-
-
-def test_upsert_auto_picks_mor_for_narrow_updates(spark, tmp_path):
-    """strategy='auto': a 3-row update against files holding hundreds
-    of rows (high CoW amplification) goes merge-on-read; a dense
-    update (most rows replaced) goes copy-on-write."""
-    import pandas as pd
-
-    from remediner_spark.sources.table import upsert_rows
-
-    path = str(tmp_path / "tbl")
-    pdf = pd.DataFrame({"doc_id": range(1000), "val": range(1000)})
-    write_table(
-        spark.createDataFrame(pdf).repartition(4), path, sort_by=["doc_id"]
-    )
-    narrow = pd.DataFrame({"doc_id": [5], "val": [-1]})
-    snap = upsert_rows(spark, path, spark.createDataFrame(narrow), ["doc_id"])
-    assert snap["mode"] == "upsert-mor"
-    dense = pd.DataFrame({"doc_id": range(500), "val": [-2] * 500})
-    snap2 = upsert_rows(spark, path, spark.createDataFrame(dense), ["doc_id"])
-    assert snap2["mode"] == "upsert"
-
-
-def test_compact_folds_mor_deletes(spark, tmp_path):
-    """compact_table applies pending delete entries while rewriting and
-    the folded entries leave the manifest (their targets are gone)."""
-    import pandas as pd
-
-    from remediner_spark.sources.table import (
-        _load_snapshots,
-        compact_table,
-        read_table,
-        upsert_rows,
-    )
-
-    path = str(tmp_path / "tbl")
-    pdf = pd.DataFrame(
-        {"doc_id": range(300),
-         "lang": ["en" if i % 2 else "de" for i in range(300)],
-         "val": list(range(300))}
-    )
-    write_table(
-        spark.createDataFrame(pdf).repartition(3), path,
-        partition_by=["lang"],
-    )
-    ups = pd.DataFrame(
-        {"doc_id": [10, 11], "lang": ["en", "de"], "val": [-1, -2]}
-    )
-    upsert_rows(spark, path, spark.createDataFrame(ups), ["doc_id"],
-                strategy="mor")
-    assert _load_snapshots(path)[-1]["delete_files"]
-    before = (
-        read_table(spark, path).toPandas().sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    snap = compact_table(spark, path, min_files_per_partition=1)
-    assert not snap["delete_files"]  # folded in
-    after = (
-        read_table(spark, path).toPandas().sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(
-        before, after[before.columns.tolist()]
-    )
-    # the pre-compaction MoR snapshot still time-travels with deletes
-    prev_id = snap["snapshot_id"] - 1
-    tt = read_table(spark, path, snapshot_id=prev_id).toPandas()
-    assert tt.set_index("doc_id").loc[10, "val"] == -1
-
-
 def test_delete_range_mor_predicate(spark, tmp_path):
-    """strategy='mor' range DELETE: boundary files stay in place under
-    a predicate-delete entry; contents equal the CoW delete; NULL rows
-    survive; inside files still metadata-drop."""
+    """Range DELETE: boundary files stay in place under a
+    predicate-delete entry; contents equal the relational
+    recomputation; NULL rows survive; inside files still
+    metadata-drop."""
     import pandas as pd
 
-    from remediner_spark.sources.table import (
-        _load_snapshots,
-        delete_range,
-        read_table,
-    )
+    from remediner_spark.sources.table import delete_range
 
     pdf = pd.DataFrame(
         {"k": [float(i) for i in range(1000)] + [None] * 5,
          "val": list(range(1005))}
     )
-    results = {}
-    for strat in ("cow", "mor"):
-        path = str(tmp_path / strat)
-        write_table(
-            spark.createDataFrame(pdf).repartition(8), path, sort_by=["k"]
-        )
-        snap = delete_range(spark, path, "k", 201.5, 700.5, strategy=strat)
-        assert snap["properties"]["dropped_files"] >= 1
-        if strat == "mor":
-            assert snap["properties"]["rewritten_files"] == 0
-            assert snap["properties"]["delete_targets"] >= 1
-            assert any(
-                d["type"] == "pred" for d in snap["delete_files"]
-            )
-        results[strat] = (
-            read_table(spark, path).toPandas()
-            .sort_values("val").reset_index(drop=True)
-        )
-    pd.testing.assert_frame_equal(results["cow"], results["mor"])
-    got = results["mor"]
+    path = str(tmp_path / "tbl")
+    write_table(
+        spark.createDataFrame(pdf).repartition(8), path, sort_by=["k"]
+    )
+    snap = delete_range(spark, path, "k", 201.5, 700.5)
+    assert snap["properties"]["dropped_files"] >= 1
+    assert snap["properties"]["delete_targets"] >= 1
+    assert any(d["type"] == "pred" for d in snap["delete_files"])
+    got = (
+        read_table(spark, path).toPandas()
+        .sort_values("val").reset_index(drop=True)
+    )
+    want = pdf[~pdf["k"].between(201.5, 700.5)].reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, want)
     assert len(got) == 1005 - 499  # k in [202, 700] deleted
     assert got["k"].isna().sum() == 5  # NULL rows kept
 
 
-def test_expire_keeps_live_equality_delete_files(spark, tmp_path):
-    """expire_snapshots must treat equality-delete files as live while
-    any kept snapshot references them, and reap them once expired."""
-    import os
-
-    import pandas as pd
-
-    from remediner_spark.sources.table import (
-        _load_snapshots,
-        expire_snapshots,
-        read_table,
-        upsert_rows,
-    )
-
-    path = str(tmp_path / "tbl")
-    pdf = pd.DataFrame({"doc_id": range(200), "val": range(200)})
-    write_table(spark.createDataFrame(pdf).repartition(2), path,
-                sort_by=["doc_id"])
-    ups = pd.DataFrame({"doc_id": [7], "val": [-1]})
-    upsert_rows(spark, path, spark.createDataFrame(ups), ["doc_id"],
-                strategy="mor")
-    eq_path = _load_snapshots(path)[-1]["delete_files"][0]["path"]
-    # another append so the MoR snapshot is not the only one
-    write_table(
-        spark.createDataFrame(pd.DataFrame({"doc_id": [900], "val": [9]})),
-        path, mode="append",
-    )
-    expire_snapshots(path, keep_last=2)
-    assert os.path.exists(eq_path)  # still referenced by kept snapshots
-    got = read_table(spark, path).toPandas().set_index("doc_id")
-    assert got.loc[7, "val"] == -1
-    # overwrite drops all files + delete entries; expiry then reaps
-    write_table(
-        spark.createDataFrame(pdf), path, mode="overwrite",
-    )
-    expire_snapshots(path, keep_last=1)
-    assert not os.path.exists(eq_path)
-
-
 def test_upsert_composite_key_file_targeting(spark, tmp_path):
-    """A two-column narrow upsert into a sorted table rewrites only the
+    """A two-column narrow upsert into a sorted table targets only the
     files whose stats box actually contains an update key tuple — the
     composite-key generalization of the sorted-keyset targeting (the
     old fallback was a global per-column bounding box)."""
@@ -932,10 +705,8 @@ def test_upsert_composite_key_file_targeting(spark, tmp_path):
     )
     snap = upsert_rows(
         spark, path, spark.createDataFrame(ups), ["bucket", "doc_id"],
-        strategy="cow",
     )
-    assert snap["properties"]["rewritten_files"] <= 2
-    assert snap["properties"]["carried_files"] >= 6
+    assert 1 <= snap["properties"]["delete_targets"] <= 2
     got = read_table(spark, path).toPandas().set_index(["bucket", "doc_id"])
     assert got.loc[(0, 10), "val"] == -1
     assert got.loc[(7, 100), "val"] == -2
@@ -980,35 +751,6 @@ def test_rename_column_metadata_only(spark, tmp_path):
     assert "val" in old.columns and "score" not in old.columns
 
 
-def test_drop_column_and_readd_never_resurrects(spark, tmp_path):
-    """Dropping a column is metadata-only; re-adding the same NAME is a
-    NEW field id, so old files read null for it (Iceberg id semantics);
-    time travel pre-drop still sees the original values."""
-    import pandas as pd
-
-    from remediner_spark.sources.table import (
-        drop_column,
-        read_table,
-    )
-
-    path = str(tmp_path / "tbl")
-    pdf = pd.DataFrame({"doc_id": range(50), "secret": range(50)})
-    write_table(spark.createDataFrame(pdf).repartition(2), path)
-    drop_column(path, "secret")
-    got = read_table(spark, path).toPandas()
-    assert list(got.columns) == ["doc_id"]
-    # re-add the same name via append evolution
-    readd = pd.DataFrame({"doc_id": [100], "secret": [-1]})
-    write_table(spark.createDataFrame(readd), path, mode="append")
-    got2 = read_table(spark, path).toPandas().set_index("doc_id")
-    assert got2.loc[100, "secret"] == -1
-    # old rows must NOT resurrect the dropped data
-    assert got2.loc[range(50), "secret"].isna().all()
-    # time travel pre-drop
-    old = read_table(spark, path, snapshot_id=1).toPandas()
-    assert old.set_index("doc_id").loc[10, "secret"] == 10
-
-
 def test_widen_column_int_to_long(spark, tmp_path):
     """int->long widening: metadata-only; old int files cast at read;
     new long appends mix transparently; unsafe retype still raises."""
@@ -1040,15 +782,11 @@ def test_widen_column_int_to_long(spark, tmp_path):
 
 
 def test_evolution_guards(spark, tmp_path):
-    """Partition columns can't rename/drop; sort-order columns can't
-    drop; delete-entry keys can't drop before folding."""
+    """Partition columns can't rename; neither can a missing column,
+    nor onto an existing name."""
     import pandas as pd
 
-    from remediner_spark.sources.table import (
-        drop_column,
-        rename_column,
-        upsert_rows,
-    )
+    from remediner_spark.sources.table import rename_column
 
     path = str(tmp_path / "tbl")
     pdf = pd.DataFrame(
@@ -1059,27 +797,10 @@ def test_evolution_guards(spark, tmp_path):
     write_table(spark.createDataFrame(pdf), path, partition_by=["lang"])
     with pytest.raises(ValueError, match="partition column"):
         rename_column(path, "lang", "language")
-    with pytest.raises(ValueError, match="partition column"):
-        drop_column(path, "lang")
-
-    path2 = str(tmp_path / "tbl2")
-    write_table(
-        spark.createDataFrame(pdf.drop(columns=["lang"])), path2,
-        sort_by=["doc_id"],
-    )
-    with pytest.raises(ValueError, match="sort order"):
-        drop_column(path2, "doc_id")
-    # delete-entry guard: key the MoR delete on a NON-sort column
-    path3 = str(tmp_path / "tbl3")
-    write_table(
-        spark.createDataFrame(pdf.drop(columns=["lang"])).repartition(2),
-        path3,
-    )
-    ups = pd.DataFrame({"doc_id": [-1], "val": [5]})
-    upsert_rows(spark, path3, spark.createDataFrame(ups), ["val"],
-                strategy="mor")
-    with pytest.raises(ValueError, match="delete entry"):
-        drop_column(path3, "val")
+    with pytest.raises(ValueError, match="already exists"):
+        rename_column(path, "val", "doc_id")
+    with pytest.raises(ValueError, match="no column"):
+        rename_column(path, "nope", "x")
 
 
 def test_rename_with_pending_mor_delete(spark, tmp_path):
@@ -1099,8 +820,7 @@ def test_rename_with_pending_mor_delete(spark, tmp_path):
     write_table(spark.createDataFrame(pdf).repartition(2), path,
                 sort_by=["doc_id"])
     ups = pd.DataFrame({"doc_id": [7], "val": [-1]})
-    upsert_rows(spark, path, spark.createDataFrame(ups), ["doc_id"],
-                strategy="mor")
+    upsert_rows(spark, path, spark.createDataFrame(ups), ["doc_id"])
     rename_column(path, "doc_id", "page_id")
     got = read_table(spark, path).toPandas().set_index("page_id")
     assert len(got) == 200  # old row 7 deleted, update inserted
@@ -1117,7 +837,6 @@ def test_stats_skipping_survives_rename(spark, tmp_path):
     from remediner_spark.sources.table import (
         read_table,
         rename_column,
-        stats_pruned_count,
     )
 
     path = str(tmp_path / "tbl")
@@ -1137,7 +856,7 @@ def test_stats_filter_prunes_pre_add_files(spark, tmp_path):
     entirely at the manifest level."""
     import pandas as pd
 
-    from remediner_spark.sources.table import read_table, stats_pruned_count
+    from remediner_spark.sources.table import read_table
 
     path = str(tmp_path / "tbl")
     old = pd.DataFrame({"doc_id": range(100)})
@@ -1153,7 +872,7 @@ def test_stats_filter_prunes_pre_add_files(spark, tmp_path):
 def test_upsert_after_widen_and_rename(spark, tmp_path):
     """MERGE through evolution: after int->long widening and a key
     rename, upserts keyed on the new name still target files through
-    the field-id mapping and merge correctly in both strategies."""
+    the field-id mapping and merge correctly."""
     import pandas as pd
 
     from remediner_spark.sources.table import (
@@ -1163,27 +882,25 @@ def test_upsert_after_widen_and_rename(spark, tmp_path):
         widen_column,
     )
 
-    for strat in ("cow", "mor"):
-        path = str(tmp_path / strat)
-        base = spark.createDataFrame(
-            pd.DataFrame({"doc_id": range(400), "n": range(400)})
-        ).selectExpr("doc_id", "CAST(n AS INT) AS n")
-        write_table(base.repartition(4), path, sort_by=["doc_id"])
-        widen_column(path, "n", "long")
-        rename_column(path, "doc_id", "page_id")
-        ups = spark.createDataFrame(
-            pd.DataFrame({"page_id": [5], "n": [2**40]})
-        )
-        snap = upsert_rows(spark, path, ups, ["page_id"], strategy=strat)
-        if strat == "cow":
-            # field-id stats targeting still prunes: only the file
-            # holding page_id=5 rewrites
-            assert snap["properties"]["rewritten_files"] == 1
-            assert snap["properties"]["carried_files"] == 3
-        got = read_table(spark, path).toPandas().set_index("page_id")
-        assert len(got) == 400
-        assert got.loc[5, "n"] == 2**40
-        assert got.loc[6, "n"] == 6
+    path = str(tmp_path / "tbl")
+    base = spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(400), "n": range(400)})
+    ).selectExpr("doc_id", "CAST(n AS INT) AS n")
+    write_table(base.repartition(4), path, sort_by=["doc_id"])
+    widen_column(path, "n", "long")
+    rename_column(path, "doc_id", "page_id")
+    ups = spark.createDataFrame(
+        pd.DataFrame({"page_id": [5], "n": [2**40]})
+    )
+    snap = upsert_rows(spark, path, ups, ["page_id"])
+    # field-id stats targeting still prunes: only the file holding
+    # page_id=5 is a delete target
+    assert snap["properties"]["delete_targets"] == 1
+    assert snap["properties"]["carried_files"] == 4
+    got = read_table(spark, path).toPandas().set_index("page_id")
+    assert len(got) == 400
+    assert got.loc[5, "n"] == 2**40
+    assert got.loc[6, "n"] == 6
 
 
 def test_delete_range_after_rename(spark, tmp_path):
@@ -1208,130 +925,6 @@ def test_delete_range_after_rename(spark, tmp_path):
     got = read_table(spark, path).toPandas()
     assert len(got) == 1000 - 501
     assert got["page_id"].between(200, 700).sum() == 0
-
-
-def test_remove_orphan_files(spark, tmp_path):
-    """Orphan cleanup: a crashed write's unreferenced data files are
-    reaped once past the age guard; young files (possible in-flight
-    commits) and every referenced file survive; dry_run only reports."""
-    import os
-    import time as _time
-
-    import pandas as pd
-
-    from remediner_spark.sources.table import (
-        read_table,
-        remove_orphan_files,
-        upsert_rows,
-    )
-
-    path = str(tmp_path / "tbl")
-    pdf = pd.DataFrame({"doc_id": range(100), "val": range(100)})
-    write_table(spark.createDataFrame(pdf).repartition(2), path,
-                sort_by=["doc_id"])
-    upsert_rows(
-        spark, path,
-        spark.createDataFrame(pd.DataFrame({"doc_id": [3], "val": [-1]})),
-        ["doc_id"], strategy="mor",
-    )
-    # simulate a crashed write: files on disk, no manifest entry
-    crash_dir = os.path.join(path, "data", "commit=deadbeef")
-    os.makedirs(crash_dir)
-    orphan = os.path.join(crash_dir, "part-00000-crash.parquet")
-    open(orphan, "wb").write(b"not a real parquet")
-    old = _time.time() - 7200
-    os.utime(orphan, (old, old))
-    young = os.path.join(crash_dir, "part-00001-inflight.parquet")
-    open(young, "wb").write(b"in-flight commit")
-
-    rep = remove_orphan_files(path, dry_run=True)
-    assert rep["orphans"] == [orphan] and rep["deleted"] == 0
-    assert os.path.exists(orphan)
-    rep2 = remove_orphan_files(path)
-    assert rep2["deleted"] == 1
-    assert not os.path.exists(orphan)
-    assert os.path.exists(young)  # age guard protects in-flight commits
-    # table fully intact, MoR delete file included
-    got = read_table(spark, path).toPandas().set_index("doc_id")
-    assert len(got) == 100 and got.loc[3, "val"] == -1
-
-
-def test_metadata_tables(spark, tmp_path):
-    """Iceberg-style .files/.history introspection from the manifest."""
-    import pandas as pd
-
-    from remediner_spark.sources.table import (
-        table_files,
-        table_history,
-        upsert_rows,
-    )
-
-    path = str(tmp_path / "tbl")
-    pdf = pd.DataFrame({"doc_id": range(100), "val": range(100)})
-    write_table(spark.createDataFrame(pdf).repartition(2), path,
-                sort_by=["doc_id"])
-    upsert_rows(
-        spark, path,
-        spark.createDataFrame(pd.DataFrame({"doc_id": [3], "val": [-1]})),
-        ["doc_id"], strategy="mor",
-    )
-    files = table_files(spark, path).toPandas()
-    assert files["record_count"].sum() == 101  # physical rows incl. update
-    assert all("doc_id" in nf for nf in files["nullfree"])
-    hist = table_history(spark, path).toPandas()
-    assert hist["operation"].tolist() == ["append", "upsert-mor"]
-    assert hist["delete_file_count"].tolist() == [0, 1]
-
-
-def test_read_incremental_appends(spark, tmp_path):
-    """Incremental append scan: only the rows added after the base
-    snapshot; schema evolution in range is transparent; rewriting
-    operations in range are loud."""
-    import pandas as pd
-
-    from remediner_spark.sources.table import (
-        read_incremental,
-        rename_column,
-        upsert_rows,
-    )
-
-    path = str(tmp_path / "tbl")
-    for lo in (0, 100, 200):
-        write_table(
-            spark.createDataFrame(
-                pd.DataFrame(
-                    {"doc_id": range(lo, lo + 100), "val": range(100)}
-                )
-            ),
-            path, mode="append",
-        )
-    inc = read_incremental(spark, path, from_snapshot=1).toPandas()
-    assert sorted(inc["doc_id"]) == list(range(100, 300))
-    inc2 = read_incremental(spark, path, 1, 2).toPandas()
-    assert sorted(inc2["doc_id"]) == list(range(100, 200))
-    assert read_incremental(spark, path, 3, 3).count() == 0
-
-    # rename in range is metadata-only: incremental read still works,
-    # under the target snapshot's schema
-    rename_column(path, "doc_id", "page_id")
-    write_table(
-        spark.createDataFrame(
-            pd.DataFrame({"page_id": [900], "val": [9]})
-        ),
-        path, mode="append",
-    )
-    inc3 = read_incremental(spark, path, 2).toPandas()
-    assert "page_id" in inc3.columns
-    assert sorted(inc3["page_id"]) == list(range(200, 300)) + [900]
-
-    # an upsert in range rewrites rows -> loud
-    upsert_rows(
-        spark, path,
-        spark.createDataFrame(pd.DataFrame({"page_id": [0], "val": [-1]})),
-        ["page_id"], strategy="cow",
-    )
-    with pytest.raises(ValueError, match="non-append"):
-        read_incremental(spark, path, 1)
 
 
 def test_optimistic_commit_conflict(spark, tmp_path):
@@ -1386,50 +979,6 @@ def test_optimistic_commit_conflict(spark, tmp_path):
         with _commit_lock(path, timeout_s=0.3):
             pass
     os.remove(lock)
-
-
-def test_compact_unpartitioned_folds_deletes(spark, tmp_path):
-    """Unpartitioned tables fold MoR deletes by whole-table rewrite:
-    contents unchanged, delete entries gone, sort order preserved,
-    time travel intact."""
-    import pandas as pd
-
-    from remediner_spark.sources.table import (
-        _load_snapshots,
-        compact_table,
-        delete_range,
-        read_table,
-        upsert_rows,
-    )
-
-    path = str(tmp_path / "tbl")
-    pdf = pd.DataFrame({"doc_id": range(500), "val": range(500)})
-    write_table(spark.createDataFrame(pdf).repartition(6), path,
-                sort_by=["doc_id"])
-    upsert_rows(
-        spark, path,
-        spark.createDataFrame(pd.DataFrame({"doc_id": [7], "val": [-1]})),
-        ["doc_id"], strategy="mor",
-    )
-    delete_range(spark, path, "doc_id", 480, None, strategy="mor")
-    assert _load_snapshots(path)[-1]["delete_files"]
-    before = (
-        read_table(spark, path).toPandas().sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    snap = compact_table(spark, path)
-    assert not snap["delete_files"]
-    assert len(_snap_files(path, snap)) <= 2
-    assert snap["sort_by"] == ["doc_id"]
-    after = (
-        read_table(spark, path).toPandas().sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(before, after)
-    assert len(after) == 500 - 20  # 480..499 deleted, key 7 updated
-    assert after.set_index("doc_id").loc[7, "val"] == -1
-    # pre-compaction snapshots still time travel
-    assert read_table(spark, path, snapshot_id=1).count() == 500
 
 
 def test_cmp_stats_matches_chronology():
@@ -1488,9 +1037,9 @@ def test_stats_filter_composes_with_mor_deletes(spark, tmp_path):
         spark.createDataFrame(
             pd.DataFrame({"doc_id": [150, 850], "val": [-1, -2]})
         ),
-        ["doc_id"], strategy="mor",
+        ["doc_id"],
     )
-    delete_range(spark, path, "doc_id", 300, 499, strategy="mor")
+    delete_range(spark, path, "doc_id", 300, 499)
 
     got = (
         read_table(spark, path, stats_filter={"doc_id": (100, 899)})
@@ -1505,6 +1054,92 @@ def test_stats_filter_composes_with_mor_deletes(spark, tmp_path):
         .sort_values("doc_id").reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(got, want)
+
+
+def test_compact_folds_mor_deletes(spark, tmp_path):
+    """Compacting every partition (read_table -> replace_partitions)
+    applies the pending delete entries while rewriting, and the entries
+    leave the manifest with their target files."""
+    import pandas as pd
+
+    from remediner_spark.sources.table import upsert_rows
+
+    path = str(tmp_path / "tbl")
+    pdf = pd.DataFrame(
+        {"doc_id": range(300),
+         "lang": ["en" if i % 2 else "de" for i in range(300)],
+         "val": list(range(300))}
+    )
+    write_table(
+        spark.createDataFrame(pdf).repartition(3), path,
+        partition_by=["lang"],
+    )
+    ups = pd.DataFrame(
+        {"doc_id": [10, 11], "lang": ["en", "de"], "val": [-1, -2]}
+    )
+    upsert_rows(spark, path, spark.createDataFrame(ups), ["doc_id"])
+    assert _load_snapshots(path)[-1]["delete_files"]
+    before = (
+        read_table(spark, path).toPandas().sort_values("doc_id")
+        .reset_index(drop=True)
+    )
+    snap = write_table(
+        read_table(spark, path).repartition(2, "lang"), path,
+        mode="replace_partitions", partition_by=["lang"],
+    )
+    assert not snap["delete_files"]  # folded in
+    after = (
+        read_table(spark, path).toPandas().sort_values("doc_id")
+        .reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(
+        before, after[before.columns.tolist()]
+    )
+    # the pre-compaction MoR snapshot still time-travels with deletes
+    prev_id = snap["snapshot_id"] - 1
+    tt = read_table(spark, path, snapshot_id=prev_id).toPandas()
+    assert tt.set_index("doc_id").loc[10, "val"] == -1
+
+
+def test_compact_unpartitioned_folds_deletes(spark, tmp_path):
+    """An unpartitioned table folds its delete entries by a whole-table
+    rewrite (read_table -> overwrite): contents unchanged, delete
+    entries gone, sort order kept, time travel intact."""
+    import pandas as pd
+
+    from remediner_spark.sources.table import delete_range, upsert_rows
+
+    path = str(tmp_path / "tbl")
+    pdf = pd.DataFrame({"doc_id": range(500), "val": range(500)})
+    write_table(spark.createDataFrame(pdf).repartition(6), path,
+                sort_by=["doc_id"])
+    upsert_rows(
+        spark, path,
+        spark.createDataFrame(pd.DataFrame({"doc_id": [7], "val": [-1]})),
+        ["doc_id"],
+    )
+    delete_range(spark, path, "doc_id", 480, None)
+    assert _load_snapshots(path)[-1]["delete_files"]
+    before = (
+        read_table(spark, path).toPandas().sort_values("doc_id")
+        .reset_index(drop=True)
+    )
+    snap = write_table(
+        read_table(spark, path).coalesce(2), path, mode="overwrite",
+        sort_by=["doc_id"],
+    )
+    assert not snap["delete_files"]
+    assert len(_snap_files(path, snap)) <= 2
+    assert snap["sort_by"] == ["doc_id"]
+    after = (
+        read_table(spark, path).toPandas().sort_values("doc_id")
+        .reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(before, after)
+    assert len(after) == 500 - 20  # 480..499 deleted, key 7 updated
+    assert after.set_index("doc_id").loc[7, "val"] == -1
+    # pre-compaction snapshots still time travel
+    assert read_table(spark, path, snapshot_id=1).count() == 500
 
 
 def test_break_stale_lock_spares_fresh_lock(tmp_path, monkeypatch):
@@ -1558,17 +1193,10 @@ def test_break_stale_lock_spares_fresh_lock(tmp_path, monkeypatch):
 
 
 def test_compact_partitioned_preserves_sort_order(spark, tmp_path):
-    """Partitioned compaction keeps the table's sort order (it used to
-    commit sort_by: [], silently losing clustering — r5 ADVICE) and the
-    rewritten files still stats-prune."""
+    """A partition rewrite (read_table -> replace_partitions) given the
+    table's sort order records it and re-clusters the rewritten files,
+    so they still stats-prune."""
     import pandas as pd
-
-    from remediner_spark.sources.table import (
-        _load_snapshots,
-        compact_table,
-        read_table,
-        stats_pruned_count,
-    )
 
     path = str(tmp_path / "tbl")
     pdf = pd.DataFrame(
@@ -1581,55 +1209,15 @@ def test_compact_partitioned_preserves_sort_order(spark, tmp_path):
             spark.createDataFrame(pdf.iloc[lo:lo + 100]), path,
             partition_by=["lang"], sort_by=["val"],
         )
-    snap = compact_table(spark, path, min_files_per_partition=1)
+    snap = write_table(
+        read_table(spark, path).repartition(4), path,
+        mode="replace_partitions", partition_by=["lang"], sort_by=["val"],
+    )
     assert snap["sort_by"] == ["val"]
     assert read_table(spark, path).count() == 400
     selected, total = stats_pruned_count(path, {"val": (0, 40)})
     assert 0 < selected < total  # clustering survived the rewrite
     assert _load_snapshots(path)[-1]["sort_by"] == ["val"]
-
-
-def test_compact_folds_emptied_partition(spark, tmp_path):
-    """Pending MoR deletes that empty an entire partition still fold:
-    the rewrite emits no file for it, but compact_table names it as
-    replaced, so its old files leave the manifest, its delete entries
-    prune, and a second compaction is a no-op (the r5 ADVICE
-    permanent-no-progress finding)."""
-    import pandas as pd
-
-    from remediner_spark.sources.table import (
-        _load_snapshots,
-        compact_table,
-        delete_range,
-        read_table,
-    )
-
-    path = str(tmp_path / "tbl")
-    # >60-char string values defeat footer stats, forcing delete_range
-    # into the boundary (rewrite/MoR) class instead of metadata drops
-    pdf = pd.DataFrame(
-        {"doc_id": range(100),
-         "lang": ["de" if i < 50 else "en" for i in range(100)],
-         "val": [("x" * 70 if i < 50 else "z" * 70) + str(i)
-                 for i in range(100)]}
-    )
-    write_table(
-        spark.createDataFrame(pdf), path, partition_by=["lang"]
-    )
-    # deletes every 'de' row (all start 'xxx…'), no 'en' row ('zzz…')
-    delete_range(spark, path, "val", lo="x", hi="y", strategy="mor")
-    assert _load_snapshots(path)[-1]["delete_files"]
-    assert read_table(spark, path).count() == 50
-
-    snap = compact_table(spark, path, min_files_per_partition=1)
-    assert not snap["delete_files"]  # folded, including the emptied one
-    assert read_table(spark, path).count() == 50
-    assert set(
-        read_table(spark, path).toPandas()["lang"].unique()
-    ) == {"en"}
-    # no re-qualification: the next compaction has nothing to do
-    snap2 = compact_table(spark, path, min_files_per_partition=1)
-    assert snap2["snapshot_id"] == snap["snapshot_id"]
 
 
 def test_append_writes_o1_manifest_bytes(spark, tmp_path):
@@ -1706,56 +1294,6 @@ def test_append_writes_o1_manifest_bytes(spark, tmp_path):
     assert read_table(spark, path).count() == 233
 
 
-def test_legacy_inline_manifest_migrates(spark, tmp_path):
-    """Tables whose snapshots embed an inline "files" list (the pre-r6
-    layout) stay readable, and the next write migrates them to manifest
-    lists without changing results."""
-    import json
-    import os
-
-    import pandas as pd
-
-    from remediner_spark.sources.table import (
-        _load_snapshots,
-        _snap_files,
-        upsert_rows,
-    )
-
-    path = str(tmp_path / "tbl")
-    pdf = pd.DataFrame({"doc_id": range(100), "val": range(100)})
-    write_table(spark.createDataFrame(pdf).repartition(4), path)
-
-    # rewrite snapshots.json into the legacy inline shape
-    sfile = os.path.join(path, "_metadata", "snapshots.json")
-    snaps = _load_snapshots(path)
-    for s in snaps:
-        s["files"] = _snap_files(path, s)
-        s.pop("manifest_list", None)
-    with open(sfile, "w") as fh:
-        json.dump(snaps, fh)
-
-    assert read_table(spark, path).count() == 100  # legacy read path
-
-    # append migrates: new tip uses a manifest list, data intact
-    write_table(
-        spark.createDataFrame(pd.DataFrame({"doc_id": [500], "val": [1]})),
-        path, mode="append",
-    )
-    tip = _load_snapshots(path)[-1]
-    assert "manifest_list" in tip and "files" not in tip
-    assert read_table(spark, path).count() == 101
-
-    # subtractive op on a migrated table still targets correctly
-    upsert_rows(
-        spark, path,
-        spark.createDataFrame(pd.DataFrame({"doc_id": [10], "val": [-1]})),
-        ["doc_id"], strategy="cow",
-    )
-    got = read_table(spark, path).toPandas()
-    assert len(got) == 101
-    assert got.set_index("doc_id").loc[10, "val"] == -1
-
-
 def test_concurrent_appends_converge_with_retry(spark, tmp_path):
     """Four writer threads race one-row appends, retrying on
     CommitConflictError (the Iceberg client loop). Every committed row
@@ -1824,53 +1362,21 @@ def test_concurrent_appends_converge_with_retry(spark, tmp_path):
     assert sum(f["rows"] for f in live_files(path)) == 70
 
 
-def test_table_manifests_metadata(spark, tmp_path):
-    """.manifests metadata table: one row per manifest of the current
-    snapshot, counts consistent with live_files."""
-    import pandas as pd
-
-    from remediner_spark.sources.table import live_files, table_manifests
-
-    path = str(tmp_path / "tbl")
-    pdf = pd.DataFrame(
-        {"doc_id": range(60),
-         "lang": ["en" if i % 2 else "de" for i in range(60)]}
-    )
-    write_table(
-        spark.createDataFrame(pdf.iloc[:30]), path, partition_by=["lang"]
-    )
-    write_table(
-        spark.createDataFrame(pdf.iloc[30:]), path, mode="append",
-        partition_by=["lang"],
-    )
-    m = table_manifests(spark, path).toPandas()
-    assert len(m) == 2  # one manifest per commit, carried by ref
-    assert m["row_count"].sum() == 60
-    assert m["file_count"].sum() == len(live_files(path))
-    assert all(
-        '"lang": "de"' in p or '"lang": "en"' in p
-        for parts in m["partitions"] for p in parts
-    )
-
-
 def test_table_model_based_random_ops(spark, tmp_path):
     """Model-based interaction test: a seeded random sequence of
-    append / upsert (cow+mor) / range-delete (cow+mor) / compaction /
-    rename / widen / expiry / partition-spec evolution against a
-    pandas reference model. After
-    every step the live read equals the model, and surviving
-    historical snapshots still time-travel to their recorded state —
-    the pairwise tests above can't see cross-op interactions (e.g. a
-    MoR delete folded by a compaction after a rename)."""
+    append / upsert / range-delete / rename / widen / partition-spec
+    evolution against a pandas reference model. After every step the
+    live read equals the model, and every historical snapshot still
+    time-travels to its recorded state — the pairwise tests above
+    can't see cross-op interactions (e.g. a pending equality delete
+    keyed on a column a later rename moved)."""
     import random
 
     import pandas as pd
 
     from remediner_spark.sources.table import (
-        compact_table,
         delete_range,
         evolve_partition_spec,
-        expire_snapshots,
         read_table,
         rename_column,
         table_snapshots,
@@ -1920,8 +1426,7 @@ def test_table_model_based_random_ops(spark, tmp_path):
 
     for _step in range(20):
         op = rng.choice(
-            ["append", "upsert", "delete", "compact", "rename",
-             "widen", "expire", "evolve"]
+            ["append", "upsert", "delete", "rename", "widen", "evolve"]
         )
         if op == "append":
             batch = make_rows(rng.randrange(1, 8))
@@ -1941,10 +1446,7 @@ def test_table_model_based_random_ops(spark, tmp_path):
             )
             new = make_rows(rng.randrange(0, 3))
             ups = pd.concat([ups, new], ignore_index=True)
-            upsert_rows(
-                spark, path, spark.createDataFrame(ups), ["doc_id"],
-                strategy=rng.choice(["cow", "mor", "auto"]),
-            )
+            upsert_rows(spark, path, spark.createDataFrame(ups), ["doc_id"])
             model = pd.concat(
                 [model[~model["doc_id"].isin(ups["doc_id"])], ups],
                 ignore_index=True,
@@ -1952,15 +1454,10 @@ def test_table_model_based_random_ops(spark, tmp_path):
         elif op == "delete" and len(model):
             lo = rng.randrange(900)
             hi = lo + rng.randrange(150)
-            delete_range(
-                spark, path, val_col, lo, hi,
-                strategy=rng.choice(["cow", "mor"]),
-            )
+            delete_range(spark, path, val_col, lo, hi)
             model = model[
                 ~model[val_col].astype("int64").between(lo, hi)
             ].reset_index(drop=True)
-        elif op == "compact":
-            compact_table(spark, path, min_files_per_partition=1)
         elif op == "rename":
             new_name = "score" if val_col == "val" else "val"
             rename_column(path, val_col, new_name)
@@ -1971,139 +1468,26 @@ def test_table_model_based_random_ops(spark, tmp_path):
             val_ts = "int64"
             model[val_col] = model[val_col].astype("int64")
         elif op == "evolve":
-            # toggle the spec: subsequent appends/compactions run
+            # toggle the spec: subsequent appends and upserts run
             # under the NEW spec while old files keep serving reads
             cur_spec = [] if cur_spec else ["lang"]
             evolve_partition_spec(path, cur_spec)
-        elif op == "expire":
-            expire_snapshots(path, keep_last=3)
-            alive = {s["snapshot_id"] for s in table_snapshots(path)}
-            for sid in list(history):
-                if sid not in alive:
-                    del history[sid]
         check_live()
         tip = table_snapshots(path)[-1]["snapshot_id"]
         history[tip] = model.copy()
 
-    # surviving snapshots still time-travel to their recorded state
-    alive = [s["snapshot_id"] for s in table_snapshots(path)]
-    checked = 0
-    for sid in alive:
-        if sid in history:
-            pd.testing.assert_frame_equal(
-                norm(read_table(spark, path, snapshot_id=sid).toPandas()),
-                norm(history[sid]),
-            )
-            checked += 1
-    assert checked >= 2
-
-
-def test_snapshot_tags_pin_retention(spark, tmp_path):
-    """Iceberg refs/tags: a tagged snapshot survives expire_snapshots
-    past keep_last and stays readable via read_table(tag=...); dropping
-    the tag releases it to the next expiry; tags resolve and re-point."""
-    import pandas as pd
-
-    from remediner_spark.sources.table import (
-        drop_tag,
-        expire_snapshots,
-        read_table,
-        table_snapshots,
-        table_tags,
-        tag_snapshot,
-    )
-
-    path = str(tmp_path / "tbl")
-    for k in range(5):  # snapshots 1..5, 10 rows each
-        write_table(
-            spark.createDataFrame(
-                pd.DataFrame(
-                    {"doc_id": range(k * 10, k * 10 + 10), "val": [k] * 10}
-                )
-            ),
-            path, mode="append",
+    # historical snapshots still time-travel to their recorded state
+    assert set(history) == {s["snapshot_id"] for s in table_snapshots(path)}
+    for sid, state in history.items():
+        pd.testing.assert_frame_equal(
+            norm(read_table(spark, path, snapshot_id=sid).toPandas()),
+            norm(state),
         )
-    assert tag_snapshot(path, "audited", snapshot_id=2) == 2
-    assert tag_snapshot(path, "latest") == 5  # defaults to tip
-    assert table_tags(path) == {"audited": 2, "latest": 5}
-
-    res = expire_snapshots(path, keep_last=2)
-    alive = [s["snapshot_id"] for s in table_snapshots(path)]
-    assert alive == [2, 4, 5]  # tagged 2 pinned; 1 and 3 expired
-    assert res["removed_snapshots"] == 2
-    assert read_table(spark, path, tag="audited").count() == 20
-    assert read_table(spark, path, tag="latest").count() == 50
-    assert read_table(spark, path).count() == 50
-
-    # re-point a tag, release the old pin, expire again
-    tag_snapshot(path, "audited", snapshot_id=4)
-    drop_tag(path, "latest")
-    expire_snapshots(path, keep_last=1)
-    alive = [s["snapshot_id"] for s in table_snapshots(path)]
-    assert alive == [4, 5]
-    assert read_table(spark, path, tag="audited").count() == 40
-
-    import pytest
-
-    with pytest.raises(ValueError, match="no tag"):
-        read_table(spark, path, tag="gone")
-    with pytest.raises(ValueError, match="no snapshot 99"):
-        tag_snapshot(path, "x", snapshot_id=99)
-    with pytest.raises(ValueError, match="not both"):
-        read_table(spark, path, snapshot_id=4, tag="audited")
-
-
-def test_compaction_folds_emptied_partition_no_loop(spark, tmp_path):
-    """Delete EVERY row of one partition via pending MoR predicate
-    deletes, then compact twice: the first pass folds the deletes and
-    drops the emptied partition's files from the manifest; the second
-    pass is a NO-OP (same snapshot) — the r5 ADVICE no-progress loop
-    (emptied partitions re-qualifying for compaction forever) stays
-    dead after the a3fc09f fix."""
-    import pandas as pd
-
-    from remediner_spark.sources.table import (
-        _load_snapshots,
-        compact_table,
-        delete_range,
-    )
-
-    path = str(tmp_path / "tbl")
-    pdf = pd.DataFrame(
-        {
-            "doc_id": list(range(200)),
-            "lang": ["de" if i < 100 else "en" for i in range(200)],
-            "val": [i if i < 100 else 1000 + i for i in range(200)],
-        }
-    )
-    write_table(spark.createDataFrame(pdf), path, partition_by=["lang"])
-    # two MoR cuts that TOGETHER cover every de row ([0,99]); each one
-    # only OVERLAPS the de file's val stats, so neither can take the
-    # metadata-only full-drop path — both must land as pending
-    # predicate-delete entries
-    delete_range(spark, path, "val", 0, 50, strategy="mor")
-    s2 = delete_range(spark, path, "val", 51, 99, strategy="mor")
-    assert s2.get("delete_files"), "setup must leave pending MoR deletes"
-    got = read_table(spark, path).toPandas()
-    assert set(got["lang"]) == {"en"} and len(got) == 100
-
-    snap = compact_table(spark, path)
-    assert not snap.get("delete_files")  # deletes folded
-    # the emptied partition's files left the manifest entirely
-    assert all(
-        f["partition"].get("lang") != "de" for f in _snap_files(path, snap)
-    )
-    got = read_table(spark, path).toPandas()
-    assert set(got["lang"]) == {"en"} and len(got) == 100
-
-    again = compact_table(spark, path)
-    assert again["snapshot_id"] == snap["snapshot_id"]
-    assert _load_snapshots(path)[-1]["snapshot_id"] == snap["snapshot_id"]
 
 
 class TestPartitionEvolution:
     """evolve_partition_spec: metadata-only spec change; mixed-spec
-    reads, pruning exactness, compaction safety, full migration."""
+    reads and pruning exactness."""
 
     def _counts(self, spark, path, **kw):
         from remediner_spark.sources.table import read_table
@@ -2184,93 +1568,6 @@ class TestPartitionEvolution:
             write_table(spark.createDataFrame(pages_pdf.iloc[20:40]),
                         path, mode="append")
 
-    def test_compaction_skips_other_spec_files(self, spark, tmp_path,
-                                               pages_pdf):
-        from remediner_spark.sources.table import (
-            _snap_files, compact_table, evolve_partition_spec, read_table,
-            table_snapshots, write_table,
-        )
-
-        path = str(tmp_path / "tbl")
-        write_table(spark.createDataFrame(pages_pdf.iloc[:40]), path,
-                    partition_by=["lang"])
-        evolve_partition_spec(path, [])
-        # several small unpartitioned commits -> crowded current spec..
-        # but current spec is unpartitioned: compact reads EVERYTHING
-        # (full overwrite) which IS the safe migration — data equality
-        for lo in (40, 60, 80, 100):
-            write_table(
-                spark.createDataFrame(pages_pdf.iloc[lo:lo + 20]), path,
-                mode="append",
-            )
-        before = read_table(spark, path).toPandas().sort_values(
-            "url").reset_index(drop=True)
-        compact_table(spark, path, min_files_per_partition=2)
-        after = read_table(spark, path).toPandas().sort_values(
-            "url").reset_index(drop=True)
-        assert list(before["url"]) == list(after["url"])
-        assert list(before["lang"]) == list(after["lang"])
-
-    def test_compaction_partitioned_current_spec_guard(
-        self, spark, tmp_path, pages_pdf
-    ):
-        from remediner_spark.sources.table import (
-            _snap_files, compact_table, evolve_partition_spec, read_table,
-            table_snapshots, write_table,
-        )
-
-        path = str(tmp_path / "tbl")
-        # old spec: unpartitioned; new spec: lang
-        write_table(spark.createDataFrame(pages_pdf.iloc[:40]), path)
-        evolve_partition_spec(path, ["lang"])
-        for lo in (40, 55, 70, 85, 100):
-            write_table(
-                spark.createDataFrame(pages_pdf.iloc[lo:lo + 15]), path,
-                mode="append", partition_by=["lang"],
-            )
-        before = read_table(spark, path).toPandas().sort_values(
-            "url").reset_index(drop=True)
-        snap = compact_table(spark, path, min_files_per_partition=1)
-        after = read_table(spark, path).toPandas().sort_values(
-            "url").reset_index(drop=True)
-        # no data loss: the legacy unpartitioned files survived the
-        # partitioned compaction untouched
-        assert list(before["url"]) == list(after["url"])
-        legacy = [
-            f for f in _snap_files(path, snap)
-            if set(f["partition"].keys()) != {"lang"}
-        ]
-        assert legacy, "legacy-spec files should still be present"
-
-    def test_rewrite_to_spec_migrates(self, spark, tmp_path, pages_pdf):
-        from remediner_spark.sources.table import (
-            _snap_files, evolve_partition_spec, read_table,
-            rewrite_to_spec, table_snapshots, write_table,
-        )
-
-        path = str(tmp_path / "tbl")
-        write_table(spark.createDataFrame(pages_pdf.iloc[:60]), path)
-        evolve_partition_spec(path, ["lang"])
-        write_table(spark.createDataFrame(pages_pdf.iloc[60:]), path,
-                    mode="append", partition_by=["lang"])
-        before = read_table(spark, path).toPandas().sort_values(
-            "url").reset_index(drop=True)
-        snap = rewrite_to_spec(spark, path)
-        # every live file now carries the current spec
-        assert all(
-            set(f["partition"].keys()) == {"lang"}
-            for f in _snap_files(path, snap)
-        )
-        after = read_table(spark, path).toPandas().sort_values(
-            "url").reset_index(drop=True)
-        assert list(before["url"]) == list(after["url"])
-        assert list(before["lang"]) == list(after["lang"])
-        # idempotent: second call is a no-op returning the same snapshot
-        assert rewrite_to_spec(spark, path)["snapshot_id"] == snap[
-            "snapshot_id"]
-        # pre-migration snapshots still time travel
-        assert read_table(spark, path, snapshot_id=1).count() == 60
-
     def test_mor_delete_survives_evolution(self, spark, tmp_path, pages_pdf):
         from remediner_spark.sources.table import (
             delete_range, evolve_partition_spec, read_table, write_table,
@@ -2281,8 +1578,7 @@ class TestPartitionEvolution:
                     partition_by=["lang"])
         # MoR predicate delete targeting the old-spec files
         urls = sorted(pages_pdf.iloc[:60]["url"])
-        delete_range(spark, path, "url", lo=urls[0], hi=urls[9],
-                     strategy="mor")
+        delete_range(spark, path, "url", lo=urls[0], hi=urls[9])
         evolve_partition_spec(path, [])
         write_table(spark.createDataFrame(pages_pdf.iloc[60:]), path,
                     mode="append")
@@ -2316,7 +1612,7 @@ class TestZOrder:
         import pandas as pd
 
         from remediner_spark.sources.table import (
-            read_table, stats_pruned_count, write_table, zorder_frame,
+            read_table, write_table, zorder_frame,
         )
 
         rng = np.random.RandomState(7)
@@ -2408,75 +1704,3 @@ class TestBoolPartitionFilter:
             spark, path, partition_filter={"flag": [False]}
         )
         assert sorted(r["doc_id"] for r in got_f.collect()) == [1, 3, 5, 7, 9]
-
-
-class TestMigrateLegacyFiles:
-    """migrate_legacy_files: the incremental spec migration — rewrites
-    ONLY other-spec files, carries current-spec files by reference,
-    folds MoR deletes on the migrated tail."""
-
-    def test_migrates_only_legacy_tail(self, spark, tmp_path, pages_pdf):
-        from remediner_spark.sources.table import (
-            evolve_partition_spec, live_files, migrate_legacy_files,
-            read_table, write_table,
-        )
-
-        path = str(tmp_path / "tbl")
-        write_table(spark.createDataFrame(pages_pdf.iloc[:60]), path)
-        evolve_partition_spec(path, ["lang"])
-        write_table(
-            spark.createDataFrame(pages_pdf.iloc[60:]), path,
-            mode="append", partition_by=["lang"],
-        )
-        before = {
-            f["path"]: set(f["partition"])
-            for f in live_files(path)
-        }
-        kept = {p for p, spec in before.items() if spec == {"lang"}}
-        s = migrate_legacy_files(spark, path)
-        assert s["mode"] == "migrate-spec"
-        assert s["properties"]["migrated_files"] == len(before) - len(kept)
-        after = {f["path"]: set(f["partition"]) for f in live_files(path)}
-        # every file now carries the current spec; the current-spec
-        # files were carried BY PATH, not rewritten
-        assert all(spec == {"lang"} for spec in after.values())
-        assert kept <= set(after)
-        # data unchanged, partition filter exact, and idempotent
-        got = read_table(spark, path).toPandas()
-        expect = pages_pdf.sort_values("url").reset_index(drop=True)
-        got = got.sort_values("url").reset_index(drop=True)
-        assert list(got["lang"]) == list(expect["lang"])
-        assert list(got["text"]) == list(expect["text"])
-        en = read_table(spark, path, partition_filter={"lang": "en"})
-        assert en.count() == int((pages_pdf["lang"] == "en").sum())
-        assert migrate_legacy_files(spark, path)["snapshot_id"] == \
-            s["snapshot_id"]  # single-spec now: no-op
-
-    def test_folds_mor_deletes_on_legacy_files(
-        self, spark, tmp_path, pages_pdf
-    ):
-        from pyspark.sql import functions as F
-
-        from remediner_spark.sources.table import (
-            evolve_partition_spec, migrate_legacy_files, read_table,
-            table_snapshots, upsert_rows, write_table,
-        )
-
-        path = str(tmp_path / "tbl")
-        write_table(spark.createDataFrame(pages_pdf.iloc[:60]), path)
-        # MoR upsert against the (legacy, unpartitioned) files
-        upd = spark.createDataFrame(pages_pdf.iloc[:3]).withColumn(
-            "text", F.lit("UPDATED")
-        )
-        upsert_rows(spark, path, upd, ["url"], strategy="mor")
-        evolve_partition_spec(path, ["lang"])
-        s = migrate_legacy_files(spark, path)
-        # the eq-delete targeted only legacy files -> folded away
-        assert (table_snapshots(path)[-1].get("delete_files") or []) == []
-        got = read_table(spark, path).toPandas()
-        assert len(got) == 60
-        assert (got["text"] == "UPDATED").sum() == 3
-        # the MoR update file predates the evolution, so it is ALSO
-        # legacy-spec and migrates along with the base files
-        assert s["properties"]["migrated_files"] >= 2
-        assert s["properties"]["carried_files"] == 0
