@@ -81,15 +81,6 @@ def bert_token_logits(
     ids: np.ndarray, attention: np.ndarray, p: dict
 ) -> np.ndarray:
     """ids, attention [B, T] -> per-token label logits [B, T, 5]."""
-    return bert_hidden_states(ids, attention, p) @ p["w_cls"].T + p["b_cls"]
-
-
-def bert_hidden_states(
-    ids: np.ndarray, attention: np.ndarray, p: dict
-) -> np.ndarray:
-    """ids, attention [B, T] -> last-layer hidden states [B, T, d] —
-    the frozen-encoder features the in-engine head fine-tune
-    (operators/train.py) trains the 5-class classifier on."""
     vocab, d, n_layers, n_heads, _d_ffn, _ml = (int(v) for v in p["_dims"])
     B, T = ids.shape
     dh = d // n_heads
@@ -117,4 +108,4 @@ def bert_hidden_states(
             x + ffn @ p[f"l{i}_w2"].T + p[f"l{i}_b2"],
             p[f"l{i}_ln2_g"], p[f"l{i}_ln2_b"],
         )
-    return x
+    return x @ p["w_cls"].T + p["b_cls"]

@@ -29,18 +29,10 @@ from typing import Sequence
 
 WORD_RE = re.compile(r"\S+")
 
-LABEL_ID = {"O": 0, "B-Drug": 1, "I-Drug": 2, "B-Effect": 3, "I-Effect": 4}
-ID_LABEL = {v: k for k, v in LABEL_ID.items()}
-NUM_LABELS = 5
-
 
 def span_tokenize(text: str) -> list[tuple[int, int]]:
     """Whitespace word spans (Treebank-equivalent on normalized text)."""
     return [m.span() for m in WORD_RE.finditer(text)]
-
-
-def words(text: str) -> list[str]:
-    return text.split()
 
 
 def _first_span(entity: str, text: str) -> tuple[int, int] | None:

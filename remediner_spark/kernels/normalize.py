@@ -22,27 +22,19 @@ import pandas as pd
 
 # Removes punctuation while keeping word chars, whitespace, apostrophes,
 # decimal numbers (2.27) and `z=2.27` patterns; also strips possessive
-# `'s`. Port of /root/reference/src/data_utilities.py:65-66. (The
-# reference builds this with `.format()` but the pattern contains no
-# placeholder, so the `exception_words` argument is cosmetic — the
-# effective pattern is the literal below.)
-PUNCT_PATTERN = re.compile(
-    r"('s\b)|(?!(?:\b\w+\b|\d+(?:\.\d+)?|[a-zA-Z]=\d+(?:\.\d+)?))"
-    r"([^\w\s\'.=]|(?<!\d)\.(?!\d))"
-)
-
-# Hot-path equivalent of PUNCT_PATTERN: the negative lookahead can only
+# `'s`. Port of the reference's src/data_utilities.py:65-66, with the
+# reference pattern's negative lookahead dropped: the lookahead can only
 # succeed at positions starting \w (word char / digit / letter), where
 # the guarded group `[^\w\s'.=]|(?<!\d)\.(?!\d)` can never match — so
-# the lookahead never vetoes a match and can be dropped. Evaluating it
-# at every scan position was ~3x the pattern's cost. Equivalence is
-# pinned per-call in normalize_series (debug) and by
-# tests/test_normalize_differential.py against the reference pattern.
+# it never vetoes a match. Evaluating it at every scan position was ~3x
+# the pattern's cost. (The reference builds the pattern with `.format()`
+# but it contains no placeholder, so the `exception_words` argument is
+# cosmetic.) tests/test_normalize_differential.py pins byte equality
+# against the literal reference pattern.
 PUNCT_FAST = re.compile(r"'s\b|[^\w\s\'.=]|(?<!\d)\.(?!\d)")
 
 TRAILING_DOT = re.compile(r"\.\s*$")
-MULTI_SPACE = re.compile(r"\s+")
-# Equivalent-to-MULTI_SPACE fast form (replacement is " "): a run of
+# Equivalent form of `\s+` -> " " (the reference's space collapse): a run of
 # one single space maps to itself under \s+ -> " ", so only runs of
 # >=2 and single NON-space whitespace chars ([^\S ]) need rewriting.
 # Most prose is single-spaced, so this touches few positions.
@@ -201,8 +193,3 @@ def normalize_annotated_frame(df: pd.DataFrame) -> pd.DataFrame:
     df["drug"] = df["drug"].str.lower()
     df["effect"] = df["effect"].str.lower()
     return df
-
-
-def remove_double_spaces(s: pd.Series) -> pd.Series:
-    """`' '.join(text.split())` — data_utilities_ner.py:226-227."""
-    return s.str.split().str.join(" ")

@@ -12,7 +12,6 @@ per-output-word relation ids and emits (subj=drug, obj=effect) pairs.
 from __future__ import annotations
 
 PRED_CAUSES = "CAUSES"
-PRED_TREATED_WITH = "TREATED_WITH"
 
 
 def assemble_triples(
@@ -42,11 +41,3 @@ def assemble_triples(
             for e in effects_by_group.get(rid, []):
                 triples.append((d, PRED_CAUSES, e))
     return triples
-
-
-def invert_triples(
-    triples: list[tuple[str, str, str]],
-) -> list[tuple[str, str, str]]:
-    """(drug, CAUSES, effect) -> (effect, TREATED_WITH, drug) view
-    (BASELINE.json:6 requires both predicates)."""
-    return [(o, PRED_TREATED_WITH, s) for (s, _, o) in triples]

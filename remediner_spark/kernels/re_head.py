@@ -22,7 +22,7 @@ the exact erf form (torch's default approximate='none').
 
 Dims are parameters so tests run small; the reference's values are
 D=3072, H=128, R=384, T=input_size. Weights ship as a dict of numpy
-arrays through SparkContext.broadcast (operators/re_infer.py).
+arrays inside the broadcast final model (operators/final_model.py).
 """
 
 from __future__ import annotations

@@ -1,11 +1,8 @@
 """Torch-free state_dict adapter: trained checkpoint tensors -> the
-numpy parameter layouts executed by kernels/bert_encoder.py and
-kernels/re_head.py.
+numpy parameter layout executed by kernels/bert_encoder.py.
 
 The reference trains with torch and persists via
-``torch.save(model.state_dict(), ...)``
-(/root/reference/src/NER/train_eval_ner.py:154,
-/root/reference/src/RE/train_eval_re.py:145). torch's own file format
+``torch.save(model.state_dict(), ...)`` (src/NER/train_eval_ner.py:154). torch's own file format
 needs torch to unpickle, so the portable interchange here is a plain
 tensor dict — numpy ``.npz`` or a pickle of ``{key: ndarray}`` — with
 the ORIGINAL state_dict key names. Producing it from a real checkpoint
@@ -16,17 +13,12 @@ is one torch-side line::
 and from there this module is all that is needed to run the trained
 weights through the executed numpy path (no torch at inference).
 
-Key naming follows the reference models exactly:
-
-* NER — ``NerModel`` wraps HuggingFace ``BertForTokenClassification``
-  as ``self.bert`` (/root/reference/src/NER/model_ner.py:11-18), so
-  keys look like ``bert.bert.embeddings.word_embeddings.weight`` and
-  ``bert.classifier.weight``; pass ``prefix='bert.'`` for that wrapper
-  or ``prefix=''`` for a bare HF checkpoint.
-* RE — ``ReModel`` names its head modules ``lstm`` / ``dim_reduction``
-  / ``final_linear`` (/root/reference/src/RE/model_re.py:24-35), so
-  keys are torch's ``lstm.weight_ih_l0`` (+ ``_reverse`` for the
-  backward direction), ``dim_reduction.weight`` etc.
+Key naming follows the reference model exactly: ``NerModel`` wraps
+HuggingFace ``BertForTokenClassification`` as ``self.bert``
+(the reference's src/NER/model_ner.py:11-18), so keys look like
+``bert.bert.embeddings.word_embeddings.weight`` and
+``bert.classifier.weight``; pass ``prefix='bert.'`` for that wrapper or
+``prefix=''`` for a bare HF checkpoint.
 
 Exactness notes:
 
@@ -146,8 +138,7 @@ def read_torch_pt(path: str) -> dict[str, np.ndarray]:
     """Read a ``torch.save(state_dict)`` zip checkpoint into
     ``{key: ndarray}`` with NO torch dependency — the missing last step
     the round-3 verdict called out: reference-written ``.pt`` files now
-    feed :func:`bert_params_from_state_dict` /
-    :func:`re_head_params_from_state_dict` directly.
+    feed :func:`bert_params_from_state_dict` directly.
 
     bfloat16 storages are widened to float32 exactly (bf16 is the top
     16 bits of an f32). Big-endian checkpoints (``byteorder`` entry)
@@ -426,46 +417,3 @@ def bert_state_dict_from_params(p: dict, prefix: str = "bert.") -> dict:
         for np_key, sd_key in _BERT_LAYER_MAP:
             sd[prefix + sd_key.format(i=i)] = p[np_key.format(i=i)]
     return sd
-
-
-# ------------------------------------------------------------------- RE side
-
-_RE_MAP = [
-    ("w_ih_f", "lstm.weight_ih_l0"),
-    ("w_hh_f", "lstm.weight_hh_l0"),
-    ("b_ih_f", "lstm.bias_ih_l0"),
-    ("b_hh_f", "lstm.bias_hh_l0"),
-    ("w_ih_b", "lstm.weight_ih_l0_reverse"),
-    ("w_hh_b", "lstm.weight_hh_l0_reverse"),
-    ("b_ih_b", "lstm.bias_ih_l0_reverse"),
-    ("b_hh_b", "lstm.bias_hh_l0_reverse"),
-    ("w_red", "dim_reduction.weight"),
-    ("b_red", "dim_reduction.bias"),
-    ("w_out", "final_linear.weight"),
-    ("b_out", "final_linear.bias"),
-]
-
-
-def re_head_params_from_state_dict(
-    sd: dict[str, np.ndarray], prefix: str = ""
-) -> dict[str, np.ndarray]:
-    """ReModel state_dict -> re_head params. The BERT-encoder tensors
-    under ``bert.*`` belong to the NER-side adapter and are ignored
-    here; the head consumes exactly the lstm/dim_reduction/final_linear
-    tensors. ``_d_in`` (the encoder output width the head was trained
-    against — 4*768 in the reference) is derived from the LSTM input
-    projection shape."""
-    p: dict[str, np.ndarray] = {}
-    for np_key, sd_key in _RE_MAP:
-        full = prefix + sd_key
-        if full not in sd:
-            raise KeyError(f"state_dict missing {full!r}")
-        p[np_key] = np.asarray(sd[full], dtype=np.float64)
-    p["_d_in"] = np.array([p["w_ih_f"].shape[1]])
-    return p
-
-
-def re_state_dict_from_params(
-    p: dict[str, np.ndarray], prefix: str = ""
-) -> dict[str, np.ndarray]:
-    return {prefix + sd_key: p[np_key] for np_key, sd_key in _RE_MAP}

@@ -1,4 +1,4 @@
-"""Web-corpus front-end kernels: HTML->text, language ID, segmentation.
+"""Web-corpus front-end kernels: HTML->text and sentence segmentation.
 
 Not present in the reference (its input is pre-sentence ADE rows); the
 north rule (BASELINE.json:6,15) mandates them as vectorized Arrow UDFs
@@ -95,35 +95,3 @@ def split_sentences_flat(text: pd.Series):
             ap_f(p)
             ap_d(row)
     return flat, np.array(doc_list, dtype=np.int64)
-
-
-# --- language identification (n-gram heuristic; no external models) ---
-
-_LANG_MARKERS: dict[str, tuple[str, ...]] = {
-    "en": (" the ", " and ", " of ", " in ", " was ", " is ", " patient "),
-    "de": (" der ", " die ", " und ", " ist ", " nicht ", " ein ", " mit "),
-    "fr": (" le ", " la ", " les ", " et ", " est ", " une ", " dans "),
-    "es": (" el ", " los ", " las ", " y ", " es ", " una ", " con "),
-    "zh": ("的", "是", "了", "在", "我"),
-}
-
-
-def detect_language(text: pd.Series) -> pd.Series:
-    """Marker-token language scorer; 'und' when nothing matches.
-
-    Heuristic only — the engine's authoritative filter is the corpus
-    `lang` column; this exists for corpora lacking one.
-    """
-
-    def _one(t: str) -> str:
-        if not t:
-            return "und"
-        padded = f" {t.lower()} "
-        best_lang, best_score = "und", 0
-        for lang, markers in _LANG_MARKERS.items():
-            score = sum(padded.count(m) for m in markers)
-            if score > best_score:
-                best_lang, best_score = lang, score
-        return best_lang
-
-    return text.map(_one)

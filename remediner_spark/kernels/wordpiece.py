@@ -182,8 +182,9 @@ def project_first_subtoken(
     preds_row, word_ids: list[int], n_words: int, default: int = 0
 ) -> list[int]:
     """Per-framed-position predictions -> per-word values: the first
-    subtoken of each word wins (the HF convention BertTagger mirrors);
-    words whose subtokens were truncated away keep ``default``."""
+    subtoken of each word wins (the HF convention of the reference's
+    inference loop); words whose subtokens were truncated away keep
+    ``default``."""
     out = [default] * n_words
     seen: set[int] = set()
     for pos, wid in enumerate(word_ids):

@@ -1,19 +1,11 @@
 """Evaluation operators (M10) — distributed, join-based.
 
-Triple-level P/R: semi/anti joins of predicted vs gold triple sets.
-Token-level: explode (pred, label) pairs, mask -100, groupBy confusion
-counts, driver-side macro P/R/F1 over the tiny 5x5 matrix — the same
-metric semantics as the reference
-(/root/reference/src/NER/train_eval_ner.py:35-56,
-/root/reference/src/FINALMODEL/test_final.py:13-32) without
-materializing flat prediction vectors on the driver.
+Triple-level P/R: semi joins of predicted vs gold triple sets.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 TRIPLE_KEYS = ["url", "sent_idx", "subj", "pred", "obj"]
 
@@ -41,58 +33,4 @@ def triple_precision_recall(
         "precision": precision,
         "recall": recall,
         "f1": f1,
-    }
-
-
-def confusion_counts(
-    tagged: DataFrame, pred_col: str = "pred_ids", label_col: str = "label_ids"
-) -> DataFrame:
-    """Rows with array<int> predictions/labels -> (label, pred, n) counts.
-
-    Positions where label == -100 are masked out, as in the reference
-    loss/eval (/root/reference/src/NER/train_eval_ner.py:40-44).
-    """
-    pairs = tagged.select(
-        F.explode(F.arrays_zip(F.col(label_col), F.col(pred_col))).alias("z")
-    ).select(
-        F.col(f"z.{label_col}").alias("label"),
-        F.col(f"z.{pred_col}").alias("pred"),
-    )
-    return (
-        pairs.filter(F.col("label") != -100)
-        .groupBy("label", "pred")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def macro_prf_from_confusion(
-    counts: pd.DataFrame, n_classes: int = 5
-) -> dict[str, object]:
-    """Driver-side macro P/R/F1 + row-normalized confusion matrix from
-    collected (label, pred, n) counts (sklearn-'macro' semantics)."""
-    import numpy as np
-
-    m = np.zeros((n_classes, n_classes), dtype=np.int64)
-    for rec in counts.itertuples(index=False):
-        m[int(rec.label), int(rec.pred)] += int(rec.n)
-    precisions, recalls, f1s = [], [], []
-    for c in range(n_classes):
-        tp = m[c, c]
-        p_den = m[:, c].sum()
-        r_den = m[c, :].sum()
-        p = tp / p_den if p_den else 0.0
-        r = tp / r_den if r_den else 0.0
-        f = 2 * p * r / (p + r) if p + r else 0.0
-        precisions.append(p)
-        recalls.append(r)
-        f1s.append(f)
-    row_sums = m.sum(axis=1, keepdims=True)
-    normalized = np.divide(
-        m, row_sums, out=np.zeros_like(m, dtype=float), where=row_sums > 0
-    )
-    return {
-        "macro_precision": float(sum(precisions) / n_classes),
-        "macro_recall": float(sum(recalls) / n_classes),
-        "macro_f1": float(sum(f1s) / n_classes),
-        "confusion_normalized": normalized.tolist(),
     }

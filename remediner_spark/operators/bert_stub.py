@@ -1,140 +1,33 @@
-"""Pluggable BERT tagger stage (M1/M5) — broadcast weights, lazy
-per-executor singleton.
+"""BERT tagger stage (M1) — the reference's token classifier
+(bert-base-cased, the reference's src/NER/model_ner.py:6-24) executed
+as a numpy transcription behind the same ``tag_words`` interface as
+the deterministic GazetteerTagger, so the pipeline swaps models
+without changing the plan:
 
-The reference's models (bert-base-cased token classifier for NER,
-/root/reference/src/NER/model_ner.py:6-24; BERT+BiLSTM relation head,
-/root/reference/src/RE/model_re.py:10-61) plug in behind the same
-``tag_words`` interface as the deterministic GazetteerTagger, so the
-pipeline swaps models without changing the plan:
+    tagger_bc = spark.sparkContext.broadcast(NumpyBertTagger.seeded())
+    triples   = extract_triples_stage(pages, tagger_bc)
 
-    weights_bc = broadcast_weights(spark, "/path/ner.pt", "/path/re.pt")
-    tagger_bc  = spark.sparkContext.broadcast(BertTagger(weights_bc))
-    triples    = extract_triples_stage(pages, tagger_bc)
-
-torch/transformers are NOT installed in this environment: constructing
-a BertTagger raises ImportError with guidance, and every torch-touching
-path is import-gated. The batching/broadcast plumbing is real and unit
-tested via DummyModel.
+torch/transformers are not dependencies: trained weights enter through
+``NumpyBertTagger.from_state_dict`` (kernels/state_dict.py).
 """
 
 from __future__ import annotations
 
 from typing import Sequence
 
-# module-level model cache: one materialized model per executor python
-# worker process, keyed by the broadcast id (broadcast ships bytes once
-# per executor; this avoids re-deserializing per task)
-_MODEL_CACHE: dict[int, object] = {}
-
 IOB_LABELS = ["O", "B-Drug", "I-Drug", "B-Effect", "I-Effect"]
 
 
-def torch_available() -> bool:
-    try:
-        import torch  # noqa: F401
-        import transformers  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def broadcast_weights(spark, *paths: str):
-    """Read model state bytes driver-side, ship once per executor."""
-    blobs = []
-    for p in paths:
-        with open(p, "rb") as f:
-            blobs.append(f.read())
-    return spark.sparkContext.broadcast(blobs)
-
-
-class BertTagger:
-    """Batched BERT token-classification tagger (NER stage).
-
-    Mirrors the reference inference loop
-    (/root/reference/src/FINALMODEL/test_final.py:75-93): wordpiece the
-    words, frame to max_len, forward, argmax, project subtoken labels
-    back to words (first-subtoken label wins, HF convention).
-    """
-
-    def __init__(self, weights_bc, model_name: str = "bert-base-cased",
-                 max_len: int = 128, batch_size: int = 32):
-        if not torch_available():
-            raise ImportError(
-                "BertTagger requires torch+transformers (not installed "
-                "here). Use GazetteerTagger for the deterministic path; "
-                "the plumbing below is exercised by DummyModel tests."
-            )
-        self._weights_bc = weights_bc
-        self._model_name = model_name
-        self.max_len = max_len
-        self.batch_size = batch_size
-
-    def _model(self):
-        key = id(self._weights_bc)
-        if key not in _MODEL_CACHE:
-            import io
-
-            import torch
-            from transformers import AutoModelForTokenClassification, AutoTokenizer
-
-            model = AutoModelForTokenClassification.from_pretrained(
-                self._model_name, num_labels=len(IOB_LABELS)
-            )
-            state = torch.load(
-                io.BytesIO(self._weights_bc.value[0]), map_location="cpu"
-            )
-            model.load_state_dict(state)
-            model.eval()
-            tok = AutoTokenizer.from_pretrained(self._model_name)
-            _MODEL_CACHE[key] = (model, tok)
-        return _MODEL_CACHE[key]
-
-    def tag_words(self, words: Sequence[str]) -> list[str]:
-        return self.tag_words_batch([list(words)])[0]
-
-    def tag_words_batch(self, batch: list[list[str]]) -> list[list[str]]:
-        import torch
-
-        model, tok = self._model()
-        out: list[list[str]] = []
-        for i in range(0, len(batch), self.batch_size):
-            chunk = batch[i : i + self.batch_size]
-            enc = tok(
-                chunk,
-                is_split_into_words=True,
-                truncation=True,
-                padding="max_length",
-                max_length=self.max_len,
-                return_tensors="pt",
-            )
-            with torch.no_grad():
-                logits = model(**enc).logits
-            preds = logits.argmax(dim=-1).tolist()
-            for row, words in enumerate(chunk):
-                word_ids = enc.word_ids(batch_index=row)
-                tags = ["O"] * len(words)
-                seen: set[int] = set()
-                for pos, wid in enumerate(word_ids):
-                    if wid is None or wid in seen or wid >= len(words):
-                        continue
-                    seen.add(wid)
-                    tags[wid] = IOB_LABELS[preds[row][pos]]
-                out.append(tags)
-        return out
-
-
 class NumpyBertTagger:
-    """BertTagger-shaped NER tagger executing the transcribed
-    architecture in numpy (kernels/bert_encoder.py) — the M1 surface
-    actually RUNS here, torch-free: wordpiece -> frame to max_len ->
-    encoder forward -> per-token argmax -> first-subtoken label
-    projection, the same decode chain as BertTagger.tag_words_batch
-    (mirroring /root/reference/src/FINALMODEL/test_final.py:75-93).
+    """NER tagger executing the transcribed architecture in numpy
+    (kernels/bert_encoder.py) — the M1 surface actually RUNS here,
+    torch-free: wordpiece -> frame to max_len -> encoder forward ->
+    per-token argmax -> first-subtoken label projection (the HF
+    convention of the reference inference loop,
+    the reference's src/FINALMODEL/test_final.py:75-93).
 
     Weights are a dict of numpy arrays (seeded stand-ins for the
-    trained checkpoint); broadcast the whole tagger once per executor,
-    exactly like the torch path ships state_dict bytes.
+    trained checkpoint); broadcast the whole tagger once per executor.
     """
 
     def __init__(self, params: dict, max_len: int = 48,
@@ -222,24 +115,4 @@ class NumpyBertTagger:
                     preds[row], framed[row][2], len(words)
                 )
                 out.append([IOB_LABELS[i] for i in label_ids])
-        return out
-
-
-class DummyModel:
-    """Deterministic stand-in exercising the broadcast/batch plumbing
-    in tests without torch: 'predicts' B-Drug for words ending in 'x',
-    B-Effect for words ending in 'a'."""
-
-    def __init__(self, weights_bc=None):
-        self._weights_bc = weights_bc
-
-    def tag_words(self, words: Sequence[str]) -> list[str]:
-        out = []
-        for w in words:
-            if w.endswith("x"):
-                out.append("B-Drug")
-            elif w.endswith("a"):
-                out.append("B-Effect")
-            else:
-                out.append("O")
         return out

@@ -1,16 +1,14 @@
-"""Connected components via iterative min-label propagation.
+"""Connected components via alternating large-star/small-star.
 
 The clustering primitive behind M8's residual canonicalization
 (SURVEY.md: "connected components via iterative self-join") and
 near-duplicate cluster collapse: given an undirected pair list, every
 vertex converges to the minimum vertex id reachable from it.
 
-Scale notes: each iteration is one join + one aggregation (shuffle on
-vertex id); iteration count is the graph diameter (near-dup graphs are
-shallow — typically <=5). `localCheckpoint` truncates the lineage each
-round so plans don't grow with iterations. For billion-edge graphs the
-same loop runs with large-small iteration pruning (only changed labels
-re-join); that refinement is noted, not needed at this scale.
+Scale notes: each round is two join+agg passes (shuffles on vertex
+id) and the round count is O(log n), independent of the graph's
+diameter. `localCheckpoint` truncates the lineage each round so plans
+don't grow with iterations.
 
 The DuckDB oracle expresses the same fixpoint as a recursive CTE
 (transitive closure -> min reachable id), so the iterative Spark
@@ -23,67 +21,6 @@ from ..sources.scan import scan_parquet
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def connected_components(
-    pairs: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 20,
-) -> DataFrame:
-    """pairs(src, dst) -> (vertex, component) where component is the
-    min vertex id in the connected component. Vertices are those
-    appearing in pairs.
-
-    Min-label propagation: O(diameter) rounds — right for the shallow
-    near-dup/alias graphs this engine builds. RAISES RuntimeError when
-    max_iter rounds pass without reaching the fixpoint (an unconverged
-    result silently mislabels components — the round-3 verdict's
-    failure mode); for deep graphs (long alias chains) use
-    connected_components_star, which converges in O(log n) rounds."""
-    edges = (
-        pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(pairs.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .dropDuplicates()
-        .localCheckpoint()
-    )
-    labels = (
-        edges.select(F.col("a").alias("vertex"))
-        .dropDuplicates()
-        .withColumn("component", F.col("vertex"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.b == labels.vertex)
-            .groupBy("a")
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.vertex == neighbor_min.a, "left")
-            .select(
-                "vertex",
-                F.least(
-                    F.col("component"), F.coalesce("nbr_min", F.col("component"))
-                ).alias("component"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "vertex")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            return labels
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds "
-        f"({changed} labels still changing): the graph's diameter "
-        "exceeds max_iter — raise it, or use connected_components_star "
-        "(O(log n) rounds) for deep graphs"
-    )
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -140,9 +77,10 @@ def connected_components_star(
     SoCC'14): each round is two join+agg passes and the edge set
     contracts toward a star forest in O(log n) rounds — independent of
     graph DIAMETER, so billion-edge alias chains converge where label
-    propagation would need diameter rounds. Same output contract as
-    connected_components (min vertex id per component); raises on
-    non-convergence rather than returning silently-wrong labels."""
+    propagation would need diameter rounds. Output: (vertex, component)
+    with component the min vertex id of the component, over the
+    vertices appearing in pairs; raises on non-convergence rather than
+    returning silently-wrong labels."""
     e0 = (
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .dropDuplicates()
@@ -184,9 +122,8 @@ def connected_components_star(
 def q_dedup_components(spark, sf_dir: str) -> DataFrame:
     """Near-duplicate clusters: components over the exact n-gram
     Jaccard pair list (dedup.q_dedup_ngram_jaccard), via the
-    O(log n)-round star algorithm (the scale path; the DuckDB
-    recursive-CTE oracle pins it to the same fixpoint as the
-    label-propagation formulation)."""
+    O(log n)-round star algorithm (the DuckDB recursive-CTE oracle
+    pins it to the same min-reachable-id fixpoint)."""
     from .dedup import q_dedup_ngram_jaccard
 
     pairs = q_dedup_ngram_jaccard(spark, sf_dir)

@@ -307,7 +307,8 @@ def minhash_pairs(
     # persisted shingles across queries). Bounded: n_docs x MH_BANDS
     # rows of constant width, MEMORY_AND_DISK so 100 TB spills rather
     # than evicts. Deliberate leak, same contract as the ngram persist
-    # above; release with session.cache_scope when the consumer is done.
+    # above; session.release_caches frees it (bench.py calls it between
+    # legs) once the consumer is done.
     from pyspark.storagelevel import StorageLevel
 
     bands = bands.persist(StorageLevel.MEMORY_AND_DISK)
@@ -523,7 +524,7 @@ def q_dedup_embed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bands x rows-per-band hyperplane dot products; the verify joins
     # below also rescan emb twice. Both persists are bounded
     # (n_vecs x bands short rows; n_vecs x dim doubles) and released
-    # by session.cache_scope.
+    # by session.release_caches, which bench.py calls between legs.
     emb = emb.persist(StorageLevel.MEMORY_AND_DISK)
     bands = emb.select(
         "vec_id", F.explode(_emb_band_structs(F.col("v"), dim)).alias("band")

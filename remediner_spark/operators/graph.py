@@ -71,25 +71,6 @@ def with_entity_ids(linked_mentions: DataFrame) -> DataFrame:
     )
 
 
-def build_nodes(
-    linked_mentions: DataFrame, salt_buckets: int = DEFAULT_SALT_BUCKETS
-) -> DataFrame:
-    """linked mentions -> nodes, salted two-phase count."""
-    m = with_entity_ids(linked_mentions)
-    partial = m.withColumn("_salt", _salt(salt_buckets)).groupBy(
-        "entity_id", "_salt"
-    ).agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.first("node_name").alias("_name"),
-        F.first("entity_type").alias("_type"),
-    )
-    return partial.groupBy("entity_id").agg(
-        F.first("_name").alias("canonical_name"),
-        F.first("_type").alias("entity_type"),
-        F.sum("_n").alias("n_mentions"),
-    )
-
-
 def build_edges(
     linked_triples: DataFrame, salt_buckets: int = DEFAULT_SALT_BUCKETS
 ) -> DataFrame:
@@ -135,9 +116,10 @@ def nodes_from_edges(
     the sum of its edges' weights — subj side for drugs, obj side for
     effects. This replaces a full pass over the triple set with an agg
     over edge rows (entity-pair-vocabulary-sized), same values
-    bit-for-bit (build_nodes is kept as the mention-grain reference
-    and pinned equal in tests). Names/types come from the broadcast
-    id->name map derived from the vocabulary-grain link table."""
+    bit-for-bit (tests/test_linking_graph.py keeps the mention-grain
+    build_nodes as the referee and pins them equal). Names/types come
+    from the broadcast id->name map derived from the vocabulary-grain
+    link table."""
     id_map = (
         surface_links.withColumn(
             "entity_id",
@@ -167,14 +149,6 @@ def nodes_from_edges(
     return counts.join(F.broadcast(id_map), "entity_id").select(
         "entity_id", F.col("node_name").alias("canonical_name"),
         "entity_type", "n_mentions",
-    )
-
-
-def build_edges_unsalted(linked_triples: DataFrame) -> DataFrame:
-    """Single-phase variant for the salted==unsalted equivalence test."""
-    return linked_triples.groupBy("subj_id", "pred", "obj_id").agg(
-        F.count(F.lit(1)).alias("weight"),
-        F.min("warc_ts").alias("first_seen"),
     )
 
 

@@ -18,10 +18,10 @@ the query runs (atomic tmp+rename; one gate run executes the Spark
 query and its oracle together, so both see the same centroids), and
 the DuckDB oracle re-derives assignment, probe selection, cosine
 ranking, and top-k relationally. All three implementations (Spark
-expression, driver-side probe math, DuckDB SQL) accumulate the
-squared-difference sum strictly left-to-right over dimensions and
-round d2 to 9dp before any argmin, so the discrete outputs are exact
-cross-engine, not float-lucky. k-means quality itself is gated by the
+expression, the driver-side probe referee in tests/test_ivf.py, DuckDB
+SQL) accumulate the squared-difference sum strictly left-to-right over
+dimensions and round d2 to 9dp before any argmin, so the discrete
+outputs are exact cross-engine, not float-lucky. k-means quality itself is gated by the
 recall@k test against brute force (tests/test_ivf.py).
 """
 
@@ -119,22 +119,6 @@ def probe_cells_df(queries: DataFrame, centers: list[list[float]]) -> DataFrame:
             )
         ).alias("_pc"),
     ).select("query_id", F.col("_pc.cell").alias("cell"))
-
-
-def _query_probe_cells(centers: list[list[float]], qv: list[float]) -> list[int]:
-    """NPROBE nearest cells for one query vector — the DRIVER-SIDE
-    DIFFERENTIAL REFEREE for probe_cells_df (tests/test_ivf.py pins
-    plan == driver). Strictly sequential accumulation + 9dp HALF_UP
-    rounding: bitwise-identical to the Spark aggregate and DuckDB
-    list_sum derivations."""
-    ds = []
-    for cell, c in enumerate(centers):
-        acc = 0.0
-        for a, b in zip(qv, c):
-            acc += (a - b) * (a - b)
-        ds.append((_round_half_up(acc), cell))
-    ds.sort()
-    return [cell for _d, cell in ds[:NPROBE]]
 
 
 # per-process fit memo (same contract as pq._fit_codebooks): the fit

@@ -54,34 +54,13 @@ def char_shingles(col: Column, n: int = 3) -> Column:
     )
 
 
-def minhash_signature(shingles: Column, k: int) -> list[Column]:
-    """k min-hash values over the shingle set (md5-prefix LCG family —
-    the cross-engine base hash, so DuckDB oracles reproduce the banding
-    bit-for-bit; see textstats.md5_hash32_expr)."""
-    from .textstats import md5_hash32_expr
-
-    def hash_fn(a: int, b: int):
-        # reduce the base hash mod p before multiplying: keeps a*x <
-        # 2^63 (ANSI mode makes long overflow a hard error in Spark 4)
-        return lambda s: (
-            (md5_hash32_expr(s) % _MERSENNE) * a + b
-        ) % _MERSENNE
-
-    sigs = []
-    for i in range(k):
-        sigs.append(
-            F.array_min(
-                F.transform(shingles, hash_fn(_HASH_A[i], _HASH_B[i]))
-            ).alias(f"mh_{i}")
-        )
-    return sigs
-
-
 def minhash_from_base(base: Column, k: int) -> list[Column]:
     """k min-hash columns over a PRE-HASHED shingle array (each element
-    already ``md5_hash32 % p``). Arithmetically identical to
-    :func:`minhash_signature` — ((h%p)*a+b)%p with h%p factored out —
-    but the md5 runs ONCE per shingle instead of k times, which both
+    already ``md5_hash32 % p``): ((h%p)*a+b)%p over the md5-prefix
+    LCG family — the cross-engine base hash, so DuckDB oracles
+    reproduce the banding bit-for-bit (see textstats.md5_hash32_expr).
+    With h%p factored out, the md5 runs ONCE per shingle instead of k
+    times, which both
     cuts execution work and shrinks the codegen'd projection ~k-fold
     (the k-way md5 expression tree dominated the vocabulary-grain
     linking wall: janino compile + 24x hashing on a 200-row input)."""

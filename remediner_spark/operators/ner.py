@@ -5,9 +5,8 @@ The tagger is pluggable behind `TaggerModel.tag_words`:
 * `GazetteerTagger` — deterministic lexicon tagger, the test-mode model
   (SURVEY.md M1): reproduces the reference's gold span semantics
   exactly, so pipeline triples can be scored against the pandas gold.
-* `BertTagger` — broadcast-weights BERT token classifier
-  (operators/bert_stub.py); requires torch/transformers at runtime and
-  raises ImportError here otherwise (libs absent in this sandbox).
+* `NumpyBertTagger` — the BERT token classifier executed in numpy
+  (operators/bert_stub.py), broadcast once per executor.
 
 `extract_triples_stage` is the fused hot path: ONE mapInPandas stage
 runs segmentation -> normalization -> NER -> reconstruction (M3) -> RE
@@ -35,12 +34,6 @@ TRIPLE_SCHEMA = (
     "url string, warc_ts timestamp, sent_idx int, "
     "subj string, pred string, obj string"
 )
-
-SENTENCE_TAG_SCHEMA = (
-    "url string, sent_idx int, sentence string, words array<string>, "
-    "iob array<string>, masked_text string"
-)
-
 
 class GazetteerTagger:
     """Greedy longest-match phrase tagger over broadcast lexicons.
@@ -96,7 +89,7 @@ def _pairs_per_sentence(norm: pd.Series, tagger) -> pd.DataFrame:
 
     Prefers the tagger's ``tag_words_batch`` when exposed (one batched
     forward per Arrow batch — batching is the point of mapInPandas
-    model serving; NumpyBertTagger/BertTagger both expose it), falling
+    model serving; NumpyBertTagger exposes it), falling
     back to per-sentence ``tag_words``. The row index column is always
     int64 so downstream fancy indexing stays valid on zero-pair batches
     (an all-object empty frame would make `sent[...][r]` raise).
@@ -205,47 +198,6 @@ def extract_triples_stage(
     cols = ["url", "warc_ts", "html" if extract_html else text_col]
     pruned = pages.select(*cols)
     return pruned.mapInPandas(fn, TRIPLE_SCHEMA)
-
-
-def tag_sentences_stage(
-    sentences: DataFrame, tagger_bc, sentence_col: str = "sentence"
-) -> DataFrame:
-    """Unfused NER stage for inspection/eval: sentence rows ->
-    (words, iob, masked_text). Used by token-level metrics (M10)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tagger = tagger_bc.value
-        bm = getattr(tagger, "batch_matcher", None)
-        matcher = bm() if bm is not None else None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            norm = normalize_series(pdf[sentence_col])
-            if matcher is not None:
-                words_col, iob_col, masked_col = matcher.tag_batch(norm)
-            else:
-                words_col = [t.split() for t in norm.to_numpy()]
-                batch_fn = getattr(tagger, "tag_words_batch", None)
-                if batch_fn is not None:
-                    iob_col = batch_fn(words_col)
-                else:
-                    iob_col = [tagger.tag_words(w) for w in words_col]
-                masked_col = [
-                    mentions_from_word_iob(w, t)[0]
-                    for w, t in zip(words_col, iob_col)
-                ]
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "sent_idx": pdf["sent_idx"],
-                    "sentence": norm,
-                    "words": words_col,
-                    "iob": iob_col,
-                    "masked_text": masked_col,
-                }
-            )
-
-    return sentences.mapInPandas(fn, SENTENCE_TAG_SCHEMA)
 
 
 def with_inverse_triples(triples: DataFrame) -> DataFrame:

@@ -108,7 +108,8 @@ def semdedup_over_cells(
     # both sides of the cell self-join + the final verdict select
     # read `assigned`; persist so assignment (NLIST d2 aggregates per
     # row) runs once. Bounded (n_vecs x dim doubles), spillable,
-    # released via session.cache_scope — the minhash band contract.
+    # released by session.release_caches (bench.py calls it between
+    # legs) — the minhash band contract.
     assigned = assigned.persist(StorageLevel.MEMORY_AND_DISK)
 
     def pair_cols(df: DataFrame) -> DataFrame:

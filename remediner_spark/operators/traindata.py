@@ -280,7 +280,7 @@ def q_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # three consumers (eval positions, training explode, final doc
     # list) would each recompute the shingle arrays — the ngram-dedup
     # persist pattern applies (bounded, spillable, released by
-    # session.cache_scope)
+    # session.release_caches, which bench.py calls between legs)
     docs = scan_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", _shingles_expr(F.col("text")).alias("sh")
     ).persist(StorageLevel.MEMORY_AND_DISK)

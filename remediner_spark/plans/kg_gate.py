@@ -190,8 +190,8 @@ def final_model_expected_path() -> str:
     regenerate a matching-but-different expected and the gate would
     never notice. The golden is now a committed artifact: the gate
     compares the distributed run against the file as reviewed, and
-    tests/test_final_model.py re-derives it in-process
-    (derive_final_model_expected) and asserts equality, so the
+    tests/test_final_model.py re-derives it in-process and asserts
+    equality, so the
     committed bytes can't silently drift from the kernels either.
     Regenerate deliberately with tools/gen_final_model_expected.py
     after an INTENDED behavior change (and bump
@@ -215,40 +215,6 @@ def ensure_final_model_expected() -> str:
             "tools/gen_final_model_expected.py"
         )
     return path
-
-
-def derive_final_model_expected():
-    """In-process (no Spark) derivation of the composed model's
-    triples over the fixture pages: the SAME segmentation ->
-    normalization -> NER -> M3/M4 -> RE -> M6 chain the fused stage
-    runs, driver-side. Used by the golden-validation test and the
-    regeneration tool; the gate itself reads only the committed file.
-    Deterministic (seeded corpus + seeded weights)."""
-    import os
-
-    import pandas as pd
-
-    from ..kernels.normalize import normalize_series
-    from ..kernels.webtext import split_sentences
-
-    d = _fixture_dir()
-    pages = pd.read_parquet(os.path.join(d, "pages.parquet"))
-    pages = pages[pages["lang"] == "en"]
-    model = _final_model()
-    rows = []
-    for url, sents in zip(pages["url"], split_sentences(pages["text"])):
-        norm = normalize_series(pd.Series(sents, dtype=object))
-        word_lists = [s.split() for s in norm]
-        keep = [i for i, w in enumerate(word_lists) if w]
-        triples = model.extract([word_lists[i] for i in keep])
-        for j, i in enumerate(keep):
-            for s, p, o in triples[j]:
-                rows.append((url, i, s, p, o))
-    exp = pd.DataFrame(
-        rows, columns=["url", "sent_idx", "subj", "pred", "obj"]
-    )
-    exp["sent_idx"] = exp["sent_idx"].astype("int32")
-    return exp
 
 
 def q_kg_inverse_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -346,7 +312,7 @@ def _shingle_sql(col: str) -> str:
 
 def _mh_cols_sql() -> str:
     """The K = bands*rows min-hash columns over an ``sh`` shingle list —
-    mirrors linking.minhash_signature (md5-prefix LCG family)."""
+    mirrors linking.minhash_from_base (md5-prefix LCG family)."""
     h = md5_hash32_sql("s")
     return ", ".join(
         f"list_aggregate(list_transform(sh, s -> "

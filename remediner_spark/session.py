@@ -90,22 +90,3 @@ def release_caches(spark: SparkSession) -> int:
             jrdd.unpersist(True)
             n += 1
     return n
-
-
-class cache_scope:
-    """Context manager: ``with cache_scope(spark): ...`` releases all
-    caches/persists created inside the block on exit — the unpersist
-    discipline for long-lived sessions (bench.py applies the same
-    release between queries). Exit is unconditional: it also clears
-    caches that existed
-    before the block, which is the point (scorched-earth isolation),
-    so don't wrap a region whose caller still holds cached branches."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def __enter__(self) -> SparkSession:
-        return self.spark
-
-    def __exit__(self, *exc) -> None:
-        release_caches(self.spark)

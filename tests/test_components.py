@@ -1,24 +1,19 @@
-"""Connected components: known graphs + convergence.
-
-Both formulations are tested against the same expectations:
-label propagation (O(diameter) rounds, raises past max_iter) and the
+"""Connected components: known graphs + convergence of the
 alternating large-star/small-star algorithm (O(log n) rounds,
-diameter-independent — the scale path q_dedup_components uses).
+diameter-independent — the path q_dedup_components uses).
 """
 
 from __future__ import annotations
 
 import pytest
 
-from remediner_spark.operators.components import (
-    connected_components,
-    connected_components_star,
-)
+from remediner_spark.operators.components import connected_components_star
 
-IMPLS = [connected_components, connected_components_star]
+# one implementation, parametrized so the test ids name it
+IMPLS = [connected_components_star]
 
 
-def _components(spark, pairs, impl=connected_components, **kw):
+def _components(spark, pairs, impl=connected_components_star, **kw):
     df = spark.createDataFrame(pairs, ["src", "dst"])
     out = impl(df, **kw).toPandas()
     return {r.vertex: r.component for r in out.itertuples(index=False)}
@@ -45,18 +40,19 @@ def test_cycle_and_bridge(spark, impl):
     assert set(got.values()) == {2}
 
 
-def test_label_propagation_raises_past_max_iter(spark):
-    """A 50-hop chain needs 50 label-propagation rounds; at
-    max_iter=20 the old code returned silently-unconverged labels —
-    now it must raise."""
+def test_star_raises_past_max_iter(spark):
+    """Two star rounds cannot contract a 50-hop chain: returning the
+    unconverged labels would silently mislabel components, so it must
+    raise."""
     chain = [(i, i + 1) for i in range(1, 51)]
     with pytest.raises(RuntimeError, match="did not converge"):
-        _components(spark, chain, connected_components, max_iter=20)
+        _components(spark, chain, connected_components_star, max_iter=2)
 
 
 def test_star_converges_where_propagation_cannot(spark):
-    """The same 50-hop chain converges in O(log n) star rounds —
-    well under 20 — and labels every vertex with the chain minimum."""
+    """A 50-hop chain needs 50 label-propagation rounds, but converges
+    in O(log n) star rounds — well under 20 — and labels every vertex
+    with the chain minimum."""
     chain = [(i, i + 1) for i in range(1, 51)]
     got = _components(
         spark, chain, connected_components_star, max_iter=20
@@ -67,8 +63,8 @@ def test_star_converges_where_propagation_cannot(spark):
 
 @pytest.mark.parametrize("impl", IMPLS)
 def test_random_graph_implementations_agree(spark, impl):
-    """Both implementations produce the min-id component labeling on a
-    seeded random graph (checked against a driver-side union-find)."""
+    """The min-id component labeling on a seeded random graph (checked
+    against a driver-side union-find)."""
     import random
 
     rng = random.Random(7)

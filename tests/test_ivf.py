@@ -2,10 +2,27 @@
 
 from __future__ import annotations
 
-from remediner_spark.operators.ivf import q_sim_topk_ivf
+from remediner_spark.operators.ivf import NPROBE, _round_half_up, q_sim_topk_ivf
 from remediner_spark.operators.similarity import q_sim_topk_bruteforce
 
 SF = "/root/testdata/sf0.01"
+
+
+def _query_probe_cells(centers: list[list[float]], qv: list[float]) -> list[int]:
+    """NPROBE nearest cells for one query vector — the DRIVER-SIDE
+    DIFFERENTIAL REFEREE for probe_cells_df
+    (test_probe_cells_plan_matches_driver pins plan == driver).
+    Strictly sequential accumulation + 9dp HALF_UP rounding:
+    bitwise-identical to the Spark aggregate and DuckDB list_sum
+    derivations."""
+    ds = []
+    for cell, c in enumerate(centers):
+        acc = 0.0
+        for a, b in zip(qv, c):
+            acc += (a - b) * (a - b)
+        ds.append((_round_half_up(acc), cell))
+    ds.sort()
+    return [cell for _d, cell in ds[:NPROBE]]
 
 
 def test_ivf_recall_vs_bruteforce(spark):
@@ -45,11 +62,7 @@ def test_probe_cells_plan_matches_driver(spark):
     re-derive probing relationally."""
     from pyspark.sql import functions as F
 
-    from remediner_spark.operators.ivf import (
-        _fit_centroids,
-        _query_probe_cells,
-        probe_cells_df,
-    )
+    from remediner_spark.operators.ivf import _fit_centroids, probe_cells_df
     from remediner_spark.operators.similarity import N_QUERIES, _as_double
 
     emb = spark.read.parquet(

@@ -18,16 +18,12 @@ from remediner_spark.kernels.normalize import (
     normalize_annotated_frame,
     normalize_series,
 )
-from remediner_spark.kernels.pairing import assemble_triples, invert_triples
+from remediner_spark.kernels.pairing import assemble_triples
 from remediner_spark.kernels.reconstruct import (
     mentions_from_word_iob,
     reconstruct_masked_text,
 )
-from remediner_spark.kernels.webtext import (
-    detect_language,
-    extract_text,
-    split_sentences,
-)
+from remediner_spark.kernels.webtext import extract_text, split_sentences
 from remediner_spark.kernels.wordpiece import (
     DeterministicWordpiece,
     frame_bert_input,
@@ -220,11 +216,6 @@ class TestPairing:
         triples = assemble_triples(mentions, [1, 0, 1])
         assert triples == [("dorvax", "CAUSES", "nauseola")]
 
-    def test_invert(self):
-        assert invert_triples([("d", "CAUSES", "e")]) == [
-            ("e", "TREATED_WITH", "d")
-        ]
-
     def test_group_cross_product(self):
         mentions = [
             {"surface": "d1", "type": "DRUG", "word_start": 0},
@@ -288,13 +279,3 @@ class TestWebtext:
             want_doc = [i for i, lst in enumerate(ref) for _ in lst]
             assert list(flat) == want
             assert doc_of.tolist() == want_doc
-
-    def test_detect_language(self):
-        s = pd.Series(
-            [
-                "the patient was in the ward and the doctor",
-                "der Arzt ist nicht mit der Sache",
-                "",
-            ]
-        )
-        assert detect_language(s).tolist() == ["en", "de", "und"]

@@ -4,13 +4,16 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from remediner_spark.operators.graph import (
+    DEFAULT_SALT_BUCKETS,
+    _salt,
     build_edges,
-    build_edges_unsalted,
     build_graph,
     link_triples,
+    with_entity_ids,
 )
 from remediner_spark.operators.linking import (
     link_mentions,
@@ -18,6 +21,34 @@ from remediner_spark.operators.linking import (
 )
 from remediner_spark.operators.ner import extract_triples_stage
 from remediner_spark.operators.text import filter_language
+
+
+def build_nodes(
+    linked_mentions: DataFrame, salt_buckets: int = DEFAULT_SALT_BUCKETS
+) -> DataFrame:
+    """linked mentions -> nodes, salted two-phase count: the
+    mention-grain referee for nodes_from_edges."""
+    m = with_entity_ids(linked_mentions)
+    partial = m.withColumn("_salt", _salt(salt_buckets)).groupBy(
+        "entity_id", "_salt"
+    ).agg(
+        F.count(F.lit(1)).alias("_n"),
+        F.first("node_name").alias("_name"),
+        F.first("entity_type").alias("_type"),
+    )
+    return partial.groupBy("entity_id").agg(
+        F.first("_name").alias("canonical_name"),
+        F.first("_type").alias("entity_type"),
+        F.sum("_n").alias("n_mentions"),
+    )
+
+
+def build_edges_unsalted(linked_triples: DataFrame) -> DataFrame:
+    """Single-phase referee for the salted==unsalted equivalence test."""
+    return linked_triples.groupBy("subj_id", "pred", "obj_id").agg(
+        F.count(F.lit(1)).alias("weight"),
+        F.min("warc_ts").alias("first_seen"),
+    )
 
 
 @pytest.fixture(scope="module")
@@ -211,12 +242,7 @@ def test_nodes_from_edges_equals_build_nodes(spark, triples_df, dictionary_df):
     build_nodes aggregation row-for-row."""
     import pandas as pd
 
-    from remediner_spark.operators.graph import (
-        build_edges,
-        build_nodes,
-        link_triples,
-        nodes_from_edges,
-    )
+    from remediner_spark.operators.graph import nodes_from_edges
     from remediner_spark.operators.linking import (
         attach_surface_links,
         link_surfaces,

@@ -1,45 +1,8 @@
-"""M10 eval operators + A5/A6 framing stage."""
+"""M10 eval operator: triple-level precision/recall."""
 
 from __future__ import annotations
 
-import pandas as pd
-import pytest
-from pyspark.sql import functions as F
-
-from remediner_spark.metrics import (
-    confusion_counts,
-    macro_prf_from_confusion,
-    triple_precision_recall,
-)
-from remediner_spark.operators.framing import bert_framing_stage
-
-
-def test_confusion_counts_masks_minus100(spark):
-    rows = [
-        ([0, 1, -100], [0, 2, 4]),
-        ([3, -100, 0], [3, 1, 1]),
-    ]
-    df = spark.createDataFrame(rows, ["label_ids", "pred_ids"])
-    counts = confusion_counts(df).toPandas()
-    as_dict = {
-        (r.label, r.pred): r.n for r in counts.itertuples(index=False)
-    }
-    # -100 positions dropped: 4 scored positions
-    assert sum(as_dict.values()) == 4
-    assert as_dict[(0, 0)] == 1 and as_dict[(1, 2)] == 1
-    assert as_dict[(3, 3)] == 1 and as_dict[(0, 1)] == 1
-
-
-def test_macro_prf():
-    counts = pd.DataFrame(
-        {"label": [0, 0, 1, 1], "pred": [0, 1, 1, 0], "n": [8, 2, 6, 4]}
-    )
-    m = macro_prf_from_confusion(counts, n_classes=2)
-    # class 0: p=8/12, r=8/10; class 1: p=6/8, r=6/10
-    assert m["macro_precision"] == pytest.approx((8 / 12 + 6 / 8) / 2)
-    assert m["macro_recall"] == pytest.approx((0.8 + 0.6) / 2)
-    rows = m["confusion_normalized"]
-    assert rows[0][0] == pytest.approx(0.8)
+from remediner_spark.metrics import triple_precision_recall
 
 
 def test_triple_pr_joins(spark):
@@ -52,20 +15,3 @@ def test_triple_pr_joins(spark):
     )
     m = triple_precision_recall(predicted, gold)
     assert m["precision"] == 0.5 and m["recall"] == 0.5
-
-
-def test_framing_stage(spark):
-    rows = [
-        ("u1", 0, ["dorvaxin", "caused", "nauseola"],
-         ["B-Drug", "O", "B-Effect"]),
-    ]
-    df = spark.createDataFrame(rows, ["url", "sent_idx", "words", "iob"])
-    framed = bert_framing_stage(df, max_len=16).toPandas()
-    row = framed.iloc[0]
-    assert len(row["ids"]) == len(row["attention_mask"]) == 16
-    assert row["ids"][0] == 101  # [CLS]
-    assert row["label_ids"][0] == -100
-    # 'dorvaxin' -> 2 subtokens, both labeled B-Drug(1)
-    assert row["label_ids"][1] == 1 and row["label_ids"][2] == 1
-    # attention mask covers CLS + 4 subtokens + 1 ('nauseola'->2) + SEP
-    assert sum(row["attention_mask"]) == 8

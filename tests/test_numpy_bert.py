@@ -5,7 +5,7 @@ extraction stage.
 Checks:
 * encoder shape/determinism and attention-mask isolation (padding a
   sequence longer must not change the logits of real positions),
-* first-subtoken label projection (the BertTagger decode convention),
+* first-subtoken label projection (the HF decode convention),
 * the fused Spark stage with a broadcast NumpyBertTagger equals a
   driver-side run of the same tagger through the same per-sentence
   chain — exact row-for-row equality.

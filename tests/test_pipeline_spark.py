@@ -10,7 +10,6 @@ from remediner_spark.gold import gold_triples
 from remediner_spark.metrics import triple_precision_recall
 from remediner_spark.operators.ner import (
     extract_triples_stage,
-    tag_sentences_stage,
     with_inverse_triples,
 )
 from remediner_spark.operators.text import (
@@ -107,12 +106,3 @@ def test_inverse_triples_one_extraction_pass(spark, pages_df, tagger_bc):
     got = Counter(tuple(r) for r in both.collect())
     assert got == Counter(tuple(r) for r in union.collect())
     assert sum(got.values()) > 0
-
-
-def test_tag_sentences_stage(spark, pages_df, tagger_bc):
-    sents = segmented_sentences(filter_language(pages_df)).limit(50)
-    tagged = tag_sentences_stage(sents, tagger_bc)
-    row = tagged.filter(F.array_contains("iob", "B-Drug")).first()
-    assert row is not None
-    assert len(row["words"]) == len(row["iob"])
-    assert "DRUG" in row["masked_text"]

@@ -61,38 +61,6 @@ def test_fused_stage_prunes_html(spark, corpus_dir):
     assert "html" not in read_schema
     assert "text" in read_schema
 
-def test_bucketed_join_no_shuffle(spark, tmp_path):
-    """Co-located join: two tables bucketed+sorted on the key compile
-    to a SortMergeJoin with NO Exchange on either side — the 100 TB
-    amortize-the-shuffle-at-ingest layout (sources/bucketed.py)."""
-    from remediner_spark.sources.bucketed import read_bucketed, write_bucketed
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    write_bucketed(
-        docs.select("doc_id", "text"), "t_docs_a", "doc_id",
-        path=str(tmp_path / "a"),
-    )
-    write_bucketed(
-        docs.select("doc_id", "lang"), "t_docs_b", "doc_id",
-        path=str(tmp_path / "b"),
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # force the join strategy decision (broadcast would trivially
-        # avoid the Exchange without proving bucket co-location)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = read_bucketed(spark, "t_docs_a").join(
-            read_bucketed(spark, "t_docs_b"), "doc_id"
-        )
-        plan = plan_of(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan
-        assert joined.count() == docs.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS t_docs_a")
-        spark.sql("DROP TABLE IF EXISTS t_docs_b")
-
 
 def test_graph_edges_single_extraction_pass(spark, corpus_dir):
     """The surface-first graph formulation must run the Python
@@ -123,19 +91,19 @@ def test_graph_edges_single_extraction_pass(spark, corpus_dir):
 
 
 def test_cache_scope_releases_everything(spark):
-    """session.cache_scope drops SQL caches and raw RDD persists on
-    exit — the unpersist discipline bench.py applies between queries."""
-    from remediner_spark.session import cache_scope, release_caches
+    """session.release_caches drops SQL caches and raw RDD persists —
+    the unpersist discipline bench.py applies between queries."""
+    from remediner_spark.session import release_caches
 
     release_caches(spark)  # clean slate
-    with cache_scope(spark):
-        df = spark.range(100).cache()
-        df.count()
-        rdd = spark.sparkContext.parallelize(range(10)).persist()
-        rdd.count()
-        assert len(list(
-            spark.sparkContext._jsc.getPersistentRDDs().keys()
-        )) >= 1
+    df = spark.range(100).cache()
+    df.count()
+    rdd = spark.sparkContext.parallelize(range(10)).persist()
+    rdd.count()
+    assert len(list(
+        spark.sparkContext._jsc.getPersistentRDDs().keys()
+    )) >= 1
+    release_caches(spark)
     assert list(spark.sparkContext._jsc.getPersistentRDDs().keys()) == []
 
 

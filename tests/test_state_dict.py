@@ -1,5 +1,5 @@
 """Torch-free state_dict ingestion (kernels/state_dict.py): engine
-params -> reference-named tensor dict -> params must be an exact
+BERT params -> reference-named tensor dict -> params must be an exact
 round trip, with bitwise-equal forwards — so a real trained checkpoint
 (exported as npz/pickle) drops into the executed numpy path."""
 
@@ -14,15 +14,9 @@ from remediner_spark.kernels.bert_encoder import (
     bert_token_logits,
     init_bert_params,
 )
-from remediner_spark.kernels.re_head import (
-    init_re_head_params,
-    re_head_forward,
-)
 from remediner_spark.kernels.state_dict import (
     bert_params_from_state_dict,
     bert_state_dict_from_params,
-    re_head_params_from_state_dict,
-    re_state_dict_from_params,
     read_tensor_dict,
     read_torch_pt,
     write_torch_pt,
@@ -370,31 +364,13 @@ def test_from_state_dict_vocab_mismatch_is_loud(tmp_path):
         NumpyBertTagger.from_state_dict(str(path), n_heads=4)
 
 
-def test_re_roundtrip_bitwise(tmp_path):
-    p = init_re_head_params(7, d_in=24, hidden=8, max_len=10, reduced=12)
-    sd = re_state_dict_from_params(p)
-    assert set(sd) == {
-        "lstm.weight_ih_l0", "lstm.weight_hh_l0",
-        "lstm.bias_ih_l0", "lstm.bias_hh_l0",
-        "lstm.weight_ih_l0_reverse", "lstm.weight_hh_l0_reverse",
-        "lstm.bias_ih_l0_reverse", "lstm.bias_hh_l0_reverse",
-        "dim_reduction.weight", "dim_reduction.bias",
-        "final_linear.weight", "final_linear.bias",
-    }
-    path = tmp_path / "re.npz"
-    np.savez(path, **sd)
-    p2 = re_head_params_from_state_dict(read_tensor_dict(str(path)))
-    assert int(p2["_d_in"][0]) == 24
-    X = np.random.RandomState(3).randn(2, 10, 24)
-    assert np.array_equal(re_head_forward(X, p), re_head_forward(X, p2))
-
-
 def test_missing_key_is_loud():
-    p = init_re_head_params(7, d_in=24, hidden=8, max_len=10, reduced=12)
-    sd = re_state_dict_from_params(p)
-    del sd["lstm.weight_hh_l0_reverse"]
-    with pytest.raises(KeyError, match="lstm.weight_hh_l0_reverse"):
-        re_head_params_from_state_dict(sd)
+    p = init_bert_params(11, **DIMS)
+    sd = bert_state_dict_from_params(p)
+    key = "bert.bert.encoder.layer.1.attention.self.key.weight"
+    del sd[key]
+    with pytest.raises(KeyError, match=key):
+        bert_params_from_state_dict(sd, n_heads=DIMS["n_heads"])
 
 
 def test_torch_pt_nested_checkpoint_is_loud(tmp_path):

@@ -21,12 +21,6 @@ from contextlib import redirect_stdout
 sys.path.insert(0, ".")
 
 
-# entries whose plans still scan a Python RDD built from a driver-side
-# row list: reported, not failed. Any other entry planning one fails
-# the audit, and so does a listed entry that no longer plans one.
-PYTHON_RDD_KNOWN: dict[str, str] = {}
-
-
 def get_plan(df) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
@@ -196,15 +190,8 @@ def python_rdd_failures(spark, sf_dir: str, qs: dict) -> list[str]:
     for name, q in qs.items():
         n = len(python_rdd_relations(q(spark, sf_dir)))
         release_caches(spark)
-        if n and name in PYTHON_RDD_KNOWN:
-            print(f"  known: {name}: {n} ({PYTHON_RDD_KNOWN[name]})")
-        elif n:
+        if n:
             failures.append(f"{name}: {n} Python-RDD relation(s) in plan")
-        elif name in PYTHON_RDD_KNOWN:
-            failures.append(
-                f"{name}: no Python-RDD relation left — drop it from "
-                "PYTHON_RDD_KNOWN"
-            )
     return failures
 
 

@@ -21,7 +21,8 @@ The neural forwards (numpy BERT tagger, RE head) and the wordpiece
 framing have no transcription alternative — the reference's are
 trained torch artifacts — so those run the same seeded kernels the
 engine uses; their Spark==driver exactness is pinned by
-tests/test_numpy_bert.py and tests/test_re_infer.py.
+tests/test_numpy_bert.py and
+tests/test_final_model.py::test_spark_stage_equals_driver.
 
 Usage:
     python tools/gen_final_model_expected.py          # write golden
