@@ -65,10 +65,10 @@ class BatchMatcher:
     def from_tagger(cls, tagger, space_split: bool = False) -> "BatchMatcher":
         return cls(tagger._index, space_split=space_split)
 
-    def _accepted(self, norm: pd.Series):
+    def _accepted(self, norm: pd.Series, keep_orig: bool = False):
         """Shared tokenize -> candidate -> greedy-resolution pipeline.
 
-        Returns (flat_lower, row_id, pos, k, is_drug)
+        Returns (flat_lower, flat_orig|None, row_id, pos, k, is_drug)
         where (pos, k, is_drug) are the accepted matches in (row,
         position) order; flat_* / row_id cover every token of every
         row. With no tokens or no matches the match arrays are empty
@@ -109,10 +109,18 @@ class BatchMatcher:
         flat = tok[~sep]
         codes = codes_all[~sep]
         row_id = row_id[~sep]
+        flat_orig = None
+        if keep_orig:
+            # lowercasing never changes whitespace, so token counts
+            # and separator positions line up with the lowered split
+            orig_tokens = (
+                big.split(" ") if self._space_split else big.split()
+            )
+            flat_orig = np.array(orig_tokens, dtype=object)[~sep]
         n = len(flat)
         none_pos = np.array([], dtype=np.int64)
         if n == 0:
-            return (flat, row_id, none_pos,
+            return (flat, flat_orig, row_id, none_pos,
                     none_pos.copy(), np.array([], dtype=bool))
 
         # word -> sorted position list, via one stable argsort of the
@@ -151,7 +159,7 @@ class BatchMatcher:
                 c_is_drug.append(np.full(len(pos), etype == "Drug"))
                 c_prio.append(np.full(len(pos), prio))
         if not c_pos:
-            return (flat, row_id, none_pos,
+            return (flat, flat_orig, row_id, none_pos,
                     none_pos.copy(), np.array([], dtype=bool))
         pos_all = np.concatenate(c_pos)
         k_all = np.concatenate(c_len)
@@ -195,7 +203,7 @@ class BatchMatcher:
                         keep[i] = True
                         cur_end = pos[i] + k[i]
             pos, k, row, is_drug = pos[keep], k[keep], row[keep], is_drug[keep]
-        return flat, row_id, pos, k, is_drug
+        return flat, flat_orig, row_id, pos, k, is_drug
 
     def extract_pairs(self, norm: pd.Series) -> pd.DataFrame:
         """Normalized sentences -> (row, subj, obj) CAUSES pairs.
@@ -207,7 +215,7 @@ class BatchMatcher:
                               "obj": pd.array([], dtype=object)})
         if len(norm) == 0:
             return empty
-        flat, row_id, pos, k, is_drug = self._accepted(norm)
+        flat, _orig, row_id, pos, k, is_drug = self._accepted(norm)
         if len(pos) == 0:
             return empty
         row = row_id[pos]
@@ -281,8 +289,67 @@ class BatchMatcher:
         if n_rows == 0:
             z = np.zeros(0, dtype=np.int64)
             return z, z.copy()
-        _f, row_id, pos, _k, is_drug = self._accepted(norm)
+        _f, _o, row_id, pos, _k, is_drug = self._accepted(norm)
         rows = row_id[pos]
         nd = np.bincount(rows[is_drug], minlength=n_rows).astype(np.int64)
         ne = np.bincount(rows[~is_drug], minlength=n_rows).astype(np.int64)
         return nd, ne
+
+    def tag_batch(
+        self, norm: pd.Series
+    ) -> tuple[list[list[str]], list[list[str]], list[str]]:
+        """Normalized sentences -> (words, iob, masked) per row.
+
+        Semantics identical to per-sentence
+        ``GazetteerTagger.tag_words`` + ``mentions_from_word_iob``:
+        original-case words, word-aligned IOB, masked text with
+        lowercased non-entity words and ONE class token per contiguous
+        same-class run. Parity pinned by
+        tests/test_tagmatch_differential.py.
+        """
+        n_rows = len(norm)
+        if n_rows == 0:
+            return [], [], []
+        flat_l, flat_o, row_id, pos, k, is_drug = self._accepted(
+            norm, keep_orig=True
+        )
+        n = len(flat_l)
+        rng_rows = np.arange(n_rows)
+        lo = np.searchsorted(row_id, rng_rows, side="left")
+        hi = np.searchsorted(row_id, rng_rows, side="right")
+
+        tags = np.full(n, "O", dtype=object)
+        out_tok = flat_l.copy()  # masked output: lowered words by default
+        drop = np.zeros(n, dtype=bool)
+        if len(pos):
+            tags[pos[is_drug]] = "B-Drug"
+            tags[pos[~is_drug]] = "B-Effect"
+            for i in np.flatnonzero(k > 1):  # multi-word matches: rare
+                cls = "I-Drug" if is_drug[i] else "I-Effect"
+                tags[pos[i] + 1 : pos[i] + k[i]] = cls
+                drop[pos[i] : pos[i] + k[i]] = True
+            drop[pos[k == 1]] = True
+            # one class token per contiguous same-class run
+            row = row_id[pos]
+            new_run = np.ones(len(pos), dtype=bool)
+            new_run[1:] = (
+                (row[1:] != row[:-1])
+                | (is_drug[1:] != is_drug[:-1])
+                | (pos[1:] != pos[:-1] + k[:-1])
+            )
+            start_pos = pos[new_run]
+            drop[start_pos] = False
+            out_tok[start_pos] = np.where(
+                is_drug[new_run], "DRUG", "EFFECT"
+            )
+
+        words_col: list[list[str]] = []
+        iob_col: list[list[str]] = []
+        masked_col: list[str] = []
+        for r in range(n_rows):
+            a, b = lo[r], hi[r]
+            words_col.append(flat_o[a:b].tolist())
+            iob_col.append(tags[a:b].tolist())
+            seg = out_tok[a:b]
+            masked_col.append(" ".join(seg[~drop[a:b]]))
+        return words_col, iob_col, masked_col

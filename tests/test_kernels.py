@@ -216,6 +216,24 @@ class TestPairing:
         triples = assemble_triples(mentions, [1, 0, 1])
         assert triples == [("dorvax", "CAUSES", "nauseola")]
 
+    def test_invert(self, spark):
+        # the inverse view (ner.with_inverse_triples) of an assembled
+        # triple: the CAUSES row plus (effect, TREATED_WITH, drug)
+        from remediner_spark.operators.ner import with_inverse_triples
+
+        triples = spark.createDataFrame(
+            [("u1", None, 0, "d", "CAUSES", "e")],
+            "url string, warc_ts timestamp, sent_idx int, "
+            "subj string, pred string, obj string",
+        )
+        got = [
+            (r.subj, r.pred, r.obj)
+            for r in with_inverse_triples(triples).collect()
+        ]
+        assert sorted(got) == [
+            ("d", "CAUSES", "e"), ("e", "TREATED_WITH", "d")
+        ]
+
     def test_group_cross_product(self):
         mentions = [
             {"surface": "d1", "type": "DRUG", "word_start": 0},

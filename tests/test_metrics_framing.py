@@ -1,4 +1,4 @@
-"""M10 eval operator: triple-level precision/recall."""
+"""M10 eval operator (triple-level precision/recall) + A5/A6 framing."""
 
 from __future__ import annotations
 
@@ -15,3 +15,29 @@ def test_triple_pr_joins(spark):
     )
     m = triple_precision_recall(predicted, gold)
     assert m["precision"] == 0.5 and m["recall"] == 0.5
+
+
+def test_framing_stage():
+    """A5/A6: word-level IOB -> wordpiece with the word's label on every
+    subtoken -> BERT frame (CLS/SEP, -100 outside the words, padding)."""
+    from remediner_spark.kernels.wordpiece import (
+        DeterministicWordpiece,
+        frame_bert_input,
+        tokenize_words_with_labels,
+    )
+    from remediner_spark.operators.bert_stub import IOB_LABELS
+
+    tok = DeterministicWordpiece()
+    words = ["dorvaxin", "caused", "nauseola"]
+    label_ids = [IOB_LABELS.index(t) for t in ["B-Drug", "O", "B-Effect"]]
+    subtoks, sublabels = tokenize_words_with_labels(words, label_ids, tok)
+    ids, attention_mask, framed = frame_bert_input(
+        subtoks, sublabels, 16, tok
+    )
+    assert len(ids) == len(attention_mask) == 16
+    assert ids[0] == 101  # [CLS]
+    assert framed[0] == -100
+    # 'dorvaxin' -> 2 subtokens, both labeled B-Drug(1)
+    assert framed[1] == 1 and framed[2] == 1
+    # attention mask covers CLS + 4 subtokens + 1 ('nauseola'->2) + SEP
+    assert sum(attention_mask) == 8

@@ -1,158 +1,42 @@
-"""Training-prep operators (A3/A4/A7/A8) vs literal reference ports."""
+"""Model-tagger plumbing of the fused extraction stage: a tagger with
+only a per-sentence ``tag_words`` surface (no batch matcher, no
+``tag_words_batch``) takes the generic path of extract_triples_stage
+through broadcast and Arrow batches."""
 
 from __future__ import annotations
 
-import copy
+from typing import Sequence
 
-import numpy as np
 import pandas as pd
 import pytest
 
-from remediner_spark.kernels.mask import mask_texts_batch
-from remediner_spark.kernels.weights import average_weights, balanced_weights_one
-from remediner_spark.operators.prep import (
-    augment_concat_ner,
-    augmentation_index,
-    class_weights_stage,
-    hash_split,
-    permutation_split,
-    prepare_re_gold_stage,
-)
+
+class DummyModel:
+    """Deterministic test double for a model tagger: 'predicts' B-Drug
+    for words ending in 'x', B-Effect for words ending in 'a'."""
+
+    def tag_words(self, words: Sequence[str]) -> list[str]:
+        out = []
+        for w in words:
+            if w.endswith("x"):
+                out.append("B-Drug")
+            elif w.endswith("a"):
+                out.append("B-Effect")
+            else:
+                out.append("O")
+        return out
 
 
-def _sample_ann(n: int = 24) -> pd.DataFrame:
-    drugs = ["dorvax", "quilar", "zemtra", "bexole"]
-    effects = ["nauseola", "vertigask", "myalgora", "edemara"]
-    rows = []
-    for i in range(n):
-        d, e = drugs[i % 4], effects[(i + 1) % 4]
-        rows.append((i, f"{d} caused {e} in case {i}", d, e))
-    return pd.DataFrame(rows, columns=["row_idx", "text", "drug", "effect"])
+@pytest.fixture(scope="module")
+def dummy_bc(spark):
+    """The broadcast test double. Executors unpickle it by reference,
+    so this module ships to them the way a user's model module would
+    (--py-files)."""
+    spark.sparkContext.addPyFile(__file__)
+    return spark.sparkContext.broadcast(DummyModel())
 
 
-def reference_prepare_data_for_ner(data: pd.DataFrame) -> pd.DataFrame:
-    """Literal transcription of the reference augmentation
-    (/root/reference/src/NER/data_utilities_ner.py:172-223)."""
-    np.random.seed(0)
-    new_data = copy.copy(data)
-    new_data = new_data.copy()
-    new_data["drug"] = new_data["drug"].map(lambda d: [d])
-    new_data["effect"] = new_data["effect"].map(lambda e: [e])
-    concatenation_size = int(np.ceil(len(data) * 0.33))
-    for concat_number in range(2, 5):
-        for _ in range(concatenation_size):
-            idxs = [
-                np.random.randint(low=0, high=len(data))
-                for _ in range(concat_number)
-            ]
-            rows = data.iloc[idxs]
-            texts = rows["text"].values.tolist()
-            result = ""
-            for i in range(concat_number):
-                result = result + " " + texts[i]
-            new_data.loc[len(new_data)] = [
-                result,
-                rows["drug"].values.tolist(),
-                rows["effect"].values.tolist(),
-            ]
-    new_data["text"] = new_data["text"].map(lambda t: " ".join(t.split()))
-    return new_data
-
-
-def test_a3_augmentation_matches_reference(spark):
-    ann_pdf = _sample_ann()
-    ann = spark.createDataFrame(ann_pdf)
-    got = augment_concat_ner(spark, ann).toPandas()
-    want = reference_prepare_data_for_ner(
-        ann_pdf[["text", "drug", "effect"]].copy()
-    )
-    got_set = sorted(
-        (r.text, tuple(r.drug), tuple(r.effect))
-        for r in got.itertuples(index=False)
-    )
-    want_set = sorted(
-        (r.text, tuple(r.drug), tuple(r.effect))
-        for r in want.itertuples(index=False)
-    )
-    assert got_set == want_set
-    # 24 originals + 3 * ceil(24*0.33)=8 concat rows per size
-    assert len(got) == 24 + 3 * 8
-
-
-def test_a4_stateful_re_prep_matches_kernel(spark):
-    ann_pdf = _sample_ann(12)
-    ann = spark.createDataFrame(ann_pdf)
-    got = (
-        prepare_re_gold_stage(ann)
-        .toPandas()
-        .sort_values("row_idx")
-        .reset_index(drop=True)
-    )
-    want_ann, want_masked = mask_texts_batch(
-        ann_pdf["text"].tolist(),
-        ann_pdf["drug"].tolist(),
-        ann_pdf["effect"].tolist(),
-    )
-    assert got["masked_text"].tolist() == [
-        " ".join(m.split()) for m in want_masked
-    ]
-    assert [list(a) for a in got["annotated_text"]] == want_ann
-    # statefulness visible: the repeated drug 'dorvax' in a later row is
-    # NOT masked again
-    later = got.iloc[4]["masked_text"]
-    assert "dorvax" in later and "DRUG" not in later
-
-
-def test_a7_weights_kernel():
-    # one sentence: [O, B-Drug, O, B-Effect] -> classes 0,1,3 present
-    labels = np.array([0, 1, 0, 3])
-    w = balanced_weights_one(labels)
-    # sklearn 'balanced': 4 samples / (3 classes * count)
-    assert w[0] == pytest.approx(4 / (3 * 2))
-    assert w[1] == pytest.approx(4 / 3)
-    assert w[3] == pytest.approx(4 / 3)
-    # missing classes 2 and 4 get max+mean of the vector-so-far
-    assert w[2] > w.max() / 2 and len(w) == 5
-    avg = average_weights([labels, labels])
-    assert np.allclose(avg, w)
-
-
-def test_a7_distributed_matches_kernel(spark):
-    rows = [
-        (["B-Drug", "O", "B-Effect"],),
-        (["O", "O", "B-Drug", "I-Drug"],),
-    ]
-    tagged = spark.createDataFrame(rows, ["iob"])
-    got = class_weights_stage(tagged)
-    from remediner_spark.kernels.iob import LABEL_ID
-
-    want = average_weights(
-        [np.array([LABEL_ID[t] for t in r[0]]) for r in rows]
-    )
-    assert np.allclose(got, want)
-
-
-def test_a8_hash_split_deterministic(spark, corpus_dir):
-    pages = spark.read.parquet(f"{corpus_dir}/pages.parquet")
-    s1 = hash_split(pages).groupBy("split").count().collect()
-    s2 = hash_split(pages).groupBy("split").count().collect()
-    c1 = {r["split"]: r["count"] for r in s1}
-    c2 = {r["split"]: r["count"] for r in s2}
-    assert c1 == c2
-    total = sum(c1.values())
-    assert 0.7 < c1["train"] / total < 0.9
-
-
-def test_a8_permutation_split(spark):
-    sp = permutation_split(spark, 100).toPandas()
-    counts = sp["split"].value_counts().to_dict()
-    assert counts["test"] == 10 and counts["val"] == 10 and counts["train"] == 80
-    sp2 = permutation_split(spark, 100).toPandas()
-    pd.testing.assert_frame_equal(sp, sp2)
-
-
-def test_dummy_model_plumbing(spark):
-    from remediner_spark.operators.bert_stub import DummyModel
+def test_dummy_model_plumbing(spark, dummy_bc):
     from remediner_spark.operators.ner import extract_triples_stage
 
     pdf = pd.DataFrame(
@@ -163,18 +47,16 @@ def test_dummy_model_plumbing(spark):
         }
     )
     pages = spark.createDataFrame(pdf)
-    bc = spark.sparkContext.broadcast(DummyModel())
-    triples = extract_triples_stage(pages, bc).toPandas()
+    triples = extract_triples_stage(pages, dummy_bc).toPandas()
     assert len(triples) == 1
     assert triples.iloc[0]["subj"] == "zemtrax"
     assert triples.iloc[0]["obj"] == "nauseola"
 
 
-def test_dummy_model_zero_triple_batch(spark):
+def test_dummy_model_zero_triple_batch(spark, dummy_bc):
     """Regression: a batch whose sentences yield NO pairs used to build
     an all-object empty pairs frame, making the fancy-index on
     sent['url'] raise IndexError inside the mapInPandas stage."""
-    from remediner_spark.operators.bert_stub import DummyModel
     from remediner_spark.operators.ner import extract_triples_stage
 
     pdf = pd.DataFrame(
@@ -187,53 +69,5 @@ def test_dummy_model_zero_triple_batch(spark):
         }
     )
     pages = spark.createDataFrame(pdf)
-    bc = spark.sparkContext.broadcast(DummyModel())
-    triples = extract_triples_stage(pages, bc).toPandas()
+    triples = extract_triples_stage(pages, dummy_bc).toPandas()
     assert len(triples) == 0
-
-
-def test_bert_tagger_importerror_without_torch():
-    from remediner_spark.operators.bert_stub import BertTagger, torch_available
-
-    if torch_available():
-        pytest.skip("torch present; gate not applicable")
-    with pytest.raises(ImportError):
-        BertTagger(weights_bc=None)
-
-
-def test_sklearn_split_indices_golden():
-    """Pins the exact sklearn train_test_split transcription
-    (operators/prep.py:sklearn_split_indices). Golden values follow
-    from RandomState(0).permutation (platform-stable) + ShuffleSplit's
-    ceil/slice arithmetic: perm(20) = [18,1,19,8,10,17,...], n_test=4,
-    so test-stage slice perm[:4] -> second split halves it."""
-    import numpy as np
-
-    from remediner_spark.operators.prep import sklearn_split_indices
-
-    tr, va, te = sklearn_split_indices(20)
-    assert tr.tolist() == [10, 17, 6, 13, 4, 2, 5, 14, 9, 7,
-                           16, 11, 3, 0, 15, 12]
-    assert va.tolist() == [1, 18]
-    assert te.tolist() == [19, 8]
-
-    tr, va, te = sklearn_split_indices(1000)
-    assert (len(tr), len(va), len(te)) == (800, 100, 100)
-    allv = np.concatenate([tr, va, te])
-    assert sorted(allv.tolist()) == list(range(1000))
-    assert tr[:5].tolist() == [687, 500, 332, 979, 817]
-    assert te[:5].tolist() == [14, 945, 789, 367, 648]
-
-
-def test_sklearn_exact_split_table(spark):
-    from remediner_spark.operators.prep import (
-        sklearn_exact_split,
-        sklearn_split_indices,
-    )
-
-    table = sklearn_exact_split(spark, 100).toPandas()
-    counts = table["split"].value_counts().to_dict()
-    assert counts == {"train": 80, "val": 10, "test": 10}
-    tr, va, te = sklearn_split_indices(100)
-    got_test = set(table[table["split"] == "test"]["row_idx"])
-    assert got_test == set(te.tolist())

@@ -1,15 +1,17 @@
-"""M5 executed end-to-end without torch: real-vocab wordpiece (A5) ->
-masked reframe (M4) -> numpy RE-head forward (transcribed architecture)
--> argmax -> first-subtoken word projection -> M6 triple assembly,
-run as the actual Spark mapInPandas stage with broadcast weights.
+"""M5 relation-extraction inference without torch: the numpy RE head
+(transcribed architecture) as it runs inside the fused final model
+(operators/final_model.py) — masked reframe (M4) -> head forward ->
+argmax -> first-subtoken word projection -> M6 triple assembly.
 
 Checks:
 * LSTM cell math against a hand-computed single step.
-* The Spark stage output equals a driver-side numpy forward on the
+* The decode chain over GOLD-masked corpus sentences pairs a DRUG
+  mention with an EFFECT mention of the same sentence, never anything
+  else (decode-path integrity on real masks).
+* The Spark stage in the gate's configuration (raw sentences,
+  normalization inside the hop) equals a driver-side forward on the
   same inputs EXACTLY (plumbing differential: broadcast + Arrow + batch
   slicing change nothing).
-* The full ids->logits->argmax->M3->M6 chain produces triples whose
-  surfaces come from the M3 mention list (decode-path integrity).
 """
 
 from __future__ import annotations
@@ -18,7 +20,6 @@ import math
 
 import numpy as np
 import pandas as pd
-import pytest
 
 from remediner_spark.kernels.re_head import (
     lstm_direction,
@@ -53,160 +54,117 @@ def test_bilstm_backward_direction_alignment():
     assert np.array_equal(logits, re_head_forward(X, p))
 
 
-@pytest.fixture(scope="module")
-def framed_batch():
-    """Masked corpus sentences framed for the RE stage (M4)."""
-    from remediner_spark.kernels.iob import iob_tag_text
+class _GoldNer:
+    """The corpus lexicons behind NumpyFinalModel's tagger surface, so
+    the RE head sees the gold DRUG/EFFECT masks."""
+
+    def __init__(self):
+        from remediner_spark.kernels.wordpiece import WordPieceTokenizer
+        from remediner_spark.operators.ner import GazetteerTagger
+        from remediner_spark.sources.corpus import (
+            drug_lexicon,
+            effect_lexicon,
+        )
+
+        self._tagger = GazetteerTagger(drug_lexicon(), effect_lexicon())
+        self._tok = WordPieceTokenizer()
+
+    def tag_words_batch(self, batch):
+        return [self._tagger.tag_words(words) for words in batch]
+
+
+def test_e2e_decode_to_triples():
+    """words -> gold mask -> ids -> logits -> argmax -> per-word rel
+    ids -> M6 assembly, through NumpyFinalModel.extract."""
     from remediner_spark.kernels.normalize import normalize_series
     from remediner_spark.kernels.reconstruct import mentions_from_word_iob
-    from remediner_spark.kernels.wordpiece import (
-        WordPieceTokenizer,
-        frame_bert_input,
-        tokenize_words_with_labels,
-    )
+    from remediner_spark.operators.final_model import NumpyFinalModel
     from remediner_spark.sources.corpus import (
         _TEMPLATES,
         drug_lexicon,
         effect_lexicon,
     )
 
-    tok = WordPieceTokenizer()
-    rows = []
     drugs, effects = drug_lexicon(), effect_lexicon()
-    for i in range(40):
-        text = _TEMPLATES[i % len(_TEMPLATES)].format(
+    texts = [
+        _TEMPLATES[i % len(_TEMPLATES)].format(
             drug=drugs[i % len(drugs)], effect=effects[i % len(effects)]
         )
-        norm = normalize_series(pd.Series([text]))[0]
-        words = norm.split()
-        tags = iob_tag_text(norm, [drugs[i % len(drugs)]],
-                            [effects[i % len(effects)]])
-        masked, mentions = mentions_from_word_iob(words, tags)
-        m_words = masked.split()
-        toks, piece_word = [], []
-        for w_idx, w in enumerate(m_words):
-            pieces = tok.tokenize(w)
-            toks.extend(pieces)
-            piece_word.extend(
-                [w_idx] + [-1] * (len(pieces) - 1)
-            )  # first-subtoken convention
-        ids, _att, _lab = frame_bert_input(
-            toks, [0] * len(toks), MAX_LEN, tok
-        )
-        word_ids = [-1] + piece_word + [-1]
-        word_ids = (word_ids + [-1] * MAX_LEN)[:MAX_LEN]
-        rows.append(
-            {
-                "sent_id": i,
-                "ids": ids,
-                "word_ids": word_ids,
-                "mentions": mentions,
-                "n_words": len(m_words),
-            }
-        )
-    return rows
-
-
-def test_spark_stage_matches_driver_forward(spark, framed_batch):
-    from remediner_spark.operators.re_infer import (
-        broadcast_re_weights,
-        predict_word_rel_ids,
-        re_infer_stage,
+        for i in range(40)
+    ]
+    words = [s.split() for s in normalize_series(pd.Series(texts))]
+    params = init_re_head_params(
+        7, d_in=48, hidden=16, max_len=MAX_LEN, reduced=24
     )
+    params["_d_in"] = np.array([48])
+    ner = _GoldNer()
+    model = NumpyFinalModel(ner, params, re_max_len=MAX_LEN)
 
-    weights_bc = broadcast_re_weights(spark, MAX_LEN)
-    pdf = pd.DataFrame(
-        [
-            {"sent_id": r["sent_id"], "ids": r["ids"], "word_ids": r["word_ids"]}
-            for r in framed_batch
-        ]
-    )
-    framed = spark.createDataFrame(pdf).repartition(4)
-    got = (
-        re_infer_stage(framed, weights_bc)
-        .toPandas()
-        .sort_values("sent_id")
-        .reset_index(drop=True)
-    )
-    want = predict_word_rel_ids(
-        np.stack(pdf["ids"].to_numpy()),
-        list(pdf["word_ids"].to_numpy()),
-        weights_bc.value,
-    )
-    assert len(got) == len(framed_batch)
-    for i, row in got.iterrows():
-        assert list(row["rel_ids"]) == want[row["sent_id"]], row["sent_id"]
-
-
-def test_e2e_decode_to_triples(spark, framed_batch):
-    """ids -> logits -> argmax -> per-word rel ids -> M6 assembly."""
-    from remediner_spark.kernels.pairing import assemble_triples
-    from remediner_spark.operators.re_infer import (
-        broadcast_re_weights,
-        re_infer_stage,
-    )
-
-    weights_bc = broadcast_re_weights(spark, MAX_LEN)
-    pdf = pd.DataFrame(
-        [
-            {"sent_id": r["sent_id"], "ids": r["ids"], "word_ids": r["word_ids"]}
-            for r in framed_batch
-        ]
-    )
-    rel = {
-        r["sent_id"]: list(r["rel_ids"])
-        for _, r in re_infer_stage(
-            spark.createDataFrame(pdf), weights_bc
-        ).toPandas().iterrows()
-    }
-    by_id = {r["sent_id"]: r for r in framed_batch}
     n_triples = 0
-    surfaces = set()
-    for sid, rel_ids in rel.items():
-        row = by_id[sid]
-        assert len(rel_ids) == row["n_words"]
-        for s, p, o in assemble_triples(row["mentions"], rel_ids):
+    for w, tags, triples in zip(
+        words, ner.tag_words_batch(words), model.extract(words)
+    ):
+        _, mentions = mentions_from_word_iob(w, tags)
+        by_type = {"DRUG": set(), "EFFECT": set()}
+        for m in mentions:
+            by_type[m["type"]].add(m["surface"])
+        # every sentence carries one gold drug and one gold effect
+        assert by_type["DRUG"] and by_type["EFFECT"]
+        for s, p, o in triples:
             n_triples += 1
-            surfaces.add(s)
-            surfaces.add(o)
             assert p == "CAUSES"
-    mention_surfaces = {
-        m["surface"] for r in framed_batch for m in r["mentions"]
-    }
-    # every emitted surface is a real M3 mention surface
-    assert surfaces <= mention_surfaces
+            assert s in by_type["DRUG"] and o in by_type["EFFECT"]
     # seeded weights produce a non-degenerate id distribution: at
     # least one sentence pairs up (deterministic given the seed)
     assert n_triples > 0
 
 
-def test_s5_text_sink_matches_reference_format(spark, framed_batch, tmp_path):
-    """S5 literal sink: the written file equals the reference's
-    write_list_to_file rendering of the same predictions
-    (space-joined ints, one line per sentence, batch order)."""
-    import glob
+def test_spark_stage_matches_driver_forward(spark, corpus_dir):
+    """q_kg_final_model's configuration: the gate's model over raw
+    sentences with ``normalize_input=True``, repartitioned, equals the
+    driver-side composition over the normalized text."""
+    from remediner_spark.kernels.normalize import normalize_series
+    from remediner_spark.kernels.webtext import split_sentences
+    from remediner_spark.operators.final_model import final_model_stage
+    from remediner_spark.plans.kg_gate import _final_model
 
-    from remediner_spark.operators.re_infer import (
-        broadcast_re_weights,
-        re_infer_stage,
-    )
-    from remediner_spark.sources.sinks import write_predictions_text
-
-    weights_bc = broadcast_re_weights(spark, MAX_LEN)
-    pdf = pd.DataFrame(
+    pages = pd.read_parquet(f"{corpus_dir}/pages.parquet")
+    pages = pages[pages["lang"] == "en"].head(60)
+    raw = pd.DataFrame(
         [
-            {"sent_id": r["sent_id"], "ids": r["ids"], "word_ids": r["word_ids"]}
-            for r in framed_batch
-        ]
+            (url, sent_idx, text)
+            for url, lst in zip(pages["url"], split_sentences(pages["text"]))
+            for sent_idx, text in enumerate(lst)
+        ],
+        columns=["url", "sent_idx", "sentence"],
     )
-    preds = re_infer_stage(spark.createDataFrame(pdf).repartition(4), weights_bc)
-    out = str(tmp_path / "final_predictions")
-    write_predictions_text(preds, out, single_file=True)
-    files = sorted(glob.glob(out + "/part-*"))
-    assert len(files) == 1
-    got_lines = open(files[0]).read().splitlines()
-    want = preds.toPandas().sort_values("sent_id")
-    want_lines = [
-        " ".join(map(str, ids)) for ids in want["rel_ids"]
-    ]  # the reference's ' '.join(map(str, sublist)) rendering
-    assert got_lines == want_lines
+    model = _final_model()
+    model_bc = spark.sparkContext.broadcast(model)
+    key = ["url", "sent_idx", "subj", "obj"]
+    got = (
+        final_model_stage(
+            spark.createDataFrame(raw).repartition(4),
+            model_bc,
+            normalize_input=True,
+        )
+        .toPandas()
+        .sort_values(key)
+        .reset_index(drop=True)
+    )
+    rows = []
+    norm = normalize_series(raw["sentence"])
+    for url, sent_idx, text in zip(raw["url"], raw["sent_idx"], norm):
+        w = text.split()
+        if not w:
+            continue
+        for s, p, o in model.extract([w])[0]:
+            rows.append((url, sent_idx, s, p, o))
+    want = (
+        pd.DataFrame(rows, columns=["url", "sent_idx", "subj", "pred", "obj"])
+        .sort_values(key)
+        .reset_index(drop=True)
+    )
+    assert len(want) > 0
+    pd.testing.assert_frame_equal(
+        got.astype({"sent_idx": "int64"}), want.astype({"sent_idx": "int64"})
+    )

@@ -95,6 +95,64 @@ def test_empty_and_no_match():
     assert len(m.extract_pairs(pd.Series(["", "the x y", ""]))) == 0
 
 
+def _reference_tag(norm: pd.Series, tagger: GazetteerTagger):
+    words_col, iob_col, masked_col = [], [], []
+    for text in norm.fillna(""):
+        words = text.split()
+        tags = tagger.tag_words(words)
+        masked, _ = mentions_from_word_iob(words, tags)
+        words_col.append(words)
+        iob_col.append(tags)
+        masked_col.append(masked)
+    return words_col, iob_col, masked_col
+
+
+def _assert_tag_equal(norm: pd.Series, tagger: GazetteerTagger) -> None:
+    got = BatchMatcher.from_tagger(tagger).tag_batch(norm)
+    want = _reference_tag(norm, tagger)
+    assert got == want
+
+
+def test_tag_batch_corpus_differential():
+    from remediner_spark.kernels import webtext
+    from remediner_spark.kernels.normalize import normalize_series
+    from remediner_spark.sources.corpus import (
+        drug_lexicon,
+        effect_lexicon,
+        generate_pages,
+        typo_surface,
+    )
+
+    pages, _ = generate_pages(200)
+    sents = webtext.split_sentences(pages["text"])
+    norm = normalize_series(
+        pd.Series([s for lst in sents for s in lst], dtype=object)
+    )
+    drugs = drug_lexicon()
+    tagger = GazetteerTagger(
+        drugs + [typo_surface(d) for d in drugs], effect_lexicon()
+    )
+    _assert_tag_equal(norm, tagger)
+    # case sensitivity: words keep original case, matching is folded
+    _assert_tag_equal(
+        pd.Series(["DORVAX caused Nauseola", "", "plain text only"]),
+        tagger,
+    )
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.lists(
+        st.lists(st.sampled_from(_VOCAB), min_size=0, max_size=12),
+        min_size=1,
+        max_size=8,
+    )
+)
+def test_tag_batch_hypothesis_differential(sentences):
+    norm = pd.Series([" ".join(ws) for ws in sentences], dtype=object)
+    _assert_tag_equal(norm, GazetteerTagger(_DRUGS, _EFFECTS))
+
+
 def test_space_split_mode():
     """split(' ') mode (the docpipe/oracle string_split semantics):
     empty tokens survive double spaces and break match adjacency,
