@@ -3,11 +3,12 @@
 Usage:
     spark-submit --py-files remediner_spark.zip job.py \
         --corpus-dir /path/with/pages.parquet --out /path/out \
-        [--gold] [--cores 32]
+        [--gold] [--graph] [--model gazetteer|numpy-bert] [--cores 32]
 
 Runs: scan -> lang filter -> HTML extraction (byte-identity checked) ->
 fused segmentation/NER/RE triple extraction -> writes triples parquet,
-prints one JSON metrics line to stdout.
+prints one JSON metrics line to stdout. ``--graph`` runs the checkpointed
+pipeline instead; ``--gold`` scores either path's CAUSES triples.
 """
 
 from __future__ import annotations
@@ -58,22 +59,7 @@ def main(argv: list[str] | None = None) -> int:
     from remediner_spark.session import get_spark
 
     spark = get_spark(app_name="remediner-job", cores=args.cores)
-    if args.graph:
-        from remediner_spark.plans.pipeline import run_pipeline
-
-        t0 = time.time()
-        metrics = run_pipeline(spark, args.corpus_dir, args.out)
-        metrics["elapsed_sec"] = round(time.time() - t0, 2)
-        print(json.dumps(metrics))
-        spark.stop()
-        return 0
     t0 = time.time()
-    pages = spark.read.parquet(f"{args.corpus_dir}/pages.parquet")
-    # cache the filtered slice: it feeds three actions (invariant check,
-    # page count, triple extraction) — one scan+filter instead of three
-    english = filter_language(pages).cache()
-    n_pages = english.count()
-    mismatches = extraction_mismatch_count(english)
     if args.model == "numpy-bert":
         from remediner_spark.operators.bert_stub import NumpyBertTagger
 
@@ -82,24 +68,40 @@ def main(argv: list[str] | None = None) -> int:
         from remediner_spark.plans.pipeline import default_tagger_bc
 
         tagger_bc = default_tagger_bc(spark)
-    # extraction is fused into the triple stage (html in, triples out)
-    triples = with_inverse_triples(
-        extract_triples_stage(english, tagger_bc, extract_html=True)
-    )
-    triples.write.mode("overwrite").partitionBy("pred").parquet(
-        f"{args.out}/triples"
-    )
-    n_triples = spark.read.parquet(f"{args.out}/triples").count()
-    english.unpersist()
-    elapsed = time.time() - t0
+    if args.graph:
+        from remediner_spark.plans.pipeline import run_pipeline
+        from remediner_spark.sources.table import read_table
 
-    metrics = {
-        "n_pages_en": n_pages,
-        "extraction_mismatches": mismatches,
-        "n_triples": n_triples,
-        "elapsed_sec": round(elapsed, 2),
-        "triples_per_sec": round(n_triples / elapsed, 1),
-    }
+        metrics = run_pipeline(spark, args.corpus_dir, args.out, tagger_bc=tagger_bc)
+        metrics["elapsed_sec"] = round(time.time() - t0, 2)
+        mismatches = 0
+        out_triples = read_table(spark, f"{args.out}/triples_out")
+    else:
+        pages = spark.read.parquet(f"{args.corpus_dir}/pages.parquet")
+        # cache the filtered slice: it feeds three actions (invariant
+        # check, page count, triple extraction) — one scan+filter
+        # instead of three
+        english = filter_language(pages).cache()
+        n_pages = english.count()
+        mismatches = extraction_mismatch_count(english)
+        # extraction is fused into the triple stage (html in, triples out)
+        triples = with_inverse_triples(
+            extract_triples_stage(english, tagger_bc, extract_html=True)
+        )
+        triples.write.mode("overwrite").partitionBy("pred").parquet(
+            f"{args.out}/triples"
+        )
+        out_triples = spark.read.parquet(f"{args.out}/triples")
+        n_triples = out_triples.count()
+        english.unpersist()
+        elapsed = time.time() - t0
+        metrics = {
+            "n_pages_en": n_pages,
+            "extraction_mismatches": mismatches,
+            "n_triples": n_triples,
+            "elapsed_sec": round(elapsed, 2),
+            "triples_per_sec": round(n_triples / elapsed, 1),
+        }
     if args.gold:
         import pandas as pd
 
@@ -108,9 +110,7 @@ def main(argv: list[str] | None = None) -> int:
 
         ann = pd.read_parquet(f"{args.corpus_dir}/ade_annotations.parquet")
         gold = spark.createDataFrame(gold_triples(ann))
-        causes = spark.read.parquet(f"{args.out}/triples").filter(
-            "pred = 'CAUSES'"
-        )
+        causes = out_triples.filter("pred = 'CAUSES'")
         metrics.update(triple_precision_recall(causes, gold))
     print(json.dumps(metrics))
     spark.stop()

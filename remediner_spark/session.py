@@ -14,6 +14,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from remediner_spark import workerd
+
+# the directory or zip the package imports from: the daemon module must
+# import before any task adds a --py-files archive to a worker's path
+_IMPORT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(workerd.__file__)))
+
 
 def get_spark(
     app_name: str = "remediner-spark",
@@ -40,6 +46,10 @@ def get_spark(
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Python workers import pyspark from its byte-compiled install
+        # when it is identical to pyspark.zip (workerd.py)
+        .config("spark.python.daemon.module", workerd.__name__)
+        .config("spark.executorEnv.PYTHONPATH", _IMPORT_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

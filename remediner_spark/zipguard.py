@@ -10,6 +10,10 @@ an importer's first invalidation, when the archive's
 or deleted archive is still re-read, exactly as before. Installed only
 in a reused worker process, which every UDF closure of the package
 imports it into; on 3.13+ (lazy invalidation) this module does nothing.
+
+The archives left on a worker's path are the py4j zip, the spark-core
+jar, a ``--py-files`` zip, and pyspark.zip when ``workerd.py`` keeps it
+(the installed pyspark is missing or differs from it).
 """
 
 from __future__ import annotations
