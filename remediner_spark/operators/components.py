@@ -204,7 +204,7 @@ LEFT JOIN keeper k ON k.component = c.component"""
 # Iterative rank propagation is the second classic iterative graph
 # primitive after components. Floating-point PageRank is NOT
 # cross-engine reproducible (aggregation order changes the last ulp),
-# so ranks are fixed-point integers: contribution = r // deg and
+# so ranks are fixed-point integers: contribution = r * w // ow and
 # new_r = BASE + (85 * sum) // 100 use only integer division and
 # integer sums — commutative and exact in both engines, making the
 # whole iteration hash-checkable. Iterations are a driver loop in
@@ -217,40 +217,80 @@ PR_BASE = (15 * PR_SCALE) // 100
 
 
 def pagerank_fixed_point(
-    edges: DataFrame, iters: int = PR_ITERS
+    edges: DataFrame, dangling: bool = False
 ) -> DataFrame:
-    """edges(src, dst) -> (node, rank_fp): integer fixed-point
-    PageRank after `iters` rounds, damping 0.85, start rank PR_SCALE."""
+    """edges(src, dst[, w]) -> (node, rank_fp): integer fixed-point
+    PageRank after PR_ITERS rounds, damping 0.85, start rank PR_SCALE.
+
+    Rank flows in proportion to the INTEGER edge weight: each edge
+    carries r * w div ow, ow = sum(w) over its src. Without a w column
+    every row weighs 1, so a duplicate row is one more unit of weight
+    and the contribution is exactly r div out-degree.
+
+    dangling=False ranks the sources only. dangling=True ranks
+    src ∪ dst and recycles the mass of the sinks (nodes with no
+    outlink): each round every node also receives D div N, D the
+    sinks' summed rank (a 1-row agg broadcast into the update) and N
+    the node count, remainder dropped as in the SQL oracles. Per
+    round: one edge-grain join + groupBy(dst), plus that scalar agg
+    when dangling."""
     edges = edges.localCheckpoint()
+    w = "w" if "w" in edges.columns else "1"
+    nodes = edges.select(F.col("src").alias("node"))
+    if dangling:
+        nodes = nodes.unionAll(edges.select(F.col("dst").alias("node")))
     # the node set is a loop constant: checkpoint it once instead of
     # re-running the distinct from the edge checkpoint in every
-    # round's plan (pre-joining deg into the edge list was also tried:
+    # round's plan (pre-joining ow into the edge list was also tried:
     # the extra edge-grain materialization cost more than the cheap
-    # per-round broadcast deg join it replaced)
-    nodes = (
-        edges.select(F.col("src").alias("node")).distinct().localCheckpoint()
-    )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    # per-round broadcast ow join it replaced)
+    nodes = nodes.distinct().localCheckpoint()
+    ow = edges.groupBy("src").agg(F.expr(f"sum({w})").alias("ow"))
+    inflow = "coalesce(s, 0)"
+    if dangling:
+        n_nodes = nodes.count()  # plan constant (1 driver scalar)
+        sinks = nodes.join(
+            edges.select("src").distinct(),
+            nodes["node"] == F.col("src"),
+            "left_anti",
+        )
+        inflow = f"(coalesce(s, 0) + _d div {n_nodes})"
     ranks = nodes.withColumn("r", F.lit(PR_SCALE).cast("long"))
-    for _ in range(iters):
+    for _ in range(PR_ITERS):
         contrib = (
             edges.join(ranks, edges["src"] == ranks["node"])
-            .join(deg, "src")
-            .select(F.col("dst"), F.expr("r div deg").alias("c"))
+            .join(ow, "src")
+            .select(F.col("dst"), F.expr(f"r * {w} div ow").alias("c"))
         )
         summed = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        ranks = (
-            nodes.join(summed, nodes["node"] == summed["dst"], "left")
-            .select(
-                "node",
-                (
-                    F.lit(PR_BASE)
-                    + F.expr("(85 * coalesce(s, 0)) div 100")
-                ).cast("long").alias("r"),
+        new = nodes.join(summed, nodes["node"] == summed["dst"], "left")
+        if dangling:
+            d = ranks.join(sinks, "node", "left_semi").agg(
+                F.coalesce(F.sum("r"), F.lit(0)).alias("_d")
             )
-            .localCheckpoint()  # truncate lineage per round
-        )
+            new = new.crossJoin(F.broadcast(d))
+        ranks = new.select(
+            "node",
+            (F.lit(PR_BASE) + F.expr(f"(85 * {inflow}) div 100"))
+            .cast("long")
+            .alias("r"),
+        ).localCheckpoint()  # truncate lineage per round
     return ranks.select("node", F.col("r").alias("rank_fp"))
+
+
+def _both_directions(pairs: DataFrame, src: str, dst: str) -> DataFrame:
+    """pairs(doc_a, doc_b) -> (src, dst): each pair in both directions,
+    emitted from ONE pass over pairs (inline over a two-struct array) —
+    a self-union would run the whole Jaccard pair subtree once per
+    branch."""
+    return pairs.select(
+        F.inline(
+            F.array(
+                F.struct(F.col("doc_a").alias(src), F.col("doc_b").alias(dst)),
+                F.struct(F.col("doc_b").alias(src), F.col("doc_a").alias(dst)),
+            )
+        )
+    )
 
 
 def q_graph_pagerank(spark, sf_dir: str) -> DataFrame:
@@ -258,13 +298,9 @@ def q_graph_pagerank(spark, sf_dir: str) -> DataFrame:
     undirected exact-Jaccard pair graph."""
     from .dedup import q_dedup_ngram_jaccard
 
-    pairs = q_dedup_ngram_jaccard(spark, sf_dir)
-    edges = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).unionByName(
-        pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    )
-    return pagerank_fixed_point(edges).withColumnRenamed("node", "doc_id")
+    return pagerank_fixed_point(
+        _both_directions(q_dedup_ngram_jaccard(spark, sf_dir), "src", "dst")
+    ).withColumnRenamed("node", "doc_id")
 
 
 def sql_graph_pagerank() -> str:
@@ -313,11 +349,8 @@ def q_graph_khop(spark, sf_dir: str) -> DataFrame:
     k-hop neighborhood, not the graph."""
     from .dedup import q_dedup_ngram_jaccard
 
-    pairs = q_dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    edges = pairs.unionByName(
-        pairs.select(
-            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-        )
+    edges = _both_directions(
+        q_dedup_ngram_jaccard(spark, sf_dir), "doc_a", "doc_b"
     ).dropDuplicates()
     # deterministic non-empty source set: the lowest participating ids
     srcs = (

@@ -12,9 +12,11 @@ Scale shape at 10^12 docs:
   column inside whole-stage codegen, no Python hop, map-only;
 * edge aggregation shuffles on (src, dst) with map-side partial
   counts — edge-grain, the unavoidable minimum;
-* PageRank reuses components.pagerank_fixed_point: integer fixed-point
-  arithmetic (cross-engine exact), per-round localCheckpoint lineage
-  truncation, join-on-src + groupBy-dst rounds — O(E) per round.
+* every PageRank here (internal, weighted, dangling, host rank,
+  frontier priority) runs the one kernel components.pagerank_fixed_point:
+  integer fixed-point arithmetic (cross-engine exact), per-round
+  localCheckpoint lineage truncation, join-on-src + groupBy-dst rounds
+  — O(E) per round.
 
 Oracle: DuckDB runs the IDENTICAL extraction (decode(blob) +
 regexp_extract_all group 1) and the same fixed-point rounds as
@@ -159,12 +161,9 @@ WITH {_sql_hrefs()},
 SELECT node AS url, r AS rank_fp FROM r{PR_ITERS}"""
 
 
-def pagerank_weighted_fixed_point(
-    edges: DataFrame, iters: int = PR_ITERS
-) -> DataFrame:
-    """edges(src, dst, w) with INTEGER weights -> (node, rank_fp):
-    weighted PageRank, damping 0.85 — rank flows proportional to edge
-    weight (r * w div out_weight, integer-exact cross-engine).
+def q_web_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Weighted PageRank over the internal document graph: rank flows
+    proportional to the href multiplicity n_links.
 
     The production form for dense sites: q_web_link_pagerank preserves
     multiplicity as duplicate edge rows, so a page linking a target
@@ -174,36 +173,10 @@ def pagerank_weighted_fixed_point(
     keeping the same mass semantics. Not bit-identical to the
     duplicate-row form (r*w div ow vs summing w copies of r div ow —
     integer division rounds once vs w times), hence its own oracle."""
-    edges = edges.localCheckpoint()
-    nodes = edges.select(F.col("src").alias("node")).distinct()
-    ow = edges.groupBy("src").agg(F.sum("w").alias("ow"))
-    ranks = nodes.withColumn("r", F.lit(PR_SCALE).cast("long"))
-    for _ in range(iters):
-        contrib = (
-            edges.join(ranks, edges["src"] == ranks["node"])
-            .join(ow, "src")
-            .select(F.col("dst"), F.expr("r * w div ow").alias("c"))
-        )
-        summed = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        ranks = (
-            nodes.join(summed, nodes["node"] == summed["dst"], "left")
-            .select(
-                "node",
-                (
-                    F.lit(PR_BASE)
-                    + F.expr("(85 * coalesce(s, 0)) div 100")
-                ).cast("long").alias("r"),
-            )
-            .localCheckpoint()  # truncate lineage per round
-        )
-    return ranks.select("node", F.col("r").alias("rank_fp"))
-
-
-def q_web_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     lg = link_graph(_fixture_pages(spark)).where(
         F.col("dst_url").startswith(_INTERNAL_PREFIX)
     )
-    return pagerank_weighted_fixed_point(
+    return pagerank_fixed_point(
         lg.select(
             F.col("src_url").alias("src"),
             F.col("dst_url").alias("dst"),
@@ -240,70 +213,13 @@ r0 AS (SELECT node, CAST({PR_SCALE} AS BIGINT) AS r FROM nodes),
 SELECT node AS url, r AS rank_fp FROM r{PR_ITERS}"""
 
 
-def pagerank_dangling_fixed_point(
-    edges: DataFrame, iters: int = PR_ITERS
-) -> DataFrame:
-    """Full-graph PageRank with DANGLING-mass redistribution: nodes
-    are src ∪ dst, and a node with no outlinks (an asset URL, a
-    PDF, an uncrawled target) donates its rank equally to every node
-    each round — the textbook correction q_web_link_pagerank skips by
-    ranking only crawl-internal sources. Integer fixed-point: the
-    dangling sum D is a 1-row agg broadcast into the update, each
-    node receives D div N (remainder dropped — deterministic,
-    mirrored in SQL), so rounds stay cross-engine exact. Cost per
-    round: the same edge-grain join + groupBy, plus one scalar agg
-    over the sink nodes."""
-    edges = edges.localCheckpoint()
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_nodes = nodes.count()  # plan constant (1 driver scalar)
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    sinks = nodes.join(
-        edges.select("src").distinct(),
-        nodes["node"] == F.col("src"),
-        "left_anti",
-    )
-    ranks = nodes.withColumn("r", F.lit(PR_SCALE).cast("long"))
-    for _ in range(iters):
-        dangling = (
-            ranks.join(sinks.select("node"), "node", "left_semi")
-            .agg(F.coalesce(F.sum("r"), F.lit(0)).alias("_d"))
-        )
-        contrib = (
-            edges.join(ranks, edges["src"] == ranks["node"])
-            .join(deg, "src")
-            .select(F.col("dst"), F.expr("r div deg").alias("c"))
-        )
-        summed = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        ranks = (
-            nodes.join(summed, nodes["node"] == summed["dst"], "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit(PR_BASE)
-                    + F.expr(
-                        f"(85 * (coalesce(s, 0) + _d div {n_nodes}))"
-                        " div 100"
-                    )
-                ).cast("long").alias("r"),
-            )
-            .localCheckpoint()
-        )
-    return ranks.select("node", F.col("r").alias("rank_fp"))
-
-
 def q_web_pagerank_dangling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rank the FULL crawl graph — pages and the asset URLs they link
     (genuine sinks: no outlinks) — with dangling-mass redistribution."""
     edges = extract_outlinks(_fixture_pages(spark)).select(
         F.col("src_url").alias("src"), F.col("dst_url").alias("dst")
     )
-    return pagerank_dangling_fixed_point(edges).withColumnRenamed(
+    return pagerank_fixed_point(edges, dangling=True).withColumnRenamed(
         "node", "url"
     )
 
@@ -340,65 +256,6 @@ r0 AS (SELECT node, CAST({PR_SCALE} AS BIGINT) AS r FROM nodes),
 SELECT node AS url, r AS rank_fp FROM r{PR_ITERS}"""
 
 
-def pagerank_weighted_dangling_fixed_point(
-    edges: DataFrame, iters: int = PR_ITERS
-) -> DataFrame:
-    """edges(src, dst, w), INTEGER weights -> (node, rank_fp): weighted
-    PageRank over the FULL node set (src ∪ dst) with dangling-mass
-    redistribution — the Common-Crawl host-rank artifact (hosts that
-    only ever appear as link targets are genuine sinks whose mass must
-    be recycled, and inter-host multiplicity is enormous so edges must
-    be weight-collapsed, never duplicate rows).
-
-    Integer fixed-point throughout (r * w div ow per edge, the 1-row
-    dangling sum D broadcast and each node credited D div N), so both
-    engines compute bit-identical scores. Per round: one weighted-edge
-    join + groupBy (distinct-edge-grain, the minimum) plus a scalar
-    agg over the sinks."""
-    edges = edges.localCheckpoint()
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_nodes = nodes.count()  # plan constant (1 driver scalar)
-    ow = edges.groupBy("src").agg(F.sum("w").alias("ow"))
-    sinks = nodes.join(
-        edges.select("src").distinct(),
-        nodes["node"] == F.col("src"),
-        "left_anti",
-    )
-    ranks = nodes.withColumn("r", F.lit(PR_SCALE).cast("long"))
-    for _ in range(iters):
-        dangling = (
-            ranks.join(sinks.select("node"), "node", "left_semi")
-            .agg(F.coalesce(F.sum("r"), F.lit(0)).alias("_d"))
-        )
-        contrib = (
-            edges.join(ranks, edges["src"] == ranks["node"])
-            .join(ow, "src")
-            .select(F.col("dst"), F.expr("r * w div ow").alias("c"))
-        )
-        summed = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        ranks = (
-            nodes.join(summed, nodes["node"] == summed["dst"], "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit(PR_BASE)
-                    + F.expr(
-                        f"(85 * (coalesce(s, 0) + _d div {n_nodes}))"
-                        " div 100"
-                    )
-                ).cast("long").alias("r"),
-            )
-            .localCheckpoint()
-        )
-    return ranks.select("node", F.col("r").alias("rank_fp"))
-
-
 def q_web_host_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Host-level PageRank: the host graph's weight-collapsed edges
     (self-loops dropped — intra-host navigation is not reputation)
@@ -415,7 +272,7 @@ def q_web_host_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("w"))
     )
-    return pagerank_weighted_dangling_fixed_point(we).withColumnRenamed(
+    return pagerank_fixed_point(we, dangling=True).withColumnRenamed(
         "node", "host"
     )
 
@@ -696,7 +553,7 @@ def q_web_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hits_fixed_point(edges).withColumnRenamed("node", "url")
 
 
-def hits_fixed_point(edges: DataFrame, iters: int = HITS_ITERS) -> DataFrame:
+def hits_fixed_point(edges: DataFrame) -> DataFrame:
     """edges(src, dst), distinct, self-loop-free -> (node, hub_fp,
     auth_fp) integer fixed-point HITS scores."""
     edges = edges.localCheckpoint()
@@ -724,7 +581,7 @@ def hits_fixed_point(edges: DataFrame, iters: int = HITS_ITERS) -> DataFrame:
         )
 
     auth = None
-    for _ in range(iters):
+    for _ in range(HITS_ITERS):
         a_raw = (
             edges.join(hubs, edges["src"] == hubs["node"])
             .groupBy("dst")
@@ -1107,7 +964,7 @@ FROM ({sql_crawl_frontier_polite()})"""
 LPA_ITERS = 3
 
 
-def lpa_communities(edges_und: DataFrame, iters: int = LPA_ITERS) -> DataFrame:
+def lpa_communities(edges_und: DataFrame) -> DataFrame:
     """Deterministic synchronous label propagation (Raghavan et al.):
     every node starts labeled with itself; each round it adopts the
     most frequent label among its neighbors, ties broken by the
@@ -1121,7 +978,7 @@ def lpa_communities(edges_und: DataFrame, iters: int = LPA_ITERS) -> DataFrame:
     edges_und = edges_und.localCheckpoint()
     nodes = edges_und.select(F.col("src").alias("node")).distinct()
     labels = nodes.withColumn("label", F.col("node"))
-    for _ in range(iters):
+    for _ in range(LPA_ITERS):
         counts = (
             edges_und.join(labels, edges_und["src"] == labels["node"])
             .groupBy(F.col("dst"), F.col("label"))

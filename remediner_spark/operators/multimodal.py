@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import struct
 import zlib
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -245,18 +245,19 @@ def encode_ppm_bytes(doc_id: int) -> bytes:
     return f"P6\n{w} {h}\n255\n".encode() + px.tobytes()
 
 
-def with_ppm_payload(docs: DataFrame) -> DataFrame:
-    """First Python hop: synthesize the binary image column (stands in
-    for reading real image bytes from a source table)."""
+def _synth_payload(
+    docs: DataFrame, encode: Callable[[int], bytes]
+) -> DataFrame:
+    """First Python hop: synthesize the binary payload column with
+    ``encode(doc_id)`` (stands in for reading real image, audio or
+    video bytes from a source table)."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
-                    "payload": [
-                        encode_ppm_bytes(int(i)) for i in pdf["doc_id"]
-                    ],
+                    "payload": [encode(int(i)) for i in pdf["doc_id"]],
                 }
             )
 
@@ -288,7 +289,7 @@ def decode_real_stage(docs_with_payload: DataFrame) -> DataFrame:
 
 def q_mm_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    return decode_real_stage(with_ppm_payload(docs))
+    return decode_real_stage(_synth_payload(docs, encode_ppm_bytes))
 
 
 def _sql_channel_sum(ch: int) -> str:
@@ -393,21 +394,6 @@ def encode_wav_bytes(doc_id: int) -> bytes:
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def with_wav_payload(docs: DataFrame) -> DataFrame:
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        encode_wav_bytes(int(i)) for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(fn, "doc_id long, payload binary")
-
-
 def decode_wav_stage(docs_with_payload: DataFrame) -> DataFrame:
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -430,7 +416,7 @@ def decode_wav_stage(docs_with_payload: DataFrame) -> DataFrame:
 
 def q_mm_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    return decode_wav_stage(with_wav_payload(docs))
+    return decode_wav_stage(_synth_payload(docs, encode_wav_bytes))
 
 
 def _sql_wav_sum(ch_expr: str) -> str:
@@ -479,21 +465,6 @@ def encode_y4m_bytes(doc_id: int) -> bytes:
     return b"".join(out)
 
 
-def with_y4m_payload(docs: DataFrame) -> DataFrame:
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        encode_y4m_bytes(int(i)) for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(fn, "doc_id long, payload binary")
-
-
 def frame_sample_stage(docs_with_payload: DataFrame) -> DataFrame:
     """Video frame-sampling: decode the clip, keep every FRAME_STRIDE-th
     frame, emit one row per kept frame with its luma sum — the
@@ -528,7 +499,7 @@ def q_mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
     # two hops on purpose: the clip payload genuinely crosses Arrow as
     # a binary column between the synth stage and the decode stage
-    return frame_sample_stage(with_y4m_payload(docs))
+    return frame_sample_stage(_synth_payload(docs, encode_y4m_bytes))
 
 
 SQL_MM_FRAME_SAMPLE = f"""
@@ -577,7 +548,7 @@ def resize_stage(docs_with_payload: DataFrame) -> DataFrame:
 
 def q_mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    return resize_stage(with_ppm_payload(docs))
+    return resize_stage(_synth_payload(docs, encode_ppm_bytes))
 
 
 def _sql_resize_sum(ch: int) -> str:
@@ -816,28 +787,13 @@ def encode_png_bytes(doc_id: int) -> bytes:
     )
 
 
-def with_png_payload(docs: DataFrame) -> DataFrame:
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        encode_png_bytes(int(i)) for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(fn, "doc_id long, payload binary")
-
-
 def q_mm_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PPM gate shape over REAL compressed payloads: synthesize a
     PNG per document, decode through the dispatcher (signature ->
     chunk walk -> inflate -> unfilter), emit dims + channel sums the
     DuckDB oracle recomputes from the closed form."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    return decode_real_stage(with_png_payload(docs))
+    return decode_real_stage(_synth_payload(docs, encode_png_bytes))
 
 
 SQL_MM_DECODE_PNG = f"""

@@ -84,6 +84,30 @@ class TestLinkGraph:
         # the most-linked-to pages outrank the median page
         assert max(r1.values()) > int(np.median(list(r1.values())))
 
+    @pytest.mark.parametrize("dangling", [False, True])
+    def test_pagerank_unit_weight_column_is_no_weight(
+        self, spark, pages_df, dangling
+    ):
+        """A (src, dst) edge list and the same rows with a w = 1 column
+        rank identically: each row is one unit of weight, so duplicate
+        hrefs keep their multiplicity either way."""
+        from pyspark.sql import functions as F
+
+        from remediner_spark.operators.components import (
+            pagerank_fixed_point,
+        )
+        from remediner_spark.operators.linkgraph import extract_outlinks
+
+        edges = extract_outlinks(pages_df).select(
+            F.col("src_url").alias("src"), F.col("dst_url").alias("dst")
+        )
+        plain = pagerank_fixed_point(edges, dangling=dangling).collect()
+        unit = pagerank_fixed_point(
+            edges.withColumn("w", F.lit(1)), dangling=dangling
+        ).collect()
+        assert len(plain) == (80 if dangling else 60)
+        assert sorted(plain) == sorted(unit)
+
 
 class TestTriangleCensus:
     def test_k4_census(self, spark):
@@ -279,9 +303,10 @@ class TestHostRank:
         rank recycles equally to all three nodes (integer div), so the
         dangling correction is visible as hub rank above the 150k
         no-inlink floor."""
-        from remediner_spark.operators.components import PR_BASE, PR_SCALE
-        from remediner_spark.operators.linkgraph import (
-            pagerank_weighted_dangling_fixed_point,
+        from remediner_spark.operators.components import (
+            PR_BASE,
+            PR_SCALE,
+            pagerank_fixed_point,
         )
 
         e = spark.createDataFrame(
@@ -289,7 +314,7 @@ class TestHostRank:
         )
         r = {
             x["node"]: x["rank_fp"]
-            for x in pagerank_weighted_dangling_fixed_point(e).collect()
+            for x in pagerank_fixed_point(e, dangling=True).collect()
         }
         assert set(r) == {"hub", "a", "b"}
         # replay one round by hand: d0 = 2*SCALE (both sinks), each node
@@ -300,9 +325,60 @@ class TestHostRank:
         # deterministic repeat (integer fixed point)
         r2 = {
             x["node"]: x["rank_fp"]
-            for x in pagerank_weighted_dangling_fixed_point(e).collect()
+            for x in pagerank_fixed_point(e, dangling=True).collect()
         }
         assert r == r2
+
+
+class TestPageRankConfs:
+    CONFS = (
+        ("spark.sql.adaptive.enabled", "false"),
+        ("spark.sql.autoBroadcastJoinThreshold", "-1"),
+    )
+
+    def test_call_shapes_identical_across_confs(self, spark, monkeypatch):
+        """The five call shapes of the one PageRank kernel (duplicate
+        rows, symmetric near-dup ids, weighted, dangling, weighted +
+        dangling hosts) give the same rows whatever join strategy the
+        planner picks: default, AQE off, broadcast joins off."""
+        import pandas as pd
+        from pyspark.sql import functions as F
+
+        from remediner_spark.operators import components as C
+        from remediner_spark.operators import dedup as D
+        from remediner_spark.operators import linkgraph as LG
+
+        pairs = pd.DataFrame(
+            [(i, (i * 7 + 3) % 97) for i in range(97) if i < (i * 7 + 3) % 97],
+            columns=["doc_a", "doc_b"],
+        )
+        monkeypatch.setattr(
+            D,
+            "q_dedup_ngram_jaccard",
+            lambda spark_, sf_dir: spark.createDataFrame(pairs).select(
+                F.col("doc_a").cast("long"), F.col("doc_b").cast("long")
+            ),
+        )
+        shapes = (
+            LG.q_web_link_pagerank,
+            C.q_graph_pagerank,
+            LG.q_web_pagerank_weighted,
+            LG.q_web_pagerank_dangling,
+            LG.q_web_host_rank,
+        )
+
+        def run_all():
+            return [sorted(q(spark, "").collect()) for q in shapes]
+
+        base = run_all()
+        assert all(base)
+        for key, value in self.CONFS:
+            old = spark.conf.get(key)
+            spark.conf.set(key, value)
+            try:
+                assert run_all() == base, key
+            finally:
+                spark.conf.set(key, old)
 
 
 class TestSitemap:
