@@ -278,16 +278,17 @@ def pagerank_fixed_point(
     return ranks.select("node", F.col("r").alias("rank_fp"))
 
 
-def _both_directions(pairs: DataFrame, src: str, dst: str) -> DataFrame:
-    """pairs(doc_a, doc_b) -> (src, dst): each pair in both directions,
+def _both_directions(
+    pairs: DataFrame, a: str, b: str, src: str, dst: str
+) -> DataFrame:
+    """pairs(a, b) -> (src, dst): each pair in both directions,
     emitted from ONE pass over pairs (inline over a two-struct array) —
-    a self-union would run the whole Jaccard pair subtree once per
-    branch."""
+    a self-union would run the whole pair subtree once per branch."""
     return pairs.select(
         F.inline(
             F.array(
-                F.struct(F.col("doc_a").alias(src), F.col("doc_b").alias(dst)),
-                F.struct(F.col("doc_b").alias(src), F.col("doc_a").alias(dst)),
+                F.struct(F.col(a).alias(src), F.col(b).alias(dst)),
+                F.struct(F.col(b).alias(src), F.col(a).alias(dst)),
             )
         )
     )
@@ -299,7 +300,9 @@ def q_graph_pagerank(spark, sf_dir: str) -> DataFrame:
     from .dedup import q_dedup_ngram_jaccard
 
     return pagerank_fixed_point(
-        _both_directions(q_dedup_ngram_jaccard(spark, sf_dir), "src", "dst")
+        _both_directions(
+            q_dedup_ngram_jaccard(spark, sf_dir), "doc_a", "doc_b", "src", "dst"
+        )
     ).withColumnRenamed("node", "doc_id")
 
 
@@ -350,7 +353,8 @@ def q_graph_khop(spark, sf_dir: str) -> DataFrame:
     from .dedup import q_dedup_ngram_jaccard
 
     edges = _both_directions(
-        q_dedup_ngram_jaccard(spark, sf_dir), "doc_a", "doc_b"
+        q_dedup_ngram_jaccard(spark, sf_dir),
+        "doc_a", "doc_b", "doc_a", "doc_b",
     ).dropDuplicates()
     # deterministic non-empty source set: the lowest participating ids
     srcs = (

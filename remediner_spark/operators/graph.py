@@ -5,10 +5,12 @@ corpus) make the final groupBy hot-keyed. count/sum aggregations get
 map-side partial aggregation from Spark automatically, but
 ``collect_set`` (sample URLs) does not reduce skew — one reducer still
 receives every instance of the head key. Per the north rule
-(BASELINE.json:14, "skew handled explicitly") the aggregations here run
-**salted two-phase**: stage 1 groups on (key, salt) with bounded
-partial sets, stage 2 merges the S partials per key. Equality with the
-unsalted plan is asserted in tests.
+(BASELINE.json:14, "skew handled explicitly") the one corpus-grain
+aggregation here (surface_pairs) runs **salted two-phase**: stage 1
+groups on (surface pair, salt) with bounded partial sets, stage 2
+merges the S partials per pair. Everything after it — linking, the
+surface->id merge, nodes — runs on vocabulary-sized tables
+(graph_frames). Equality with the unsalted plan is asserted in tests.
 
 Output schemas (FIXTURES.md §4):
     nodes(entity_id, canonical_name, entity_type, n_mentions)
@@ -20,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .linking import link_surfaces
 from .textstats import md5_hash60_expr, md5_hash60_sql
 
 # salt buckets bound how many tasks a hot key's partial state can
@@ -71,39 +74,92 @@ def with_entity_ids(linked_mentions: DataFrame) -> DataFrame:
     )
 
 
-def build_edges(
-    linked_triples: DataFrame, salt_buckets: int = DEFAULT_SALT_BUCKETS
-) -> DataFrame:
-    """linked triples (subj_id, pred, obj_id, url, warc_ts) -> edges.
-
-    Salted two-phase: per-(edge, salt) partials keep collect_set bounded
-    (each partial keeps only its SAMPLE_URLS smallest urls before the
-    merge), then a cheap second agg over at most `salt_buckets` rows
-    per edge. Sampling is DETERMINISTIC (the lexicographically smallest
-    SAMPLE_URLS urls of the edge): every partial retains its local
-    smallest-k, so the merged smallest-k is exact regardless of
+def _merge_samples(partials: DataFrame, keys: list[str]) -> DataFrame:
+    """Merge (weight, first_seen, sample_urls) rows per ``keys``:
+    summed weight, earliest first_seen, and the SAMPLE_URLS smallest
+    urls of the union of the partial samples. Every partial keeps its
+    own smallest-k, so the merged smallest-k is exact (any url of the
+    global smallest-k is in its partial's smallest-k) regardless of
     partition arrival order — reproducible across retries and cluster
-    layouts, and oracle-checkable.
-    """
-    partial = (
-        linked_triples.withColumn("_salt", _salt(salt_buckets))
-        .groupBy("subj_id", "pred", "obj_id", "_salt")
-        .agg(
-            F.count(F.lit(1)).alias("_w"),
-            F.min("warc_ts").alias("_first"),
-            F.slice(
-                F.array_sort(F.collect_set("url")), 1, SAMPLE_URLS
-            ).alias("_urls"),
-        )
-    )
-    return partial.groupBy("subj_id", "pred", "obj_id").agg(
-        F.sum("_w").alias("weight"),
-        F.min("_first").alias("first_seen"),
+    layouts, and oracle-checkable."""
+    return partials.groupBy(*keys).agg(
+        F.sum("weight").alias("weight"),
+        F.min("first_seen").alias("first_seen"),
         F.slice(
-            F.array_sort(F.array_distinct(F.flatten(F.collect_list("_urls")))),
+            F.array_sort(
+                F.array_distinct(F.flatten(F.collect_list("sample_urls")))
+            ),
             1,
             SAMPLE_URLS,
         ).alias("sample_urls"),
+    )
+
+
+def surface_pairs(
+    triples: DataFrame, salt_buckets: int = DEFAULT_SALT_BUCKETS
+) -> DataFrame:
+    """CAUSES triples (subj, obj, url, warc_ts) -> one row per (subj,
+    obj) surface pair with its weight, first_seen and sample_urls: the
+    only corpus-grain work of the graph build.
+
+    Salted two-phase: per-(pair, salt) partials keep collect_set
+    bounded (each keeps only its SAMPLE_URLS smallest urls), then
+    _merge_samples runs over at most `salt_buckets` rows per pair.
+    Sampling is DETERMINISTIC: the lexicographically smallest
+    SAMPLE_URLS urls of the pair."""
+    partial = (
+        triples.filter(F.col("pred") == "CAUSES")
+        .withColumn("_salt", _salt(salt_buckets))
+        .groupBy("subj", "obj", "_salt")
+        .agg(
+            F.count(F.lit(1)).alias("weight"),
+            F.min("warc_ts").alias("first_seen"),
+            F.slice(
+                F.array_sort(F.collect_set("url")), 1, SAMPLE_URLS
+            ).alias("sample_urls"),
+        )
+    )
+    return _merge_samples(partial, ["subj", "obj"])
+
+
+def _pair_surfaces(pairs: DataFrame) -> DataFrame:
+    """surface pairs -> (surface_norm, entity_type, weight), one row
+    per side: subj as DRUG, obj as EFFECT."""
+    side = F.array(
+        F.struct(
+            F.col("subj").alias("surface_norm"),
+            F.lit("DRUG").alias("entity_type"),
+            "weight",
+        ),
+        F.struct(
+            F.col("obj").alias("surface_norm"),
+            F.lit("EFFECT").alias("entity_type"),
+            "weight",
+        ),
+    )
+    return pairs.select(F.inline(side))
+
+
+def build_edges(pairs: DataFrame, surface_links: DataFrame) -> DataFrame:
+    """surface pairs + the vocabulary-grain link table -> edges(subj_id,
+    pred, obj_id, weight, first_seen, sample_urls).
+
+    Surfaces map to ids through broadcast DRUG/EFFECT maps; alias
+    surfaces of one canonical entity share an id, so the pairs regroup
+    per id pair through the same exact smallest-k merge."""
+    ids = with_entity_ids(surface_links)
+    drugs = ids.filter(F.col("entity_type") == "DRUG").select(
+        F.col("surface_norm").alias("subj"), F.col("entity_id").alias("subj_id")
+    )
+    effects = ids.filter(F.col("entity_type") == "EFFECT").select(
+        F.col("surface_norm").alias("obj"), F.col("entity_id").alias("obj_id")
+    )
+    linked = pairs.join(F.broadcast(drugs), "subj").join(
+        F.broadcast(effects), "obj"
+    )
+    return _merge_samples(linked, ["subj_id", "obj_id"]).select(
+        "subj_id", F.lit("CAUSES").alias("pred"), "obj_id",
+        "weight", "first_seen", "sample_urls",
     )
 
 
@@ -114,24 +170,14 @@ def nodes_from_edges(
     table: every CAUSES triple contributes exactly one subj DRUG
     mention and one obj EFFECT mention, so a node's n_mentions equals
     the sum of its edges' weights — subj side for drugs, obj side for
-    effects. This replaces a full pass over the triple set with an agg
-    over edge rows (entity-pair-vocabulary-sized), same values
-    bit-for-bit (tests/test_linking_graph.py keeps the mention-grain
-    build_nodes as the referee and pins them equal). Names/types come
-    from the broadcast id->name map derived from the vocabulary-grain
-    link table."""
+    effects. An agg over edge rows (entity-pair-vocabulary-sized)
+    instead of a pass over the triple set, same values bit-for-bit
+    (tests/test_linking_graph.py keeps the mention-grain build_nodes
+    as the referee and pins them equal). Names/types come from the
+    broadcast id->name map derived from the vocabulary-grain link
+    table."""
     id_map = (
-        surface_links.withColumn(
-            "entity_id",
-            F.coalesce(
-                F.col("canonical_id"),
-                synthetic_entity_id(F.col("surface_norm"), F.col("entity_type")),
-            ),
-        )
-        .withColumn(
-            "node_name",
-            F.coalesce(F.col("canonical_name"), F.col("surface_norm")),
-        )
+        with_entity_ids(surface_links)
         # aliases of one canonical id all carry the same name/type, and
         # synthetic ids are 1:1 with surfaces — the dedup is value-safe
         .dropDuplicates(["entity_id"])
@@ -152,42 +198,13 @@ def nodes_from_edges(
     )
 
 
-def link_triples(triples: DataFrame, linked_mentions: DataFrame) -> DataFrame:
-    """Attach canonical subj_id/obj_id to CAUSES triples via broadcast
-    surface->id maps (vocabulary-sized). Accepts either grain as the
-    link table: mention-grain link_mentions output or the distinct
-    link_surfaces table (both carry surface_norm/entity_type/
-    canonical_id) — the dropDuplicates collapses to the same map."""
-    surf_map = (
-        linked_mentions.withColumn(
-            "entity_id",
-            F.coalesce(
-                F.col("canonical_id"),
-                synthetic_entity_id(F.col("surface_norm"), F.col("entity_type")),
-            ),
-        )
-        .select("surface_norm", "entity_type", "entity_id")
-        .dropDuplicates(["surface_norm", "entity_type"])
-    )
-    drugs = surf_map.filter(F.col("entity_type") == "DRUG").select(
-        F.col("surface_norm").alias("subj"), F.col("entity_id").alias("subj_id")
-    )
-    effects = surf_map.filter(F.col("entity_type") == "EFFECT").select(
-        F.col("surface_norm").alias("obj"), F.col("entity_id").alias("obj_id")
-    )
-    return (
-        triples.filter(F.col("pred") == "CAUSES")
-        .join(F.broadcast(drugs), "subj", "left")
-        .join(F.broadcast(effects), "obj", "left")
-    )
-
-
-def build_graph(
+def graph_frames(
     triples: DataFrame,
     dictionary: DataFrame,
     salt_buckets: int = DEFAULT_SALT_BUCKETS,
-) -> tuple[DataFrame, DataFrame]:
-    """Full M7->M9 path: triples + dictionary -> (nodes, edges).
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """triples + dictionary -> (nodes, edges, surface pairs, link
+    table), the last three cached.
 
     Single-pass surface-first formulation: the only corpus-grain work
     is one salted aggregation keyed by (subj, obj) surface pair —
@@ -195,100 +212,39 @@ def build_graph(
     id-merging and nodes all run on vocabulary-sized tables after the
     aggregation. `triples` may be a lazy extraction stage (the agg
     fuses into its job) or a checkpointed parquet (plans/pipeline.py).
+    No corpus-sized intermediate is ever cached (caching the triples
+    and scanning them twice measured ~10.5s vs ~9s cold at sf0.1/32c).
     """
-    # ONE pass over the triple stream, no corpus-grain cache anywhere:
-    # the salted aggregation runs keyed by SURFACE pair first (fused
-    # into the same job as extraction when triples is a lazy stage),
-    # producing a surface-pair-vocabulary-sized table. Everything
-    # after — distinct surfaces, linking, the surface->id merge, and
-    # nodes — operates on vocabulary-sized inputs. Versus the previous
-    # cache-triples-then-scan-twice plan this removes the 2.1M-row
-    # cache write and a second full pass (cold wall ~10.5s -> ~9s at
-    # sf0.1/32c, where the residue is the salted collect_set agg plus
-    # ~10 small sequential AQE stages); at 10^12 docs the win is
-    # structural — no trillion-row intermediate is ever cached, and
-    # executor storage stays free for the operators that need it.
-    # The surface->id merge
-    # re-aggregates because alias surfaces can map to one canonical
-    # pair; smallest-k union of per-pair smallest-k keeps sample_urls
-    # exact (any global top-k url is in its pair's top-k), pinned by
-    # the test equality with the mention-grain build_nodes/build_edges.
-    t = triples.filter(F.col("pred") == "CAUSES")
-    partial = (
-        t.withColumn("_salt", _salt(salt_buckets))
-        .groupBy("subj", "obj", "_salt")
-        .agg(
-            F.count(F.lit(1)).alias("_w"),
-            F.min("warc_ts").alias("_first"),
-            F.slice(
-                F.array_sort(F.collect_set("url")), 1, SAMPLE_URLS
-            ).alias("_urls"),
-        )
-    )
-    surface_edges = partial.groupBy("subj", "obj").agg(
-        F.sum("_w").alias("_w"),
-        F.min("_first").alias("_first"),
-        F.slice(
-            F.array_sort(F.array_distinct(F.flatten(F.collect_list("_urls")))),
-            1,
-            SAMPLE_URLS,
-        ).alias("_urls"),
-    ).cache()
-
-    from .linking import link_surfaces
-
+    pairs = surface_pairs(triples, salt_buckets).cache()
     surfaces = (
-        surface_edges.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("subj").alias("surface_norm"),
-                        F.lit("DRUG").alias("entity_type"),
-                    ),
-                    F.struct(
-                        F.col("obj").alias("surface_norm"),
-                        F.lit("EFFECT").alias("entity_type"),
-                    ),
-                )
-            ).alias("s")
-        )
-        .select("s.surface_norm", "s.entity_type")
+        _pair_surfaces(pairs)
+        .select("surface_norm", "entity_type")
         .dropDuplicates()
     )
     surface_links = link_surfaces(surfaces, dictionary).cache()
-    id_map = surface_links.withColumn(
-        "entity_id",
-        F.coalesce(
-            F.col("canonical_id"),
-            synthetic_entity_id(F.col("surface_norm"), F.col("entity_type")),
-        ),
-    )
-    drugs = id_map.filter(F.col("entity_type") == "DRUG").select(
-        F.col("surface_norm").alias("subj"), F.col("entity_id").alias("subj_id")
-    )
-    effects = id_map.filter(F.col("entity_type") == "EFFECT").select(
-        F.col("surface_norm").alias("obj"), F.col("entity_id").alias("obj_id")
-    )
-    edges = (
-        surface_edges.join(F.broadcast(drugs), "subj")
-        .join(F.broadcast(effects), "obj")
-        .groupBy("subj_id", "obj_id")
-        .agg(
-            F.sum("_w").alias("weight"),
-            F.min("_first").alias("first_seen"),
-            F.slice(
-                F.array_sort(
-                    F.array_distinct(F.flatten(F.collect_list("_urls")))
-                ),
-                1,
-                SAMPLE_URLS,
-            ).alias("sample_urls"),
-        )
-        .select(
-            "subj_id", F.lit("CAUSES").alias("pred"), "obj_id",
-            "weight", "first_seen", "sample_urls",
-        )
-        .cache()
-    )
+    edges = build_edges(pairs, surface_links).cache()
     nodes = nodes_from_edges(edges, surface_links)
-    return nodes, edges
+    return nodes, edges, pairs, surface_links
+
+
+def build_graph(
+    triples: DataFrame,
+    dictionary: DataFrame,
+    salt_buckets: int = DEFAULT_SALT_BUCKETS,
+) -> tuple[DataFrame, DataFrame]:
+    """Full M7->M9 path: triples + dictionary -> (nodes, edges)."""
+    return graph_frames(triples, dictionary, salt_buckets)[:2]
+
+
+def link_counts(pairs: DataFrame, surface_links: DataFrame) -> dict:
+    """Mentions per link method, at vocabulary grain: a surface's
+    mention count is the summed weight of the surface pairs it appears
+    in (each CAUSES triple is one DRUG and one EFFECT mention)."""
+    rows = (
+        _pair_surfaces(pairs)
+        .join(F.broadcast(surface_links), ["surface_norm", "entity_type"])
+        .groupBy("link_method")
+        .agg(F.sum("weight").alias("n"))
+        .collect()
+    )
+    return {r["link_method"]: r["n"] for r in rows}

@@ -28,7 +28,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .components import PR_ITERS, PR_BASE, PR_SCALE, pagerank_fixed_point
+from .components import (
+    PR_BASE,
+    PR_ITERS,
+    PR_SCALE,
+    _both_directions,
+    pagerank_fixed_point,
+)
 
 # group 1 of the href attribute; the same pattern string runs in both
 # engines (Spark regexp_extract_all and DuckDB regexp_extract_all)
@@ -998,9 +1004,8 @@ def lpa_communities(edges_und: DataFrame) -> DataFrame:
 
 
 def q_web_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _internal_undirected(_fixture_pages(spark))
-    und = e.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
-        e.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+    und = _both_directions(
+        _internal_undirected(_fixture_pages(spark)), "a", "b", "src", "dst"
     )
     return lpa_communities(und).select(
         F.col("node").alias("url"), F.col("label").alias("community")

@@ -128,11 +128,13 @@ def link_surfaces(
     canonical_name, link_method in {dict, lsh, unlinked}).
 
     The whole linking decision is a function of the distinct surface,
-    so it runs at VOCABULARY grain — corpus size never enters. Callers
-    broadcast the result back onto mention/triple rows
-    (attach_surface_links, link_triples); at 100 TB that's the only
-    shape that works, and at bench scale it removed a 4.2M-row
-    mention-grain cache from the graph pipeline."""
+    so it runs at VOCABULARY grain — corpus size never enters. The one
+    KG-construction path (graph.graph_frames, behind build_graph and
+    run_pipeline) links the distinct surfaces of its surface-pair
+    table and broadcasts the result into the surface->id merge;
+    attach_surface_links broadcasts it back onto mention rows. At
+    100 TB that's the only shape that works, and at bench scale it
+    removed a 4.2M-row mention-grain cache from the graph pipeline."""
     k = bands * rows
     d = dictionary.withColumn("alias_norm", normalized_surface("alias"))
     exact = surfaces.alias("m").join(

@@ -25,7 +25,8 @@ The oracle side recomputes the SAME values relationally in DuckDB:
 Gate projections: array-valued columns (edges.sample_urls) and
 nullable canonical ids are projected away or coalesced here — the gate
 canonicalizer sorts values and cannot hash lists; the full-width
-tables remain what build_graph/run_pipeline write to the real sinks.
+tables remain what build_graph builds and run_pipeline (its one
+program caller that writes them) writes to the real sinks.
 """
 
 from __future__ import annotations
@@ -109,9 +110,10 @@ def q_kg_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _, dictionary = _pages_and_dict(spark)
     _, edges = build_graph(q_kg_triples(spark, ""), dictionary)
-    # gate view: the sample_urls array is deterministic (smallest-k
-    # sampling, operators/graph.build_edges) but the gate canonicalizer
-    # can't hash list columns — project it through concat_ws
+    # gate view: the sample_urls array is deterministic (the exact
+    # smallest-k merge, operators/graph._merge_samples) but the gate
+    # canonicalizer can't hash list columns — project it through
+    # concat_ws
     return edges.select(
         "subj_id",
         "pred",

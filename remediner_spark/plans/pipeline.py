@@ -1,10 +1,11 @@
 """End-to-end KG construction pipeline (SURVEY.md §3.4).
 
     pages scan -> filter(lang) -> Arrow-UDF extract (byte-identity) ->
-    fused segment/NER/RE triple extraction -> entity linking
-    (broadcast dict + LSH) -> salted canonicalization -> nodes/edges
+    fused segment/NER/RE triple extraction -> operators/graph.build_graph
+    (salted surface-pair aggregation -> entity linking of the distinct
+    surfaces (broadcast dict + LSH) -> surface->id merge -> nodes/edges)
 
-Stages optionally run through plans.checkpoint.run_stage for
+The triple stage optionally runs through plans.checkpoint.run_stage for
 per-partition resumability with lineage + metrics.
 """
 
@@ -13,10 +14,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..operators.graph import build_edges, link_triples
-from ..operators.linking import mentions_from_triples
+from ..operators.graph import graph_frames, link_counts
 from ..operators.ner import (
     GazetteerTagger,
     extract_triples_stage,
@@ -70,59 +69,28 @@ def run_pipeline(
     dictionary = spark.read.parquet(
         os.path.join(corpus_dir, "entity_dictionary.parquet")
     )
-    # `triples` branches several ways (surfaces, mentions, id-join,
-    # count): without materialization each branch re-executes the
-    # upstream plan — for an unchecked-pointed run that's the whole
-    # Python extraction stage again (measured 5x wall in build_graph
-    # before caching). Linking caches at VOCABULARY grain only
-    # (link_surfaces) and is broadcast back per consumer — the
-    # mention-grain linked table is never materialized.
+    # graph_frames and with_inverse_triples both consume `triples`:
+    # without materialization each re-runs the whole Python extraction
+    # stage of an un-checkpointed run
     if not checkpoint:  # checkpointed triples are already parquet-backed
         triples = triples.cache()
-    from ..operators.linking import (
-        attach_surface_links,
-        link_surfaces,
-        normalized_surface,
-    )
-
-    mentions = mentions_from_triples(triples)
-    surfaces = (
-        mentions.withColumn("surface_norm", normalized_surface("surface"))
-        .select("surface_norm", "entity_type")
-        .dropDuplicates()
-    )
-    surface_links = link_surfaces(surfaces, dictionary).cache()
-    linked = attach_surface_links(mentions, surface_links)
-    from ..operators.graph import nodes_from_edges
-
-    edges = build_edges(link_triples(triples, surface_links)).cache()
-    nodes = nodes_from_edges(edges, surface_links)
+    nodes, edges, pairs, surface_links = graph_frames(triples, dictionary)
 
     # graph tables land in the Iceberg-style format (snapshot history,
     # manifest-planned reads, partition pruning) — sources/table.py
-    from ..sources.table import write_table
+    from ..sources.table import read_table, write_table
 
     write_table(nodes, os.path.join(out_dir, "nodes"), mode="overwrite")
     write_table(edges, os.path.join(out_dir, "edges"), mode="overwrite")
-    all_triples = with_inverse_triples(triples)
     write_table(
-        all_triples,
+        with_inverse_triples(triples),
         os.path.join(out_dir, "triples_out"),
         mode="overwrite",
         partition_by=["pred"],
     )
-
-    link_counts = {
-        r["link_method"]: r["n"]
-        for r in linked.groupBy("link_method")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    from ..sources.table import read_table
-
     return {
         "n_triples": read_table(spark, os.path.join(out_dir, "triples_out")).count(),
         "n_nodes": read_table(spark, os.path.join(out_dir, "nodes")).count(),
         "n_edges": read_table(spark, os.path.join(out_dir, "edges")).count(),
-        "link_counts": link_counts,
+        "link_counts": link_counts(pairs, surface_links),
     }

@@ -57,7 +57,18 @@ def _load_snapshots(path: str) -> list[dict]:
     if not os.path.exists(f):
         return []
     with open(f) as fh:
-        return json.load(fh)
+        snapshots = json.load(fh)
+    # a table on disk is outside input: column identity is the field
+    # id, so a snapshot without ids cannot be read or evolved safely
+    for snap in snapshots:
+        if "last_field_id" not in snap or any(
+            _field_id(f) is None for f in snap["schema"]["fields"]
+        ):
+            raise ValueError(
+                f"table {path}: snapshot {snap.get('snapshot_id')} "
+                "carries no field ids"
+            )
+    return snapshots
 
 
 def _save_snapshots(path: str, snapshots: list[dict]) -> None:
@@ -145,10 +156,17 @@ def _snap_refs(path: str, snap: dict) -> list[str]:
 def _snap_files(path: str, snap: dict) -> list[dict]:
     """The snapshot's data-file entries, resolved through its manifest
     list. The returned list is fresh but the entry dicts are SHARED
-    with the cache — copy before mutating (as _evolution_base does)."""
+    with the cache — copy before mutating. Every entry must carry its
+    field-id mapping (_stamp_field_mapping)."""
     out: list[dict] = []
     for ref in _snap_refs(path, snap):
-        out.extend(_load_manifest(path, ref))
+        entries = _load_manifest(path, ref)
+        if any("fields" not in e for e in entries):
+            raise ValueError(
+                f"table {path}: manifest {ref} holds file entries "
+                "without a field-id mapping"
+            )
+        out.extend(entries)
     return out
 
 
@@ -343,14 +361,12 @@ def _stamp_field_mapping(
 ) -> None:
     """Record, per data file, the physical (name, type) each field_id
     was WRITTEN under — the read side maps old files through ids after
-    rename/drop/widen. No-op for legacy schemas without ids."""
+    rename/drop/widen."""
     mapping = {
         str(_field_id(f)): {"name": f["name"], "type": f["type"]}
         for f in schema_json["fields"]
-        if _field_id(f) is not None and f["name"] not in partition_by
+        if f["name"] not in partition_by
     }
-    if not mapping:
-        return
     for e in entries:
         e["fields"] = mapping
 
@@ -487,15 +503,13 @@ def _cmp_stats(a, b):
     return None
 
 
-def _physical_col(file_entry: dict, col: str, schema_json: dict | None):
+def _physical_col(file_entry: dict, col: str, schema_json: dict):
     """The write-time physical name of CURRENT-schema column ``col``
     in this file, resolved through the field-id mapping (after a
     rename the footer stats stay keyed by the old name). Returns None
-    when the field does not exist in the file (added/dropped);
-    falls back to ``col`` for legacy entries/schemas."""
-    mapping = file_entry.get("fields")
-    if not mapping or not schema_json:
-        return col
+    when the field does not exist in the file (added/dropped), and
+    ``col`` itself when the current schema has no such column."""
+    mapping = file_entry["fields"]
     for f in schema_json["fields"]:
         if f["name"] == col:
             ent = mapping.get(str(_field_id(f)))
@@ -504,15 +518,15 @@ def _physical_col(file_entry: dict, col: str, schema_json: dict | None):
 
 
 def _stats_match(
-    file_entry: dict, stats_filter: dict, schema_json: dict | None = None
+    file_entry: dict, stats_filter: dict, schema_json: dict
 ) -> bool:
     """True unless some column's recorded [min, max] is PROVABLY
     disjoint from the requested [lo, hi] (None bound = unbounded).
     Files without stats for a column, or whose stored representation
     is incomparable with the bound's, are kept — skipping is an
-    optimization, never a correctness gate. With ``schema_json``,
-    filter columns resolve to each file's physical name through the
-    field-id mapping, so skipping keeps biting after a rename."""
+    optimization, never a correctness gate. Filter columns resolve to
+    each file's physical name through the field-id mapping, so
+    skipping keeps biting after a rename."""
     stats = file_entry.get("stats") or {}
     for col, (lo, hi) in stats_filter.items():
         pcol = _physical_col(file_entry, col, schema_json)
@@ -663,27 +677,24 @@ def write_table(
             # snapshots keep theirs, so time travel sees the schema of
             # its day
             by_name = {f["name"]: f for f in cur_schema["fields"]}
-            last_field_id = snapshots[-1].get("last_field_id", 0)
+            last_field_id = snapshots[-1]["last_field_id"]
             new_fields = []
             for c in added:
-                f = by_name[c]
-                if last_field_id:
-                    last_field_id += 1
-                    f = {
-                        **f,
-                        "metadata": {
-                            **(f.get("metadata") or {}),
-                            "field_id": last_field_id,
-                        },
-                    }
-                new_fields.append(f)
+                last_field_id += 1
+                new_fields.append({
+                    **by_name[c],
+                    "metadata": {
+                        **(by_name[c].get("metadata") or {}),
+                        "field_id": last_field_id,
+                    },
+                })
             cur_schema = {
                 **cur_schema,
                 "fields": list(prev_schema["fields"]) + new_fields,
             }
         else:
             cur_schema = prev_schema
-            last_field_id = snapshots[-1].get("last_field_id", 0)
+            last_field_id = snapshots[-1]["last_field_id"]
         prev_partition = snapshots[-1]["partition_by"]
         if prev_partition != partition_by:
             raise ValueError(
@@ -854,7 +865,7 @@ def _scan_files(
         dkey = tuple(
             i for i, d in enumerate(deletes) if f["path"] in d["paths"]
         )
-        sig = json.dumps(f.get("fields"), sort_keys=True)
+        sig = json.dumps(f["fields"], sort_keys=True)
         pspec = tuple(sorted(f["partition"].keys()))
         groups.setdefault((dkey, sig, pspec), []).append(f)
 
@@ -863,64 +874,55 @@ def _scan_files(
     for key, sig, pspec in sorted(groups):
         group = groups[(key, sig, pspec)]
         fpart = [c for c in pspec if c in types]  # this group's spec
-        data_schema = StructType(
-            [f for f in full_schema.fields if f.name not in fpart]
-        )
         cur_fields = [
             f for f in snap["schema"]["fields"] if f["name"] not in fpart
         ]
-        mapping = group[0].get("fields")
+        mapping = group[0]["fields"]
         paths = [g["path"] for g in group]
-        if mapping is None:
-            # legacy entries (no field-id mapping): the files were
-            # written under the current names; snapshot-schema read
-            # null-fills columns the file predates
-            df = spark.read.schema(data_schema).parquet(*paths)
-        else:
-            # field-id projection (Iceberg semantics): read each field
-            # under the physical (name, type) it was WRITTEN with, then
-            # rename/cast to the current schema — rename follows the
-            # id, drop simply stops projecting, a re-added name has a
-            # NEW id and never resurrects old data, widening casts
-            # (write-time type -> current) per file
-            phys: list[StructField] = []
-            seen = set()
-            exprs = []
-            for f in cur_fields:
-                ent = mapping.get(str(_field_id(f)))
-                if ent is None:
-                    exprs.append(
-                        F.lit(None)
-                        .cast(_datatype_from_json(f["type"]))
-                        .alias(f["name"])
-                    )
-                    continue
-                if ent["name"] not in seen:
-                    seen.add(ent["name"])
-                    phys.append(
-                        StructField(
-                            ent["name"], _datatype_from_json(ent["type"]),
-                            True,
-                        )
-                    )
-                col = F.col(ent["name"])
-                if _sans_nullability(ent["type"]) != _sans_nullability(
-                    f["type"]
-                ):
-                    col = col.cast(_datatype_from_json(f["type"]))
-                exprs.append(col.alias(f["name"]))
-            if not phys and mapping:
-                # no current field maps into this file (all dropped):
-                # scan one physical column to preserve row count
-                any_ent = next(iter(mapping.values()))
+        # field-id projection (Iceberg semantics): read each field
+        # under the physical (name, type) it was WRITTEN with, then
+        # rename/cast to the current schema — rename follows the
+        # id, drop simply stops projecting, a re-added name has a
+        # NEW id and never resurrects old data, widening casts
+        # (write-time type -> current) per file
+        phys: list[StructField] = []
+        seen = set()
+        exprs = []
+        for f in cur_fields:
+            ent = mapping.get(str(_field_id(f)))
+            if ent is None:
+                exprs.append(
+                    F.lit(None)
+                    .cast(_datatype_from_json(f["type"]))
+                    .alias(f["name"])
+                )
+                continue
+            if ent["name"] not in seen:
+                seen.add(ent["name"])
                 phys.append(
                     StructField(
-                        any_ent["name"],
-                        _datatype_from_json(any_ent["type"]), True,
+                        ent["name"], _datatype_from_json(ent["type"]),
+                        True,
                     )
                 )
-            df = spark.read.schema(StructType(phys)).parquet(*paths)
-            df = df.select(*exprs) if exprs else df
+            col = F.col(ent["name"])
+            if _sans_nullability(ent["type"]) != _sans_nullability(
+                f["type"]
+            ):
+                col = col.cast(_datatype_from_json(f["type"]))
+            exprs.append(col.alias(f["name"]))
+        if not phys and mapping:
+            # no current field maps into this file (all dropped):
+            # scan one physical column to preserve row count
+            any_ent = next(iter(mapping.values()))
+            phys.append(
+                StructField(
+                    any_ent["name"],
+                    _datatype_from_json(any_ent["type"]), True,
+                )
+            )
+        df = spark.read.schema(StructType(phys)).parquet(*paths)
+        df = df.select(*exprs) if exprs else df
         df = _attach_partition_cols(spark, df, group, fpart)
         for pcol in fpart:
             df = df.withColumn(pcol, F.col(pcol).cast(types[pcol]))
@@ -1080,28 +1082,12 @@ def _evolution_base(path: str):
     if not snapshots:
         raise FileNotFoundError(f"no table at {path}")
     snap = snapshots[-1]
-    schema, last = snap["schema"], snap.get("last_field_id", 0)
-    if not last:
-        # legacy table without field ids: assign them now; files on
-        # disk were written under the current names/types, so the
-        # implicit mapping stamped below is exact
-        schema, last = _assign_field_ids(schema)
-    files = _snap_files(path, snap)
-    if any("fields" not in f for f in files):
-        # stamping mutates entries: copy (the cache shares dicts), then
-        # rewrite into one fresh manifest — a one-time migration cost
-        # for legacy tables; evolved tables never hit this branch again
-        files = [dict(f) for f in files]
-        _stamp_field_mapping(
-            [f for f in files if "fields" not in f], schema,
-            snap["partition_by"],
-        )
-        refs = [_write_manifest(path, files)] if files else []
-    else:
-        # the normal case: evolution is metadata-only, so the new
-        # snapshot carries every manifest BY REF — zero manifest bytes
-        refs = list(_snap_refs(path, snap))
-    return snap, schema, last, files, refs
+    # evolution is metadata-only, so the new snapshot carries every
+    # manifest BY REF — zero manifest bytes
+    return (
+        snap, snap["schema"], snap["last_field_id"],
+        _snap_files(path, snap), list(_snap_refs(path, snap)),
+    )
 
 
 def _commit_next(path: str, snap: dict, refs: list[str], **fields) -> dict:
@@ -1114,7 +1100,7 @@ def _commit_next(path: str, snap: dict, refs: list[str], **fields) -> dict:
         "snapshot_id": snap["snapshot_id"] + 1,
         "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
         "schema": snap["schema"],
-        "last_field_id": snap.get("last_field_id", 0),
+        "last_field_id": snap["last_field_id"],
         "partition_by": snap["partition_by"],
         "sort_by": snap.get("sort_by") or [],
         "delete_files": list(snap.get("delete_files") or []),

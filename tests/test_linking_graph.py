@@ -9,15 +9,17 @@ from pyspark.sql import functions as F
 
 from remediner_spark.operators.graph import (
     DEFAULT_SALT_BUCKETS,
+    SAMPLE_URLS,
     _salt,
-    build_edges,
     build_graph,
-    link_triples,
     with_entity_ids,
 )
 from remediner_spark.operators.linking import (
+    attach_surface_links,
     link_mentions,
+    link_surfaces,
     mentions_from_triples,
+    normalized_surface,
 )
 from remediner_spark.operators.ner import extract_triples_stage
 from remediner_spark.operators.text import filter_language
@@ -43,12 +45,49 @@ def build_nodes(
     )
 
 
+def link_triples(triples: DataFrame, surface_links: DataFrame) -> DataFrame:
+    """Mention-grain referee: attach subj_id/obj_id to every CAUSES
+    triple row through broadcast surface->id maps."""
+    surf_map = (
+        with_entity_ids(surface_links)
+        .select("surface_norm", "entity_type", "entity_id")
+        .dropDuplicates(["surface_norm", "entity_type"])
+    )
+    drugs = surf_map.filter(F.col("entity_type") == "DRUG").select(
+        F.col("surface_norm").alias("subj"), F.col("entity_id").alias("subj_id")
+    )
+    effects = surf_map.filter(F.col("entity_type") == "EFFECT").select(
+        F.col("surface_norm").alias("obj"), F.col("entity_id").alias("obj_id")
+    )
+    return (
+        triples.filter(F.col("pred") == "CAUSES")
+        .join(F.broadcast(drugs), "subj", "left")
+        .join(F.broadcast(effects), "obj", "left")
+    )
+
+
 def build_edges_unsalted(linked_triples: DataFrame) -> DataFrame:
-    """Single-phase referee for the salted==unsalted equivalence test."""
+    """Single-phase referee for the salted==unsalted equivalence test:
+    one groupBy over the triple rows, unbounded url set per edge."""
     return linked_triples.groupBy("subj_id", "pred", "obj_id").agg(
         F.count(F.lit(1)).alias("weight"),
         F.min("warc_ts").alias("first_seen"),
+        F.slice(F.array_sort(F.collect_set("url")), 1, SAMPLE_URLS).alias(
+            "sample_urls"
+        ),
     )
+
+
+def mention_surface_links(triples: DataFrame, dictionary: DataFrame):
+    """(mentions, link table) at mention grain: every CAUSES side as a
+    mention row, linked through its normalized surface."""
+    mentions = mentions_from_triples(triples)
+    surfaces = (
+        mentions.withColumn("surface_norm", normalized_surface("surface"))
+        .select("surface_norm", "entity_type")
+        .dropDuplicates()
+    )
+    return mentions, link_surfaces(surfaces, dictionary).cache()
 
 
 @pytest.fixture(scope="module")
@@ -149,22 +188,24 @@ def test_corpus_linking_coverage(spark, triples_df, dictionary_df):
 
 
 def test_salted_edges_equal_unsalted(spark, triples_df, dictionary_df):
-    mentions = mentions_from_triples(triples_df)
-    linked = link_mentions(mentions, dictionary_df)
-    with_ids = link_triples(triples_df, linked)
+    """build_graph's edges (salted surface-pair aggregation, then the
+    surface->id regroup) equal a single-phase groupBy over the
+    mention-grain linked triples, sample_urls included."""
+    _, surface_links = mention_surface_links(triples_df, dictionary_df)
+    _, edges = build_graph(triples_df, dictionary_df, salt_buckets=8)
     salted = (
-        build_edges(with_ids, salt_buckets=8)
-        .select("subj_id", "pred", "obj_id", "weight", "first_seen")
-        .toPandas()
+        edges.toPandas()
         .sort_values(["subj_id", "obj_id"])
         .reset_index(drop=True)
     )
     unsalted = (
-        build_edges_unsalted(with_ids)
+        build_edges_unsalted(link_triples(triples_df, surface_links))
         .toPandas()
         .sort_values(["subj_id", "obj_id"])
         .reset_index(drop=True)
     )
+    for frame in (salted, unsalted):
+        frame["sample_urls"] = frame["sample_urls"].map(list)
     pd.testing.assert_frame_equal(
         salted, unsalted[salted.columns], check_dtype=False
     )
@@ -237,34 +278,39 @@ def test_lsh_recall_vs_exhaustive(spark, triples_df, dictionary_df):
 
 
 def test_nodes_from_edges_equals_build_nodes(spark, triples_df, dictionary_df):
-    """The edge-derived node table (what build_graph now emits: one
-    less pass over the triple set) must equal the mention-grain
-    build_nodes aggregation row-for-row."""
-    import pandas as pd
-
-    from remediner_spark.operators.graph import nodes_from_edges
-    from remediner_spark.operators.linking import (
-        attach_surface_links,
-        link_surfaces,
-        mentions_from_triples,
-        normalized_surface,
-    )
-    from pyspark.sql import functions as F
-
-    mentions = mentions_from_triples(triples_df)
-    surfaces = (
-        mentions.withColumn("surface_norm", normalized_surface("surface"))
-        .select("surface_norm", "entity_type")
-        .dropDuplicates()
-    )
-    surface_links = link_surfaces(surfaces, dictionary_df).cache()
+    """build_graph's node table (derived from the edge table by
+    nodes_from_edges: one less pass over the triple set) must equal the
+    mention-grain build_nodes aggregation row-for-row."""
+    mentions, surface_links = mention_surface_links(triples_df, dictionary_df)
     want = (
         build_nodes(attach_surface_links(mentions, surface_links))
         .toPandas().sort_values("entity_id").reset_index(drop=True)
     )
-    edges = build_edges(link_triples(triples_df, surface_links))
-    got = (
-        nodes_from_edges(edges, surface_links)
-        .toPandas().sort_values("entity_id").reset_index(drop=True)
-    )
+    nodes, _ = build_graph(triples_df, dictionary_df)
+    got = nodes.toPandas().sort_values("entity_id").reset_index(drop=True)
     pd.testing.assert_frame_equal(got[want.columns], want, check_dtype=False)
+
+
+def test_run_pipeline_link_counts(spark, corpus_dir, dictionary_df, tmp_path):
+    """run_pipeline's link_counts (summed surface-pair weights at
+    vocabulary grain) equal a per-mention count of the mention-grain
+    links, and every CAUSES triple counts one DRUG and one EFFECT
+    mention."""
+    from remediner_spark.plans.pipeline import run_pipeline
+    from remediner_spark.sources.table import read_table
+
+    out = str(tmp_path / "out")
+    metrics = run_pipeline(spark, corpus_dir, out, checkpoint=False)
+    triples = read_table(spark, f"{out}/triples_out")
+    mentions, surface_links = mention_surface_links(triples, dictionary_df)
+    want = {
+        r["link_method"]: r["n"]
+        for r in attach_surface_links(mentions, surface_links)
+        .groupBy("link_method")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    assert metrics["link_counts"] == want
+    n_causes = triples.filter(F.col("pred") == "CAUSES").count()
+    assert n_causes > 0
+    assert sum(metrics["link_counts"].values()) == 2 * n_causes

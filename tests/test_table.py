@@ -625,25 +625,71 @@ def test_stats_match_date_vs_datetime_bounds(spark, tmp_path):
 
     from remediner_spark.sources.table import _stats_match
 
-    entry = {"stats": {"d": ["2024-01-01", "2024-01-05"]}}
+    def one_col(name, typ, lo, hi):
+        # a file entry and the schema it was written under: field 1
+        schema = {"fields": [
+            {"name": name, "type": typ, "metadata": {"field_id": 1}}
+        ]}
+        entry = {
+            "stats": {name: [lo, hi]},
+            "fields": {"1": {"name": name, "type": typ}},
+        }
+        return lambda flt: _stats_match(entry, flt, schema)
+
+    match = one_col("d", "date", "2024-01-01", "2024-01-05")
     # bound at midnight of the max date: rows with d == 2024-01-05
     # satisfy d >= bound under Spark's date->timestamp cast — keep
-    assert _stats_match(
-        entry, {"d": (datetime.datetime(2024, 1, 5, 0, 0, 0), None)}
-    )
+    assert match({"d": (datetime.datetime(2024, 1, 5, 0, 0, 0), None)})
     # bound strictly past the range: provably disjoint — prune
-    assert not _stats_match(
-        entry, {"d": (datetime.datetime(2024, 1, 6, 0, 0, 0), None)}
-    )
+    assert not match({"d": (datetime.datetime(2024, 1, 6, 0, 0, 0), None)})
     # datetime stats vs date bound (reverse direction): hi bound
     # date(2024,1,5) casts to midnight; a file starting at 10:00 that
     # day is disjoint
-    ts_entry = {"stats": {"t": ["2024-01-05T10:00:00", "2024-01-07T00:00:00"]}}
-    assert not _stats_match(ts_entry, {"t": (None, datetime.date(2024, 1, 5))})
-    assert _stats_match(ts_entry, {"t": (None, datetime.date(2024, 1, 6))})
+    ts_match = one_col(
+        "t", "timestamp", "2024-01-05T10:00:00", "2024-01-07T00:00:00"
+    )
+    assert not ts_match({"t": (None, datetime.date(2024, 1, 5))})
+    assert ts_match({"t": (None, datetime.date(2024, 1, 6))})
     # numeric bound against string stats: incomparable -> keep, no raise
-    assert _stats_match(entry, {"d": (5, None)})
-    assert _stats_match(entry, {"d": (None, 5)})
+    assert match({"d": (5, None)})
+    assert match({"d": (None, 5)})
+
+
+@pytest.mark.parametrize("strip", ["snapshot", "entry"])
+def test_read_without_field_ids_raises(spark, tmp_path, pages_pdf, strip):
+    """A table on disk is outside input: a snapshot or file entry
+    without field ids fails closed with an error naming the table,
+    never falls back to name-based reads."""
+    import json
+    import os
+
+    from remediner_spark.sources import table as tbl
+
+    path = str(tmp_path / "tbl")
+    write_table(spark.createDataFrame(pages_pdf.iloc[:20]), path)
+    if strip == "snapshot":
+        snaps = _load_snapshots(path)
+        for snap in snaps:
+            del snap["last_field_id"]
+            for f in snap["schema"]["fields"]:
+                f["metadata"].pop("field_id")
+        tbl._save_snapshots(path, snaps)
+    else:
+        mdir = os.path.join(path, "_metadata", "manifests")
+        for ref in os.listdir(mdir):
+            fpath = os.path.join(mdir, ref)
+            with open(fpath) as fh:
+                entries = json.load(fh)
+            if ref.startswith("m-"):
+                for e in entries:
+                    del e["fields"]
+            with open(fpath, "w") as fh:
+                json.dump(entries, fh)
+        tbl._MANIFEST_CACHE.clear()
+    with pytest.raises(ValueError, match="field") as err:
+        read_table(spark, path)
+    assert path in str(err.value)
+
 
 def test_delete_range_mor_predicate(spark, tmp_path):
     """Range DELETE: boundary files stay in place under a

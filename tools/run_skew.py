@@ -2,16 +2,17 @@
 aggregation on a deliberately head-skewed triples table.
 
 BASELINE.json:14 claims "skew handled explicitly"; this demonstrates
-it rather than asserts it. The input is a synthesized linked-triples
-table where ONE edge key carries 30% of all rows (the "one drug in 30%
+it rather than asserts it. The input is a synthesized CAUSES-triples
+table where ONE surface pair carries 30% of all rows (the "one drug in 30%
 of sentences" head), every row bearing a distinct url — the worst case
 for the sample-url collect_set, whose per-key state is what skew
 actually breaks (count/sum already get map-side partials from Spark).
 
-* single-phase: groupBy(edge).agg(collect_set(url)) — the hot key's
+* single-phase: groupBy(pair).agg(collect_set(url)) — the hot key's
   full distinct-url set (~0.3*N urls) funnels through one reducer.
-* salted (operators/graph.build_edges): stage 1 groups on (edge, salt)
-  and truncates each partial to its smallest SAMPLE_URLS urls, so the
+* salted (operators/graph.surface_pairs, the one corpus-grain
+  aggregation build_graph runs): stage 1 groups on (pair, salt) and
+  truncates each partial to its smallest SAMPLE_URLS urls, so the
   hot key crosses the second shuffle as `salt_buckets` 5-element
   arrays. Results are identical (exact smallest-k merge).
 
@@ -42,9 +43,9 @@ def skewed_triples(spark, n_rows: int):
         F.pmod(F.xxhash64(F.col("id")), F.lit(N_COLD_KEYS)) + 1
     )
     return base.select(
-        subj.alias("subj_id"),
+        subj.alias("subj"),
         F.lit("CAUSES").alias("pred"),
-        subj.alias("obj_id"),
+        subj.alias("obj"),
         F.concat(F.lit("https://example.org/p"), F.col("id")).alias("url"),
         F.timestamp_seconds(F.lit(1700000000) + F.col("id") % 86400).alias(
             "warc_ts"
@@ -57,7 +58,7 @@ def single_phase_edges(triples):
     unbounded collect_set of the hot key to a single reducer."""
     from pyspark.sql import functions as F
 
-    return triples.groupBy("subj_id", "pred", "obj_id").agg(
+    return triples.groupBy("subj", "obj").agg(
         F.count(F.lit(1)).alias("weight"),
         F.min("warc_ts").alias("first_seen"),
         F.slice(F.array_sort(F.collect_set("url")), 1, 5).alias(
@@ -80,7 +81,7 @@ def count_only_edges(triples):
     scan+shuffle baseline both contenders share."""
     from pyspark.sql import functions as F
 
-    return triples.groupBy("subj_id", "pred", "obj_id").agg(
+    return triples.groupBy("subj", "obj").agg(
         F.count(F.lit(1)).alias("weight")
     )
 
@@ -203,7 +204,7 @@ def minhash_skew_leg(spark, hot_pct: int | None = None) -> dict:
 
 def main() -> int:
     n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 8_000_000
-    from remediner_spark.operators.graph import build_edges
+    from remediner_spark.operators.graph import surface_pairs
     from remediner_spark.session import get_spark
 
     spark = get_spark(app_name="skew-evidence", cores=32,
@@ -212,7 +213,7 @@ def main() -> int:
     triples = skewed_triples(spark, n_rows).cache()
     n = triples.count()  # materialize once; both legs read the cache
 
-    salted = lambda: build_edges(triples).write.format("noop").mode(  # noqa: E731
+    salted = lambda: surface_pairs(triples).write.format("noop").mode(  # noqa: E731
         "overwrite"
     ).save()
     unsalted = lambda: single_phase_edges(triples).write.format(  # noqa: E731
@@ -220,7 +221,7 @@ def main() -> int:
     ).mode("overwrite").save()
 
     # warmup (JIT, codegen) on a slice, then min-of-2 per leg
-    build_edges(triples.limit(50_000)).count()
+    surface_pairs(triples.limit(50_000)).count()
     w_floor = timed(
         lambda: count_only_edges(triples)
         .write.format("noop")
@@ -232,8 +233,8 @@ def main() -> int:
 
     # equivalence: the salted bounded-partial merge must produce the
     # SAME smallest-5 sample urls as the unbounded single-phase set
-    a = build_edges(triples).orderBy("subj_id").limit(5).collect()
-    b = single_phase_edges(triples).orderBy("subj_id").limit(5).collect()
+    a = surface_pairs(triples).orderBy("subj").limit(5).collect()
+    b = single_phase_edges(triples).orderBy("subj").limit(5).collect()
     assert [r.asDict() for r in a] == [r.asDict() for r in b], "result drift"
 
     triples.unpersist()
@@ -264,7 +265,7 @@ def main() -> int:
 |---|---|
 | count-only floor (no per-key collect state) | {w_floor:.2f} |
 | single-phase groupBy + collect_set (hot key on one reducer) | {w_unsalted:.2f} |
-| salted two-phase, bounded partials (operators/graph.build_edges) | {w_salted:.2f} |
+| salted two-phase, bounded partials (operators/graph.surface_pairs) | {w_salted:.2f} |
 
 speedup {result['speedup']}x; identical output (asserted in-run).
 
