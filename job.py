@@ -8,7 +8,9 @@ Usage:
 Runs: scan -> lang filter -> HTML extraction (byte-identity checked) ->
 fused segmentation/NER/RE triple extraction -> writes triples parquet,
 prints one JSON metrics line to stdout. ``--graph`` runs the checkpointed
-pipeline instead; ``--gold`` scores either path's CAUSES triples.
+pipeline instead; ``--gold`` scores either path's CAUSES triples. Both
+paths audit the extraction against the corpus text and exit 1 on any
+mismatch.
 """
 
 from __future__ import annotations
@@ -68,22 +70,25 @@ def main(argv: list[str] | None = None) -> int:
         from remediner_spark.plans.pipeline import default_tagger_bc
 
         tagger_bc = default_tagger_bc(spark)
+    english = filter_language(
+        spark.read.parquet(f"{args.corpus_dir}/pages.parquet")
+    )
+    if not args.graph:
+        # cache the filtered slice: it feeds three actions (invariant
+        # check, page count, triple extraction) — one scan+filter
+        # instead of three. run_pipeline reads its own input.
+        english = english.cache()
+    # the byte-identity audit of the extraction, on both paths
+    mismatches = extraction_mismatch_count(english)
     if args.graph:
         from remediner_spark.plans.pipeline import run_pipeline
         from remediner_spark.sources.table import read_table
 
         metrics = run_pipeline(spark, args.corpus_dir, args.out, tagger_bc=tagger_bc)
         metrics["elapsed_sec"] = round(time.time() - t0, 2)
-        mismatches = 0
         out_triples = read_table(spark, f"{args.out}/triples_out")
     else:
-        pages = spark.read.parquet(f"{args.corpus_dir}/pages.parquet")
-        # cache the filtered slice: it feeds three actions (invariant
-        # check, page count, triple extraction) — one scan+filter
-        # instead of three
-        english = filter_language(pages).cache()
         n_pages = english.count()
-        mismatches = extraction_mismatch_count(english)
         # extraction is fused into the triple stage (html in, triples out)
         triples = with_inverse_triples(
             extract_triples_stage(english, tagger_bc, extract_html=True)
@@ -97,7 +102,6 @@ def main(argv: list[str] | None = None) -> int:
         elapsed = time.time() - t0
         metrics = {
             "n_pages_en": n_pages,
-            "extraction_mismatches": mismatches,
             "n_triples": n_triples,
             "elapsed_sec": round(elapsed, 2),
             "triples_per_sec": round(n_triples / elapsed, 1),
@@ -112,6 +116,7 @@ def main(argv: list[str] | None = None) -> int:
         gold = spark.createDataFrame(gold_triples(ann))
         causes = out_triples.filter("pred = 'CAUSES'")
         metrics.update(triple_precision_recall(causes, gold))
+    metrics["extraction_mismatches"] = mismatches
     print(json.dumps(metrics))
     spark.stop()
     return 0 if mismatches == 0 else 1

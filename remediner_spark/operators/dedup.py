@@ -31,6 +31,10 @@ from ..sources.scan import scan_parquet
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .minhash import (
+    P as MH_P, band_rows_sql, band_table, base_hash_sql, base_hashes,
+    minhash_cols_sql,
+)
 from .textstats import (
     md5_hash32_expr,
     md5_hash32_sql,
@@ -42,10 +46,10 @@ NGRAM_N = 3
 JACCARD_T = 0.6
 MAX_DF = 50  # shingles in more docs than this are dropped (stop-shingles)
 
-# minhash: 16 hashes = 4 bands x 4 rows (same family as linking, but
-# md5-based so the oracle can reproduce it)
+# minhash: 16 hashes = 4 bands x 4 rows over word-3-gram shingles,
+# through the same MinHash-LSH kernel as entity linking
+# (operators/minhash.py) with this module's own hash family
 MH_K, MH_BANDS, MH_ROWS = 16, 4, 4
-MH_P = (1 << 31) - 1
 MH_A = [2654435761 % MH_P, 2246822519 % MH_P, 3266489917 % MH_P,
         668265263, 374761393, 1103515245, 1299709, 15485863,
         32452843, 49979687, 67867967, 86028121, 104395301,
@@ -225,54 +229,6 @@ def sql_dedup_ngram_jaccard() -> str:
     return f"WITH {sql_jaccard_ctes()}\nSELECT doc_a, doc_b, jaccard FROM jpairs"
 
 
-def _minhash_over_base(base_col):
-    """16 min-hashes over a pre-computed base-hash array: the md5 is
-    evaluated once per shingle; each signature row is a cheap LCG over
-    the long array."""
-
-    def lcg(a: int, b: int):
-        return lambda h: (h * a + b) % MH_P
-
-    return [
-        F.array_min(F.transform(base_col, lcg(MH_A[i], MH_B[i]))).alias(f"mh_{i}")
-        for i in range(MH_K)
-    ]
-
-
-def _band_table(base: DataFrame) -> DataFrame:
-    """``base(doc_id, bh)`` (bh = per-shingle base hashes mod MH_P) ->
-    LSH band table ``(doc_id, band_idx, band_key)`` — signatures and
-    banding are map-side projections, the explode is MH_BANDS rows per
-    doc."""
-    sig = base.select("doc_id", *_minhash_over_base(F.col("bh")))
-    # band_key is a STRUCT of the MH_ROWS minhash longs, not the old
-    # ':'-concat string: struct equality is exactly string equality
-    # here (both encodings are injective), joins/windows key on it
-    # unchanged, and the exchanges carry 4 longs instead of a ~40-char
-    # string (measured ~6% off the LSH pair walls, outputs identical)
-    return sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.struct(
-                            *[
-                                F.col(f"mh_{b * MH_ROWS + r}").alias(
-                                    f"r{r}"
-                                )
-                                for r in range(MH_ROWS)
-                            ]
-                        ).alias("band_key"),
-                    )
-                    for b in range(MH_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_idx", "band.band_key")
-
-
 def minhash_pairs(
     docs: DataFrame, bucket_cap: int | None = None
 ) -> DataFrame:
@@ -293,15 +249,12 @@ def minhash_pairs(
     connected-components step every dedup consumer runs next) yields
     the same duplicate clusters for true boilerplate blobs, while
     buckets at or under the cap keep exact all-pairs semantics."""
-    base = docs.select(
-        "doc_id",
-        F.transform(
-            F.col("sh"), lambda s: md5_hash32_expr(s) % MH_P
-        ).alias("bh"),
+    bands = band_table(
+        docs.select("doc_id", base_hashes(F.col("sh")).alias("bh")),
+        "bh", MH_A, MH_B, MH_BANDS, MH_ROWS,
     )
-    bands = _band_table(base)
     # the LSH bucket join is a SELF-join of `bands` — without a
-    # persist both sides recompute the full shingle -> 24-minhash ->
+    # persist both sides recompute the full shingle -> 16-minhash ->
     # band chain (measured ~2x the query wall at sf0.1; round 3's
     # bench hid this by accidentally reusing the ngram query's
     # persisted shingles across queries). Bounded: n_docs x MH_BANDS
@@ -379,20 +332,8 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def sql_dedup_minhash() -> str:
     sh = _shingles_sql("text")
-    h = md5_hash32_sql("s")
-    mh_cols = ", ".join(
-        f"list_aggregate(list_transform(sh, s -> (({h}) % {MH_P} * {MH_A[i]} "
-        f"+ {MH_B[i]}) % {MH_P}), 'min') AS mh_{i}"
-        for i in range(MH_K)
-    )
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, "
-        + " || ':' || ".join(
-            f"CAST(mh_{b * MH_ROWS + r} AS VARCHAR)" for r in range(MH_ROWS)
-        )
-        + " AS band_key FROM sig"
-        for b in range(MH_BANDS)
-    )
+    mh_cols = minhash_cols_sql("sh", "s", base_hash_sql("s"), MH_A, MH_B)
+    band_rows = band_rows_sql("sig", "doc_id", MH_BANDS, MH_ROWS)
     return f"""
 WITH s AS (SELECT doc_id, {sh} AS sh FROM documents),
 sig AS (SELECT doc_id, {mh_cols} FROM s),
@@ -864,12 +805,12 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "exact_match")
 
     # near-dup: index band projection vs broadcast batch band table
-    bbands = _band_table(batch.select("doc_id", "bh")).select(
-        F.col("doc_id").alias("bdoc"), "band_idx", "band_key"
-    )
-    ibands = _band_table(index.select("doc_id", "bh")).select(
-        F.col("doc_id").alias("idoc"), "band_idx", "band_key"
-    )
+    bbands = band_table(
+        batch.select("doc_id", "bh"), "bh", MH_A, MH_B, MH_BANDS, MH_ROWS
+    ).select(F.col("doc_id").alias("bdoc"), "band_idx", "band_key")
+    ibands = band_table(
+        index.select("doc_id", "bh"), "bh", MH_A, MH_B, MH_BANDS, MH_ROWS
+    ).select(F.col("doc_id").alias("idoc"), "band_idx", "band_key")
     cand = (
         ibands.join(F.broadcast(bbands), ["band_idx", "band_key"])
         .select("bdoc", "idoc")
@@ -915,23 +856,8 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def sql_dedup_incremental() -> str:
     sh = _shingles_sql("text")
-    mh_cols = ", ".join(
-        f"list_aggregate(list_transform(bh, x -> (x * {MH_A[i]} "
-        f"+ {MH_B[i]}) % {MH_P}), 'min') AS mh_{i}"
-        for i in range(MH_K)
-    )
-
-    def band_rows(src: str, idc: str) -> str:
-        return " UNION ALL ".join(
-            f"SELECT doc_id AS {idc}, {b} AS band_idx, "
-            + " || ':' || ".join(
-                f"CAST(mh_{b * MH_ROWS + r} AS VARCHAR)"
-                for r in range(MH_ROWS)
-            )
-            + f" AS band_key FROM {src}"
-            for b in range(MH_BANDS)
-        )
-
+    # bh is pre-hashed (h % P per shingle), so the fold's base is x
+    mh_cols = minhash_cols_sql("bh", "x", "x", MH_A, MH_B)
     return f"""
 WITH d AS (
   SELECT doc_id, source,
@@ -940,7 +866,7 @@ WITH d AS (
 h AS (
   SELECT doc_id, source, tkey, len(sh) AS n_sh,
          list_distinct(list_transform(sh, s -> {md5_hash60_sql('s')})) AS hsh,
-         list_transform(sh, s -> ({md5_hash32_sql('s')}) % {MH_P}) AS bh
+         list_transform(sh, s -> {base_hash_sql('s')}) AS bh
   FROM d),
 b AS (SELECT * FROM h WHERE source = '{NEW_SOURCE}'),
 ix AS (SELECT * FROM h WHERE source <> '{NEW_SOURCE}'),
@@ -948,8 +874,8 @@ ex AS (SELECT b.tkey, min(ix.doc_id) AS exact_match
        FROM b JOIN ix ON b.tkey = ix.tkey GROUP BY 1),
 bsig AS (SELECT doc_id, {mh_cols} FROM b),
 isig AS (SELECT doc_id, {mh_cols} FROM ix),
-bbands AS ({band_rows('bsig', 'bdoc')}),
-ibands AS ({band_rows('isig', 'idoc')}),
+bbands AS ({band_rows_sql('bsig', 'doc_id AS bdoc', MH_BANDS, MH_ROWS)}),
+ibands AS ({band_rows_sql('isig', 'doc_id AS idoc', MH_BANDS, MH_ROWS)}),
 cand AS (SELECT DISTINCT bdoc, idoc
          FROM ibands JOIN bbands USING (band_idx, band_key)),
 ver AS (

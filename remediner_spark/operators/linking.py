@@ -7,11 +7,14 @@ side.
 M8: surfaces the dictionary misses (typos, variants) go through a
 MinHash-LSH similarity join against the dictionary aliases:
 
-    char-3-shingles -> K seeded min-hashes -> B bands of R rows ->
+    char-3-shingles -> K = 24 min-hashes -> 8 bands of 3 rows ->
     band-key equi-join -> exact Jaccard verify -> best alias per surface
+    (one struct-min aggregation: highest Jaccard, then smallest alias)
 
-Everything is built-in Catalyst expressions (crc32/transform/array_min/
-array_intersect) — whole-stage-codegen friendly, zero Python workers.
+Signatures and bands come from the MinHash-LSH kernel document dedup
+runs too (operators/minhash.py). Everything is built-in Catalyst
+expressions (md5/transform/array_min/array_intersect) —
+whole-stage-codegen friendly, zero Python workers.
 The band join is an equi-join on (band_idx, band_key), so Spark
 shuffles only the tiny residual set and the dictionary, never the
 corpus. At 100 TB the residual is bounded by distinct unresolved
@@ -23,20 +26,24 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-# LSH parameters: K = B * R minhashes. With R=3, B=8: pairs with
-# Jaccard s collide with prob 1-(1-s^3)^8 (~0.97 at s=0.7, ~0.89 at
-# s=0.625 = the one-char-insert typo class, ~0.06 at s=0.2) — tuned
-# for typo-distance aliases with low false-candidate volume.
-_MERSENNE = (1 << 31) - 1
+from .minhash import band_table, base_hashes
+
+# LSH parameters: K = LSH_BANDS * LSH_ROWS = 24 min-hashes over char-3
+# shingles. Pairs with Jaccard s collide in some band with prob
+# 1-(1-s^3)^8 (~0.97 at s=0.7, ~0.89 at s=0.625 = the one-char-insert
+# typo class, ~0.06 at s=0.2) — tuned for typo-distance aliases with
+# low false-candidate volume; candidates verify at JACCARD_T. The
+# DuckDB oracle (plans/kg_gate.py) imports these, never restates them.
+SHINGLE_N = 3
+LSH_BANDS = 8
+LSH_ROWS = 3
+JACCARD_T = 0.5
 _HASH_A = [2654435761, 2246822519, 3266489917, 668265263, 374761393,
            2654435789, 2246822591, 3266489989, 668265341, 374761471,
            2654435843, 2246822647, 3266490043, 668265399, 374761523,
            2654435887, 2246822699, 3266490107, 668265463, 374761561,
-           2654435921, 2246822741, 3266490169, 668265529, 374761627,
-           2654435959, 2246822801, 3266490217, 668265587, 374761673,
-           2654436037, 2246822861]
+           2654435921, 2246822741, 3266490169, 668265529]
 _HASH_B = [b * 7919 + 17 for b in range(len(_HASH_A))]
 
 
@@ -45,85 +52,25 @@ def normalized_surface(col: str | Column) -> Column:
     return F.lower(F.trim(c))
 
 
-def char_shingles(col: Column, n: int = 3) -> Column:
-    """Distinct character n-grams of a padded surface, as array<string>."""
+def char_shingles(col: Column) -> Column:
+    """Distinct character 3-grams of a padded surface, array<string>."""
     padded = F.concat(F.lit("^"), col, F.lit("$"))
-    idx = F.sequence(F.lit(0), F.greatest(F.length(padded) - n, F.lit(0)))
+    idx = F.sequence(F.lit(0), F.greatest(F.length(padded) - SHINGLE_N, F.lit(0)))
     return F.array_distinct(
-        F.transform(idx, lambda i: padded.substr(i + 1, F.lit(n)))
+        F.transform(idx, lambda i: padded.substr(i + 1, F.lit(SHINGLE_N)))
     )
 
 
-def minhash_from_base(base: Column, k: int) -> list[Column]:
-    """k min-hash columns over a PRE-HASHED shingle array (each element
-    already ``md5_hash32 % p``): ((h%p)*a+b)%p over the md5-prefix
-    LCG family — the cross-engine base hash, so DuckDB oracles
-    reproduce the banding bit-for-bit (see textstats.md5_hash32_expr).
-    With h%p factored out, the md5 runs ONCE per shingle instead of k
-    times, which both
-    cuts execution work and shrinks the codegen'd projection ~k-fold
-    (the k-way md5 expression tree dominated the vocabulary-grain
-    linking wall: janino compile + 24x hashing on a 200-row input)."""
-    def affine(a: int, b: int):
-        return lambda x: (x * a + b) % _MERSENNE
-
-    sigs = []
-    for i in range(k):
-        sigs.append(
-            F.array_min(
-                F.transform(base, affine(_HASH_A[i], _HASH_B[i]))
-            ).alias(f"mh_{i}")
-        )
-    return sigs
-
-
-def band_keys(df: DataFrame, bands: int, rows: int) -> DataFrame:
-    """Add (band_idx, band_key) rows: one output row per band — an
-    explode over a tiny literal array, keeping the join equi-join."""
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                F.concat_ws(
-                    ":", *[F.col(f"mh_{b * rows + r}") for r in range(rows)]
-                ).alias("band_key"),
-            )
-            for b in range(bands)
-        ]
+def _lsh_bands(df: DataFrame, surface_col: str) -> DataFrame:
+    """df + ``shingles``, one row per LSH band (band_idx, band_key)."""
+    sh = df.withColumn("shingles", char_shingles(F.col(surface_col)))
+    return band_table(
+        sh.withColumn("_mh_base", base_hashes(F.col("shingles"))),
+        "_mh_base", _HASH_A, _HASH_B, LSH_BANDS, LSH_ROWS,
     )
-    return df.select(
-        *[c for c in df.columns if not c.startswith("mh_")],
-        F.explode(band_structs).alias("band"),
-    ).select("*", "band.band_idx", "band.band_key").drop("band")
 
 
-def _with_signature(df: DataFrame, surface_col: str, k: int) -> DataFrame:
-    from .textstats import md5_hash32_expr
-
-    sh = char_shingles(F.col(surface_col))
-    # base-hash the shingle array ONCE in its own projection; the k
-    # LCG minhashes read the hashed array. CollapseProject keeps the
-    # split (the base expression is non-cheap and used k times), so
-    # codegen compiles one md5 pass + k tiny affine folds instead of a
-    # k-way md5 tree — same values bit-for-bit (DuckDB mirrors pinned)
-    df = df.withColumn("shingles", sh).withColumn(
-        "_mh_base",
-        F.transform(
-            F.col("shingles"), lambda s: md5_hash32_expr(s) % _MERSENNE
-        ),
-    )
-    return df.select(
-        "*", *minhash_from_base(F.col("_mh_base"), k)
-    ).drop("_mh_base")
-
-
-def link_surfaces(
-    surfaces: DataFrame,
-    dictionary: DataFrame,
-    jaccard_threshold: float = 0.5,
-    bands: int = 8,
-    rows: int = 3,
-) -> DataFrame:
+def link_surfaces(surfaces: DataFrame, dictionary: DataFrame) -> DataFrame:
     """DISTINCT (surface_norm, entity_type) rows -> + (canonical_id,
     canonical_name, link_method in {dict, lsh, unlinked}).
 
@@ -135,8 +82,10 @@ def link_surfaces(
     attach_surface_links broadcasts it back onto mention rows. At
     100 TB that's the only shape that works, and at bench scale it
     removed a 4.2M-row mention-grain cache from the graph pipeline."""
-    k = bands * rows
     d = dictionary.withColumn("alias_norm", normalized_surface("alias"))
+    # cache: `exact` feeds the residual side and the final join, and AQE
+    # does not reuse the two copies' input exchange and dictionary
+    # broadcast. Vocabulary grain; session.release_caches frees it.
     exact = surfaces.alias("m").join(
         F.broadcast(d.alias("d")),
         (F.col("m.surface_norm") == F.col("d.alias_norm"))
@@ -146,24 +95,17 @@ def link_surfaces(
         "m.*",
         F.col("d.canonical_id").alias("canonical_id"),
         F.col("d.canonical_name").alias("canonical_name"),
-    )
+    ).cache()
 
     res_surfaces = (
         exact.filter(F.col("canonical_id").isNull())
         .select("surface_norm", "entity_type")
     )
-    res_sig = band_keys(
-        _with_signature(res_surfaces, "surface_norm", k), bands, rows
-    )
-    dict_sig = band_keys(
-        _with_signature(
-            d.select("alias_norm", "entity_type", "canonical_id",
-                     "canonical_name").dropDuplicates(["alias_norm", "entity_type"]),
-            "alias_norm",
-            k,
-        ),
-        bands,
-        rows,
+    res_sig = _lsh_bands(res_surfaces, "surface_norm")
+    dict_sig = _lsh_bands(
+        d.select("alias_norm", "entity_type", "canonical_id",
+                 "canonical_name").dropDuplicates(["alias_norm", "entity_type"]),
+        "alias_norm",
     )
     cand = (
         res_sig.alias("r")
@@ -187,7 +129,7 @@ def link_surfaces(
             F.size(F.array_intersect("s_r", "s_a"))
             / F.size(F.array_union("s_r", "s_a")),
         )
-        .filter(F.col("jaccard") >= jaccard_threshold)
+        .filter(F.col("jaccard") >= JACCARD_T)
     )
     # ONE shuffle picks the winner. The reference semantics are
     # "ORDER BY jaccard DESC, alias_norm, take first" (the DuckDB
@@ -252,13 +194,7 @@ def attach_surface_links(
     )
 
 
-def link_mentions(
-    mentions: DataFrame,
-    dictionary: DataFrame,
-    jaccard_threshold: float = 0.5,
-    bands: int = 8,
-    rows: int = 3,
-) -> DataFrame:
+def link_mentions(mentions: DataFrame, dictionary: DataFrame) -> DataFrame:
     """mentions(surface, entity_type, ...) -> + (canonical_id,
     canonical_name, link_method in {dict, lsh, unlinked}).
 
@@ -272,10 +208,7 @@ def link_mentions(
         .select("surface_norm", "entity_type")
         .dropDuplicates()
     )
-    links = link_surfaces(
-        surfaces, dictionary, jaccard_threshold, bands, rows
-    )
-    return attach_surface_links(mentions, links)
+    return attach_surface_links(mentions, link_surfaces(surfaces, dictionary))
 
 
 def mentions_from_triples(triples: DataFrame) -> DataFrame:

@@ -13,9 +13,11 @@ The oracle side recomputes the SAME values relationally in DuckDB:
   non-SQL-expressible (Python-re lookarounds), so the gold file is the
   anchor; everything downstream is derived relationally from it.
 * ``kg_linked_mentions`` — exact dictionary join + the banded
-  MinHash-LSH residual linker re-expressed in DuckDB SQL over the same
-  md5-prefix hash family (same deterministic arithmetic both engines,
-  the repo's standard oracle discipline — see dedup.sql_dedup_minhash).
+  MinHash-LSH residual linker re-expressed in DuckDB SQL: the min-hash
+  columns and band rows come from the shared kernel's SQL mirror
+  (operators/minhash.py, the one document dedup uses too) over
+  linking's hash family, with linking's tuning constants imported, so
+  the two engines run the same deterministic arithmetic.
   LSH *recall* versus an exhaustive all-pairs Jaccard linker is gated
   separately in tests/test_linking_graph.py.
 * ``kg_nodes`` / ``kg_edges`` — canonical-id aggregation over the
@@ -35,13 +37,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.graph import synthetic_entity_id_sql
-from ..operators.linking import _HASH_A, _HASH_B, _MERSENNE
-from ..operators.textstats import md5_hash32_sql
-
-# must equal operators.linking.link_mentions defaults
-JACCARD_T = 0.5
-LSH_BANDS = 8
-LSH_ROWS = 3
+from ..operators.linking import (
+    _HASH_A, _HASH_B, JACCARD_T, LSH_BANDS, LSH_ROWS, SHINGLE_N,
+)
+from ..operators.minhash import band_rows_sql, base_hash_sql, minhash_cols_sql
 
 
 # ---------------------------------------------------------------- Spark side
@@ -307,34 +306,8 @@ def _shingle_sql(col: str) -> str:
     p = f"('^' || {col} || '$')"
     return (
         f"list_distinct(list_transform("
-        f"range(0, greatest(length({p}) - 3, 0) + 1), "
-        f"i -> substring({p}, i + 1, 3)))"
-    )
-
-
-def _mh_cols_sql() -> str:
-    """The K = bands*rows min-hash columns over an ``sh`` shingle list —
-    mirrors linking.minhash_from_base (md5-prefix LCG family)."""
-    h = md5_hash32_sql("s")
-    return ", ".join(
-        f"list_aggregate(list_transform(sh, s -> "
-        f"(({h}) % {_MERSENNE} * {_HASH_A[i]} + {_HASH_B[i]}) "
-        f"% {_MERSENNE}), 'min') AS mh_{i}"
-        for i in range(LSH_BANDS * LSH_ROWS)
-    )
-
-
-def _band_rows_sql(src: str, carry_cols: str) -> str:
-    """One row per (row, band) with the concat band key — mirrors
-    linking.band_keys."""
-    return " UNION ALL ".join(
-        f"SELECT {carry_cols}, {b} AS band_idx, "
-        + " || ':' || ".join(
-            f"CAST(mh_{b * LSH_ROWS + r} AS VARCHAR)"
-            for r in range(LSH_ROWS)
-        )
-        + f" AS band_key FROM {src}"
-        for b in range(LSH_BANDS)
+        f"range(0, greatest(length({p}) - {SHINGLE_N}, 0) + 1), "
+        f"i -> substring({p}, i + 1, {SHINGLE_N})))"
     )
 
 
@@ -343,6 +316,14 @@ def _linked_ctes(d: str) -> str:
     entity_type, surface_norm, canonical_id, canonical_name,
     link_method, entity_id, node_name)."""
     syn = synthetic_entity_id_sql("surface_norm", "entity_type")
+    mh = minhash_cols_sql("sh", "s", base_hash_sql("s"), _HASH_A, _HASH_B)
+    rbands = band_rows_sql(
+        "rsig", "surface_norm, entity_type, sh", LSH_BANDS, LSH_ROWS
+    )
+    dbands = band_rows_sql(
+        "dsig", "alias_norm, entity_type, canonical_id, canonical_name, sh",
+        LSH_BANDS, LSH_ROWS,
+    )
     return f"""
 g AS (SELECT * FROM read_parquet('{d}/gold_triples.parquet')),
 dict AS (
@@ -368,16 +349,15 @@ residual_surf AS (
 rs AS (SELECT surface_norm, entity_type,
               {_shingle_sql("surface_norm")} AS sh
        FROM residual_surf),
-rsig AS (SELECT surface_norm, entity_type, sh, {_mh_cols_sql()} FROM rs),
-rbands AS ({_band_rows_sql("rsig", "surface_norm, entity_type, sh")}),
+rsig AS (SELECT surface_norm, entity_type, sh, {mh} FROM rs),
+rbands AS ({rbands}),
 da AS (SELECT alias_norm, entity_type, canonical_id, canonical_name,
               {_shingle_sql("alias_norm")} AS sh
        FROM (SELECT DISTINCT alias_norm, entity_type, canonical_id,
                     canonical_name FROM dict)),
 dsig AS (SELECT alias_norm, entity_type, canonical_id, canonical_name,
-                sh, {_mh_cols_sql()} FROM da),
-dbands AS ({_band_rows_sql(
-    "dsig", "alias_norm, entity_type, canonical_id, canonical_name, sh")}),
+                sh, {mh} FROM da),
+dbands AS ({dbands}),
 cand AS (
   SELECT DISTINCT r.surface_norm, r.entity_type, a.alias_norm,
          a.canonical_id, a.canonical_name,

@@ -1,7 +1,9 @@
 """The spark-submit job end to end, each run in its own JVM from a cwd
 outside the checkout: with the committed ``--py-files`` zip the Python
 daemon imports the package and the triples match the gold exactly; with
-``--graph --gold`` the checkpointed pipeline's triples are scored too."""
+``--graph --gold`` the checkpointed pipeline's triples are scored too.
+On both paths a page whose html does not extract to its text fails the
+job."""
 
 from __future__ import annotations
 
@@ -25,12 +27,33 @@ def small_corpus(tmp_path_factory):
     return str(d)
 
 
-def _run(cmd: list[str], cwd) -> dict:
+@pytest.fixture(scope="module")
+def altered_corpus(small_corpus, tmp_path_factory):
+    """small_corpus with one English page's text altered, so that
+    page's html no longer extracts to its text."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path_factory.mktemp("job_corpus_altered")
+    for name in os.listdir(small_corpus):
+        shutil.copy(os.path.join(small_corpus, name), d)
+    pages = pq.read_table(d / "pages.parquet")
+    text = pages.column("text").to_pylist()
+    text[pages.column("lang").to_pylist().index("en")] += " altered"
+    pq.write_table(
+        pages.set_column(pages.schema.get_field_index("text"), "text",
+                         pa.array(text, pa.string())),
+        d / "pages.parquet",
+    )
+    return str(d)
+
+
+def _run(cmd: list[str], cwd, returncode: int = 0) -> dict:
     # nothing but the job's own argv may put the package on the path
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     out = subprocess.run(cmd, cwd=cwd, env=env, capture_output=True,
                          text=True, timeout=600)
-    assert out.returncode == 0, out.stderr[-4000:]
+    assert out.returncode == returncode, out.stderr[-4000:]
     return json.loads(out.stdout.strip().splitlines()[-1])
 
 
@@ -58,3 +81,14 @@ def test_graph_gold_prints_precision_and_recall(small_corpus, tmp_path):
     )
     assert m["n_edges"] > 0
     assert (m["precision"], m["recall"]) == (1.0, 1.0)
+
+
+@pytest.mark.parametrize("mode", [[], ["--graph"]], ids=["triples", "graph"])
+def test_extraction_mismatch_fails_the_job(altered_corpus, tmp_path, mode):
+    m = _run(
+        [sys.executable, os.path.join(ROOT, "job.py"), *mode,
+         "--corpus-dir", altered_corpus, "--out", str(tmp_path / "out"),
+         "--cores", "2"],
+        cwd=tmp_path, returncode=1,
+    )
+    assert m["extraction_mismatches"] == 1

@@ -107,30 +107,75 @@ def test_cache_scope_releases_everything(spark):
     assert list(spark.sparkContext._jsc.getPersistentRDDs().keys()) == []
 
 
+def _final_plan_nodes(df):
+    """(nodeName, simpleString) of every node of ``df``'s executed plan
+    after an action: through AQE's query stages, and into each cached
+    relation's own plan ONCE (however many scans read it)."""
+    jvm = df.sparkSession._jvm
+    seen, out = set(), []
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        n = stack.pop()
+        name = n.nodeName()
+        if name == "AdaptiveSparkPlan":
+            stack.append(n.executedPlan())
+            continue
+        out.append((name, n.simpleString(400)))
+        it = n.children().iterator()
+        while it.hasNext():
+            stack.append(it.next())
+        if name.endswith("QueryStage"):
+            stack.append(n.plan())
+        if name == "InMemoryTableScan":
+            rel = jvm.System.identityHashCode(n.relation().cacheBuilder())
+            if rel not in seen:
+                seen.add(rel)
+                stack.append(n.relation().cachedPlan())
+    return out
+
+
 def test_link_surfaces_single_winner_aggregation(spark):
     """Regression pin for the r5 linking plan: winner selection is ONE
     aggregation — no Window node (the old dropDuplicates + row_number
-    pair cost two vocabulary-grain shuffles and a sort)."""
+    pair cost two vocabulary-grain shuffles and a sort). And the
+    dictionary-matched frame is materialized once: a lazy input's
+    distinct shuffle and the exact-dictionary broadcast each run once,
+    not once per consumer (the residual LSH side and the final join)."""
     import pandas as pd
 
     from remediner_spark.operators.linking import link_surfaces
-    from remediner_spark.sources.corpus import generate_entity_dictionary
-
-    surfaces = spark.createDataFrame(
-        pd.DataFrame(
-            {"surface_norm": [f"s{i}" for i in range(20)],
-             "entity_type": ["DRUG"] * 10 + ["EFFECT"] * 10}
-        )
+    from remediner_spark.session import release_caches
+    from remediner_spark.sources.corpus import (
+        generate_entity_dictionary,
+        typo_surface,
     )
-    dictionary = spark.createDataFrame(generate_entity_dictionary())
-    import io
-    from contextlib import redirect_stdout
 
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        link_surfaces(surfaces, dictionary).explain("formatted")
-    plan = buf.getvalue()
+    d = generate_entity_dictionary()
+    al = d.drop_duplicates(["alias", "entity_type"]).head(20)
+    rows = [(a.lower(), t) for a, t in zip(al.alias, al.entity_type)]
+    rows += [(typo_surface(a).lower(), t) for a, t in rows]
+    rows += [(f"s{i}", "DRUG") for i in range(10)]
+    surfaces = spark.createDataFrame(
+        pd.DataFrame(rows * 2, columns=["surface_norm", "entity_type"])
+    ).dropDuplicates()
+    linked = link_surfaces(surfaces, spark.createDataFrame(d))
+    plan = plan_of(linked)
     assert "Window" not in plan
     # struct-min compiles to SortAggregate (still partial+final — one
     # exchange), never a Window sort
     assert "SortAggregate" in plan
+
+    methods = {r.link_method for r in linked.collect()}
+    assert methods == {"dict", "lsh", "unlinked"}
+    nodes = _final_plan_nodes(linked)
+    input_shuffles = [
+        s for name, s in nodes
+        if name in ("Exchange", "ReusedExchange")
+        and "hashpartitioning(surface_norm" in s
+    ]
+    assert len(input_shuffles) == 1, input_shuffles
+    # three broadcasts: the exact dictionary, the alias bands and the
+    # LSH winners (uncached, the exact dictionary was broadcast twice)
+    broadcasts = [s for name, s in nodes if name == "BroadcastExchange"]
+    assert len(broadcasts) == 3, broadcasts
+    release_caches(spark)
