@@ -11,6 +11,10 @@ per-output-word relation ids and emits (subj=drug, obj=effect) pairs.
 
 from __future__ import annotations
 
+from typing import Callable
+
+import pandas as pd
+
 PRED_CAUSES = "CAUSES"
 
 
@@ -41,3 +45,32 @@ def assemble_triples(
             for e in effects_by_group.get(rid, []):
                 triples.append((d, PRED_CAUSES, e))
     return triples
+
+
+def pairs_frame(
+    norm: pd.Series,
+    extract: Callable[[list[list[str]]], list[list[tuple[str, str, str]]]],
+) -> pd.DataFrame:
+    """Normalized sentences -> (row, subj, obj) pairs through a model's
+    word-list ``extract`` (one triple list per sentence), the
+    ``extract_pairs`` contract of operators.ner.extract_triples_stage.
+
+    Whitespace-only sentences never reach ``extract``. ``row`` is the
+    positional index into ``norm`` and is int64 even when no sentence
+    pairs, so the stage's fancy indexing stays valid on an empty batch.
+    """
+    words = [s.split() for s in norm.to_numpy()]
+    keep = [i for i, w in enumerate(words) if w]
+    rows, subjs, objs = [], [], []
+    for i, triples in zip(keep, extract([words[i] for i in keep])):
+        for s, _p, o in triples:
+            rows.append(i)
+            subjs.append(s)
+            objs.append(o)
+    return pd.DataFrame(
+        {
+            "row": pd.Series(rows, dtype="int64"),
+            "subj": pd.Series(subjs, dtype=object),
+            "obj": pd.Series(objs, dtype=object),
+        }
+    )

@@ -1,8 +1,8 @@
 """BERT tagger stage (M1) — the reference's token classifier
 (bert-base-cased, the reference's src/NER/model_ner.py:6-24) executed
-as a numpy transcription behind the same ``tag_words`` interface as
-the deterministic GazetteerTagger, so the pipeline swaps models
-without changing the plan:
+as a numpy transcription behind the same ``extract_pairs`` contract as
+the deterministic GazetteerTagger (operators/ner.py), so the pipeline
+swaps models without changing the plan:
 
     tagger_bc = spark.sparkContext.broadcast(NumpyBertTagger.seeded())
     triples   = extract_triples_stage(pages, tagger_bc)
@@ -14,6 +14,8 @@ torch/transformers are not dependencies: trained weights enter through
 from __future__ import annotations
 
 from typing import Sequence
+
+import pandas as pd
 
 IOB_LABELS = ["O", "B-Drug", "I-Drug", "B-Effect", "I-Effect"]
 
@@ -84,6 +86,20 @@ class NumpyBertTagger:
                 "(vocab file) the checkpoint was trained with"
             )
         return cls(params, max_len=max_len, tokenizer=tok)
+
+    def extract_pairs(self, norm: pd.Series) -> pd.DataFrame:
+        """Batched forward -> M3 mentions -> positional pairing."""
+        from ..gold import pair_mentions_positional
+        from ..kernels.pairing import pairs_frame
+        from ..kernels.reconstruct import mentions_from_word_iob
+
+        def extract(sentences: list[list[str]]):
+            return [
+                pair_mentions_positional(mentions_from_word_iob(w, t)[1])
+                for w, t in zip(sentences, self.tag_words_batch(sentences))
+            ]
+
+        return pairs_frame(norm, extract)
 
     def tag_words(self, words: Sequence[str]) -> list[str]:
         return self.tag_words_batch([list(words)])[0]

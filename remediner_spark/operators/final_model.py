@@ -15,28 +15,22 @@ test_final.py:60-95, executed torch-free end-to-end:
 Both model stages run the transcribed reference architectures over
 broadcast seeded weights (kernels/bert_encoder.py, kernels/re_head.py);
 every glue step is the same engine kernel the gazetteer path uses.
-``final_model_stage`` is the fused mapInPandas form — one Python hop
-per Arrow batch for the whole composition, like extract_triples_stage.
+``NumpyFinalModel.extract_pairs`` is its entry into the fused
+operators/ner.extract_triples_stage — one Python hop per Arrow batch
+for segmentation, normalization and the whole composition.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
 
-from ..kernels.pairing import assemble_triples
+from ..kernels.pairing import assemble_triples, pairs_frame
 from ..kernels.re_head import re_head_forward, seeded_encoder
 from ..kernels.reconstruct import mentions_from_word_iob
 from ..kernels.wordpiece import (
     frame_words_for_inference,
     project_first_subtoken,
-)
-
-TRIPLE_SCHEMA = (
-    "url string, sent_idx int, subj string, pred string, obj string"
 )
 
 
@@ -48,6 +42,11 @@ class NumpyFinalModel:
         self.ner = ner_tagger
         self.re_params = re_params
         self.re_max_len = re_max_len
+
+    def extract_pairs(self, norm: pd.Series) -> pd.DataFrame:
+        """Normalized sentences -> (row, subj, obj): ``extract``
+        flattened (its triples are all CAUSES)."""
+        return pairs_frame(norm, self.extract)
 
     def extract(
         self, sentences: list[list[str]]
@@ -79,42 +78,3 @@ class NumpyFinalModel:
             )
             out.append(assemble_triples(mentions, rel))
         return out
-
-
-def final_model_stage(
-    sentences: DataFrame, model_bc, normalize_input: bool = False
-) -> DataFrame:
-    """(url, sent_idx, sentence) rows -> composed-model triples; ONE
-    mapInPandas hop per batch for NER+M3+M4+RE+M6. Pass
-    ``normalize_input=True`` when sentences are raw (the byte-parity
-    normalization kernel then runs inside the same hop); default
-    expects already-normalized text."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.normalize import normalize_series
-
-        model = model_bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            sent = (
-                normalize_series(pdf["sentence"])
-                if normalize_input
-                else pdf["sentence"]
-            )
-            word_lists = [s.split() for s in sent]
-            keep = [i for i, w in enumerate(word_lists) if w]
-            triples = model.extract([word_lists[i] for i in keep])
-            rows = []
-            urls = pdf["url"].to_numpy()
-            idxs = pdf["sent_idx"].to_numpy()
-            for j, i in enumerate(keep):
-                for s, p, o in triples[j]:
-                    rows.append((urls[i], int(idxs[i]), s, p, o))
-            yield pd.DataFrame(
-                rows, columns=["url", "sent_idx", "subj", "pred", "obj"]
-            )
-
-    return sentences.select("url", "sent_idx", "sentence").mapInPandas(
-        fn, TRIPLE_SCHEMA
-    )

@@ -1,33 +1,37 @@
 """NER tagging stage + fused triple extraction.
 
-The tagger is pluggable behind `TaggerModel.tag_words`:
+`extract_triples_stage` is the engine's one pages -> triples Python
+stage. Every model enters it through one method,
+``extract_pairs(norm: pd.Series) -> DataFrame[row int64, subj, obj]``
+over a batch of normalized sentences:
 
 * `GazetteerTagger` — deterministic lexicon tagger, the test-mode model
   (SURVEY.md M1): reproduces the reference's gold span semantics
   exactly, so pipeline triples can be scored against the pandas gold.
+  Its pairs come from the batch-vectorized `BatchMatcher`.
 * `NumpyBertTagger` — the BERT token classifier executed in numpy
-  (operators/bert_stub.py), broadcast once per executor.
+  (operators/bert_stub.py).
+* `NumpyFinalModel` — the composed NER -> RE model
+  (operators/final_model.py).
 
-`extract_triples_stage` is the fused hot path: ONE mapInPandas stage
-runs segmentation -> normalization -> NER -> reconstruction (M3) -> RE
-pairing (M6) per Arrow batch — a single JVM<->Python round-trip per
-partition chunk, per SURVEY.md §4.3 (UDF pipelining). Model/lexicon
-state ships once per executor via SparkContext.broadcast, with a
-per-process singleton cache.
+ONE mapInPandas stage runs segmentation -> normalization -> the model's
+NER/reconstruction (M3)/RE pairing (M6) per Arrow batch — a single
+JVM<->Python round-trip per partition chunk, per SURVEY.md §4.3 (UDF
+pipelining). Model/lexicon state ships once per executor via
+SparkContext.broadcast, with a per-process singleton cache.
 """
 
 from __future__ import annotations
 
 from typing import Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..gold import pair_mentions_positional
 from ..kernels import webtext
 from ..kernels.normalize import normalize_series
-from ..kernels.reconstruct import mentions_from_word_iob
 from ..kernels.tagmatch import BatchMatcher
 
 TRIPLE_SCHEMA = (
@@ -76,49 +80,13 @@ class GazetteerTagger:
         return tags
 
     def batch_matcher(self) -> BatchMatcher:
-        """Capability hook for the vectorized fast path: taggers that
-        can be compiled to a BatchMatcher expose this; model taggers
-        (only a tag_words surface) don't, and take the generic
-        per-sentence path in extract_triples_stage."""
+        """The lexicon compiled to the batch-vectorized matcher, whose
+        semantics tests/test_tagmatch_differential.py pins to the
+        per-sentence tag_words -> reconstruct -> pair chain."""
         return BatchMatcher(self._index)
 
-
-def _pairs_per_sentence(norm: pd.Series, tagger) -> pd.DataFrame:
-    """Generic (model-tagger) path: tag -> mentions_from_word_iob ->
-    positional pairing.
-
-    Prefers the tagger's ``tag_words_batch`` when exposed (one batched
-    forward per Arrow batch — batching is the point of mapInPandas
-    model serving; NumpyBertTagger exposes it), falling
-    back to per-sentence ``tag_words``. The row index column is always
-    int64 so downstream fancy indexing stays valid on zero-pair batches
-    (an all-object empty frame would make `sent[...][r]` raise).
-    """
-    word_lists = [t.split() for t in norm.to_numpy()]
-    batch_fn = getattr(tagger, "tag_words_batch", None)
-    if batch_fn is not None:
-        nonempty = [i for i, w in enumerate(word_lists) if w]
-        tagged = zip(nonempty, batch_fn([word_lists[i] for i in nonempty]))
-    else:
-        tagged = (
-            (i, tagger.tag_words(w)) for i, w in enumerate(word_lists) if w
-        )
-    rows: list[int] = []
-    subjs: list[str] = []
-    objs: list[str] = []
-    for i, tags in tagged:
-        _, mentions = mentions_from_word_iob(word_lists[i], tags)
-        for s, _p, o in pair_mentions_positional(mentions):
-            rows.append(i)
-            subjs.append(s)
-            objs.append(o)
-    return pd.DataFrame(
-        {
-            "row": pd.Series(rows, dtype="int64"),
-            "subj": pd.Series(subjs, dtype=object),
-            "obj": pd.Series(objs, dtype=object),
-        }
-    )
+    def extract_pairs(self, norm: pd.Series) -> pd.DataFrame:
+        return self.batch_matcher().extract_pairs(norm)
 
 
 def extract_triples_stage(
@@ -129,7 +97,8 @@ def extract_triples_stage(
 ) -> DataFrame:
     """Fused pages -> triples mapInPandas stage (CAUSES direction).
 
-    `tagger_bc` is a SparkContext.broadcast of a TaggerModel. Output:
+    `tagger_bc` is a SparkContext.broadcast of a model with an
+    ``extract_pairs`` method (module docstring). Output:
     (url, warc_ts, sent_idx, subj, pred, obj), one row per extracted
     relation; subjects/objects are lowercase mention surfaces, matching
     the reference's lowercased entity convention
@@ -143,16 +112,7 @@ def extract_triples_stage(
     """
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tagger = tagger_bc.value
-        # batch-vectorized tagging/pairing kernel for lexicon taggers;
-        # semantics pinned to the per-sentence tag_words->reconstruct->
-        # pair chain by tests/test_tagmatch_differential.py. Model
-        # taggers (Bert/Dummy: only a tag_words surface) take the
-        # generic per-sentence path.
-        bm = getattr(tagger, "batch_matcher", None)
-        matcher = bm() if bm is not None else None
-        import numpy as np
-
+        model = tagger_bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -172,19 +132,13 @@ def extract_triples_stage(
                 run_start, np.diff(np.append(run_start, total))
             )
             norm = normalize_series(pd.Series(flat, dtype=object))
-            if matcher is not None:
-                pairs = matcher.extract_pairs(norm)
-            else:
-                pairs = _pairs_per_sentence(norm, tagger)
+            pairs = model.extract_pairs(norm)
             r = pairs["row"].to_numpy()
             d = doc_of[r]
-            warc = (
-                pdf["warc_ts"].to_numpy()[d] if "warc_ts" in pdf else None
-            )
             yield pd.DataFrame(
                 {
                     "url": pdf["url"].to_numpy()[d],
-                    "warc_ts": warc,
+                    "warc_ts": pdf["warc_ts"].to_numpy()[d],
                     "sent_idx": sent_idx[r].astype("int32"),
                     "subj": pairs["subj"].to_numpy(),
                     "pred": "CAUSES",

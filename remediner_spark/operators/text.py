@@ -1,7 +1,10 @@
-"""Column-level Arrow UDF text operators (extraction, segmentation).
+"""Column-level text operators: the language filter and the html->text
+extraction audit.
 
-Each is a Series-to-Series pandas UDF over the pure kernels — one
+Extraction is a Series-to-Series pandas UDF over the pure kernel — one
 Python-worker hop, vectorized inside the batch, no per-row Spark UDFs.
+Segmentation has no operator of its own: it runs inside the fused
+extraction stage (operators.ner.extract_triples_stage).
 The parity-critical normalization (Python `re` lookarounds, SURVEY R6)
 must NOT be re-expressed with JVM `regexp_replace`; everything else
 relational stays Catalyst-side.
@@ -10,10 +13,10 @@ relational stays Catalyst-side.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, StringType
+from pyspark.sql.types import StringType
 
 from ..kernels import webtext
 
@@ -24,14 +27,9 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
     return webtext.extract_text(html)
 
 
-@pandas_udf(ArrayType(StringType()))
-def split_sentences_udf(text: pd.Series) -> pd.Series:
-    return webtext.split_sentences(text)
-
-
-def filter_language(pages: DataFrame, lang: str = "en") -> Column | DataFrame:
-    """Language filter — plain Catalyst predicate, pushed into the scan."""
-    return pages.filter(F.col("lang") == lang)
+def filter_language(pages: DataFrame) -> DataFrame:
+    """English pages — plain Catalyst predicate, pushed into the scan."""
+    return pages.filter(F.col("lang") == "en")
 
 
 def with_extracted_text(pages: DataFrame, col: str = "extracted_text") -> DataFrame:
@@ -46,19 +44,3 @@ def extraction_mismatch_count(pages: DataFrame) -> int:
         .filter(F.col("extracted_text") != F.col("text"))
         .count()
     )
-
-
-def segmented_sentences(pages: DataFrame, text_col: str = "text") -> DataFrame:
-    """pages -> (url, warc_ts, sent_idx, sentence) via posexplode.
-
-    Kept as a standalone relational operator for tests/oracles; the
-    production path fuses segmentation into the extraction stage
-    (operators.ner.extract_triples_stage) to avoid a second Python hop.
-    """
-    return pages.select(
-        "url",
-        "warc_ts",
-        F.posexplode(split_sentences_udf(F.col(text_col))).alias(
-            "sent_idx", "sentence"
-        ),
-    ).withColumn("sent_idx", F.col("sent_idx").cast("int"))

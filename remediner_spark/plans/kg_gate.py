@@ -164,23 +164,25 @@ def _final_model():
 
 def q_kg_final_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composed NER->RE inference (the executed numpy final model,
-    operators/final_model.py) over the corpus sentences. Oracle: the
-    neural forwards are not SQL-expressible, so the expected triples
-    are materialized by an independent driver-side in-process run of
-    the same composition (ensure_final_model_expected) and the DuckDB
-    side is a read_parquet of that file — the same side-file pattern as
-    the IVF centroids (operators/ivf.py). Batch-invariance of the
-    forwards (Spark partitioning == per-sentence driver run) is what
-    makes this sound; it is pinned by tests/test_final_model.py."""
-    from ..operators.final_model import final_model_stage
-    from ..operators.text import filter_language, segmented_sentences
+    operators/final_model.py) over the corpus pages, through the fused
+    extraction stage the gazetteer runs in (operators/ner.py): one
+    Python hop for segmentation, normalization and the composition.
+    Oracle: the neural forwards are not SQL-expressible, so the
+    expected triples are materialized by an independent driver-side
+    in-process run of the same composition (ensure_final_model_expected)
+    and the DuckDB side is a read_parquet of that file — the same
+    side-file pattern as the IVF centroids (operators/ivf.py).
+    Batch-invariance of the forwards (Spark partitioning ==
+    per-sentence driver run) is what makes this sound; it is pinned by
+    tests/test_final_model.py."""
+    from ..operators.ner import extract_triples_stage
+    from ..operators.text import filter_language
 
     pages, _ = _pages_and_dict(spark)
-    # segmented_sentences reads only (url, warc_ts, text) — the html
-    # binary never crosses Arrow (CLAUDE.md mapInPandas-input rule)
-    sentences = segmented_sentences(filter_language(pages)).drop("warc_ts")
     model_bc = spark.sparkContext.broadcast(_final_model())
-    return final_model_stage(sentences, model_bc, normalize_input=True)
+    return extract_triples_stage(filter_language(pages), model_bc).drop(
+        "warc_ts"
+    )
 
 
 def final_model_expected_path() -> str:

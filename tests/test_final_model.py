@@ -31,14 +31,18 @@ def model():
 
 
 @pytest.fixture(scope="module")
-def norm_sentences(corpus_dir):
+def en_pages(corpus_dir):
+    pages = pd.read_parquet(f"{corpus_dir}/pages.parquet")
+    return pages[pages["lang"] == "en"].head(80)
+
+
+@pytest.fixture(scope="module")
+def norm_sentences(en_pages):
     from remediner_spark.kernels.normalize import normalize_series
     from remediner_spark.kernels.webtext import split_sentences
 
-    pages = pd.read_parquet(f"{corpus_dir}/pages.parquet")
-    pages = pages[pages["lang"] == "en"].head(80)
     rows = []
-    for url, lst in zip(pages["url"], split_sentences(pages["text"])):
+    for url, lst in zip(en_pages["url"], split_sentences(en_pages["text"])):
         norm = normalize_series(pd.Series(lst, dtype=object))
         for sent_idx, text in enumerate(norm):
             rows.append((url, sent_idx, text))
@@ -63,13 +67,18 @@ def test_composition_deterministic_and_decodes(model, norm_sentences):
     assert emitted <= all_surfaces
 
 
-def test_spark_stage_equals_driver(spark, model, norm_sentences):
-    from remediner_spark.operators.final_model import final_model_stage
+def test_spark_stage_equals_driver(spark, model, en_pages, norm_sentences):
+    """The fused stage over page text (segmentation and normalization
+    inside the hop) equals the driver-side composition per sentence."""
+    from remediner_spark.operators.ner import extract_triples_stage
 
-    sdf = spark.createDataFrame(norm_sentences).repartition(4)
+    sdf = spark.createDataFrame(
+        en_pages[["url", "warc_ts", "text"]]
+    ).repartition(4)
     model_bc = spark.sparkContext.broadcast(model)
     got = (
-        final_model_stage(sdf, model_bc)
+        extract_triples_stage(sdf, model_bc)
+        .select("url", "sent_idx", "subj", "pred", "obj")
         .toPandas()
         .sort_values(["url", "sent_idx", "subj", "obj"])
         .reset_index(drop=True)

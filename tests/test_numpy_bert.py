@@ -1,5 +1,5 @@
 """M1 executed without torch: numpy BERT-encoder token classification
-behind the pluggable tag_words surface, run through the REAL fused
+behind the ``extract_pairs`` model contract, run through the REAL fused
 extraction stage.
 
 Checks:
@@ -63,8 +63,8 @@ def test_first_subtoken_projection(tagger):
 
 
 def test_fused_stage_with_numpy_bert(spark, corpus_dir, tagger):
-    """The generic model path of extract_triples_stage, driven by the
-    executed numpy BERT — Spark output == driver-side reference chain."""
+    """extract_triples_stage driven by the executed numpy BERT's
+    extract_pairs — Spark output == driver-side per-sentence chain."""
     from remediner_spark.gold import pair_mentions_positional
     from remediner_spark.kernels.normalize import normalize_series
     from remediner_spark.kernels.reconstruct import mentions_from_word_iob

@@ -15,7 +15,6 @@ from remediner_spark.operators.ner import (
 from remediner_spark.operators.text import (
     extraction_mismatch_count,
     filter_language,
-    segmented_sentences,
     with_extracted_text,
 )
 
@@ -45,17 +44,6 @@ def test_language_filter(pages_df):
     total = pages_df.count()
     en = filter_language(pages_df).count()
     assert 0 < en < total
-
-
-def test_segmentation_operator(spark, pages_df, ann_pdf):
-    sents = segmented_sentences(filter_language(pages_df)).toPandas()
-    medical = sents[sents["url"].isin(set(ann_pdf["url"]))]
-    expected = ann_pdf.drop_duplicates(["url", "sent_idx"])
-    assert len(medical) == len(expected)
-    merged = medical.merge(
-        expected, on=["url", "sent_idx"], suffixes=("_got", "_want")
-    )
-    assert (merged["sentence"] == merged["text"]).all()
 
 
 def test_e2e_triples_match_gold(spark, pages_df, ann_pdf, tagger_bc):

@@ -1,7 +1,6 @@
-"""Model-tagger plumbing of the fused extraction stage: a tagger with
-only a per-sentence ``tag_words`` surface (no batch matcher, no
-``tag_words_batch``) takes the generic path of extract_triples_stage
-through broadcast and Arrow batches."""
+"""Model plumbing of the fused extraction stage: a user's model whose
+``extract_pairs`` is built on the shared ``pairs_frame`` helper runs
+through extract_triples_stage via broadcast and Arrow batches."""
 
 from __future__ import annotations
 
@@ -14,6 +13,21 @@ import pytest
 class DummyModel:
     """Deterministic test double for a model tagger: 'predicts' B-Drug
     for words ending in 'x', B-Effect for words ending in 'a'."""
+
+    def extract_pairs(self, norm: pd.Series) -> pd.DataFrame:
+        from remediner_spark.gold import pair_mentions_positional
+        from remediner_spark.kernels.pairing import pairs_frame
+        from remediner_spark.kernels.reconstruct import mentions_from_word_iob
+
+        return pairs_frame(
+            norm,
+            lambda sentences: [
+                pair_mentions_positional(
+                    mentions_from_word_iob(w, self.tag_words(w))[1]
+                )
+                for w in sentences
+            ],
+        )
 
     def tag_words(self, words: Sequence[str]) -> list[str]:
         out = []

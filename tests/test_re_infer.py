@@ -8,10 +8,11 @@ Checks:
 * The decode chain over GOLD-masked corpus sentences pairs a DRUG
   mention with an EFFECT mention of the same sentence, never anything
   else (decode-path integrity on real masks).
-* The Spark stage in the gate's configuration (raw sentences,
-  normalization inside the hop) equals a driver-side forward on the
-  same inputs EXACTLY (plumbing differential: broadcast + Arrow + batch
-  slicing change nothing).
+* The fused extraction stage in the gate's configuration (raw page
+  text, segmentation and normalization inside the hop) equals a
+  driver-side forward on the same inputs EXACTLY (plumbing
+  differential: broadcast + Arrow + batch slicing change nothing), and
+  the gate entry plans one Python stage.
 """
 
 from __future__ import annotations
@@ -120,13 +121,21 @@ def test_e2e_decode_to_triples():
 
 
 def test_spark_stage_matches_driver_forward(spark, corpus_dir):
-    """q_kg_final_model's configuration: the gate's model over raw
-    sentences with ``normalize_input=True``, repartitioned, equals the
-    driver-side composition over the normalized text."""
+    """q_kg_final_model's configuration: the gate's model in the fused
+    extraction stage over raw page text (segmentation and normalization
+    inside the hop), repartitioned, equals the driver-side composition
+    over the normalized sentences. The gate entry itself plans that one
+    Python stage and no column UDF."""
     from remediner_spark.kernels.normalize import normalize_series
     from remediner_spark.kernels.webtext import split_sentences
-    from remediner_spark.operators.final_model import final_model_stage
-    from remediner_spark.plans.kg_gate import _final_model
+    from remediner_spark.operators.ner import extract_triples_stage
+    from remediner_spark.plancheck import physical_nodes
+    from remediner_spark.plans.kg_gate import _final_model, q_kg_final_model
+
+    gate = q_kg_final_model(spark, "")
+    assert len(physical_nodes(gate, "MapInPandas")) == 1
+    assert physical_nodes(gate, "ArrowEvalPython") == []
+    assert physical_nodes(gate, "BatchEvalPython") == []
 
     pages = pd.read_parquet(f"{corpus_dir}/pages.parquet")
     pages = pages[pages["lang"] == "en"].head(60)
@@ -142,11 +151,13 @@ def test_spark_stage_matches_driver_forward(spark, corpus_dir):
     model_bc = spark.sparkContext.broadcast(model)
     key = ["url", "sent_idx", "subj", "obj"]
     got = (
-        final_model_stage(
-            spark.createDataFrame(raw).repartition(4),
+        extract_triples_stage(
+            spark.createDataFrame(
+                pages[["url", "warc_ts", "text"]]
+            ).repartition(4),
             model_bc,
-            normalize_input=True,
         )
+        .select("url", "sent_idx", "subj", "pred", "obj")
         .toPandas()
         .sort_values(key)
         .reset_index(drop=True)
