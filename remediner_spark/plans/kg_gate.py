@@ -76,8 +76,10 @@ def _linked(spark: SparkSession) -> DataFrame:
     from ..operators.linking import link_mentions, mentions_from_triples
 
     _, dictionary = _pages_and_dict(spark)
-    # cache: mentions_from_triples branches the extraction stage twice
-    triples = q_kg_triples(spark, "").cache()
+    # materialize before branching: mentions_from_triples and the
+    # linker branch the extraction several times, and a lazy cache
+    # started those branches as concurrent stages over one unbuilt block
+    triples = q_kg_triples(spark, "").localCheckpoint()
     return with_entity_ids(
         link_mentions(mentions_from_triples(triples), dictionary)
     )

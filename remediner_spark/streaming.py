@@ -9,21 +9,52 @@ micro-batch's edge deltas into an Iceberg-style table
 stops, which both bounds test runtime and models scheduled micro-batch
 catch-up runs on a cluster. ``link_merge_fn`` applies the same
 bucketed merge to the web link graph.
+
+A micro-batch's fixed cost is Spark scheduling, not the Python stage,
+so each trigger runs as few jobs and tasks as the merge needs: the
+page schema is inferred once per stream instance and kept in the
+checkpoint, the batch is aggregated once (by the merge itself), and
+the merge's write runs in one wave of at most ``defaultParallelism``
+tasks.
 """
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.storagelevel import StorageLevel
 
 from .operators.ner import extract_triples_stage
 
 
-def stream_pages(spark: SparkSession, pages_dir: str) -> DataFrame:
-    """File-source stream over a directory of pages parquet files."""
+def stream_pages(spark: SparkSession, pages_dir: str,
+                 checkpoint_dir: str) -> DataFrame:
+    """File-source stream over a directory of pages parquet files.
+
+    The schema is inferred from the directory on a stream instance's
+    first start (an empty directory raises) and stored in its
+    checkpoint, written to a temp file and renamed; later starts read
+    it back. Inference lists the directory and runs a footer-reading
+    job, which every trigger-sized start would otherwise pay. It is
+    inferred, not fixed: pandas-written pages carry ``timestamp_ntz``
+    and Spark-written ones ``timestamp``, and reading either as the
+    other moves ``warc_ts`` by the session zone's offset."""
+    path = os.path.join(checkpoint_dir, "pages_schema.json")
+    try:
+        with open(path) as fh:
+            schema = StructType.fromJson(json.load(fh))
+    except FileNotFoundError:
+        schema = spark.read.parquet(pages_dir).schema
+        os.makedirs(checkpoint_dir, exist_ok=True)
+        with open(path + ".tmp", "w") as fh:
+            json.dump(schema.jsonValue(), fh)
+        os.replace(path + ".tmp", path)
     return (
-        spark.readStream.schema(spark.read.parquet(pages_dir).schema)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 8)
         .parquet(pages_dir)
     )
@@ -46,12 +77,13 @@ def stream_edge_weights(
 
     * the edge table is partitioned by ``bucket = pmod(xxhash64(subj),
       n_buckets)``;
-    * each micro-batch aggregates its triples to per-edge deltas, reads
-      ONLY the touched buckets from the current snapshot (manifest
-      pruning — untouched partitions are never opened), merges
-      (weight := sum, first_seen := min), and commits the rewritten
-      buckets with ``mode='replace_partitions'`` — one new snapshot per
-      micro-batch, so the edge table is time-travelable across batches;
+    * each micro-batch reads ONLY its touched buckets from the current
+      snapshot (manifest pruning — untouched partitions are never
+      opened), aggregates its triples together with those rows in ONE
+      groupBy (weight := sum of 1 per triple, first_seen := min
+      warc_ts), and commits the rewritten buckets with
+      ``mode='replace_partitions'`` — one new snapshot per micro-batch,
+      so the edge table is time-travelable across batches;
     * replays are idempotent AND scoped: foreachBatch can re-deliver a
       batch after failure, so the last merged (scope, batch_id) rides
       INSIDE the snapshot record (write_table properties — one atomic
@@ -65,9 +97,15 @@ def stream_edge_weights(
     At 10^12 docs the per-batch work scales with the DELTA (touched
     buckets), not the table: n_buckets rises so each bucket stays
     rewrite-sized, exactly like Iceberg bucket partitioning.
+
+    The pages schema is inferred on the checkpoint's first start and
+    read back from it afterwards (``stream_pages``), so a restart runs
+    no Spark job before its first micro-batch.
     """
     merge_batch = edge_merge_fn(spark, table_path, checkpoint_dir, n_buckets)
-    pages = stream_pages(spark, pages_dir).filter(F.col("lang") == lang)
+    pages = stream_pages(spark, pages_dir, checkpoint_dir).filter(
+        F.col("lang") == lang
+    )
     triples = extract_triples_stage(pages, tagger_bc)
     return (
         triples.writeStream.foreachBatch(merge_batch)
@@ -95,14 +133,18 @@ def _bucketed_merge_fn(spark: SparkSession, table_path: str, scope: str,
     """foreachBatch merge of a micro-batch's deltas into a table
     partitioned by ``bucket = pmod(xxhash64(hash_col), n_buckets)``.
 
-    ``deltas_of(batch_df)`` gives the batch's rows in the table's
-    column order (bucket excluded); rows sharing ``group_cols`` fold
-    with ``merge_aggs``. A batch id at or below the last one committed
-    under ``scope`` is a redelivery and does nothing. Otherwise only
-    the touched buckets are read (manifest-pruned), unioned with the
-    deltas, re-aggregated and committed as ONE replace_partitions
-    snapshot whose properties carry the (scope, batch_id) marker — data
-    and marker land in the same atomic commit."""
+    ``deltas_of(batch_df)`` projects the batch's rows to the table's
+    columns in its order (bucket excluded), unaggregated; rows sharing
+    ``group_cols`` fold with ``merge_aggs``. A batch id at or below the
+    last one committed under ``scope`` is a redelivery and does
+    nothing. Otherwise the bucketed rows are persisted (the touched
+    buckets are one small distinct over them), only the touched buckets
+    are read (manifest-pruned), and deltas and current rows are
+    aggregated together in ONE groupBy — the batch's only aggregation
+    and the merge's only shuffle — then committed as ONE
+    replace_partitions snapshot whose properties carry the
+    (scope, batch_id) marker — data and marker land in the same atomic
+    commit."""
     from .sources.table import read_table, write_table
 
     def merge_batch(batch_df, batch_id: int) -> None:
@@ -128,17 +170,18 @@ def _bucketed_merge_fn(spark: SparkSession, table_path: str, scope: str,
                 ).withColumn("bucket", F.col("bucket").cast("int"))
             except FileNotFoundError:
                 current = None
-            # ONE file per touched bucket: without the explicit count
-            # the agg's shuffle_partitions fan out to ~32 files per
-            # bucket per commit (measured 256 tiny files/batch), and
-            # every later batch pays their footer reads + scan planning.
-            # Repartitioning BEFORE the groupBy makes it the merge's
-            # only shuffle: hash placement on bucket, one of the
-            # grouping keys, already satisfies the aggregation's
-            # distribution.
+            # ONE file per touched bucket: hashing on bucket puts each
+            # bucket in exactly one task (without an explicit count the
+            # agg's shuffle_partitions fanned out to ~32 files per
+            # bucket per commit). At most defaultParallelism tasks, so
+            # the write runs in one wave. Repartitioning BEFORE the
+            # groupBy makes it the merge's only shuffle: hash placement
+            # on bucket, one of the grouping keys, already satisfies
+            # the aggregation's distribution.
+            n_out = min(len(touched), spark.sparkContext.defaultParallelism)
             merged = (
                 (deltas if current is None else deltas.unionByName(current))
-                .repartition(len(touched), "bucket")
+                .repartition(n_out, "bucket")
                 .groupBy(*group_cols, "bucket")
                 .agg(*merge_aggs)
                 .select(*deltas.columns)
@@ -160,15 +203,16 @@ def edge_merge_fn(spark: SparkSession, table_path: str, scope: str,
                   n_buckets: int):
     """The foreachBatch merge for stream_edge_weights, factored out so
     tests can drive redelivery directly. ``scope`` identifies the
-    stream instance (the checkpoint location in production). A batch's
-    triples become per-edge deltas (weight = count, first_seen = min
+    stream instance (the checkpoint location in production). Each of a
+    batch's triples is one delta row (weight = 1, first_seen =
     warc_ts), bucketed on subj and merged by weight := sum,
     first_seen := min."""
 
     def deltas_of(batch_df):
-        return batch_df.groupBy("subj", "pred", "obj").agg(
-            F.count(F.lit(1)).alias("weight"),
-            F.min("warc_ts").alias("first_seen"),
+        return batch_df.select(
+            "subj", "pred", "obj",
+            F.lit(1).cast("long").alias("weight"),
+            F.col("warc_ts").alias("first_seen"),
         )
 
     return _bucketed_merge_fn(
@@ -185,12 +229,18 @@ def link_merge_fn(spark: SparkSession, table_path: str, scope: str,
     into a materialized (src_url, dst_url, n_links) table — the
     production companion to dedup_incremental for the web graph: a
     daily crawl merges its delta edges instead of rebuilding the full
-    graph. Same machinery as edge_merge_fn, bucketed on src_url and
-    merged by n_links := sum; per-batch cost scales with the DELTA's
-    bucket footprint, never the accumulated table."""
-    from .operators.linkgraph import link_graph
+    graph. Same machinery as edge_merge_fn: each href occurrence is one
+    delta row (n_links = 1), bucketed on src_url and merged by
+    n_links := sum; per-batch cost scales with the DELTA's bucket
+    footprint, never the accumulated table."""
+    from .operators.linkgraph import extract_outlinks
+
+    def deltas_of(batch_df):
+        return extract_outlinks(batch_df).withColumn(
+            "n_links", F.lit(1).cast("long")
+        )
 
     return _bucketed_merge_fn(
-        spark, table_path, scope, n_buckets, link_graph, "src_url",
+        spark, table_path, scope, n_buckets, deltas_of, "src_url",
         ["src_url", "dst_url"], [F.sum("n_links").alias("n_links")],
     )

@@ -314,3 +314,34 @@ def test_run_pipeline_link_counts(spark, corpus_dir, dictionary_df, tmp_path):
     n_causes = triples.filter(F.col("pred") == "CAUSES").count()
     assert n_causes > 0
     assert sum(metrics["link_counts"].values()) == 2 * n_causes
+
+
+def test_kg_linked_mentions_extracts_once(spark, tmp_path, monkeypatch):
+    """kg_gate._linked materializes the extraction before the linker
+    branches it: building the entry runs each extraction partition
+    once, and collecting it runs none again."""
+    import os
+
+    import remediner_spark.plans.kg_gate as kg_gate
+
+    runs = str(tmp_path)
+    extract = kg_gate.q_kg_triples
+
+    def counted(spark, sf_dir):
+        df = extract(spark, sf_dir)
+
+        def mark(batches):
+            import os
+            import uuid
+
+            yield from batches
+            open(os.path.join(runs, uuid.uuid4().hex), "w").close()
+
+        return df.mapInPandas(mark, df.schema)
+
+    monkeypatch.setattr(kg_gate, "q_kg_triples", counted)
+    n_parts = extract(spark, "").rdd.getNumPartitions()
+    linked = kg_gate.q_kg_linked_mentions(spark, "")
+    assert len(os.listdir(runs)) == n_parts
+    assert len(linked.collect()) > 0
+    assert len(os.listdir(runs)) == n_parts
