@@ -110,13 +110,11 @@ def re_head_forward(X: np.ndarray, p: dict[str, np.ndarray]) -> np.ndarray:
     return logits.reshape(B, T, N_LABELS)
 
 
-def seeded_encoder(
-    ids: np.ndarray, d_in: int, seed: int = 3, vocab_mod: int = 4096
-) -> np.ndarray:
+def seeded_encoder(ids: np.ndarray, d_in: int) -> np.ndarray:
     """Deterministic stand-in for the reference's last-4-hidden-state
-    concat (BERT is absent here): a seeded embedding lookup keyed by
-    token id. The HEAD above is the real transcribed architecture; only
-    this encoder is a stand-in, clearly bounded to this function."""
-    rng = np.random.RandomState(seed)
-    table = rng.randn(vocab_mod, d_in) * 0.1
-    return table[np.asarray(ids) % vocab_mod]
+    concat (BERT is absent here): a seeded (seed 3) embedding lookup
+    keyed by token id mod 4096. The HEAD above is the real transcribed
+    architecture; only this encoder is a stand-in, clearly bounded to
+    this function."""
+    table = np.random.RandomState(3).randn(4096, d_in) * 0.1
+    return table[np.asarray(ids) % 4096]

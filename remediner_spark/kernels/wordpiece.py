@@ -1,67 +1,28 @@
-"""Wordpiece tokenizers: real max-munch over a frozen vocab + a
-vocabulary-free deterministic stand-in.
+"""WordPiece tokenization and BERT input framing.
 
 The reference uses HuggingFace's bert-base-cased wordpiece tokenizer
 (e.g. /root/reference/src/NER/data_utilities_ner.py:87-128). The HF
-library (and its downloadable vocab) is not available here, so two
-implementations share the three-method interface (`tokenize`,
-`convert_tokens_to_ids`, `convert_ids_to_tokens`):
+library (and its downloadable vocab) is not available here, so
+``WordPieceTokenizer`` runs the REAL WordPiece algorithm (greedy
+longest-match-first / max-munch, as published with BERT and
+implemented in HF's WordpieceTokenizer) over a frozen vocab file
+shipped in the package (resources/wordpiece_vocab.txt, generated by
+tools/gen_wordpiece_vocab.py from the corpus lexicons + a char-level
+fallback alphabet). Subtoken ids are vocab line numbers, exactly the
+HF id convention. It is the one engine tokenizer: every framing
+function below takes it as a required argument.
 
-* ``WordPieceTokenizer`` — the REAL WordPiece algorithm (greedy
-  longest-match-first / max-munch, as published with BERT and
-  implemented in HF's WordpieceTokenizer) over a frozen vocab file
-  shipped in the package (resources/wordpiece_vocab.txt, generated by
-  tools/gen_wordpiece_vocab.py from the corpus lexicons + a char-level
-  fallback alphabet). Subtoken ids are vocab line numbers, exactly the
-  HF id convention.
-* ``DeterministicWordpiece`` — vocabulary-free fixed-chunk stand-in
-  (kept for vocab-independent plumbing tests).
-
-The A5/M3/M4 pipeline must be invariant to which tokenizer runs —
-pinned by tests/test_wordpiece_real.py (label propagation + masked
-reconstruction agree on the corpus lexicon under both tokenizers).
+The A5/M3/M4 pipeline must be invariant to where subtoken boundaries
+fall — pinned by tests/test_wordpiece_real.py, which runs label
+propagation + masked reconstruction over the corpus lexicon under this
+tokenizer and a vocabulary-free fixed-chunk stand-in kept in that test.
 """
 
 from __future__ import annotations
 
 import os
-import zlib
-
-CHUNK = 4
 
 CLS, SEP, PAD = "[CLS]", "[SEP]", "[PAD]"
-_SPECIAL_IDS = {PAD: 0, CLS: 101, SEP: 102}
-_ID_SPECIAL = {v: k for k, v in _SPECIAL_IDS.items()}
-_VOCAB_SIZE = 1 << 20
-
-
-class DeterministicWordpiece:
-    """Vocabulary-free tokenizer with stable ids via crc32."""
-
-    def tokenize(self, word: str) -> list[str]:
-        if not word:
-            return []
-        pieces = [word[:CHUNK]]
-        for i in range(CHUNK, len(word), CHUNK):
-            pieces.append("##" + word[i : i + CHUNK])
-        return pieces
-
-    def convert_tokens_to_ids(self, tokens: list[str]) -> list[int]:
-        out = []
-        for t in tokens:
-            if t in _SPECIAL_IDS:
-                out.append(_SPECIAL_IDS[t])
-            else:
-                out.append(103 + (zlib.crc32(t.encode()) % _VOCAB_SIZE))
-        return out
-
-    def convert_ids_to_tokens(self, ids: list[int]) -> list[str]:
-        # crc ids are not invertible; callers on the engine path carry
-        # tokens alongside ids (the reference only inverts ids because
-        # HF materializes tensors — our Arrow batches keep the tokens).
-        return [_ID_SPECIAL.get(i, f"<{i}>") for i in ids]
-
-
 UNK = "[UNK]"
 _VOCAB_PATH = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -99,8 +60,9 @@ class WordPieceTokenizer:
                 "REMEDINER_WORDPIECE_VOCAB"
             ) or _VOCAB_PATH
         with open(vocab_path, encoding="utf-8") as f:
-            self._id_to_tok = [line.rstrip("\n") for line in f]
-        self._tok_to_id = {t: i for i, t in enumerate(self._id_to_tok)}
+            self._tok_to_id = {
+                line.rstrip("\n"): i for i, line in enumerate(f)
+            }
         self.max_input_chars_per_word = max_input_chars_per_word
 
     def tokenize(self, word: str) -> list[str]:
@@ -131,15 +93,9 @@ class WordPieceTokenizer:
         unk = self._tok_to_id[UNK]
         return [self._tok_to_id.get(t, unk) for t in tokens]
 
-    def convert_ids_to_tokens(self, ids: list[int]) -> list[str]:
-        return [
-            self._id_to_tok[i] if 0 <= i < len(self._id_to_tok) else UNK
-            for i in ids
-        ]
-
 
 def tokenize_words_with_labels(
-    words: list[str], labels: list, tokenizer=None
+    words: list[str], labels: list, tokenizer
 ) -> tuple[list[str], list]:
     """A5: wordpiece each word, replicating its label per subtoken.
 
@@ -147,18 +103,17 @@ def tokenize_words_with_labels(
     (/root/reference/src/NER/data_utilities_ner.py:87-128,
     /root/reference/src/RE/data_utilities_re.py:148-189), flattened.
     """
-    tok = tokenizer or DeterministicWordpiece()
     out_tokens: list[str] = []
     out_labels: list = []
     for word, label in zip(words, labels):
-        pieces = tok.tokenize(word)
+        pieces = tokenizer.tokenize(word)
         out_tokens.extend(pieces)
         out_labels.extend([label] * len(pieces))
     return out_tokens, out_labels
 
 
 def frame_words_for_inference(
-    words: list[str], max_len: int, tokenizer=None
+    words: list[str], max_len: int, tokenizer
 ) -> tuple[list[int], list[int], list[int]]:
     """Wordpiece ``words``, frame to max_len, and return
     (ids, attention, word_ids): word_ids[pos] is the word index whose
@@ -166,14 +121,15 @@ def frame_words_for_inference(
     continuation pieces — the single source of the id/word alignment
     every inference decode path shares (NumpyBertTagger, the RE stage,
     the composed final model)."""
-    tok = tokenizer or DeterministicWordpiece()
     toks: list[str] = []
     wids: list[int] = []
     for w_idx, w in enumerate(words):
-        pieces = tok.tokenize(w)
+        pieces = tokenizer.tokenize(w)
         toks.extend(pieces)
         wids.extend([w_idx] + [-1] * (len(pieces) - 1))
-    ids, attention, _ = frame_bert_input(toks, [0] * len(toks), max_len, tok)
+    ids, attention, _ = frame_bert_input(
+        toks, [0] * len(toks), max_len, tokenizer
+    )
     word_ids = [-1] + wids + [-1]
     return ids, attention, (word_ids + [-1] * max_len)[:max_len]
 
@@ -200,7 +156,7 @@ def frame_bert_input(
     tokens: list[str],
     labels: list[int],
     max_len: int,
-    tokenizer=None,
+    tokenizer,
 ) -> tuple[list[int], list[int], list[int]]:
     """A6: [CLS]+tokens+[SEP], truncate/pad to max_len, mask, -100 labels.
 
@@ -208,7 +164,6 @@ def frame_bert_input(
     (/root/reference/src/NER/data_utilities_ner.py:132-168,
     /root/reference/src/RE/data_utilities_re.py:193-229) for one row.
     """
-    tok = tokenizer or DeterministicWordpiece()
     framed = [CLS] + list(tokens) + [SEP]
     framed_labels = [-100] + list(labels) + [-100]
     if len(framed) > max_len:
@@ -219,5 +174,5 @@ def frame_bert_input(
         framed = framed + [PAD] * pad_n
         framed_labels = framed_labels + [-100] * pad_n
     attention = [1 if t != PAD else 0 for t in framed]
-    ids = tok.convert_tokens_to_ids(framed)
+    ids = tokenizer.convert_tokens_to_ids(framed)
     return ids, attention, framed_labels

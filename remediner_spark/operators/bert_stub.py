@@ -7,13 +7,12 @@ swaps models without changing the plan:
     tagger_bc = spark.sparkContext.broadcast(NumpyBertTagger.seeded())
     triples   = extract_triples_stage(pages, tagger_bc)
 
-torch/transformers are not dependencies: trained weights enter through
-``NumpyBertTagger.from_state_dict`` (kernels/state_dict.py).
+torch/transformers are not dependencies, and the weights are seeded
+stand-ins: no trained checkpoint ships with the package, so loading
+one waits until one does (COVERAGE.md, S4).
 """
 
 from __future__ import annotations
-
-from typing import Sequence
 
 import pandas as pd
 
@@ -33,13 +32,13 @@ class NumpyBertTagger:
     """
 
     def __init__(self, params: dict, max_len: int = 48,
-                 batch_size: int = 64, tokenizer=None):
+                 batch_size: int = 64):
         from ..kernels.wordpiece import WordPieceTokenizer
 
         self._p = params
         self.max_len = max_len
         self.batch_size = batch_size
-        self._tok = tokenizer or WordPieceTokenizer()
+        self._tok = WordPieceTokenizer()
 
     @classmethod
     def seeded(cls, seed: int = 13, d: int = 32, n_layers: int = 2,
@@ -51,41 +50,6 @@ class NumpyBertTagger:
             d_ffn=d_ffn, max_len=max_len,
         )
         return cls(params, max_len=max_len)
-
-    @classmethod
-    def from_state_dict(cls, path: str, n_heads: int = 12,
-                        max_len: int = 128, tokenizer=None,
-                        prefix: str = "bert."):
-        """Build the tagger from a TRAINED checkpoint exported as a
-        plain tensor dict (.npz or pickled {key: ndarray}) in the
-        reference's state_dict naming — torch-free weight ingestion
-        (kernels/state_dict.py). n_heads comes from the HF config
-        (12 for bert-base); prefix='bert.' matches the reference's
-        NerModel wrapper, '' a bare HF checkpoint."""
-        from ..kernels.state_dict import (
-            bert_params_from_state_dict,
-            read_tensor_dict,
-        )
-        from ..kernels.wordpiece import WordPieceTokenizer
-
-        params = bert_params_from_state_dict(
-            read_tensor_dict(path), n_heads=n_heads, prefix=prefix
-        )
-        tok = tokenizer or WordPieceTokenizer()
-        # a tokenizer whose id space doesn't match the checkpoint's
-        # embedding table would index in-bounds garbage rows and emit
-        # silently wrong tags — make the mismatch loud. The tokenizer
-        # that produced the checkpoint's training data must be passed
-        # (its vocab file defines the row order of `emb`).
-        vocab_rows = params["emb"].shape[0]
-        tok_vocab = len(getattr(tok, "_id_to_tok", ()))
-        if tok_vocab and tok_vocab != vocab_rows:
-            raise ValueError(
-                f"tokenizer vocab size {tok_vocab} != checkpoint "
-                f"embedding rows {vocab_rows}: pass the tokenizer "
-                "(vocab file) the checkpoint was trained with"
-            )
-        return cls(params, max_len=max_len, tokenizer=tok)
 
     def extract_pairs(self, norm: pd.Series) -> pd.DataFrame:
         """Batched forward -> M3 mentions -> positional pairing."""
@@ -100,9 +64,6 @@ class NumpyBertTagger:
             ]
 
         return pairs_frame(norm, extract)
-
-    def tag_words(self, words: Sequence[str]) -> list[str]:
-        return self.tag_words_batch([list(words)])[0]
 
     def tag_words_batch(self, batch: list[list[str]]) -> list[list[str]]:
         import numpy as np

@@ -92,7 +92,6 @@ class GazetteerTagger:
 def extract_triples_stage(
     pages: DataFrame,
     tagger_bc,
-    text_col: str = "text",
     extract_html: bool = False,
 ) -> DataFrame:
     """Fused pages -> triples mapInPandas stage (CAUSES direction).
@@ -117,12 +116,12 @@ def extract_triples_stage(
             if len(pdf) == 0:
                 continue
             if extract_html:
-                pdf = pdf.assign(**{text_col: webtext.extract_text(pdf["html"])})
+                pdf = pdf.assign(text=webtext.extract_text(pdf["html"]))
             # batch-flat segmentation (one regex scan per batch) and a
             # doc-index array instead of repeating url/warc_ts object
             # arrays per sentence: the page columns are gathered only
             # for rows that produced a pair, at the end
-            flat, doc_of = webtext.split_sentences_flat(pdf[text_col])
+            flat, doc_of = webtext.split_sentences_flat(pdf["text"])
             total = len(flat)
             if total == 0:
                 continue
@@ -149,7 +148,7 @@ def extract_triples_stage(
     # prune before the Python stage: mapInPandas ships its full input
     # schema over Arrow, so dropping unused columns (notably the html
     # binary when text is trusted) here halves the JVM->Python transfer
-    cols = ["url", "warc_ts", "html" if extract_html else text_col]
+    cols = ["url", "warc_ts", "html" if extract_html else "text"]
     pruned = pages.select(*cols)
     return pruned.mapInPandas(fn, TRIPLE_SCHEMA)
 

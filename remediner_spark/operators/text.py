@@ -32,8 +32,8 @@ def filter_language(pages: DataFrame) -> DataFrame:
     return pages.filter(F.col("lang") == "en")
 
 
-def with_extracted_text(pages: DataFrame, col: str = "extracted_text") -> DataFrame:
-    return pages.withColumn(col, extract_text_udf(F.col("html")))
+def with_extracted_text(pages: DataFrame) -> DataFrame:
+    return pages.withColumn("extracted_text", extract_text_udf(F.col("html")))
 
 
 def extraction_mismatch_count(pages: DataFrame) -> int:

@@ -34,9 +34,9 @@ from pyspark.sql import functions as F
 BUCKET_COL = "_bucket"
 
 
-def with_bucket(df: DataFrame, n_buckets: int, key: str = "url") -> DataFrame:
+def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.withColumn(
-        BUCKET_COL, F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
+        BUCKET_COL, F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int")
     )
 
 
@@ -78,12 +78,11 @@ def run_stage(
     transform: Callable[[DataFrame], DataFrame],
     checkpoint_dir: str,
     n_buckets: int = 32,
-    key: str = "url",
 ) -> DataFrame:
     """Run ``transform`` over only the not-yet-committed buckets of
     ``input_df``; return the full (committed + new) stage output.
 
-    ``transform`` must preserve the lineage key column. Output lands at
+    ``transform`` must preserve the lineage key column (url). Output lands at
     {checkpoint_dir}/{stage}/ partitioned by _bucket.
 
     CONTRACT: ``transform`` must consume its input exactly once in the
@@ -98,7 +97,7 @@ def run_stage(
     input inside such a transform.
     """
     data_dir = os.path.join(checkpoint_dir, stage)
-    bucketed = with_bucket(input_df, n_buckets, key)
+    bucketed = with_bucket(input_df, n_buckets)
     done = committed_buckets(checkpoint_dir, stage)
     pending = bucketed.filter(~F.col(BUCKET_COL).isin(list(done))) if done else bucketed
     todo = [b for b in range(n_buckets) if b not in done]
@@ -118,12 +117,9 @@ def run_stage(
                 hit = F.col(BUCKET_COL) == b
                 cols.append(F.count_if(hit).alias(f"{prefix}n_{b}"))
                 if with_urls:
-                    cols.append(
-                        F.min(F.when(hit, F.col(key))).alias(f"{prefix}lo_{b}")
-                    )
-                    cols.append(
-                        F.max(F.when(hit, F.col(key))).alias(f"{prefix}hi_{b}")
-                    )
+                    url = F.when(hit, F.col("url"))
+                    cols.append(F.min(url).alias(f"{prefix}lo_{b}"))
+                    cols.append(F.max(url).alias(f"{prefix}hi_{b}"))
             return cols
 
         obs_in = Observation(f"ckpt_{stage}_in")
@@ -131,7 +127,7 @@ def run_stage(
         t0 = time.time()
         out = transform(pending.observe(obs_in, *_bucket_metrics("", True)))
         if BUCKET_COL not in out.columns:
-            out = with_bucket(out, n_buckets, key)
+            out = with_bucket(out, n_buckets)
         (
             out.observe(obs_out, *_bucket_metrics("o", False))
             .write.mode("overwrite")

@@ -56,13 +56,13 @@ _PAYLOAD_SCHEMA = (
 )
 
 
-def parse_cdx(lines: DataFrame, value_col: str = "value") -> DataFrame:
+def parse_cdx(lines: DataFrame) -> DataFrame:
     """Text lines -> typed CDX records (no filtering).
 
     The JSON payload is parsed ONCE per row (from_json into a struct),
     not once per projected field — six get_json_object calls would
     re-parse the same string six times on the hot ingest path."""
-    v = F.col(value_col)
+    v = F.col("value")
     framed = lines.select(
         F.regexp_extract(v, _LINE_RE, 1).alias("urlkey"),
         F.regexp_extract(v, _LINE_RE, 2).alias("ts"),

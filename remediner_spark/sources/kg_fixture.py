@@ -42,14 +42,14 @@ FIXTURE_VERSION = 3
 N_PAGES = 400
 
 
-def fixture_dir(n_pages: int = N_PAGES) -> str:
+def fixture_dir() -> str:
     repo = os.path.dirname(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     )
     return os.path.join(
         repo,
         ".kg_oracle",
-        f"v{corpus.CORPUS_VERSION}.{FIXTURE_VERSION}_p{n_pages}",
+        f"v{corpus.CORPUS_VERSION}.{FIXTURE_VERSION}_p{N_PAGES}",
     )
 
 
@@ -120,15 +120,15 @@ def _write_rel_file(ann, path: str) -> None:
         f.write("\n".join(lines) + "\n")
 
 
-def ensure_kg_fixture(n_pages: int = N_PAGES) -> str:
+def ensure_kg_fixture() -> str:
     """Write the fixture parquet files if absent; return the directory."""
-    out = fixture_dir(n_pages)
+    out = fixture_dir()
     if all(os.path.exists(os.path.join(out, f)) for f in _FILES):
         return out
     os.makedirs(out, exist_ok=True)
     from ..gold import gold_triples
 
-    pages, ann = corpus.generate_pages(n_pages)
+    pages, ann = corpus.generate_pages(N_PAGES)
     gold = gold_triples(ann).merge(
         pages[["url", "warc_ts"]], on="url", how="left"
     )[["url", "warc_ts", "sent_idx", "subj", "pred", "obj"]]

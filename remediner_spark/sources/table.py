@@ -170,20 +170,13 @@ def _snap_files(path: str, snap: dict) -> list[dict]:
     return out
 
 
-def live_files(path: str, snapshot_id: int | None = None) -> list[dict]:
+def live_files(path: str) -> list[dict]:
     """Public manifest introspection: the file entries of the current
-    (or a pinned) snapshot."""
+    snapshot."""
     snapshots = _load_snapshots(path)
     if not snapshots:
         raise FileNotFoundError(f"no table at {path}")
-    if snapshot_id is None:
-        snap = snapshots[-1]
-    else:
-        matching = [s for s in snapshots if s["snapshot_id"] == snapshot_id]
-        if not matching:
-            raise ValueError(f"no snapshot {snapshot_id} in {path}")
-        snap = matching[0]
-    return _snap_files(path, snap)
+    return _snap_files(path, snapshots[-1])
 
 
 def _next_manifests(
@@ -827,7 +820,6 @@ def _scan_files(
     spark: SparkSession,
     snap: dict,
     files: list[dict],
-    apply_deletes: bool = True,
 ) -> DataFrame:
     """Plan a read of manifest file entries: snapshot schema (old files
     null-fill evolved columns), partition columns re-attached from the
@@ -853,7 +845,7 @@ def _scan_files(
     full_schema = StructType.fromJson(snap["schema"])
     if not files:
         return local_frame(spark, [], full_schema)
-    deletes = (snap.get("delete_files") or []) if apply_deletes else []
+    deletes = snap.get("delete_files") or []
     # group key includes the FILE's OWN partition-key set: after
     # partition-spec evolution (evolve_partition_spec) the manifest
     # holds files written under different specs — each file's

@@ -29,6 +29,7 @@ from pyspark.sql.types import StructType
 from pyspark.storagelevel import StorageLevel
 
 from .operators.ner import extract_triples_stage
+from .operators.text import filter_language
 
 
 def stream_pages(spark: SparkSession, pages_dir: str,
@@ -66,7 +67,6 @@ def stream_edge_weights(
     table_path: str,
     checkpoint_dir: str,
     tagger_bc,
-    lang: str = "en",
     n_buckets: int = 8,
 ):
     """Continuously-maintained KG edge table: incremental MERGE of each
@@ -103,9 +103,7 @@ def stream_edge_weights(
     no Spark job before its first micro-batch.
     """
     merge_batch = edge_merge_fn(spark, table_path, checkpoint_dir, n_buckets)
-    pages = stream_pages(spark, pages_dir, checkpoint_dir).filter(
-        F.col("lang") == lang
-    )
+    pages = filter_language(stream_pages(spark, pages_dir, checkpoint_dir))
     triples = extract_triples_stage(pages, tagger_bc)
     return (
         triples.writeStream.foreachBatch(merge_batch)

@@ -25,7 +25,8 @@ from remediner_spark.kernels.reconstruct import (
 )
 from remediner_spark.kernels.webtext import extract_text, split_sentences
 from remediner_spark.kernels.wordpiece import (
-    DeterministicWordpiece,
+    CLS,
+    WordPieceTokenizer,
     frame_bert_input,
     tokenize_words_with_labels,
 )
@@ -190,7 +191,7 @@ class TestReconstruct:
         ]
 
     def test_subtoken_level_matches_word_level(self):
-        tok = DeterministicWordpiece()
+        tok = WordPieceTokenizer()
         words = ["dorvaxin", "caused", "nauseola"]
         tags = ["B-Drug", "O", "B-Effect"]
         subtokens, sublabels = tokenize_words_with_labels(words, tags, tok)
@@ -246,14 +247,15 @@ class TestPairing:
 
 class TestWordpiece:
     def test_framing(self):
-        tok = DeterministicWordpiece()
+        tok = WordPieceTokenizer()
         ids, mask, labels = frame_bert_input(["dorv", "##axin"], [1, 1], 8, tok)
         assert len(ids) == len(mask) == len(labels) == 8
-        assert ids[0] == 101 and mask[:4] == [1, 1, 1, 1] and mask[4:] == [0] * 4
+        assert ids[0] == tok.convert_tokens_to_ids([CLS])[0]
+        assert mask[:4] == [1, 1, 1, 1] and mask[4:] == [0] * 4
         assert labels[0] == -100 and labels[3] == -100 and labels[-1] == -100
 
     def test_truncation(self):
-        tok = DeterministicWordpiece()
+        tok = WordPieceTokenizer()
         ids, mask, labels = frame_bert_input(["a"] * 20, [1] * 20, 8, tok)
         assert len(ids) == 8 and all(m == 1 for m in mask)
 

@@ -21,13 +21,14 @@ def test_framing_stage():
     """A5/A6: word-level IOB -> wordpiece with the word's label on every
     subtoken -> BERT frame (CLS/SEP, -100 outside the words, padding)."""
     from remediner_spark.kernels.wordpiece import (
-        DeterministicWordpiece,
+        CLS,
+        WordPieceTokenizer,
         frame_bert_input,
         tokenize_words_with_labels,
     )
     from remediner_spark.operators.bert_stub import IOB_LABELS
 
-    tok = DeterministicWordpiece()
+    tok = WordPieceTokenizer()
     words = ["dorvaxin", "caused", "nauseola"]
     label_ids = [IOB_LABELS.index(t) for t in ["B-Drug", "O", "B-Effect"]]
     subtoks, sublabels = tokenize_words_with_labels(words, label_ids, tok)
@@ -35,9 +36,10 @@ def test_framing_stage():
         subtoks, sublabels, 16, tok
     )
     assert len(ids) == len(attention_mask) == 16
-    assert ids[0] == 101  # [CLS]
+    assert ids[0] == tok.convert_tokens_to_ids([CLS])[0]
     assert framed[0] == -100
-    # 'dorvaxin' -> 2 subtokens, both labeled B-Drug(1)
-    assert framed[1] == 1 and framed[2] == 1
-    # attention mask covers CLS + 4 subtokens + 1 ('nauseola'->2) + SEP
-    assert sum(attention_mask) == 8
+    # 'dorvaxin' -> dorv ##ax ##in, every piece labeled B-Drug(1)
+    assert subtoks[:3] == ["dorv", "##ax", "##in"]
+    assert framed[1:4] == [1, 1, 1] and framed[4] == 0
+    # attention mask covers CLS + the 5 subtokens + SEP
+    assert len(subtoks) == 5 and sum(attention_mask) == 7

@@ -53,7 +53,7 @@ def test_attention_mask_isolates_padding():
 
 def test_first_subtoken_projection(tagger):
     words = ["dorvax", "induced", "nauseola", "in", "a", "patient"]
-    tags = tagger.tag_words(words)
+    tags = tagger.tag_words_batch([words])[0]
     assert len(tags) == len(words)
     assert all(
         t in ("O", "B-Drug", "I-Drug", "B-Effect", "I-Effect") for t in tags
@@ -92,7 +92,7 @@ def test_fused_stage_with_numpy_bert(spark, corpus_dir, tagger):
             words = text.split()
             if not words:
                 continue
-            tags = tagger.tag_words(words)
+            tags = tagger.tag_words_batch([words])[0]
             _, mentions = mentions_from_word_iob(words, tags)
             for s, p, o in pair_mentions_positional(mentions):
                 rows.append((url, sent_idx, s, p, o))

@@ -2,15 +2,18 @@
 
 1. Algorithm unit cases (greedy longest-match-first, [UNK] fallback,
    HF id convention).
-2. The tokenizer-invariance differential VERDICT asked for: A5 label
-   propagation + M3 masked reconstruction produce IDENTICAL masked
-   text and mentions under the real-vocab tokenizer and the
-   deterministic stand-in, over the full corpus lexicon in sentence
-   context (subtoken boundaries differ; word-level outputs must not).
+2. The tokenizer-invariance differential: A5 label propagation + M3
+   masked reconstruction produce IDENTICAL masked text and mentions
+   under the real-vocab tokenizer and a vocabulary-free fixed-chunk
+   stand-in (``_ChunkTokenizer``, below), over the full corpus lexicon
+   in sentence context (subtoken boundaries differ; word-level outputs
+   must not).
 3. Framing (A6) round trip with real vocab ids.
 """
 
 from __future__ import annotations
+
+import zlib
 
 import pytest
 
@@ -20,11 +23,26 @@ from remediner_spark.kernels.wordpiece import (
     PAD,
     SEP,
     UNK,
-    DeterministicWordpiece,
     WordPieceTokenizer,
+    _VOCAB_PATH,
     frame_bert_input,
     tokenize_words_with_labels,
 )
+
+
+class _ChunkTokenizer:
+    """Vocabulary-free stand-in: fixed 4-char pieces, ids by crc32. Its
+    subtoken boundaries fall where the real vocab's do not."""
+
+    _SPECIAL = {PAD: 0, CLS: 101, SEP: 102}
+
+    def tokenize(self, word: str) -> list[str]:
+        return [("##" if i else "") + word[i : i + 4]
+                for i in range(0, len(word), 4)]
+
+    def convert_tokens_to_ids(self, tokens: list[str]) -> list[int]:
+        return [self._SPECIAL.get(t, 103 + zlib.crc32(t.encode()) % (1 << 20))
+                for t in tokens]
 
 
 @pytest.fixture(scope="module")
@@ -49,8 +67,11 @@ def test_max_munch_greedy_longest_first(tok):
 def test_hf_id_convention(tok):
     ids = tok.convert_tokens_to_ids([PAD, UNK, CLS, SEP])
     assert ids == [0, 1, 2, 3]
+    # a token's id is its line number in the vocab file
+    with open(_VOCAB_PATH, encoding="utf-8") as f:
+        lines = f.read().splitlines()
     toks = ["dorv", "##ax", "patient"]
-    assert tok.convert_ids_to_tokens(tok.convert_tokens_to_ids(toks)) == toks
+    assert [lines[i] for i in tok.convert_tokens_to_ids(toks)] == toks
 
 
 def _masked_via(tokenizer, words, labels):
@@ -71,7 +92,7 @@ def test_reconstruction_invariant_over_tokenizers(tok):
     )
     import pandas as pd
 
-    det = DeterministicWordpiece()
+    det = _ChunkTokenizer()
     effects = effect_lexicon()
     checked = 0
     for i, drug in enumerate(drug_lexicon()):

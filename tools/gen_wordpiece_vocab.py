@@ -147,9 +147,8 @@ if __name__ == "__main__":
         n = ingest(sys.argv[2])
         print(f"installed {n}-token user vocab from {sys.argv[2]} to {OUT}")
         print(
-            "note: ids are line numbers; pass the SAME file's tokenizer "
-            "to NumpyBertTagger.from_state_dict so ids match the "
-            "checkpoint's embedding rows"
+            "note: ids are line numbers; a checkpoint's embedding rows "
+            "must follow the SAME file, or its ids index the wrong rows"
         )
     else:
         raise SystemExit(
